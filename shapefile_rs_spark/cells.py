@@ -15,7 +15,7 @@ and are the kernels inside pandas UDFs (no per-row Python, per input_hint).
 
 from __future__ import annotations
 
-from typing import Iterable, List, Tuple
+from typing import Sequence, Tuple
 
 import numpy as np
 
@@ -45,18 +45,20 @@ def _compact1by1(v: np.ndarray) -> np.ndarray:
     return v
 
 
-def lonlat_to_ixiy(lon: np.ndarray, lat: np.ndarray, res: int) -> Tuple[np.ndarray, np.ndarray]:
-    n = np.int64(1) << np.int64(res)
+def lonlat_to_ixiy(lon: np.ndarray, lat: np.ndarray, res) -> Tuple[np.ndarray, np.ndarray]:
+    """Grid coordinates at ``res`` (an int, or one res per point)."""
+    n = np.int64(1) << np.asarray(res, dtype=np.int64)
     fx = (np.asarray(lon, dtype=np.float64) + 180.0) / 360.0
     fy = (np.asarray(lat, dtype=np.float64) + 90.0) / 180.0
-    ix = np.clip(np.floor(fx * n).astype(np.int64), 0, int(n) - 1)
-    iy = np.clip(np.floor(fy * n).astype(np.int64), 0, int(n) - 1)
+    ix = np.clip(np.floor(fx * n).astype(np.int64), 0, n - 1)
+    iy = np.clip(np.floor(fy * n).astype(np.int64), 0, n - 1)
     return ix, iy
 
 
-def encode_ixiy(ix: np.ndarray, iy: np.ndarray, res: int) -> np.ndarray:
+def encode_ixiy(ix: np.ndarray, iy: np.ndarray, res) -> np.ndarray:
+    """Cell ids of grid coordinates at ``res`` (an int, or one per cell)."""
     morton = _part1by1(np.asarray(ix)) | (_part1by1(np.asarray(iy)) << np.uint64(1))
-    cell = (np.uint64(res) << np.uint64(_RES_SHIFT)) | morton
+    cell = (np.asarray(res).astype(np.uint64) << np.uint64(_RES_SHIFT)) | morton
     return cell.astype(np.int64)
 
 
@@ -134,110 +136,169 @@ def cover_bbox(
 
 
 def adaptive_cover_res(
-    xmin: float, ymin: float, xmax: float, ymax: float, max_cells: int = 256, max_res: int = MAX_RES
-) -> int:
+    xmin, ymin, xmax, ymax, max_cells: int = 256, max_res: int = MAX_RES
+):
     """Finest resolution whose bbox covering stays ≤ max_cells (polygon
-    covering sets bounded so the build side of the cell join stays small)."""
+    covering sets bounded so the build side of the cell join stays small).
+
+    Vectorized: the bbox bounds may be equal-length arrays, one resolution
+    per bbox comes back; scalars give an int.  Non-finite bounds raise."""
+    b = [np.asarray(v, dtype=np.float64) for v in (xmin, ymin, xmax, ymax)]
+    if not all(np.isfinite(v).all() for v in b):
+        raise ValueError("adaptive_cover_res: non-finite bbox")
+    x0, y0, x1, y1 = np.broadcast_arrays(*b)
+    out = np.zeros(x0.shape, dtype=np.int64)
+    todo = np.ones(x0.shape, dtype=bool)
     for res in range(max_res, -1, -1):
-        n = 1 << res
-        nx = int((xmax + 180.0) / 360.0 * n) - int((xmin + 180.0) / 360.0 * n) + 1
-        ny = int((ymax + 90.0) / 180.0 * n) - int((ymin + 90.0) / 180.0 * n) + 1
-        if nx * ny <= max_cells:
-            return res
-    return 0
+        n = float(1 << res)
+        nx = np.trunc((x1 + 180.0) / 360.0 * n) - np.trunc((x0 + 180.0) / 360.0 * n) + 1
+        ny = np.trunc((y1 + 90.0) / 180.0 * n) - np.trunc((y0 + 90.0) / 180.0 * n) + 1
+        ok = todo & (nx * ny <= max_cells)
+        out[ok] = res
+        todo &= ~ok
+        if not todo.any():
+            break
+    return int(out) if out.ndim == 0 else out
 
 
 def classify_cover(
-    rings, res: int, pad_frac: float = 1e-9, max_pairs: int = 4_000_000
+    rings, res: int, pad_frac: float = 1e-9, max_pairs: int = 1 << 16
 ) -> Tuple[np.ndarray, np.ndarray]:
-    """TRUE polygon covering at ``res`` (X1 as SURVEYed): bbox cell range ∩
-    per-cell boundary/interior tests.  Returns ``(cells, full)``:
+    """TRUE polygon covering of ONE polygon at ``res``: its
+    :func:`classify_cover_batch` row, as ``(cells, full)``."""
+    _, cells, full = classify_cover_batch([rings], [res], pad_frac, max_pairs)
+    return cells, full
 
-    * cells NOT touched by the polygon at all are DROPPED (bbox false
-      positives stop scaling with polygon size);
-    * ``full[i]`` ⇔ cell i lies ENTIRELY in the polygon interior — a point
+
+def classify_cover_batch(
+    polygons: Sequence, res, pad_frac: float = 1e-9, max_pairs: int = 1 << 16
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """TRUE polygon covering (X1 as SURVEYed) of many polygons at once:
+    ``polygons[i]`` is a list of (k, 2) rings covered at ``res[i]``.
+    Returns ``(poly, cells, full)`` — one row per kept covering cell,
+    grouped by polygon index in input order, cells in row-major bbox order:
+
+    * cells of the bbox range NOT touched by the polygon are DROPPED (bbox
+      false positives stop scaling with polygon size);
+    * ``full`` ⇔ the cell lies ENTIRELY in the polygon interior — a point
       landing there is contained with no ray-cast needed (the refine-UDF
       bypass), exact because the cell is connected and boundary-free, so
       containment is constant across it and the cell center's even-odd
       status decides it;
-    * the rest are BOUNDARY cells — candidates refine exactly as before.
+    * the rest are BOUNDARY cells — their candidates refine exactly.
 
-    Boundary detection is a vectorized segment-vs-rect SAT over every ring
-    edge × every covering cell (rect padded by ``pad_frac`` of the cell
-    size so ties/νlp-grazings conservatively classify BOUNDARY, never
-    FULL).  Edge blocks are chunked to ``max_pairs`` pairs so the E×C
-    temporaries stay allocator-friendly on this host.
+    Rings with fewer than 2 points are ignored; a polygon left with none
+    has zero area and no cells.  Both tests run over every (edge, cell)
+    pair of a polygon, all polygons in one pass: a segment-vs-rect SAT
+    (rect padded by ``pad_frac`` of the cell size so ties and grazings
+    classify BOUNDARY, never FULL) and an even-odd crossing count of the
+    cell centers (the :func:`..geom.pip.crossings_matrix` rule, same
+    operand order, so bit-identical to a per-polygon ray-cast).  Pairs
+    are generated ``max_pairs`` at a time (a polygon with more is split
+    along its edges), which bounds the temporaries whatever the layer
+    size.
 
     Semantics preserved: composed with the even-odd refine this reproduces
     the reference contains() truth (examples/geotype-example/src/main.rs:
     15-36) — interior-only, holes via even-odd over the full ring set.
     """
-    from .geom.pip import points_in_rings, rings_bbox
+    res = np.asarray(res, dtype=np.int64)
+    kept = [
+        (i, np.asarray(r, dtype=np.float64))
+        for i, rings in enumerate(polygons)
+        for r in rings
+        if len(r) >= 2
+    ]
+    if not kept:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, bool)
+    ring_poly = np.array([i for i, _ in kept], dtype=np.int64)
+    lens = np.array([len(r) for _, r in kept], dtype=np.int64)
+    xy = np.concatenate([r for _, r in kept])
+    vert_poly = np.repeat(ring_poly, lens)
 
-    rings = [np.asarray(r, dtype=np.float64) for r in rings if len(r) >= 2]
-    if not rings:
-        # all rings degenerate (<2 points): zero-area polygon contains
-        # nothing under even-odd — empty covering, no crash (the bbox-only
-        # covering this replaced also completed on such records)
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=bool),
-        )
-    xmin, ymin, xmax, ymax = rings_bbox(rings)
-    ix0, iy0 = lonlat_to_ixiy(np.array([xmin]), np.array([ymin]), res)
-    ix1, iy1 = lonlat_to_ixiy(np.array([xmax]), np.array([ymax]), res)
-    xs = np.arange(ix0[0], ix1[0] + 1, dtype=np.int64)
-    ys = np.arange(iy0[0], iy1[0] + 1, dtype=np.int64)
-    n = float(1 << res)
+    # per polygon (those with rings left): bbox → its cell range at its res
+    polys, vstart = np.unique(vert_poly, return_index=True)
+    r = res[polys]
+    ix0, iy0 = lonlat_to_ixiy(
+        np.minimum.reduceat(xy[:, 0], vstart), np.minimum.reduceat(xy[:, 1], vstart), r
+    )
+    ix1, iy1 = lonlat_to_ixiy(
+        np.maximum.reduceat(xy[:, 0], vstart), np.maximum.reduceat(xy[:, 1], vstart), r
+    )
+    nx = ix1 - ix0 + 1
+    ncell = nx * (iy1 - iy0 + 1)
+    cstart = np.cumsum(ncell) - ncell
+    cell_p = np.repeat(np.arange(len(polys)), ncell)
+    k = np.arange(int(ncell.sum()), dtype=np.int64) - cstart[cell_p]
+    gx = ix0[cell_p] + k % nx[cell_p]
+    gy = iy0[cell_p] + k // nx[cell_p]
+    n = (np.int64(1) << r[cell_p]).astype(np.float64)
     w, h = 360.0 / n, 180.0 / n
-    gx, gy = np.meshgrid(xs, ys)
-    gx, gy = gx.ravel(), gy.ravel()
-    C = len(gx)
     rx0 = -180.0 + gx * w
     ry0 = -90.0 + gy * h
     pad_x, pad_y = w * pad_frac, h * pad_frac
     px0, py0 = rx0 - pad_x, ry0 - pad_y
     px1, py1 = rx0 + w + pad_x, ry0 + h + pad_y
+    cx, cy = rx0 + w / 2.0, ry0 + h / 2.0
 
-    x1 = np.concatenate([r[:-1, 0] for r in rings])
-    y1 = np.concatenate([r[:-1, 1] for r in rings])
-    x2 = np.concatenate([r[1:, 0] for r in rings])
-    y2 = np.concatenate([r[1:, 1] for r in rings])
-    boundary = np.zeros(C, dtype=bool)
-    step = max(1, max_pairs // max(C, 1))
-    for s in range(0, len(x1), step):
-        a1, b1 = x1[s : s + step, None], y1[s : s + step, None]
-        a2, b2 = x2[s : s + step, None], y2[s : s + step, None]
-        ovl = (
-            (np.maximum(a1, a2) >= px0)
-            & (np.minimum(a1, a2) <= px1)
-            & (np.maximum(b1, b2) >= py0)
-            & (np.minimum(b1, b2) <= py1)
+    # edges: consecutive vertices of one ring, grouped by polygon
+    last = np.zeros(len(xy), dtype=bool)
+    last[np.cumsum(lens) - 1] = True
+    e0 = np.flatnonzero(~last)
+    x1, y1 = xy[e0, 0], xy[e0, 1]
+    x2, y2 = xy[e0 + 1, 0], xy[e0 + 1, 1]
+    dx, dy = x2 - x1, y2 - y1
+    exlo, exhi = np.minimum(x1, x2), np.maximum(x1, x2)
+    eylo, eyhi = np.minimum(y1, y2), np.maximum(y1, y2)
+    n_edge = np.bincount(np.searchsorted(polys, vert_poly[e0]), minlength=len(polys))
+    estart = np.cumsum(n_edge) - n_edge
+
+    # work blocks of ≤ max_pairs (edge, cell) pairs, packed into chunks
+    step = np.maximum(1, max_pairs // ncell)
+    nblk = -(-n_edge // step)
+    blk_p = np.repeat(np.arange(len(polys)), nblk)
+    blk_j = np.arange(int(nblk.sum()), dtype=np.int64) - np.repeat(np.cumsum(nblk) - nblk, nblk)
+    blk_e = estart[blk_p] + blk_j * step[blk_p]
+    blk_pairs = np.minimum(step[blk_p], estart[blk_p] + n_edge[blk_p] - blk_e) * ncell[blk_p]
+    blk_off = np.cumsum(blk_pairs) - blk_pairs
+    cuts = np.flatnonzero(np.diff(blk_off // max_pairs)) + 1
+
+    boundary = np.zeros(len(gx), dtype=bool)
+    crossings = np.zeros(len(gx), dtype=np.int64)
+    for b in np.split(np.arange(len(blk_p)), cuts):
+        cnt = blk_pairs[b]
+        p = np.repeat(blk_p[b], cnt)
+        loc = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(blk_off[b] - blk_off[b[0]], cnt)
+        e = np.repeat(blk_e[b], cnt) + loc // ncell[p]
+        c = cstart[p] + loc % ncell[p]
+        # boundary: bbox overlap, then the 4 rect corners not all on one side
+        hit = np.flatnonzero(
+            (exhi[e] >= px0[c]) & (exlo[e] <= px1[c]) & (eyhi[e] >= py0[c]) & (eylo[e] <= py1[c])
         )
-        dx, dy = a2 - a1, b2 - b1
-        s00 = dx * (py0 - b1) - dy * (px0 - a1)
-        s01 = dx * (py1 - b1) - dy * (px0 - a1)
-        s10 = dx * (py0 - b1) - dy * (px1 - a1)
-        s11 = dx * (py1 - b1) - dy * (px1 - a1)
+        he, hc = e[hit], c[hit]
+        a1, b1, ddx, ddy = x1[he], y1[he], dx[he], dy[he]
+        s00 = ddx * (py0[hc] - b1) - ddy * (px0[hc] - a1)
+        s01 = ddx * (py1[hc] - b1) - ddy * (px0[hc] - a1)
+        s10 = ddx * (py0[hc] - b1) - ddy * (px1[hc] - a1)
+        s11 = ddx * (py1[hc] - b1) - ddy * (px1[hc] - a1)
         same = ((s00 > 0) & (s01 > 0) & (s10 > 0) & (s11 > 0)) | (
             (s00 < 0) & (s01 < 0) & (s10 < 0) & (s11 < 0)
         )
-        boundary |= (ovl & ~same).any(axis=0)
+        boundary[hc[~same]] = True
+        # center even-odd: edges straddling the center's y, crossed to its right
+        ccy = cy[c]
+        st = np.flatnonzero((y1[e] > ccy) != (y2[e] > ccy))
+        se, sc = e[st], c[st]
+        xint = dx[se] * (ccy[st] - y1[se]) / dy[se] + x1[se]
+        crossings += np.bincount(sc[cx[sc] < xint], minlength=len(gx))
 
-    center_in = points_in_rings(rx0 + w / 2.0, ry0 + h / 2.0, rings)
+    center_in = crossings % 2 == 1
     keep = boundary | center_in
-    full = center_in & ~boundary
-    return encode_ixiy(gx[keep], gy[keep], res), full[keep]
-
-
-def cover_polygon_bbox(wkb_blob: bytes, res: int) -> np.ndarray:
-    """Covering cells of a polygon's bbox at ``res`` — a superset of the
-    cells the polygon touches; the PIP refine stage removes false positives."""
-    from .geom.pip import rings_bbox
-    from .geom.wkb import wkb_rings
-
-    xmin, ymin, xmax, ymax = rings_bbox(wkb_rings(wkb_blob))
-    return cover_bbox(xmin, ymin, xmax, ymax, res)
+    return (
+        polys[cell_p[keep]],
+        encode_ixiy(gx[keep], gy[keep], r[cell_p[keep]]),
+        (center_in & ~boundary)[keep],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -283,6 +344,13 @@ def cell_id_col(lon, lat, res: int):
         .bitwiseOR(_spread_col(ix))
         .bitwiseOR(F.shiftleft(_spread_col(iy), 1))
     )
+
+
+def cell_res_col(cell):
+    """Column twin of :func:`decode_cell`'s resolution: the id's res bits."""
+    from pyspark.sql import functions as F
+
+    return F.shiftright(cell, _RES_SHIFT).cast("int")
 
 
 # --------------------------------------------------------------------------

@@ -5,13 +5,19 @@ Replaces the reference's O(N·M) nested loop
 spatial-join decomposition:
 
 1. **cover**: every polygon → its covering cells (adaptive resolution so the
-   covering stays ≤ ``max_cover_cells``), CLASSIFIED by a vectorized
-   segment-vs-rect SAT + center ray-cast (:func:`..cells.classify_cover`):
-   cells outside the polygon are dropped (bbox false positives no longer
-   scale with polygon size), fully-INTERIOR cells are flagged so their
-   candidates skip the refine UDF entirely, and only BOUNDARY cells refine;
+   covering stays ≤ ``max_cover_cells``), CLASSIFIED by one batched
+   segment-vs-rect SAT + center ray-cast over all polygons of a batch
+   (:func:`..cells.classify_cover_batch`): cells outside the polygon are
+   dropped (bbox false positives no longer scale with polygon size),
+   fully-INTERIOR cells are flagged so their candidates skip the refine UDF
+   entirely, and only BOUNDARY cells refine.  In the broadcast path the
+   polygon side is evaluated ONCE — one driver ``collect()`` that is also
+   the size probe — and both broadcast relations (covering and polygon
+   geometry) are built from those rows;
 2. **index**: every point → its cell at each covering resolution level (≤3
-   levels in practice — one `explode` of a tiny array, not a blow-up);
+   levels in practice) in ONE scan: the per-level cell ids are projected
+   first, then exploded, and ``cell_res`` is read back from the id's
+   resolution bits (:func:`with_cells`);
 3. **cell-equi join** on (res, cell_id) — broadcast when the covering side is
    small (the common case: polygons ≪ points), shuffled hash/SMJ chosen by
    Catalyst+AQE otherwise, with optional explicit hot-cell salting;
@@ -32,7 +38,7 @@ hot cell.  AQE skew-join stays on as backstop.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -56,6 +62,48 @@ _COVER_EXTRA = [
 ]
 
 
+def _cover_blobs(
+    blobs: Sequence, max_cover_cells: int, max_res: int, fixed_res: Optional[int]
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Polygon WKB blobs → ``(blob index, cell_id, cell_res, cell_full)``,
+    one row per classified covering cell, every polygon in one
+    :func:`..cells.classify_cover_batch` pass.  Each polygon is covered at
+    ``fixed_res``, or else at the finest resolution whose bbox covering
+    stays ≤ ``max_cover_cells``.  A null blob, or one without vertices,
+    covers nothing.
+    """
+    from ..geom.wkb import wkb_rings
+
+    idx, polys = [], []
+    for i, blob in enumerate(blobs):
+        if blob is not None:
+            rings = wkb_rings(bytes(blob))
+            if any(len(r) for r in rings):
+                idx.append(i)
+                polys.append(rings)
+    if not polys:
+        return (
+            np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int32), np.empty(0, bool)
+        )
+    if fixed_res is not None:
+        res = np.full(len(polys), fixed_res, dtype=np.int64)
+    else:
+        # bbox over every ring, degenerate ones included
+        n_vert = np.array([sum(len(r) for r in rings) for rings in polys])
+        xy = np.concatenate([r for rings in polys for r in rings])
+        start = np.cumsum(n_vert) - n_vert
+        res = C.adaptive_cover_res(
+            np.minimum.reduceat(xy[:, 0], start),
+            np.minimum.reduceat(xy[:, 1], start),
+            np.maximum.reduceat(xy[:, 0], start),
+            np.maximum.reduceat(xy[:, 1], start),
+            max_cover_cells,
+            max_res,
+        )
+    p, cells, full = C.classify_cover_batch(polys, res)
+    return np.asarray(idx, dtype=np.int64)[p], cells, res[p].astype(np.int32), full
+
+
 def polygon_covering(
     polygons: DataFrame,
     wkb_col: str = "wkb",
@@ -67,11 +115,13 @@ def polygon_covering(
     """polygons → (id_cols..., cell_id, cell_res, cell_full): one row per
     covering cell, CLASSIFIED (X1 as SURVEYed): cells outside the polygon
     are dropped at the source; ``cell_full`` marks cells entirely in the
-    interior — their candidates skip the ray-cast refine.
+    interior — their candidates skip the ray-cast refine.  Rows with a null
+    ``wkb_col`` cover nothing.
 
     Per-polygon adaptive resolution (finest res whose bbox covering is ≤
     ``max_cover_cells``) keeps giant polygons from exploding while small
-    polygons stay selective.
+    polygons stay selective.  Each Arrow batch is one batched kernel call
+    (the same :func:`_cover_blobs` the broadcast join runs on the driver).
     """
     id_cols = id_cols or [c for c in polygons.columns if c != wkb_col]
     out_schema = StructType(
@@ -79,43 +129,13 @@ def polygon_covering(
     )
 
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..geom.pip import rings_bbox
-        from ..geom.wkb import wkb_rings
-
         cols = [f.name for f in out_schema.fields]
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
-                continue
-            # one Python step per polygon (WKB parse is inherently per-blob);
-            # the per-CELL expansion — up to max_cover_cells rows each — is
-            # numpy repeat/concat, not row dicts (r1 verdict item 8)
-            covers, fulls, res_v = [], [], []
-            for blob in pdf[wkb_col]:
-                rings = wkb_rings(bytes(blob))
-                xmin, ymin, xmax, ymax = rings_bbox(rings)
-                res = (
-                    fixed_res
-                    if fixed_res is not None
-                    else C.adaptive_cover_res(xmin, ymin, xmax, ymax, max_cover_cells, max_res)
-                )
-                cc, ff = C.classify_cover(rings, res)
-                covers.append(cc)
-                fulls.append(ff)
-                res_v.append(res)
-            counts = np.array([len(c) for c in covers])
-            out = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            out["cell_id"] = (
-                np.concatenate(covers) if covers else np.empty(0, dtype=np.int64)
+            i, cells, res, full = _cover_blobs(
+                pdf[wkb_col], max_cover_cells, max_res, fixed_res
             )
-            out["cell_res"] = np.repeat(
-                np.asarray(res_v, dtype=np.int32), counts
-            )
-            out["cell_full"] = (
-                np.concatenate(fulls) if fulls else np.empty(0, dtype=bool)
-            )
+            out = {c: pdf[c].to_numpy()[i] for c in id_cols}
+            out.update(cell_id=cells, cell_res=res, cell_full=full)
             yield pd.DataFrame(out, columns=cols)
 
     return polygons.mapInPandas(cover, schema=out_schema)
@@ -127,30 +147,44 @@ def with_cells(
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    """points → + (cell_id, cell_res), exploded over the resolution levels
-    present in the covering (multi-res equi-join trick).
+    """points → + (cell_res, cell_id), one row per (point, level) over the
+    resolution levels present in the covering (multi-res equi-join trick).
 
     Cell ids are computed with pure Catalyst bit arithmetic
     (:func:`shapefile_rs_spark.cells.cell_id_col`) — the point side of the
-    join never leaves whole-stage codegen.  Multi-level indexing is a UNION
-    of per-level projections, NOT explode+CASE: a CASE over a generator
-    output knocks the cell expression out of codegen (measured 20×
-    slower), while the union keeps every branch a plain codegen'd map.
-    The common case is a single level (no union at all); coverings produce
-    ≤3 levels, and at 100 TB the extra source scans stay proportional to
-    the number of levels actually present."""
+    join never leaves whole-stage codegen, and the points are scanned ONCE
+    whatever the number of levels.  Several levels are one projection of
+    every level's id, then an ``explode`` of their array; ``cell_res`` is
+    the id's resolution bits (``cell_id >> 58``), so no CASE over the
+    generator output is needed (a CASE there knocks the stage out of
+    codegen, measured 20× slower).  The ids are projected BEFORE the
+    explode on purpose: the cell expression repeats its input 32× inside
+    its bit-spreading steps, and only a projection de-duplicates those
+    repeats — exploding the inline expressions measured ~5× slower.
+    No level at all (an empty covering) gives an empty frame with the
+    same columns."""
     levels = sorted(set(int(r) for r in res_levels))
     lon, lat = F.col(lon_col), F.col(lat_col)
-    parts = [
-        points.withColumn("cell_res", F.lit(r)).withColumn(
-            "cell_id", C.cell_id_col(lon, lat, r)
+    if len(levels) == 1:
+        return points.withColumn("cell_res", F.lit(levels[0])).withColumn(
+            "cell_id", C.cell_id_col(lon, lat, levels[0])
         )
-        for r in levels
+    if not levels:
+        return points.select(
+            "*",
+            F.lit(None).cast("int").alias("cell_res"),
+            F.lit(None).cast("long").alias("cell_id"),
+        ).where(F.lit(False))
+    tmp = [f"_cell_{r}" for r in levels]
+    ids = points.select("*", *[C.cell_id_col(lon, lat, r).alias(t) for r, t in zip(levels, tmp)])
+    out = ids.withColumn("cell_id", F.explode(F.array(*tmp))).drop(*tmp)
+    out = out.withColumn("cell_res", C.cell_res_col(F.col("cell_id")))
+    quoted = [
+        "`" + c.replace("`", "``") + "`"
+        for c in points.columns
+        if c not in ("cell_res", "cell_id")
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return out.select(*quoted, "cell_res", "cell_id")
 
 
 @F.pandas_udf(StructType([StructField("ix", LongType()), StructField("iy", LongType())]))
@@ -236,17 +270,24 @@ def point_in_polygon_join(
 ) -> DataFrame:
     """Emit one row per (point, containing polygon) — the Q1 join.
 
-    ``broadcast_polygons=None`` auto-selects: counts the polygon side (cheap,
-    it is the small side) and broadcasts under ``small_poly_threshold``
-    polygons — the explicit two-phase broadcast/sort-merge selection the
-    north_star demands.  In the broadcast phase the covering is computed
-    DRIVER-side with the numpy kernels (no Spark stage at all — the polygon
-    side is by definition collectible) and shipped as a local relation, so
-    the whole join is one codegen'd scan of the point side plus the refine
-    UDF.  ``salt_factor>0`` activates explicit hot-cell salting for the
-    shuffle path: point rows in hot cells get ``pmod(hash, salt_factor)``
-    appended to the key; covering rows for hot cells are replicated across
-    all salts.
+    ``broadcast_polygons=None`` auto-selects: one driver
+    ``limit(small_poly_threshold + 1).collect()`` of the polygon side is
+    both the size probe and the fetch; up to ``small_poly_threshold`` rows
+    take the broadcast phase, more take the shuffle phase — the explicit
+    two-phase broadcast/sort-merge selection the north_star demands.  In the
+    broadcast phase (also ``broadcast_polygons=True``, which collects the
+    whole side) the polygon side is evaluated exactly once: the covering is
+    computed DRIVER-side with the batched numpy kernel and shipped, with the
+    polygon geometry, as two Arrow-built local relations, so the whole join
+    is one codegen'd scan of the point side plus the refine UDF.
+    ``salt_factor>0`` activates explicit hot-cell salting for the shuffle
+    path: point rows in hot cells get ``pmod(hash, salt_factor)`` appended
+    to the key; covering rows for hot cells are replicated across all salts.
+
+    A polygon row whose ``wkb_col`` is null (``read_shapefiles(...,
+    on_invalid="null")``, strip/fan multipatch) contains no point: it gets
+    no covering cells and joins nothing, on both paths.  An empty polygon
+    side gives an empty frame with the join's output columns.
 
     ``pre_indexed=True`` declares that ``points`` already carries
     ``cell_res``/``cell_id`` at every covering resolution (use with
@@ -256,40 +297,34 @@ def point_in_polygon_join(
     point_cols = point_cols or [c for c in points.columns]
     polygon_cols = polygon_cols or [polygon_key]
     spark = points.sparkSession
+    poly_geo = polygons.select(*dict.fromkeys([polygon_key, *polygon_cols, wkb_col]))
 
-    if broadcast_polygons is None:
-        broadcast_polygons = polygons.count() <= small_poly_threshold
+    if broadcast_polygons is not False:
+        if broadcast_polygons is None:
+            rows = poly_geo.limit(small_poly_threshold + 1).collect()
+            broadcast_polygons = len(rows) <= small_poly_threshold
+        else:
+            rows = poly_geo.collect()
 
     if broadcast_polygons:
-        from ..geom.pip import rings_bbox
-        from ..geom.wkb import wkb_rings
-
-        poly_rows = polygons.select(polygon_key, wkb_col).collect()
-        cov_ids, cov_cells, cov_res, cov_full = [], [], [], []
-        for row in poly_rows:
-            rings = wkb_rings(bytes(row[wkb_col]))
-            xmin, ymin, xmax, ymax = rings_bbox(rings)
-            res = (
-                fixed_res
-                if fixed_res is not None
-                else C.adaptive_cover_res(xmin, ymin, xmax, ymax, max_cover_cells, max_res)
-            )
-            cc, ff = C.classify_cover(rings, res)
-            cov_ids.extend([row[polygon_key]] * len(cc))
-            cov_cells.extend(cc.tolist())
-            cov_res.extend([res] * len(cc))
-            cov_full.extend(ff.tolist())
+        # object columns keep ids exact (no float64 detour for null ints)
+        geo_pdf = pd.DataFrame(
+            {c: pd.Series([r[i] for r in rows], dtype=object) for i, c in enumerate(poly_geo.columns)}
+        )
+        i, cells, res, full = _cover_blobs(geo_pdf[wkb_col], max_cover_cells, max_res, fixed_res)
         covering = spark.createDataFrame(
             pd.DataFrame(
                 {
-                    polygon_key: cov_ids,
-                    "cell_id": cov_cells,
-                    "cell_res": cov_res,
-                    "cell_full": cov_full,
+                    polygon_key: geo_pdf[polygon_key].to_numpy()[i],
+                    "cell_id": cells,
+                    "cell_res": res,
+                    "cell_full": full,
                 }
-            )
+            ),
+            schema=StructType([poly_geo.schema[polygon_key]] + _COVER_EXTRA),
         )
-        res_levels = sorted(set(cov_res))
+        poly_geo = spark.createDataFrame(geo_pdf, schema=poly_geo.schema)
+        res_levels = sorted(set(res.tolist()))
     else:
         covering = polygon_covering(
             polygons,
@@ -366,9 +401,6 @@ def point_in_polygon_join(
     else:
         candidates = pts.join(covering, on=["cell_res", "cell_id"], how="inner")
 
-    poly_geo = polygons.select(
-        *dict.fromkeys([polygon_key, *polygon_cols, wkb_col])
-    )
     joined = candidates.join(
         F.broadcast(poly_geo) if broadcast_polygons else poly_geo, on=polygon_key, how="inner"
     )

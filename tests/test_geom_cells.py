@@ -2,6 +2,8 @@
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from shapefile_rs_spark import cells as C
 from shapefile_rs_spark import fixtures as FX
@@ -221,3 +223,84 @@ def test_classify_cover_degenerate_rings_empty():
 
     cells, full = C.classify_cover([np.array([[1.0, 2.0]])], res=6)
     assert len(cells) == 0 and len(full) == 0
+
+
+def _classify_cover_reference(rings, res, pad_frac=1e-9):
+    """The per-polygon covering as first written (one E×C broadcast, no
+    chunking): the batched kernel must reproduce it bit for bit."""
+    rings = [np.asarray(r, dtype=np.float64) for r in rings if len(r) >= 2]
+    if not rings:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=bool)
+    xmin, ymin, xmax, ymax = P.rings_bbox(rings)
+    ix0, iy0 = C.lonlat_to_ixiy(np.array([xmin]), np.array([ymin]), res)
+    ix1, iy1 = C.lonlat_to_ixiy(np.array([xmax]), np.array([ymax]), res)
+    n = float(1 << res)
+    w, h = 360.0 / n, 180.0 / n
+    gx, gy = np.meshgrid(np.arange(ix0[0], ix1[0] + 1), np.arange(iy0[0], iy1[0] + 1))
+    gx, gy = gx.ravel(), gy.ravel()
+    rx0, ry0 = -180.0 + gx * w, -90.0 + gy * h
+    px0, py0 = rx0 - w * pad_frac, ry0 - h * pad_frac
+    px1, py1 = rx0 + w + w * pad_frac, ry0 + h + h * pad_frac
+    a1 = np.concatenate([r[:-1, 0] for r in rings])[:, None]
+    b1 = np.concatenate([r[:-1, 1] for r in rings])[:, None]
+    a2 = np.concatenate([r[1:, 0] for r in rings])[:, None]
+    b2 = np.concatenate([r[1:, 1] for r in rings])[:, None]
+    ovl = (
+        (np.maximum(a1, a2) >= px0) & (np.minimum(a1, a2) <= px1)
+        & (np.maximum(b1, b2) >= py0) & (np.minimum(b1, b2) <= py1)
+    )
+    dx, dy = a2 - a1, b2 - b1
+    s = [dx * (y - b1) - dy * (x - a1) for x in (px0, px1) for y in (py0, py1)]
+    same = np.logical_and.reduce([v > 0 for v in s]) | np.logical_and.reduce([v < 0 for v in s])
+    boundary = (ovl & ~same).any(axis=0)
+    with np.errstate(over="ignore"):  # non-straddling edges, masked out
+        center_in = P.points_in_rings(rx0 + w / 2.0, ry0 + h / 2.0, rings)
+    keep = boundary | center_in
+    return C.encode_ixiy(gx[keep], gy[keep], res), (center_in & ~boundary)[keep]
+
+
+@st.composite
+def _star_layers(draw):
+    """A layer of star polygons (some with a star hole, some with 1- and
+    2-point degenerate rings, some with nothing but degenerate rings), each
+    at its own adaptive resolution."""
+    polys, res = [], []
+    for _ in range(draw(st.integers(0, 6))):
+        cx = draw(st.floats(-179.0, 179.0))
+        cy = draw(st.floats(-89.0, 89.0))
+        radius = draw(st.floats(1e-4, 1.0))
+        n = draw(st.integers(3, 12))
+        t = np.sort(np.array(draw(st.lists(st.floats(0.0, 6.28), min_size=n, max_size=n))))
+        rad = radius * np.array(draw(st.lists(st.floats(0.2, 1.0), min_size=n, max_size=n)))
+        outer = np.column_stack([cx + rad * np.cos(t), cy + rad * np.sin(t)])
+        rings = [np.vstack([outer, outer[:1]])]
+        if draw(st.booleans()):
+            hole = np.column_stack([cx + 0.15 * radius * np.cos(t), cy + 0.15 * radius * np.sin(t)])
+            rings.append(np.vstack([hole, hole[:1]])[::-1])
+        if draw(st.booleans()):
+            rings.insert(draw(st.integers(0, len(rings))), outer[: draw(st.integers(1, 2))])
+        if draw(st.integers(0, 9)) == 0:
+            rings = [outer[:1]]
+        polys.append(rings)
+        bbox = P.rings_bbox(rings)
+        res.append(C.adaptive_cover_res(*bbox, draw(st.sampled_from([1, 9, 64, 300])), 16))
+    return polys, res
+
+
+@settings(max_examples=80, deadline=None)
+@given(_star_layers(), st.sampled_from([1, 40, 1 << 16]))
+def test_classify_cover_batch_matches_per_polygon(layer, max_pairs):
+    """The batched covering kernel returns, polygon by polygon, exactly the
+    per-polygon covering (cells, order and FULL flags), whatever the pair
+    chunk — including degenerate rings, holes and mixed resolutions."""
+    polys, res = layer
+    poly, cells, full = C.classify_cover_batch(polys, res, max_pairs=max_pairs)
+    assert np.all(np.diff(poly) >= 0)
+    for i, (rings, r) in enumerate(zip(polys, res)):
+        mine = poly == i
+        for want_cells, want_full in (
+            C.classify_cover(rings, r),
+            _classify_cover_reference(rings, r),
+        ):
+            assert np.array_equal(cells[mine], want_cells)
+            assert np.array_equal(full[mine], want_full)

@@ -68,6 +68,19 @@ def test_page_synthesis_stays_in_codegen(spark, sf_dir):
     assert "EvalPython" not in plan  # no row- or Arrow-batch Python stages
 
 
+def test_multi_level_with_cells_is_one_scan(spark, sf_dir):
+    """Two covering levels index the points in ONE scan: no Union of
+    per-level re-scans, and the cell ids stay Catalyst (no Python)."""
+    from shapefile_rs_spark.operators.spatial_join import with_cells
+    from shapefile_rs_spark.pages import geotag_pages, pages_from_documents
+
+    pages = geotag_pages(pages_from_documents(spark, sf_dir)).select("doc_id", "lon", "lat")
+    plan = _plan(with_cells(pages, [4, 8]))
+    assert plan.count("FileScan") == 1
+    assert "Union" not in plan
+    assert "EvalPython" not in plan
+
+
 def test_bucketed_cell_join_is_exchange_free(spark, tmp_path):
     """Tables bucketed on cell_id with equal bucket counts must co-join
     with NO Exchange on either side — the write-once/join-many layout the

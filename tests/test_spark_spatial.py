@@ -128,8 +128,8 @@ def test_cell_id_col_matches_numpy_kernel(spark):
 
 
 def test_with_cells_multi_level_union(spark):
-    """Multi-resolution indexing (union-of-levels) yields one row per
-    (point, level) with the right per-level ids."""
+    """Multi-resolution indexing yields one row per (point, level) with
+    the right per-level ids."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -613,3 +613,87 @@ def test_pip_join_carries_polygon_wkb_intact(spark):
     rows = out.collect()
     assert rows, "grid must intersect the demo polygons"
     assert all(r.wkb is not None for r in rows)
+
+
+def _demo_points(spark):
+    return spark.range(0, 2000).select(
+        F.col("id").alias("doc_id"),
+        ((F.col("id") % 100) * 0.1).alias("lon"),
+        ((F.col("id") % 50) * 0.2).alias("lat"),
+    )
+
+
+@pytest.mark.parametrize("broadcast", [None, False])
+def test_pip_join_empty_polygon_layer(spark, broadcast):
+    """No polygons → no rows, with the join's output columns (both paths)."""
+    empty = spark.createDataFrame([], "polygon_id bigint, wkb binary")
+    out = point_in_polygon_join(
+        _demo_points(spark), empty, point_cols=["doc_id"], broadcast_polygons=broadcast
+    )
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<doc_id:bigint,polygon_id:bigint>"
+
+
+@pytest.mark.parametrize("broadcast", [None, False])
+def test_pip_join_null_wkb_polygon_contains_nothing(spark, broadcast):
+    """A polygon row with null wkb contains no point: the other polygons'
+    rows come back unchanged and the null one joins nothing (both paths)."""
+    from shapefile_rs_spark import demo
+
+    polys = demo.oracle_polygons_df(spark)
+    with_null = polys.unionByName(
+        spark.sql("SELECT CAST(3 AS BIGINT) AS polygon_id, CAST(NULL AS BINARY) AS wkb")
+    )
+    kwargs = dict(point_cols=["doc_id"], broadcast_polygons=broadcast)
+    pts = _demo_points(spark)
+    want = {tuple(r) for r in point_in_polygon_join(pts, polys, **kwargs).collect()}
+    got = {tuple(r) for r in point_in_polygon_join(pts, with_null, **kwargs).collect()}
+    assert got == want and len(want) > 0
+
+
+def test_broadcast_join_evaluates_polygon_side_once(spark, join_fixture_dir):
+    """The auto-broadcast join reads a shapefile-sourced polygon layer once:
+    its job group holds exactly the file-scan stages of ONE collect() of the
+    polygon side (not a count, a collect and a broadcast re-read).  Stages
+    are counted from Spark's status store; the point side reads no file."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    polygons = (
+        shapes_with_typed_attrs(
+            read_shapefiles(spark, join_fixture_dir, pattern="polygons"), {"id": "bigint"}
+        ).select(F.col("id").alias("polygon_id"), "wkb")
+    )
+
+    def file_scan_stages(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setJobGroup("", "")
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+        store = jsc.statusStore()
+        n = 0
+        for job in conv.asJava(store.jobsList(None)):
+            if not (job.jobGroup().isDefined() and job.jobGroup().get() == group):
+                continue
+            for sid in conv.asJava(job.stageIds()):
+                try:
+                    attempts = conv.asJava(store.stageData(sid, False, None, False, None))
+                except Py4JJavaError:
+                    continue  # skipped stage, never submitted
+                n += sum(1 for st in attempts if st.numCompleteTasks() and st.inputBytes() > 0)
+        return out, n
+
+    _, once = file_scan_stages("poly-side-collect", lambda: polygons.collect())
+    rows, in_join = file_scan_stages(
+        "poly-side-join",
+        lambda: point_in_polygon_join(
+            _demo_points(spark), polygons, point_cols=["doc_id"]
+        ).collect(),
+    )
+    assert once >= 1
+    assert in_join == once, f"polygon side scanned in {in_join} stages, one collect takes {once}"
+    assert rows
