@@ -346,6 +346,58 @@ def cell_id_col(lon, lat, res: int):
     )
 
 
+def with_cell_ids(df, lon_col: str, lat_col: str, ids: dict):
+    """``df`` plus one column per ``{name: res}`` of ``ids``, holding
+    :func:`cell_id_col` of the columns named ``lon_col``/``lat_col`` at
+    that res (an existing column of that name is replaced).
+
+    The same operations as :func:`cell_id_col`, split over two
+    projections: the grid coordinates through the first two bit-spreading
+    steps, then the last three steps and the id.  Every step reads its
+    input twice, so :func:`cell_id_col` nests the grid expression 32 times
+    per axis, and the analyzer, the optimizer and code generation walk all
+    of those copies in every query built on it; split, no expression holds
+    more than 4 copies of the grid expression or 8 of a column reference.
+    The optimizer keeps the two projections apart, because the second
+    reads each column of the first more than once.  The expressions are
+    SQL text: one call into the JVM per column, where building them from
+    :mod:`pyspark.sql.functions` takes a few per operator."""
+    from pyspark.sql import functions as F
+
+    def q(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
+
+    def spread(e: str, steps) -> str:
+        for shift, mask in steps:
+            e = f"(({e}) | shiftleft(({e}), {shift})) & {mask}"
+        return e
+
+    first, rest = _SPREAD_MASKS[:2], _SPREAD_MASKS[2:]
+    tmp = {}
+    for name, res in ids.items():
+        if not 0 <= res <= MAX_RES:
+            raise ValueError(f"res must be 0..{MAX_RES}")
+        n = 1 << res
+        for axis, c, off, span in (("x", lon_col, 180, 360), ("y", lat_col, 90, 180)):
+            # cell_id_col's grid coordinate and _spread_col's low-bits mask
+            grid = (
+                f"CAST(least({n - 1}, greatest(0, floor(({q(c)} + {off}.0D) / {span}.0D * {n})))"
+                f" AS BIGINT) & {0x1FFFFFFF}"
+            )
+            tmp[f"_cell_{axis}_{name}"] = spread(grid, first)
+    df = df.withColumns({t: F.expr(e) for t, e in tmp.items()})
+    df = df.withColumns(
+        {
+            name: F.expr(
+                f"{res << _RES_SHIFT} | ({spread(q(f'_cell_x_{name}'), rest)})"
+                f" | shiftleft(({spread(q(f'_cell_y_{name}'), rest)}), 1)"
+            )
+            for name, res in ids.items()
+        }
+    )
+    return df.drop(*tmp)
+
+
 def cell_res_col(cell):
     """Column twin of :func:`decode_cell`'s resolution: the id's res bits."""
     from pyspark.sql import functions as F

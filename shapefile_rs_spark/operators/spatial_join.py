@@ -151,23 +151,28 @@ def with_cells(
     resolution levels present in the covering (multi-res equi-join trick).
 
     Cell ids are computed with pure Catalyst bit arithmetic
-    (:func:`shapefile_rs_spark.cells.cell_id_col`) — the point side of the
-    join never leaves whole-stage codegen, and the points are scanned ONCE
-    whatever the number of levels.  Several levels are one projection of
-    every level's id, then an ``explode`` of their array; ``cell_res`` is
-    the id's resolution bits (``cell_id >> 58``), so no CASE over the
-    generator output is needed (a CASE there knocks the stage out of
-    codegen, measured 20× slower).  The ids are projected BEFORE the
-    explode on purpose: the cell expression repeats its input 32× inside
-    its bit-spreading steps, and only a projection de-duplicates those
+    (:func:`shapefile_rs_spark.cells.with_cell_ids`, the two-projection
+    form of :func:`..cells.cell_id_col`) — the point side of the join never
+    leaves whole-stage codegen, and the points are scanned ONCE whatever the
+    number of levels.  Several levels are one projection of every level's
+    id, then an ``explode`` of their array; ``cell_res`` is the id's
+    resolution bits (``cell_id >> 58``), so no CASE over the generator
+    output is needed (a CASE there knocks the stage out of codegen,
+    measured 20× slower).  The ids are projected BEFORE the explode on
+    purpose: the inline cell expression repeats its input 32× inside its
+    bit-spreading steps, and ``Generate`` does not de-duplicate those
     repeats — exploding the inline expressions measured ~5× slower.
+    :func:`..cells.with_cell_ids` goes further and splits the spreading
+    steps over two projections, so no plan carries the 32× expression at
+    all: less driver time to analyze, optimize and compile every query
+    built on the index, and less of it still warming up in a session's
+    first queries.
     No level at all (an empty covering) gives an empty frame with the
     same columns."""
     levels = sorted(set(int(r) for r in res_levels))
-    lon, lat = F.col(lon_col), F.col(lat_col)
     if len(levels) == 1:
-        return points.withColumn("cell_res", F.lit(levels[0])).withColumn(
-            "cell_id", C.cell_id_col(lon, lat, levels[0])
+        return C.with_cell_ids(
+            points.withColumn("cell_res", F.lit(levels[0])), lon_col, lat_col, {"cell_id": levels[0]}
         )
     if not levels:
         return points.select(
@@ -176,15 +181,14 @@ def with_cells(
             F.lit(None).cast("long").alias("cell_id"),
         ).where(F.lit(False))
     tmp = [f"_cell_{r}" for r in levels]
-    ids = points.select("*", *[C.cell_id_col(lon, lat, r).alias(t) for r, t in zip(levels, tmp)])
-    out = ids.withColumn("cell_id", F.explode(F.array(*tmp))).drop(*tmp)
-    out = out.withColumn("cell_res", C.cell_res_col(F.col("cell_id")))
+    ids = C.with_cell_ids(points, lon_col, lat_col, dict(zip(tmp, levels)))
     quoted = [
         "`" + c.replace("`", "``") + "`"
         for c in points.columns
         if c not in ("cell_res", "cell_id")
     ]
-    return out.select(*quoted, "cell_res", "cell_id")
+    out = ids.select(*quoted, F.explode(F.array(*tmp)).alias("cell_id"))
+    return out.select(*quoted, C.cell_res_col(F.col("cell_id")).alias("cell_res"), "cell_id")
 
 
 @F.pandas_udf(StructType([StructField("ix", LongType()), StructField("iy", LongType())]))

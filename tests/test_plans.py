@@ -79,6 +79,9 @@ def test_multi_level_with_cells_is_one_scan(spark, sf_dir):
     assert plan.count("FileScan") == 1
     assert "Union" not in plan
     assert "EvalPython" not in plan
+    # the grid coordinate is nested 4 times per (level, axis) in the
+    # projection of the first spreading steps, not 32 times as inline
+    assert plan.count("FLOOR(") - _plan(pages).count("FLOOR(") == 2 * 2 * 4
 
 
 def test_bucketed_cell_join_is_exchange_free(spark, tmp_path):

@@ -127,6 +127,31 @@ def test_cell_id_col_matches_numpy_kernel(spark):
         assert (got == C.cell_id(lon, lat, res)).all()
 
 
+def test_with_cell_ids_matches_cell_id_col(spark):
+    """The staged-projection ids (cells.with_cell_ids) equal the inline
+    cell_id_col ids at every res, edges, out-of-range and NaN included."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from shapefile_rs_spark import cells as C
+
+    rng = np.random.default_rng(11)
+    lon = np.concatenate(
+        [rng.uniform(-180, 180, 2000), [-180.0, 180.0, 0.0, -179.9999999, 200.0, -200.0, np.nan]]
+    )
+    lat = np.concatenate(
+        [rng.uniform(-90, 90, 2000), [-90.0, 90.0, 0.0, 89.9999999, 100.0, -100.0, 1.0]]
+    )
+    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    levels = {f"c{r}": r for r in (0, 1, 6, 11, 12, 29)}
+    ref = [C.cell_id_col(F.col("lon"), F.col("lat"), r).alias(f"ref_{n}") for n, r in levels.items()]
+    out = C.with_cell_ids(df, "lon", "lat", levels).select("*", *ref).toPandas()
+    assert list(out.columns[:2 + len(levels)]) == ["lon", "lat", *levels]
+    for n in levels:
+        assert (out[n] == out[f"ref_{n}"]).all(), n
+
+
 def test_with_cells_multi_level_union(spark):
     """Multi-resolution indexing yields one row per (point, level) with
     the right per-level ids."""
