@@ -1077,8 +1077,8 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-epoch training-order manifest: exact global
-    positions over an md5 permutation key via the two-phase sample-sort
-    rank (single all-rows stratum — no single-task global window)."""
+    positions over an md5 permutation key via the segmented scan over
+    one global stratum (no single-task global window)."""
     from shapefile_rs_spark.operators.curation import epoch_order
 
     return epoch_order(_docs(spark, sf_dir), seed="epoch1")

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import word_shingles_sql
+from .scan import SCAN_COL, route_mega_strata, segmented_scan
 
 # Redaction patterns — shared Java-regex/RE2 subset (no backrefs, no
 # lookaround) so the Spark and DuckDB spellings are the SAME string.
@@ -639,28 +640,11 @@ def quality_prune(
     without re-ranking.
 
     Scale shape: the default (``mega_strata_threshold=None``) is ONE
-    shuffle on the stratum key serving both windows (rank and count share
-    the partitioning) — correct while every stratum fits a partition.
-    But languages are few → strata are huge: a single window partition
-    per stratum serializes the rank of a 10 TB 'en' stratum through one
-    task.  Set ``mega_strata_threshold`` to the per-partition row budget
-    and, when any stratum's count exceeds it, the operator switches to
-    the TWO-PHASE exact rank:
-
-    1. per-stratum counts by map-side-combined ``groupBy`` (tiny: one row
-       per language), rebuilt as a VALUES literal and **broadcast**-joined
-       back for ``n_stratum`` — no count window;
-    2. a range repartition on (stratum, score desc NULLS LAST, id) — the
-       sample-sort boundary pass; Spark samples split points, so a mega
-       stratum spreads over MANY partitions in global sort order;
-    3. one tiny collect of per-(partition, stratum) counts prices each
-       partition's rank offset exactly (the summed-area-table move from
-       knn_cells); an Arrow-batched pass over ONLY (id, stratum) assigns
-       ``q_rank = offset + within-partition position`` and the ranks
-       join back on the unique non-null id — exact global ranks,
-       identical to the window spelling row-for-row, with no single-task
-       stratum anywhere and no pandas round-trip of payload columns
-       (a nullable int64 over 2^53 would corrupt through float64).
+    shuffle on the stratum key serving both windows, correct while every
+    stratum fits a partition; when a stratum exceeds
+    ``mega_strata_threshold`` rows, the rank comes from
+    :func:`.scan.segmented_scan` instead (no single-task stratum) and
+    ``n_stratum`` is broadcast-joined from the routing counts.
 
     Both paths produce identical output (pinned by pytest at a forced
     threshold and by the driver oracle row); the threshold only picks the
@@ -681,51 +665,20 @@ def quality_prune(
 
     if not 0.0 <= frac <= 1.0:
         raise ValueError(f"frac {frac} outside [0, 1]")
-    if mega_strata_threshold is not None:
-        import math as _math
-
-        counts = {
-            r["s"]: r["n"]
-            for r in df.groupBy(F.col(strata_col).alias("s"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        # NaN strata are unusable on the counted paths: a float NaN key
-        # never matches itself in the offsets dict (nan != nan) and a
-        # Spark NULL and NaN double both arrive as pandas NaN through
-        # Arrow, so the rank pass cannot keep them as the two distinct
-        # window partitions the plain spelling uses — reject loudly (the
-        # advice-sanctioned treatment, like the null/duplicate id guards)
-        if any(isinstance(s, float) and _math.isnan(s) for s in counts):
-            raise ValueError(
-                f"{strata_col} contains NaN strata: indistinguishable from "
-                "NULL through the Arrow rank pass — filter or normalize NaN "
-                "before setting mega_strata_threshold (the default window "
-                "path ranks NaN as its own stratum)"
-            )
-        if mega_strata_threshold == "auto":
-            shuffle_par = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-            mega_strata_threshold = max(1, sum(counts.values()) // max(shuffle_par, 1))
-        elif isinstance(mega_strata_threshold, str):
-            raise ValueError(
-                f"mega_strata_threshold {mega_strata_threshold!r}: "
-                "expected an int row budget, 'auto', or None"
-            )
-        if counts and max(counts.values()) > mega_strata_threshold:
-            return _quality_prune_two_phase(
-                df, frac, strata_col, id_col, order_col, counts
-            )
-        if counts:
-            # the routing scan already computed the per-stratum counts —
-            # reuse them as a broadcast join instead of discarding the
-            # pass and recomputing the identical counts as a window
-            w = Window.partitionBy(strata_col).orderBy(
-                F.col(order_col).desc_nulls_last(), F.col(id_col).asc()
-            )
-            return _attach_counts_and_filter(
-                df.withColumn("q_rank", F.row_number().over(w)),
-                df, frac, strata_col, counts,
-            )
+    counts, two_phase = route_mega_strata(df, strata_col, mega_strata_threshold)
+    if two_phase:
+        return _quality_prune_two_phase(df, frac, strata_col, id_col, order_col, counts)
+    if counts:
+        # the routing scan already computed the per-stratum counts —
+        # reuse them as a broadcast join instead of discarding the pass
+        # and recomputing the identical counts as a window
+        w = Window.partitionBy(strata_col).orderBy(
+            F.col(order_col).desc_nulls_last(), F.col(id_col).asc()
+        )
+        return _attach_counts_and_filter(
+            df.withColumn("q_rank", F.row_number().over(w)),
+            df, frac, strata_col, counts,
+        )
     # explicit NULLS LAST for the same config-drift reason host_cap
     # documents (DuckDB's default_null_order is a session setting):
     # unscored docs must not outrank scored ones
@@ -775,117 +728,23 @@ def _quality_prune_two_phase(
     order_col: str,
     counts: Dict,
 ) -> DataFrame:
-    """Exact per-stratum ranks without a per-stratum window partition —
-    see :func:`quality_prune` for the three-step shape.  ``counts`` is the
-    already-collected per-stratum row count (strata are few by the
-    operator's premise, so both the dict and the VALUES rebuild are tiny).
-
-    Contracts: ``id_col`` must be UNIQUE and NON-NULL (the window
-    spelling's tie-break assumes it too; the rank pass here carries only
-    (id, stratum) through Arrow and joins ranks back on id — a duplicate
-    id would fan the join out).  Ranks are IntegerType on BOTH paths
-    (Spark's row_number is int-typed), so a stratum beyond 2³¹−1 rows is
-    rejected loudly rather than wrapped.  The result frame records the
-    internal cache under ``_sig_caches`` — loop-style callers release it
-    with :func:`..dedup.release_sig_caches` after materializing."""
-    import numpy as np
-    import pandas as pd
-    from pyspark import TaskContext
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    """Exact per-stratum ranks from :func:`.scan.segmented_scan` (q_rank =
+    running row count + 1), thresholded against ``counts``, the
+    already-collected per-stratum row counts.  Ranks are IntegerType on
+    BOTH paths (Spark's row_number is int-typed), so a stratum beyond
+    2³¹−1 rows is rejected loudly rather than wrapped.  The scan's id
+    contract (unique, non-null) and ``_sig_caches`` release hook carry
+    over to the result."""
     if max(counts.values()) > 2**31 - 1:
         raise ValueError(
             "a stratum exceeds 2^31-1 rows: q_rank is IntegerType on both "
             "the window and two-phase paths (Spark row_number is int) — "
             "split the stratum or widen the rank contract first"
         )
-    spark = df.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
-    # sample-sort boundary pass: range partitioning samples split points,
-    # so one mega stratum spans many partitions in global (stratum, score
-    # desc, id) order — the exact order the window spelling ranks in
-    sort_keys = [
-        F.col(strata_col).asc(),
-        F.col(order_col).desc_nulls_last(),
-        F.col(id_col).asc(),
-    ]
-    ordered = (
-        df.repartitionByRange(par, *sort_keys)
-        .sortWithinPartitions(*sort_keys)
-        .persist()
-    )
-    # ONE action doubles as the eager materializer (the offset probe and
-    # the rank pass both read the cache — a separate count() here would be
-    # a second full scan, the CLAUDE.md probe-merge rule) AND the LOUD
-    # id-contract check: the rank join-back silently DROPS null-id rows
-    # (null keys never match) and FANS OUT duplicate ids into wrong
-    # (row, rank) pairings — inputs the window spelling tolerates — so
-    # reject them here like the 2^31 rank bound above, releasing the
-    # cache on the error path (loop-style callers catch per batch).
-    chk = ordered.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.count(id_col).alias("_nn"),
-        F.count_distinct(id_col).alias("_nd"),
-    ).collect()[0]
-    if chk["_nn"] != chk["_n"] or chk["_nd"] != chk["_n"]:
-        ordered.unpersist()
-        if chk["_nn"] != chk["_n"]:
-            raise ValueError(
-                f"{id_col} has {chk['_n'] - chk['_nn']} null(s): the two-phase "
-                "rank joins back on the id, which must be non-null"
-            )
-        raise ValueError(
-            f"{id_col} has duplicates ({chk['_nd']} distinct of {chk['_n']}): "
-            "the two-phase rank joins back on the id, which must be unique"
-        )
-    # tiny control frame: one row per (partition, stratum) — bounded by
-    # partitions + strata, never by data size
-    pid_counts = (
-        ordered.groupBy(
-            F.spark_partition_id().alias("_pid"), F.col(strata_col).alias("_s")
-        )
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
-    offsets: dict = {}
-    running: dict = {}
-    for r in sorted(pid_counts, key=lambda r: r["_pid"]):
-        offsets[(r["_pid"], r["_s"])] = running.get(r["_s"], 0)
-        running[r["_s"]] = running.get(r["_s"], 0) + r["_n"]
-
-    # the rank pass carries ONLY (id, stratum) through Arrow: a full-row
-    # pass would round-trip every column through pandas, where a nullable
-    # int64 column with any null becomes float64 and silently corrupts
-    # values above 2^53 — only on this path, breaking the row-identical
-    # contract with the window spelling.  A narrow projection of the
-    # cached frame preserves its partitioning and in-partition order.
-    schema = StructType(
-        [ordered.schema[id_col], StructField("q_rank", IntegerType(), False)]
-    )
-
-    def rank_gen(batches):
-        pid = TaskContext.get().partitionId()
-        carried: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes, uniques = pd.factorize(pdf[strata_col], use_na_sentinel=False)
-            keys = [None if pd.isna(u) else u for u in uniques]
-            base = np.asarray(
-                [offsets.get((pid, s), 0) + carried.get(s, 0) for s in keys],
-                dtype=np.int64,
-            )
-            within = pdf.groupby(codes, sort=False).cumcount().to_numpy()
-            ranks = (base[codes] + within + 1).astype(np.int32)
-            per_key = np.bincount(codes, minlength=len(keys))
-            for s, n in zip(keys, per_key):
-                carried[s] = carried.get(s, 0) + int(n)
-            yield pd.DataFrame({id_col: pdf[id_col], "q_rank": ranks})
-
-    ranks = ordered.select(id_col, strata_col).mapInPandas(rank_gen, schema=schema)
-    ranked = ordered.join(ranks, id_col, "inner")
+    scanned = segmented_scan(df, strata_col, [F.col(order_col).desc_nulls_last()], id_col)
+    ranked = scanned.withColumn("q_rank", (F.col(SCAN_COL) + 1).cast("int"))
     out = _attach_counts_and_filter(ranked, df, frac, strata_col, counts)
-    out._sig_caches = [ordered]  # release hook: dedup.release_sig_caches
+    out._sig_caches = scanned._sig_caches
     return out
 
 
@@ -943,20 +802,10 @@ def budget_sample(
     re-summing.  NULL token counts contribute 0 on both paths (window SUM
     skips nulls).
 
-    Scale shape: the default is ONE shuffle on the stratum key and a
-    running-sum window — correct while each stratum fits one partition,
-    but a language stratum at 100 TB does not (the quality_prune
-    mega-strata problem, prefix-sum flavored).  ``mega_strata_threshold``
-    (row budget, or "auto" = total rows ÷ shuffle partitions) switches to
-    the TWO-PHASE exact prefix sum: range-partition on (stratum, hash, id)
-    so the sample-sort spreads a mega stratum over many partitions in
-    global order, price each partition's starting offset from a tiny
-    per-(partition, stratum) token-sum collect, then an Arrow-batched pass
-    over ONLY (id, stratum, tokens) assigns ``cum_before = offset +
-    within-partition exclusive prefix sum`` and joins back on the unique
-    non-null id — the distributed-scan primitive, no single-task stratum.
-    Both paths are row-identical (pinned by pytest at a forced threshold
-    and by the shared driver oracle row).
+    Scale shape: the prefix sum is :func:`token_prefix`'s — a stratum-key
+    running-sum window by default, or :func:`.scan.segmented_scan` when a
+    stratum exceeds ``mega_strata_threshold`` (row budget, or "auto" =
+    total rows ÷ shuffle partitions); both paths are row-identical.
 
     ``budget`` may be a dict of PER-STRATUM budgets (the data-mixture cut
     proper — e.g. :func:`mix_weights` allocations): the threshold becomes
@@ -1006,11 +855,11 @@ def token_prefix(
     prefix sum in deterministic (md5(id) asc, id asc) order — the shared
     distributed-scan core of :func:`budget_sample` (which filters it
     against a budget) and :func:`seq_pack` (which divides it into
-    fixed-capacity training sequences).  Path selection and contracts are
-    budget_sample's: default is one stratum-key shuffle + running-sum
-    window; ``mega_strata_threshold`` switches to the two-phase
-    sample-sort exact prefix sum when any stratum exceeds the row budget
-    (no single-task stratum).
+    fixed-capacity training sequences).  Scale shape: one stratum-key
+    shuffle + running-sum window by default, or
+    :func:`.scan.segmented_scan` weighted by ``tokens_col`` when any
+    stratum exceeds ``mega_strata_threshold`` rows (its id contract then
+    applies).
 
     Negative token counts reject LOUDLY at evaluation time (a codegen
     raise_error guard rides the token projection on both paths): a
@@ -1034,32 +883,11 @@ def token_prefix(
         ).otherwise(F.col(tokens_col)),
     )
     key = F.md5(F.col(id_col).cast("string").cast("binary"))
-    if mega_strata_threshold is not None:
-        import math as _math
-
-        counts = {
-            r["s"]: r["n"]
-            for r in df.groupBy(F.col(strata_col).alias("s"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if any(isinstance(s, float) and _math.isnan(s) for s in counts):
-            raise ValueError(
-                f"{strata_col} contains NaN strata: indistinguishable from "
-                "NULL through the Arrow prefix-sum pass — filter or "
-                "normalize NaN before setting mega_strata_threshold (the "
-                "default window path sums NaN as its own stratum)"
-            )
-        if mega_strata_threshold == "auto":
-            shuffle_par = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-            mega_strata_threshold = max(1, sum(counts.values()) // max(shuffle_par, 1))
-        elif isinstance(mega_strata_threshold, str):
-            raise ValueError(
-                f"mega_strata_threshold {mega_strata_threshold!r}: "
-                "expected an int row budget, 'auto', or None"
-            )
-        if counts and max(counts.values()) > mega_strata_threshold:
-            return _token_prefix_two_phase(df, strata_col, id_col, tokens_col)
+    if route_mega_strata(df, strata_col, mega_strata_threshold)[1]:
+        scanned = segmented_scan(df, strata_col, [key.asc()], id_col, tokens_col)
+        out = scanned.withColumnRenamed(SCAN_COL, "cum_before")
+        out._sig_caches = scanned._sig_caches
+        return out
     w = (
         Window.partitionBy(strata_col)
         .orderBy(key.asc(), F.col(id_col).asc())
@@ -1069,110 +897,6 @@ def token_prefix(
         F.sum(F.col(tokens_col).cast("long")).over(w), F.lit(0).cast("long")
     )
     return df.withColumn("cum_before", cum)
-
-
-def _token_prefix_two_phase(
-    df: DataFrame,
-    strata_col: str,
-    id_col: str,
-    tokens_col: str,
-) -> DataFrame:
-    """Exact per-stratum exclusive prefix sums without a per-stratum
-    window partition — see :func:`token_prefix` for the three-step shape
-    (the :func:`_quality_prune_two_phase` pattern with token sums in place
-    of row counts).
-
-    Contracts (all enforced loudly): ``id_col`` unique and non-null (the
-    prefix sums join back on it); token values must stay exact through a
-    pandas round-trip — the narrow (id, stratum, tokens) projection means
-    a nullable token column arrives as float64, exact only below 2^53,
-    which per-document token counts are by ~vocabulary-sized margins."""
-    import numpy as np
-    import pandas as pd
-    from pyspark import TaskContext
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = df.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
-    with_key = df.withColumn(
-        "_k", F.md5(F.col(id_col).cast("string").cast("binary"))
-    )
-    sort_keys = [F.col(strata_col).asc(), F.col("_k").asc(), F.col(id_col).asc()]
-    ordered = (
-        with_key.repartitionByRange(par, *sort_keys)
-        .sortWithinPartitions(*sort_keys)
-        .persist()
-    )
-    # one action = eager materializer + loud id contract (join-back drops
-    # null ids and fans out duplicates — reject, releasing the cache)
-    chk = ordered.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.count(id_col).alias("_nn"),
-        F.count_distinct(id_col).alias("_nd"),
-    ).collect()[0]
-    if chk["_nn"] != chk["_n"] or chk["_nd"] != chk["_n"]:
-        ordered.unpersist()
-        if chk["_nn"] != chk["_n"]:
-            raise ValueError(
-                f"{id_col} has {chk['_n'] - chk['_nn']} null(s): the two-phase "
-                "prefix sum joins back on the id, which must be non-null"
-            )
-        raise ValueError(
-            f"{id_col} has duplicates ({chk['_nd']} distinct of {chk['_n']}): "
-            "the two-phase prefix sum joins back on the id, which must be unique"
-        )
-    # tiny control frame: per-(partition, stratum) token sums price each
-    # partition's starting offset — bounded by partitions × strata
-    pid_sums = (
-        ordered.groupBy(
-            F.spark_partition_id().alias("_pid"), F.col(strata_col).alias("_s")
-        )
-        .agg(F.sum(F.coalesce(F.col(tokens_col).cast("long"), F.lit(0))).alias("_t"))
-        .collect()
-    )
-    offsets: dict = {}
-    running: dict = {}
-    for r in sorted(pid_sums, key=lambda r: r["_pid"]):
-        offsets[(r["_pid"], r["_s"])] = running.get(r["_s"], 0)
-        running[r["_s"]] = running.get(r["_s"], 0) + (r["_t"] or 0)
-
-    schema = StructType(
-        [ordered.schema[id_col], StructField("cum_before", LongType(), False)]
-    )
-
-    def cum_gen(batches):
-        pid = TaskContext.get().partitionId()
-        carried: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tok = (
-                pd.to_numeric(pdf[tokens_col]).fillna(0).to_numpy(np.int64)
-            )
-            codes, uniques = pd.factorize(pdf[strata_col], use_na_sentinel=False)
-            keys = [None if pd.isna(u) else u for u in uniques]
-            base = np.asarray(
-                [offsets.get((pid, s), 0) + carried.get(s, 0) for s in keys],
-                dtype=np.int64,
-            )
-            incl = pd.Series(tok).groupby(codes, sort=False).cumsum().to_numpy()
-            cum = base[codes] + incl - tok
-            sums = np.zeros(len(keys), dtype=np.int64)
-            np.add.at(sums, codes, tok)
-            for s, t in zip(keys, sums):
-                carried[s] = carried.get(s, 0) + int(t)
-            yield pd.DataFrame({id_col: pdf[id_col], "cum_before": cum})
-
-    cums = ordered.select(id_col, strata_col, tokens_col).mapInPandas(
-        cum_gen, schema=schema
-    )
-    out = (
-        ordered.drop("_k")
-        .join(cums, id_col, "inner")
-        .select(*df.columns, "cum_before")
-    )
-    out._sig_caches = [ordered]  # release hook: dedup.release_sig_caches
-    return out
 
 
 def budget_sample_sql(
@@ -1479,15 +1203,13 @@ def seq_pack(
     loudly inside :func:`token_prefix` — folded into the running sum
     they would corrupt every later offset in the stratum.
 
-    Scale shape: the offsets come from :func:`token_prefix` (one
-    stratum-key shuffle + running-sum window, or the two-phase sample-sort
-    exact prefix sum when ``mega_strata_threshold`` trips — no single-task
-    stratum); the bin arithmetic after that is pure codegen
-    (div/least/greatest) plus a bounded explode — a document fans out to
-    ``1 + tokens/capacity`` rows, so the explode multiplies rows by
-    ~``avg_doc_tokens/capacity``, a constant the caller picks.  Determinism
-    is the point: the same corpus packs into byte-identical sequences at
-    any partitioning or cluster size, so a resumed/re-sharded run rebuilds
+    Scale shape: the offsets come from :func:`token_prefix` (window, or
+    :func:`.scan.segmented_scan` past ``mega_strata_threshold``); the bin
+    arithmetic after that is pure codegen (div/least/greatest) plus a
+    bounded explode — a document fans out to ``1 + tokens/capacity``
+    rows, a constant factor the caller picks.  Determinism is the point:
+    the same corpus packs into byte-identical sequences at any
+    partitioning or cluster size, so a resumed/re-sharded run rebuilds
     the same batches."""
     if capacity <= 0:
         raise ValueError(f"capacity {capacity} must be positive: bins of "
@@ -1823,49 +1545,29 @@ def epoch_order(
     docs: DataFrame,
     seed: str = "epoch1",
     id_col: str = "doc_id",
-    mega_strata_threshold: int | str | None = "auto",
 ) -> DataFrame:
     """(id, epoch_pos): a deterministic global training-order manifest —
     the once-per-epoch corpus shuffle a trainer streams in order.
 
     The permutation key is ``md5(seed || ':' || id)`` (engine-portable,
     reshuffled by changing ``seed``), and the EXACT global position
-    comes from :func:`quality_prune`'s two-phase sample-sort rank run on
-    a single all-rows stratum — the deliberate worst case that machinery
-    exists for (one stratum = the whole corpus): a range repartition
-    spreads the sort over many partitions and summed partition counts
-    price each offset, so no single task ever sees the full order.  A
-    plain ``row_number`` window over an unpartitioned sort — the naive
-    spelling — would serialize 100 TB through one task.
+    (key desc, id asc; BIGINT, 1-based) comes from
+    :func:`.scan.segmented_scan` over one global stratum — the deliberate
+    worst case that primitive exists for (one stratum = the whole
+    corpus): no single task ever sees the full order, where the naive
+    unpartitioned ``row_number`` window would serialize 100 TB through
+    one task.  ``id_col`` must be unique and non-null (raises otherwise).
 
     The seed charset is locked to ``[A-Za-z0-9_.-]`` — the SQL twin
     embeds it as a string literal, so no quote or backslash may enter
     (the bpe_learn needle-injection guard applied here).
-
-    Ceiling note: positions inherit quality_prune's int32 rank, so ONE
-    manifest caps at 2^31−1 documents (guarded loudly there); shard the
-    corpus and offset per shard past that — the output column is BIGINT
-    so downstream schemas survive the shard move unchanged.
     """
     _check_epoch_seed(seed)
-    keyed = docs.select(
-        F.col(id_col),
-        F.md5(
-            F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))
-        ).alias("_ord"),
-        F.lit(0).alias("_all"),
-    )
-    ranked = quality_prune(
-        keyed,
-        frac=1.0,
-        strata_col="_all",
-        id_col=id_col,
-        order_col="_ord",
-        mega_strata_threshold=mega_strata_threshold,
-    )
-    return ranked.select(
-        id_col, F.col("q_rank").cast("long").alias("epoch_pos")
-    )
+    key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
+    scanned = segmented_scan(docs.select(id_col), None, [key.desc()], id_col)
+    out = scanned.select(id_col, (F.col(SCAN_COL) + 1).alias("epoch_pos"))
+    out._sig_caches = scanned._sig_caches
+    return out
 
 
 _EPOCH_SEED_RE = re.compile(r"^[A-Za-z0-9_.-]+$")
@@ -1885,8 +1587,7 @@ def epoch_order_sql(
     id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`epoch_order` — the same md5 permutation key
-    ranked by the window spelling (rank = (key DESC, id ASC), matching
-    quality_prune's order)."""
+    ranked by the window spelling (rank = (key DESC, id ASC))."""
     _check_epoch_seed(seed)
     key = f"md5('{seed}:' || CAST({id_col} AS VARCHAR))"
     return f"""

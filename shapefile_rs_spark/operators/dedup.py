@@ -242,16 +242,6 @@ def lsh_band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
     )
 
 
-def lsh_band_keys_sql(sig_sql: str, bands: int, rows_per_band: int) -> str:
-    """DuckDB twin emitting a list of (band, band_key) structs."""
-    entries = ", ".join(
-        "{'band': %d, 'band_key': md5(array_to_string((%s)[%d:%d], '|'))}"
-        % (b, sig_sql, b * rows_per_band + 1, (b + 1) * rows_per_band)
-        for b in range(bands)
-    )
-    return f"[{entries}]"
-
-
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -67,56 +67,6 @@ def _domain_rank_driver(
     )
 
 
-def _ranked_two_phase(score: DataFrame) -> DataFrame:
-    """Exact global (score desc, host asc) ranks WITHOUT an unpartitioned
-    window: range-repartition samples split points so the host frame
-    spans many partitions in global order, a (partition → row count)
-    control frame prices each partition's rank offset, and a map-only
-    Arrow pass emits offset + position — the epoch_shuffle sample-sort
-    move applied to the single global stratum.  No Exchange
-    SinglePartition anywhere (plan-pinned)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark import TaskContext
-
-    spark = score.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, score.rdd.getNumPartitions())
-    keys = [F.col("score").desc(), F.col("host").asc()]
-    ordered = score.repartitionByRange(par, *keys).sortWithinPartitions(*keys).persist()
-    pid_counts = (
-        ordered.groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
-    offsets: dict = {}
-    running = 0
-    for r in sorted(pid_counts, key=lambda r: r["_pid"]):
-        offsets[r["_pid"]] = running
-        running += int(r["_n"])
-
-    def rank_gen(batches):
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ranks = offsets.get(pid, 0) + seen + np.arange(1, len(pdf) + 1)
-            seen += len(pdf)
-            yield pd.DataFrame(
-                {
-                    "host": pdf["host"],
-                    "score": pdf["score"],
-                    "rank": ranks.astype(np.int32),
-                }
-            )
-
-    out = ordered.mapInPandas(
-        rank_gen, "host long, score long, rank int"
-    ).localCheckpoint(eager=True)
-    ordered.unpersist()
-    return out
-
-
 def domain_rank(
     edges: DataFrame,
     iterations: int = 5,
@@ -209,12 +159,12 @@ def domain_rank(
             score = score.localCheckpoint(eager=True)
     eo.unpersist()
     nodes.unpersist()
-    # final global rank — NEVER an unpartitioned row_number window (the
-    # r6 verdict's one scale-killer: 10^8 hosts would serialize through
-    # one sort task).  Hosts ≤ rank_collect_max: collect the control
-    # frame and rebuild ranked rows via a VALUES literal (the knn_cells
-    # sanctioned pattern — fewer jobs than any distributed spelling at
-    # control size).  Bigger: two-phase sample-sort exact rank.
+    # final global rank — NEVER an unpartitioned row_number window (10^8
+    # hosts would serialize through one sort task).  Hosts ≤
+    # rank_collect_max: collect the control frame and rebuild ranked rows
+    # via a VALUES literal (fewer jobs than any distributed spelling at
+    # control size).  Bigger: segmented_scan over one global stratum,
+    # rank = running count + 1, checkpointed so its cache is released here.
     spark = edges.sparkSession
     if n_hosts <= rank_collect_max:
         rows = score.collect()
@@ -229,7 +179,15 @@ def domain_rank(
             ["host", "score", "rank"],
             casts=["long", "long", "int"],
         )
-    return _ranked_two_phase(score)
+    from .dedup import release_sig_caches
+    from .scan import SCAN_COL, segmented_scan
+
+    scanned = segmented_scan(score, None, [F.col("score").desc()], "host")
+    out = scanned.select(
+        "host", "score", (F.col(SCAN_COL) + 1).cast("int").alias("rank")
+    ).localCheckpoint(eager=True)
+    release_sig_caches(scanned)
+    return out
 
 
 def domain_rank_sql(

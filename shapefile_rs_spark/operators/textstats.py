@@ -220,16 +220,6 @@ def winnow_fingerprint_sql(text_sql: str, k: int = 5, w: int = 4) -> str:
     )
 
 
-def trigram_lang_score(text: Column, trigrams=("th", "he", "an", "in", "er")) -> Column:
-    """Cheap n-gram language evidence: count of common-English bigram hits.
-    (Named trigram for the family; uses bigrams — enough signal for the
-    synthetic corpus and cheap on both engines.)"""
-    total = F.lit(0)
-    for g in trigrams:
-        total = total + F.size(F.split(text, g)) - F.lit(1)
-    return total
-
-
 def repetition_metrics(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 2
 ) -> DataFrame:

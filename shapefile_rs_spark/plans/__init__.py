@@ -23,46 +23,3 @@ def read_schema(df: DataFrame) -> str:
     if "ReadSchema:" not in plan:
         return ""
     return plan.split("ReadSchema:")[1].splitlines()[0].strip()
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """The ``PushedFilters`` reaching the parquet scan ('' if none)."""
-    plan = executed_plan(df)
-    if "PushedFilters:" not in plan:
-        return ""
-    return plan.split("PushedFilters:")[1].splitlines()[0].strip()
-
-
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in executed_plan(df)
-
-
-def uses_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in executed_plan(df)
-
-
-def python_eval_nodes(df: DataFrame) -> list:
-    """Python-execution nodes in the plan (row-at-a-time ``BatchEvalPython``
-    is the slow path; ``ArrowEvalPython``/``MapInPandas`` are the sanctioned
-    Arrow-batched ones)."""
-    plan = executed_plan(df)
-    return [
-        node
-        for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
-        if node in plan
-    ]
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of whole-stage-codegen spans — widen them (CLAUDE.md: a
-    single expression choice can silently drop a 20× span).  The text
-    plan renders each span as a ``*(n)`` node prefix (the literal string
-    'WholeStageCodegen' never appears), so count distinct span ids.
-
-    Caveat: a plan containing an Exchange prints as an un-finalized
-    ``AdaptiveSparkPlan`` with NO codegen annotations until it executes —
-    run an action first (or inspect a map-only sub-plan) before counting;
-    this helper is reliable as-is for exchange-free plans."""
-    import re
-
-    return len(set(re.findall(r"\*\((\d+)\)", executed_plan(df))))

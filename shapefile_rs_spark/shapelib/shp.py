@@ -142,14 +142,6 @@ class ShapeRec:
 # ---------------------------------------------------------------------------
 
 
-def _size_point(st: int) -> int:
-    if st == POINT:
-        return 16
-    if st == POINT_M:
-        return 24
-    return 32  # POINT_Z with M
-
-
 def _size_multipoint(st: int, n: int, with_m: bool) -> int:
     size = 32 + 4 + 16 * n
     if st == MULTIPOINT_Z:
@@ -168,19 +160,6 @@ def _size_poly(st: int, n: int, p: int, with_m: bool) -> int:
     if st in (POLYLINE_M, POLYGON_M, POLYLINE_Z, POLYGON_Z, MULTIPATCH) and with_m:
         size += 16 + 8 * n
     return size
-
-
-def record_content_size(rec: ShapeRec) -> int:
-    """On-disk body size in bytes (excl. type int); M/Z blocks always written."""
-    st = rec.shape_type
-    if st == NULL_SHAPE:
-        return 0
-    if is_point_family(st):
-        return _size_point(st)
-    n = rec.num_points
-    if is_multipoint_family(st):
-        return _size_multipoint(st, n, with_m=True)
-    return _size_poly(st, n, rec.num_parts, with_m=True)
 
 
 # ---------------------------------------------------------------------------

@@ -115,10 +115,6 @@ def is_multipoint_family(shape_type: int) -> bool:
     return shape_type in (MULTIPOINT, MULTIPOINT_M, MULTIPOINT_Z)
 
 
-def is_no_data(value: float) -> bool:
-    return value <= NO_DATA
-
-
 class ShapefileError(Exception):
     """Base class mirroring the reference error surface (src/lib.rs:89-118)."""
 

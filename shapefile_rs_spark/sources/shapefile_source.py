@@ -106,22 +106,6 @@ RAW_GEOMETRY_FIELDS = [
 ]
 
 
-def _raw_geom_columns(recs):
-    """Per-record raw geometry columns from decoded ShapeRecs (sequential
-    path): interleaved coords + part offsets + patch types — the lossless
-    representation that lets TriangleStrip/Fan multipatch (whose wkb is
-    defined-unsupported) round-trip through the DataFrame sink."""
-    import numpy as np
-
-    xy = [r.xy.reshape(-1) for r in recs]
-    parts = [None if r.parts is None else np.asarray(r.parts, dtype=np.int32) for r in recs]
-    patch = [
-        None if r.patch_types is None else np.asarray(r.patch_types, dtype=np.int32)
-        for r in recs
-    ]
-    return xy, parts, patch
-
-
 def _bulk_frame(bulk, stem, crs_wkt, attrs, on_invalid, raw_geometry=False):
     """Column-vectorized shapes frame from a BulkShapes decode — the whole
     file becomes pandas columns with zero per-record Python except polygon

@@ -430,6 +430,35 @@ def test_review_fix_regressions(spark, sf_dir):
         curation_funnel_sql(langs=("en", "it's"))
 
 
+@pytest.mark.parametrize("path", ["epoch_order", "segmented_scan_weighted"])
+def test_scan_empty_frame_keeps_schema(spark, sf_dir, path):
+    """An empty input through the direct segmented-scan path returns an
+    empty frame with the full schema: epoch_order's (doc_id, epoch_pos
+    BIGINT), and a weighted scan's input columns + scan_before BIGINT."""
+    from pyspark.sql.types import LongType
+
+    from shapefile_rs_spark.operators.curation import epoch_order
+    from shapefile_rs_spark.operators.dedup import release_sig_caches
+    from shapefile_rs_spark.operators.scan import SCAN_COL, segmented_scan
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+        F.col("doc_id") < 0
+    )
+    if path == "epoch_order":
+        out = epoch_order(docs)
+        cols, value_col = ["doc_id", "epoch_pos"], "epoch_pos"
+    else:
+        out = segmented_scan(
+            docs.select("doc_id", "lang", "n_chars"), "lang",
+            [F.col("n_chars").desc()], "doc_id", weight_col="n_chars",
+        )
+        cols, value_col = ["doc_id", "lang", "n_chars", SCAN_COL], SCAN_COL
+    assert out.columns == cols
+    assert isinstance(out.schema[value_col].dataType, LongType)
+    assert out.collect() == []
+    release_sig_caches(out)
+
+
 def test_curation_funnel_monotone(spark, sf_dir):
     """Funnel counts are monotone non-increasing by construction, the
     total equals the corpus count, each stage's count equals the direct
