@@ -46,12 +46,16 @@ def _compact1by1(v: np.ndarray) -> np.ndarray:
 
 
 def lonlat_to_ixiy(lon: np.ndarray, lat: np.ndarray, res) -> Tuple[np.ndarray, np.ndarray]:
-    """Grid coordinates at ``res`` (an int, or one res per point)."""
+    """Grid coordinates at ``res`` (an int, or one res per point).
+
+    Clamped before the integer cast, so any out-of-range coordinate,
+    infinities included, lands in the edge cell :func:`cell_id_col` puts it
+    in; NaN lands in cell 0."""
     n = np.int64(1) << np.asarray(res, dtype=np.int64)
     fx = (np.asarray(lon, dtype=np.float64) + 180.0) / 360.0
     fy = (np.asarray(lat, dtype=np.float64) + 90.0) / 180.0
-    ix = np.clip(np.floor(fx * n).astype(np.int64), 0, n - 1)
-    iy = np.clip(np.floor(fy * n).astype(np.int64), 0, n - 1)
+    ix = np.floor(np.fmin(np.fmax(fx * n, 0.0), n - 1)).astype(np.int64)
+    iy = np.floor(np.fmin(np.fmax(fy * n, 0.0), n - 1)).astype(np.int64)
     return ix, iy
 
 
@@ -346,6 +350,12 @@ def cell_id_col(lon, lat, res: int):
     )
 
 
+def quote_ident(name: str) -> str:
+    """Column ``name`` as a backquoted SQL identifier, for SQL-text
+    expressions and selects of exact column names."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def with_cell_ids(df, lon_col: str, lat_col: str, ids: dict):
     """``df`` plus one column per ``{name: res}`` of ``ids``, holding
     :func:`cell_id_col` of the columns named ``lon_col``/``lat_col`` at
@@ -364,9 +374,6 @@ def with_cell_ids(df, lon_col: str, lat_col: str, ids: dict):
     :mod:`pyspark.sql.functions` takes a few per operator."""
     from pyspark.sql import functions as F
 
-    def q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
     def spread(e: str, steps) -> str:
         for shift, mask in steps:
             e = f"(({e}) | shiftleft(({e}), {shift})) & {mask}"
@@ -381,16 +388,16 @@ def with_cell_ids(df, lon_col: str, lat_col: str, ids: dict):
         for axis, c, off, span in (("x", lon_col, 180, 360), ("y", lat_col, 90, 180)):
             # cell_id_col's grid coordinate and _spread_col's low-bits mask
             grid = (
-                f"CAST(least({n - 1}, greatest(0, floor(({q(c)} + {off}.0D) / {span}.0D * {n})))"
-                f" AS BIGINT) & {0x1FFFFFFF}"
+                f"CAST(least({n - 1}, greatest(0, floor(({quote_ident(c)} + {off}.0D)"
+                f" / {span}.0D * {n}))) AS BIGINT) & {0x1FFFFFFF}"
             )
             tmp[f"_cell_{axis}_{name}"] = spread(grid, first)
     df = df.withColumns({t: F.expr(e) for t, e in tmp.items()})
     df = df.withColumns(
         {
             name: F.expr(
-                f"{res << _RES_SHIFT} | ({spread(q(f'_cell_x_{name}'), rest)})"
-                f" | shiftleft(({spread(q(f'_cell_y_{name}'), rest)}), 1)"
+                f"{res << _RES_SHIFT} | ({spread(quote_ident(f'_cell_x_{name}'), rest)})"
+                f" | shiftleft(({spread(quote_ident(f'_cell_y_{name}'), rest)}), 1)"
             )
             for name, res in ids.items()
         }

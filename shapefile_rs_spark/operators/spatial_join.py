@@ -9,31 +9,41 @@ spatial-join decomposition:
    segment-vs-rect SAT + center ray-cast over all polygons of a batch
    (:func:`..cells.classify_cover_batch`): cells outside the polygon are
    dropped (bbox false positives no longer scale with polygon size),
-   fully-INTERIOR cells are flagged so their candidates skip the refine UDF
-   entirely, and only BOUNDARY cells refine.  In the broadcast path the
-   polygon side is evaluated ONCE — one driver ``collect()`` that is also
-   the size probe — and both broadcast relations (covering and polygon
-   geometry) are built from those rows;
-2. **index**: every point → its cell at each covering resolution level (≤3
-   levels in practice) in ONE scan: the per-level cell ids are projected
-   first, then exploded, and ``cell_res`` is read back from the id's
-   resolution bits (:func:`with_cells`);
-3. **cell-equi join** on (res, cell_id) — broadcast when the covering side is
-   small (the common case: polygons ≪ points), shuffled hash/SMJ chosen by
-   Catalyst+AQE otherwise, with optional explicit hot-cell salting;
-4. **refine**: vectorized even-odd ray-cast per Arrow batch, grouped by
-   polygon inside the batch (no per-row Python) — ring semantics per
-   src/record/polygon.rs:606-640 + src/record/mod.rs:133-145.  Interior-
-   cell candidates bypass it: their wkb is nulled (no blob bytes cross
-   Arrow) and :func:`pip_refine_full` passes them through unexamined.
+   fully-INTERIOR cells are flagged so their candidates skip the ray-cast
+   entirely, and only BOUNDARY cells refine;
+2. **broadcast path** (polygons ≤ ``small_poly_threshold``, the common
+   case: polygons ≪ points): the polygon side is evaluated ONCE — one
+   driver ``collect()`` that is also the size probe — into a polygon index
+   (:func:`_pip_index`: sorted covering cells with their polygons and
+   interior flags, every polygon's edges, the covering's levels) broadcast
+   once.  One scalar Arrow UDF per point batch (:func:`_pip_udf`) takes
+   only ``(lon, lat)`` to Python, computes the points' cells at each level,
+   looks them up, passes interior-cell hits and ray-casts boundary-cell
+   hits (vectorized over (point, edge) pairs in bounded blocks, no
+   per-row Python), and returns each point's containing polygon positions;
+   an ``explode`` and one broadcast hash join to the polygon attributes
+   finish the join;
+3. **shuffle path** (larger polygon sides): every point → its cell at each
+   covering resolution level in ONE scan (:func:`with_cells`), a
+   **cell-equi join** on (res, cell_id) to the distributed
+   :func:`polygon_covering` — shuffled hash/SMJ chosen by Catalyst+AQE,
+   with optional explicit hot-cell salting — then a join to the polygon
+   geometry;
+4. **refine** (shuffle path): vectorized even-odd ray-cast per Arrow batch,
+   grouped by polygon inside the batch (no per-row Python) — ring
+   semantics per src/record/polygon.rs:606-640 + src/record/mod.rs:133-145.
+   Interior-cell candidates bypass it: their wkb is nulled (no blob bytes
+   cross Arrow) and :func:`pip_refine_full` passes them through
+   unexamined.  The broadcast kernel applies the same even-odd rule with
+   the same operand order, so both paths give the same rows.
 
 Scale notes (100 TB story): the point side is never shuffled in the
-broadcast path — cells are computed map-side and the join is a broadcast
-hash join, so cost is one scan of the pages table.  In the shuffle path both
-sides partition by (res, cell_id); hot cells (dense urban clusters) are
-salted: point rows get a per-row salt, covering rows are replicated
-``salt_factor`` times — bounding any single reducer at 1/salt_factor of the
-hot cell.  AQE skew-join stays on as backstop.
+broadcast path — one map-side kernel per batch over the scan, then a
+broadcast hash join, so cost is one scan of the pages table.  In the
+shuffle path both sides partition by (res, cell_id); hot cells (dense
+urban clusters) are salted: point rows get a per-row salt, covering rows
+are replicated ``salt_factor`` times — bounding any single reducer at
+1/salt_factor of the hot cell.  AQE skew-join stays on as backstop.
 """
 
 from __future__ import annotations
@@ -62,16 +72,9 @@ _COVER_EXTRA = [
 ]
 
 
-def _cover_blobs(
-    blobs: Sequence, max_cover_cells: int, max_res: int, fixed_res: Optional[int]
-) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Polygon WKB blobs → ``(blob index, cell_id, cell_res, cell_full)``,
-    one row per classified covering cell, every polygon in one
-    :func:`..cells.classify_cover_batch` pass.  Each polygon is covered at
-    ``fixed_res``, or else at the finest resolution whose bbox covering
-    stays ≤ ``max_cover_cells``.  A null blob, or one without vertices,
-    covers nothing.
-    """
+def _wkb_polygons(blobs: Sequence) -> Tuple[List[int], List]:
+    """``(blob index, rings)`` of every polygon WKB blob with at least one
+    vertex; a null blob is skipped."""
     from ..geom.wkb import wkb_rings
 
     idx, polys = [], []
@@ -81,6 +84,19 @@ def _cover_blobs(
             if any(len(r) for r in rings):
                 idx.append(i)
                 polys.append(rings)
+    return idx, polys
+
+
+def _cover_polygons(
+    idx: List[int], polys: List, max_cover_cells: int, max_res: int, fixed_res: Optional[int]
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Parsed polygons ``polys`` (:func:`_wkb_polygons`, blob indices
+    ``idx``) → ``(blob index, cell_id, cell_res, cell_full)``, one row per
+    classified covering cell, every polygon in one
+    :func:`..cells.classify_cover_batch` pass.  Each polygon is covered at
+    ``fixed_res``, or else at the finest resolution whose bbox covering
+    stays ≤ ``max_cover_cells``.
+    """
     if not polys:
         return (
             np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int32), np.empty(0, bool)
@@ -121,7 +137,8 @@ def polygon_covering(
     Per-polygon adaptive resolution (finest res whose bbox covering is ≤
     ``max_cover_cells``) keeps giant polygons from exploding while small
     polygons stay selective.  Each Arrow batch is one batched kernel call
-    (the same :func:`_cover_blobs` the broadcast join runs on the driver).
+    (the same covering kernel the broadcast join's :func:`_pip_index` runs
+    on the driver).
     """
     id_cols = id_cols or [c for c in polygons.columns if c != wkb_col]
     out_schema = StructType(
@@ -131,8 +148,8 @@ def polygon_covering(
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in out_schema.fields]
         for pdf in batches:
-            i, cells, res, full = _cover_blobs(
-                pdf[wkb_col], max_cover_cells, max_res, fixed_res
+            i, cells, res, full = _cover_polygons(
+                *_wkb_polygons(pdf[wkb_col]), max_cover_cells, max_res, fixed_res
             )
             out = {c: pdf[c].to_numpy()[i] for c in id_cols}
             out.update(cell_id=cells, cell_res=res, cell_full=full)
@@ -152,9 +169,10 @@ def with_cells(
 
     Cell ids are computed with pure Catalyst bit arithmetic
     (:func:`shapefile_rs_spark.cells.with_cell_ids`, the two-projection
-    form of :func:`..cells.cell_id_col`) — the point side of the join never
-    leaves whole-stage codegen, and the points are scanned ONCE whatever the
-    number of levels.  Several levels are one projection of every level's
+    form of :func:`..cells.cell_id_col`) — on the join's shuffle path (and
+    for pre-indexed cell stages) the point side never leaves whole-stage
+    codegen, and the points are scanned ONCE whatever the number of
+    levels.  Several levels are one projection of every level's
     id, then an ``explode`` of their array; ``cell_res`` is the id's
     resolution bits (``cell_id >> 58``), so no CASE over the generator
     output is needed (a CASE there knocks the stage out of codegen,
@@ -182,11 +200,7 @@ def with_cells(
         ).where(F.lit(False))
     tmp = [f"_cell_{r}" for r in levels]
     ids = C.with_cell_ids(points, lon_col, lat_col, dict(zip(tmp, levels)))
-    quoted = [
-        "`" + c.replace("`", "``") + "`"
-        for c in points.columns
-        if c not in ("cell_res", "cell_id")
-    ]
+    quoted = [C.quote_ident(c) for c in points.columns if c not in ("cell_res", "cell_id")]
     out = ids.select(*quoted, F.explode(F.array(*tmp)).alias("cell_id"))
     return out.select(*quoted, C.cell_res_col(F.col("cell_id")).alias("cell_res"), "cell_id")
 
@@ -253,6 +267,152 @@ def pip_refine_full(
     return pd.Series(out)
 
 
+# (point, edge) pairs one ray-cast block evaluates at most (the
+# classify_cover_batch bound): temporaries stay a few MB whatever the
+# polygon size
+_MAX_PAIRS = 1 << 16
+
+
+def _pip_index(
+    blobs: Sequence, max_cover_cells: int, max_res: int, fixed_res: Optional[int]
+) -> dict:
+    """The broadcast join's polygon index over polygon rows ``blobs`` (a
+    null blob contains nothing), keyed by row position:
+
+    * ``cells`` — the covering's cell ids, sorted and de-duplicated, with
+      CSR offsets ``cell_offs`` into ``pos`` (int32 row position) and
+      ``full`` (the cell is interior to that polygon);
+    * ``x1, y1, x2, y2`` — every polygon's ring edges, CSR by position
+      (``edge_offs``), rings of fewer than 2 points skipped as
+      :func:`..geom.pip.points_in_rings` does;
+    * ``levels`` — the covering's resolutions.
+    """
+    idx, polys = _wkb_polygons(blobs)
+    pos, cells, res, full = _cover_polygons(idx, polys, max_cover_cells, max_res, fixed_res)
+    order = np.argsort(cells, kind="stable")
+    uniq, first = np.unique(cells[order], return_index=True)
+    rings = [(i, r) for i, p in zip(idx, polys) for r in p if len(r) >= 2]
+    n_edge = np.zeros(len(blobs), dtype=np.int64)
+    np.add.at(n_edge, np.array([i for i, _ in rings], dtype=np.int64), [len(r) - 1 for _, r in rings])
+    edges = (
+        np.concatenate([np.hstack([r[:-1], r[1:]]) for _, r in rings])
+        if rings
+        else np.empty((0, 4))
+    ).astype(np.float64)
+    return {
+        "cells": uniq,
+        "cell_offs": np.append(first, len(cells)),
+        "pos": pos[order].astype(np.int32),
+        "full": full[order],
+        "edge_offs": np.concatenate([[0], np.cumsum(n_edge)]),
+        **{k: np.ascontiguousarray(edges[:, j]) for j, k in enumerate(("x1", "y1", "x2", "y2"))},
+        "levels": np.unique(res).tolist(),
+    }
+
+
+def _ray_cast(
+    index: dict, px: np.ndarray, py: np.ndarray, poly: np.ndarray, max_pairs: int
+) -> np.ndarray:
+    """Even-odd test of point ``i`` against the edges of polygon
+    ``poly[i]`` of ``index``, over (point, edge) pairs with
+    :func:`..geom.pip.crossings_matrix`'s operand order, so bit-identical
+    to it.  Pairs are generated at most ``max_pairs`` at a time: a point
+    whose polygon has more edges is split along them."""
+    e0 = index["edge_offs"][poly]
+    ne = index["edge_offs"][poly + 1] - e0
+    # work units of ≤ max_pairs pairs, packed into blocks as
+    # classify_cover_batch packs its (edge, cell) blocks
+    nunit = -(-ne // max_pairs)
+    u_pt = np.repeat(np.arange(len(px)), nunit)
+    u_e = e0[u_pt] + max_pairs * (
+        np.arange(len(u_pt), dtype=np.int64) - np.repeat(np.cumsum(nunit) - nunit, nunit)
+    )
+    u_n = np.minimum(max_pairs, e0[u_pt] + ne[u_pt] - u_e)
+    u_off = np.cumsum(u_n) - u_n
+    cuts = np.flatnonzero(np.diff(u_off // max_pairs)) + 1
+    x1, y1, x2, y2 = index["x1"], index["y1"], index["x2"], index["y2"]
+    crossings = np.zeros(len(px), dtype=np.int64)
+    for b in np.split(np.arange(len(u_pt)), cuts) if len(u_pt) else ():
+        cnt = u_n[b]
+        i = np.repeat(u_pt[b], cnt)
+        e = np.repeat(u_e[b] - (u_off[b] - u_off[b[0]]), cnt) + np.arange(int(cnt.sum()))
+        yy = py[i]
+        st = np.flatnonzero((y1[e] > yy) != (y2[e] > yy))
+        i, e, yy = i[st], e[st], yy[st]
+        xint = (x2[e] - x1[e]) * (yy - y1[e]) / (y2[e] - y1[e]) + x1[e]
+        lo = u_pt[b[0]]
+        crossings[lo : u_pt[b[-1]] + 1] += np.bincount(
+            i[px[i] < xint] - lo, minlength=u_pt[b[-1]] + 1 - lo
+        )
+    return crossings % 2 == 1
+
+
+def _pip_contains(
+    index: dict,
+    lon: np.ndarray,
+    lat: np.ndarray,
+    cell: Optional[np.ndarray] = None,
+    max_pairs: int = _MAX_PAIRS,
+) -> Tuple[np.ndarray, np.ndarray]:
+    """``(row, position)`` of every (point, polygon of ``index``) pair
+    where the polygon contains the point.  A point is looked up at each of
+    the covering's levels (or at its own ``cell`` id when given; a
+    negative id finds nothing); a hit in a FULL cell is contained with no
+    ray-cast, a hit in a boundary cell is ray-cast (:func:`_ray_cast`).  A
+    non-finite coordinate (a null arrives as NaN) contains nothing."""
+    ok = np.isfinite(lon) & np.isfinite(lat)
+    if cell is not None:
+        ok &= cell >= 0
+    rows = np.flatnonzero(ok)
+    cells = index["cells"]
+    if not len(rows) or not len(cells):
+        return np.empty(0, np.int64), np.empty(0, np.int32)
+    if cell is None:
+        probe = np.concatenate([C.cell_id(lon[rows], lat[rows], r) for r in index["levels"]])
+        rows = np.tile(rows, len(index["levels"]))
+    else:
+        probe = cell[rows]
+    at = np.minimum(np.searchsorted(cells, probe), len(cells) - 1)
+    hit = cells[at] == probe
+    rows, at = rows[hit], at[hit]
+    start = index["cell_offs"][at]
+    cnt = index["cell_offs"][at + 1] - start
+    rows = np.repeat(rows, cnt)
+    k = np.repeat(start - (np.cumsum(cnt) - cnt), cnt) + np.arange(int(cnt.sum()))
+    pos = index["pos"][k]
+    inside = index["full"][k].copy()
+    edge = np.flatnonzero(~inside)
+    if len(edge):
+        r = rows[edge]
+        inside[edge] = _ray_cast(index, lon[r], lat[r], pos[edge], max_pairs)
+    return rows[inside], pos[inside]
+
+
+def _pip_udf(bc):
+    """Scalar Arrow UDF over ``(lon, lat[, cell_id])`` → ``array<int>``:
+    per point, the positions of the polygons of the broadcast index
+    ``bc`` (:func:`_pip_index`) that contain it (:func:`_pip_contains`).
+    The list is built from offsets and values, with no per-row Python."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def contained(lon, lat, cell=None):
+        n = len(lon)
+        rows, pos = _pip_contains(
+            bc.value,
+            lon.to_numpy(zero_copy_only=False),  # nulls → NaN
+            lat.to_numpy(zero_copy_only=False),
+            None if cell is None else pc.fill_null(cell, -1).to_numpy(),
+        )
+        offs = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(np.bincount(rows, minlength=n), out=offs[1:])
+        return pa.ListArray.from_arrays(
+            pa.array(offs), pa.array(pos[np.argsort(rows, kind="stable")], pa.int32())
+        )
+
+    return F.arrow_udf(contained, "array<int>")
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -278,30 +438,53 @@ def point_in_polygon_join(
     ``limit(small_poly_threshold + 1).collect()`` of the polygon side is
     both the size probe and the fetch; up to ``small_poly_threshold`` rows
     take the broadcast phase, more take the shuffle phase — the explicit
-    two-phase broadcast/sort-merge selection the north_star demands.  In the
-    broadcast phase (also ``broadcast_polygons=True``, which collects the
-    whole side) the polygon side is evaluated exactly once: the covering is
-    computed DRIVER-side with the batched numpy kernel and shipped, with the
-    polygon geometry, as two Arrow-built local relations, so the whole join
-    is one codegen'd scan of the point side plus the refine UDF.
-    ``salt_factor>0`` activates explicit hot-cell salting for the shuffle
-    path: point rows in hot cells get ``pmod(hash, salt_factor)`` appended
-    to the key; covering rows for hot cells are replicated across all salts.
+    two-phase broadcast/sort-merge selection the north_star demands.
+
+    In the broadcast phase (also ``broadcast_polygons=True``, which
+    collects the whole side) the polygon side is evaluated exactly once:
+    the driver builds a polygon index from the collected rows
+    (:func:`_pip_index`: sorted covering cells, interior flags, every
+    polygon's edges) and broadcasts it once.  One scalar Arrow UDF per
+    point batch (:func:`_pip_udf`) takes only ``(lon, lat)`` across to
+    Python, looks the points' cells up, passes interior-cell hits, ray-casts
+    boundary-cell hits and returns each point's containing polygon
+    positions; an ``explode`` of those and one broadcast hash join to a
+    local relation ``(_ppos, polygon_key, *polygon_cols)`` (pandas → Arrow
+    with the polygon side's schema, so key and attribute types stay exact)
+    finish the join.  Every other point column stays in the JVM, and the
+    point side is never shuffled.  The index broadcast lives as long as
+    the returned frame (it is not unpersisted).  A polygon row whose
+    ``polygon_key`` is null joins nothing, as on the shuffle path.
+
+    The shuffle phase (``broadcast_polygons=False``, or more rows than
+    ``small_poly_threshold``) joins :func:`with_cells` points to the
+    :func:`polygon_covering` on (cell_res, cell_id) and refines with
+    :func:`pip_refine_full`.  ``salt_factor>0`` activates explicit
+    hot-cell salting there: point rows in hot cells get
+    ``pmod(hash, salt_factor)`` appended to the key; covering rows for hot
+    cells are replicated across all salts.
 
     A polygon row whose ``wkb_col`` is null (``read_shapefiles(...,
     on_invalid="null")``, strip/fan multipatch) contains no point: it gets
     no covering cells and joins nothing, on both paths.  An empty polygon
-    side gives an empty frame with the join's output columns.
+    side gives an empty frame with the join's output columns.  In the
+    broadcast phase a null or non-finite ``lon``/``lat`` is contained in
+    no polygon.
 
     ``pre_indexed=True`` declares that ``points`` already carries
     ``cell_res``/``cell_id`` at every covering resolution (use with
     ``fixed_res`` so the levels are known up front) — lets a checkpointed
-    cell-index stage feed the join without recomputing cells.
+    cell-index stage feed the join without recomputing cells; the
+    broadcast phase then looks up each row's ``cell_id``.
     """
     point_cols = point_cols or [c for c in points.columns]
     polygon_cols = polygon_cols or [polygon_key]
     spark = points.sparkSession
     poly_geo = polygons.select(*dict.fromkeys([polygon_key, *polygon_cols, wkb_col]))
+    if pre_indexed and ("cell_id" not in points.columns or "cell_res" not in points.columns):
+        raise ValueError("pre_indexed points need cell_id/cell_res columns")
+    point_keep = [c for c in point_cols if c not in ("cell_id", "cell_res", "cell_full")]
+    keep = list(dict.fromkeys(point_keep + [c for c in polygon_cols if c not in point_cols]))
 
     if broadcast_polygons is not False:
         if broadcast_polygons is None:
@@ -311,54 +494,56 @@ def point_in_polygon_join(
             rows = poly_geo.collect()
 
     if broadcast_polygons:
-        # object columns keep ids exact (no float64 detour for null ints)
-        geo_pdf = pd.DataFrame(
-            {c: pd.Series([r[i] for r in rows], dtype=object) for i, c in enumerate(poly_geo.columns)}
+        attr_cols = list(dict.fromkeys([polygon_key, *polygon_cols]))
+        index = _pip_index(
+            [r[wkb_col] if r[polygon_key] is not None else None for r in rows],
+            max_cover_cells,
+            max_res,
+            fixed_res,
         )
-        i, cells, res, full = _cover_blobs(geo_pdf[wkb_col], max_cover_cells, max_res, fixed_res)
-        covering = spark.createDataFrame(
+        # object columns keep ids exact (no float64 detour for null ints)
+        attrs = spark.createDataFrame(
             pd.DataFrame(
                 {
-                    polygon_key: geo_pdf[polygon_key].to_numpy()[i],
-                    "cell_id": cells,
-                    "cell_res": res,
-                    "cell_full": full,
+                    "_ppos": np.arange(len(rows), dtype=np.int32),
+                    **{c: pd.Series([r[c] for r in rows], dtype=object) for c in attr_cols},
                 }
             ),
-            schema=StructType([poly_geo.schema[polygon_key]] + _COVER_EXTRA),
+            schema=StructType(
+                [StructField("_ppos", IntegerType())] + [poly_geo.schema[c] for c in attr_cols]
+            ),
         )
-        poly_geo = spark.createDataFrame(geo_pdf, schema=poly_geo.schema)
-        res_levels = sorted(set(res.tolist()))
+        contained = _pip_udf(spark.sparkContext.broadcast(index))
+        coords = [F.col(lon_col).cast("double"), F.col(lat_col).cast("double")]
+        if pre_indexed:
+            coords.append(F.col("cell_id").cast("long"))
+        pts = points.select(
+            *dict.fromkeys(point_keep),
+            F.explode(contained(*coords)).alias("_ppos"),
+        )
+        return pts.join(F.broadcast(attrs), on="_ppos").select(*keep)
+
+    covering = polygon_covering(
+        polygons,
+        wkb_col=wkb_col,
+        id_cols=[polygon_key],
+        max_cover_cells=max_cover_cells,
+        max_res=max_res,
+        fixed_res=fixed_res,
+    ).persist()
+    if fixed_res is not None:
+        res_levels = [fixed_res]
     else:
-        covering = polygon_covering(
-            polygons,
-            wkb_col=wkb_col,
-            id_cols=[polygon_key],
-            max_cover_cells=max_cover_cells,
-            max_res=max_res,
-            fixed_res=fixed_res,
-        ).persist()
-        if fixed_res is not None:
-            res_levels = [fixed_res]
-        else:
-            res_levels = [
-                r["cell_res"] for r in covering.select("cell_res").distinct().collect()
-            ]
+        res_levels = [
+            r["cell_res"] for r in covering.select("cell_res").distinct().collect()
+        ]
 
     if pre_indexed:
-        if "cell_id" not in points.columns or "cell_res" not in points.columns:
-            raise ValueError("pre_indexed points need cell_id/cell_res columns")
         pts = points
     else:
         pts = with_cells(points, res_levels, lon_col=lon_col, lat_col=lat_col)
 
-    if broadcast_polygons:
-        candidates = pts.join(
-            F.broadcast(covering),
-            on=["cell_res", "cell_id"],
-            how="inner",
-        )
-    elif salt_factor > 1:
+    if salt_factor > 1:
         # explicit hot-cell salting (W1): census point cells, salt the hot
         # ones.  ``census_sample`` makes hot-cell DETECTION a cheap sampled
         # pass (threshold scaled by the fraction) — at 100 TB a full census
@@ -405,9 +590,7 @@ def point_in_polygon_join(
     else:
         candidates = pts.join(covering, on=["cell_res", "cell_id"], how="inner")
 
-    joined = candidates.join(
-        F.broadcast(poly_geo) if broadcast_polygons else poly_geo, on=polygon_key, how="inner"
-    )
+    joined = candidates.join(poly_geo, on=polygon_key, how="inner")
     # interior-cell bypass: candidates in a fully-interior cell are contained
     # by construction — feed the refine UDF a TEMP wkb nulled for such rows
     # (the blob never crosses Arrow) so pip_refine_full passes them through;
@@ -421,7 +604,4 @@ def point_in_polygon_join(
             F.col("_refine_wkb"), F.col(lon_col), F.col(lat_col), F.col("cell_full")
         )
     )
-    keep = [c for c in point_cols if c not in ("cell_id", "cell_res", "cell_full")] + [
-        c for c in polygon_cols if c not in point_cols
-    ]
-    return refined.select(*dict.fromkeys(keep))
+    return refined.select(*keep)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from ..cells import quote_ident
 from .spatial_join import pip_refine
 
 
@@ -37,11 +38,21 @@ def tile_y_col(lat, z: int):
 
 
 def assign_tiles(points: DataFrame, z: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """+ (tile_z, tile_x, tile_y) — JVM-side expressions only."""
-    return (
-        points.withColumn("tile_z", F.lit(z))
-        .withColumn("tile_x", tile_x_col(F.col(lon_col), z))
-        .withColumn("tile_y", tile_y_col(F.col(lat_col), z))
+    """+ (tile_z, tile_x, tile_y) — JVM-side expressions only: one
+    projection of SQL text spelling :func:`tile_x_col`/:func:`tile_y_col`'s
+    arithmetic (one call into the JVM per column, where the column
+    functions take a few per operator)."""
+    n = 1 << z
+
+    def tile(expr: str) -> str:
+        return f"CAST(least({n - 1}, greatest(0, floor({expr} * {n}.0D))) AS BIGINT)"
+
+    return points.withColumns(
+        {
+            "tile_z": F.expr(str(z)),
+            "tile_x": F.expr(tile(f"({quote_ident(lon_col)} + 180.0D) / 360.0D")),
+            "tile_y": F.expr(tile(f"(90.0D - {quote_ident(lat_col)}) / 180.0D")),
+        }
     )
 
 

@@ -260,21 +260,20 @@ def _stem_grouped(spark: SparkSession, path: str, pattern: str, exts: tuple) -> 
     """One row per shapefile stem with a binary column per sidecar
     extension — the shared binaryFile scan + stem/ext pivot both the
     record reader and the header reader group on."""
+    # SQL text: one call into the JVM per column (Spark string literals
+    # unescape backslashes, so the regex dot is spelled \\.)
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", f"{pattern}.{{{','.join(exts)}}}")
         .load(path)
-        .select(
-            F.regexp_replace(F.col("path"), r"\.[a-z]{3}$", "").alias("stem"),
-            F.lower(F.regexp_extract(F.col("path"), r"\.([a-z]{3})$", 1)).alias("ext"),
-            F.col("content"),
+        .selectExpr(
+            r"regexp_replace(path, '\\.[a-z]{3}$', '') AS stem",
+            r"lower(regexp_extract(path, '\\.([a-z]{3})$', 1)) AS ext",
+            "content",
         )
     )
     return raw.groupBy("stem").agg(
-        *[
-            F.max(F.when(F.col("ext") == e, F.col("content"))).alias(e)
-            for e in exts
-        ]
+        *[F.expr(f"max(CASE WHEN ext = '{e}' THEN content END) AS {e}") for e in exts]
     )
 
 

@@ -53,6 +53,61 @@ def test_pip_broadcast_phase_is_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def test_pip_broadcast_phase_is_one_arrow_kernel(spark, join_fixture_dir):
+    """The broadcast phase is one scalar Arrow kernel over the point scan
+    plus one broadcast hash join to the polygon attributes: exactly one
+    Python evaluation node, one BroadcastHashJoin, no shuffle Exchange
+    (the point side is never exchanged) and no point-side cell columns.
+    A shapefile-sourced join plus ``tile_aggregate`` runs 5 jobs (the
+    cell-equi join with its covering and geometry relations ran 6),
+    counted from Spark's status store."""
+    import re
+
+    from shapefile_rs_spark.operators.spatial_join import point_in_polygon_join
+    from shapefile_rs_spark.operators.tiles import tile_aggregate
+    from shapefile_rs_spark.sources.shapefile_source import (
+        read_shapefiles,
+        shapes_with_typed_attrs,
+    )
+
+    sc = spark.sparkContext
+    points = spark.range(0, 2000).select(
+        F.col("id").alias("doc_id"),
+        ((F.col("id") % 100) * 0.1).alias("lon"),
+        ((F.col("id") % 50) * 0.2).alias("lat"),
+    )
+    polygons = shapes_with_typed_attrs(
+        read_shapefiles(spark, join_fixture_dir, pattern="polygons"), {"id": "bigint"}
+    ).select(F.col("id").alias("polygon_id"), "wkb")
+
+    plan = _plan(
+        point_in_polygon_join(points, polygons, point_cols=["doc_id"], broadcast_polygons=True)
+    )
+    assert plan.count("EvalPython") == 1
+    assert plan.count("BroadcastHashJoin") == 1
+    assert re.findall(r"\w*Exchange", plan) == ["BroadcastExchange"]
+    assert "_cell_" not in plan and "cell_id" not in plan
+
+    group = "pip-broadcast-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        tiles = tile_aggregate(
+            point_in_polygon_join(points, polygons, point_cols=["doc_id", "lon", "lat"]), z=6
+        ).collect()
+    finally:
+        sc.setJobGroup("", "")
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    jobs = [
+        j
+        for j in conv.asJava(jsc.statusStore().jobsList(None))
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group
+    ]
+    assert sum(r["n_pages"] for r in tiles) > 0
+    assert len(jobs) == 5
+
+
 def test_page_synthesis_stays_in_codegen(spark, sf_dir):
     """html build + geotag parse + cell index: one codegen'd map stage, no
     Python (BatchEvalPython/ArrowEvalPython) anywhere in the plan."""

@@ -362,6 +362,42 @@ def test_polygon_stats_goldens(spark):
     assert abs(rows[2]["area"] - 50.0) < 1e-9
 
 
+@pytest.mark.parametrize("z", [0, 3, 6, 20])
+def test_assign_tiles_matches_tile_column_functions(spark, z):
+    """assign_tiles' SQL text gives the values of tile_x_col/tile_y_col
+    (and of the tile_xy numpy twin near the grid) at lon ±180, lat ±90,
+    out of range, on tile edges and just inside them; a replaced column
+    keeps its position."""
+    from shapefile_rs_spark.cells import tile_xy
+    from shapefile_rs_spark.operators.tiles import assign_tiles, tile_x_col, tile_y_col
+
+    n = 1 << z
+    edges_x = -180.0 + np.arange(n + 1) * (360.0 / n)
+    edges_y = 90.0 - np.arange(n + 1) * (180.0 / n)
+    lons = [-180.0, 180.0, -180.5, 180.5, -1e300, 1e300, 0.0]
+    lons += [float(v) for v in edges_x[:64]] + [float(np.nextafter(v, 0.0)) for v in edges_x[:64]]
+    lats = [-90.0, 90.0, -90.5, 90.5, -1e300, 1e300, 0.0]
+    lats += [float(v) for v in edges_y[:64]] + [float(np.nextafter(v, 0.0)) for v in edges_y[:64]]
+    m = max(len(lons), len(lats))
+    lons, lats = (lons * 2)[:m], (lats * 2)[:m]
+    df = spark.createDataFrame(
+        pd.DataFrame({"tile_x": 0, "lon": lons, "lat": lats}), "tile_x int, lon double, lat double"
+    )
+    out = assign_tiles(df, z).select(
+        "*",
+        tile_x_col(F.col("lon"), z).alias("want_x"),
+        tile_y_col(F.col("lat"), z).alias("want_y"),
+    )
+    assert out.columns[:4] == ["tile_x", "lon", "lat", "tile_z"]
+    assert out.schema["tile_x"].dataType == out.schema["want_x"].dataType
+    rows = out.collect()
+    assert all(r.tile_z == z for r in rows)
+    assert [(r.tile_x, r.tile_y) for r in rows] == [(r.want_x, r.want_y) for r in rows]
+    near = [i for i in range(m) if abs(lons[i]) < 1e3 and abs(lats[i]) < 1e3]
+    tx, ty = tile_xy(np.array(lons)[near], np.array(lats)[near], z)
+    assert [(rows[i].tile_x, rows[i].tile_y) for i in near] == list(zip(tx.tolist(), ty.tolist()))
+
+
 def test_tile_pyramid_parent_sums(spark, sf_dir):
     """Every parent tile's count equals the sum of its (up to 4) children;
     every level totals the full row count."""
