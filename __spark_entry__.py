@@ -644,8 +644,22 @@ _SPLIT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPLIT_MIN_BYTES", 3_000_000))
 
 
 def _want_split(path: str) -> bool:
+    """Whether the local parquet file or directory dataset at ``path``
+    holds at least ``_SPLIT_MIN_BYTES``.  A directory counts the files
+    Spark's reader reads: not those named ``.*``, nor ``_*`` unless the
+    name holds ``=`` (a partition directory)."""
+
+    def read(name: str) -> bool:
+        return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
     try:
-        return os.path.getsize(path) >= _SPLIT_MIN_BYTES
+        if not os.path.isdir(path):
+            return os.path.getsize(path) >= _SPLIT_MIN_BYTES
+        size = 0
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if read(d)]
+            size += sum(os.path.getsize(os.path.join(root, f)) for f in files if read(f))
+        return size >= _SPLIT_MIN_BYTES
     except OSError:
         return True  # non-local path: assume data-sized
 

@@ -8,4 +8,8 @@ training-data pipeline operators (dedup, similarity search, text analysis)
 over Common-Crawl-style page tables.
 """
 
+from shapefile_rs_spark import _worker
+
 __version__ = "0.1.0"
+
+_worker.install()

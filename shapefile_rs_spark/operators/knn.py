@@ -149,13 +149,12 @@ def knn_cells(
     if not q_rows:
         return spark.createDataFrame([], out_schema)
 
-    pts = points.withColumn(
-        "_pcell", C.cell_id_col(F.col(lon_col), F.col(lat_col), res)
-    ).persist()
+    pts = C.with_cell_ids(points, lon_col, lat_col, {"_pcell": res}).persist()
 
     # --- job 1: coarse occupancy histogram (also warms the cell index) ---
     hist = (
-        pts.groupBy(C.cell_id_col(F.col(lon_col), F.col(lat_col), e_res).alias("_ec"))
+        C.with_cell_ids(pts, lon_col, lat_col, {"_ec": e_res})
+        .groupBy("_ec")
         .count()
         .collect()
     )
@@ -276,6 +275,16 @@ def knn_cells(
     )
 
 
+def _null_safe_cells(df: DataFrame, lon: str, lat: str, name: str, res: int) -> DataFrame:
+    """``df`` plus its res-``res`` cell id as column ``name``, null where
+    ``lon`` or ``lat`` is null (:func:`cells.with_cell_ids` alone puts such
+    a row in an edge cell)."""
+    q = C.quote_ident
+    return C.with_cell_ids(df, lon, lat, {name: res}).withColumn(
+        name, F.expr(f"CASE WHEN {q(lon)} IS NULL OR {q(lat)} IS NULL THEN NULL ELSE {q(name)} END")
+    )
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -321,6 +330,12 @@ def knn_join(
 
     Output: (query_id, point_id, dist2, rank).  The only non-DataFrame
     state is the ≤4^res histogram — everything else shuffles on cell keys.
+
+    Null coordinates: a point whose lon or lat is null is excluded (it is
+    nobody's neighbour and does not count towards k); a query whose
+    q_lon or q_lat is null raises ``ValueError`` naming how many there
+    are.  Both counts come from the pass-0 aggregation, so they cost no
+    extra job.
     """
     if res > 8:
         raise ValueError("knn_join histogram is exact up to res 8 (4^res cells)")
@@ -328,12 +343,11 @@ def knn_join(
     n_side = 1 << res
     min_dim = min(360.0 / n_side, 180.0 / n_side)
 
-    pts = points.select(point_id, lon_col, lat_col).withColumn(
-        "_pcell", C.cell_id_col(F.col(lon_col), F.col(lat_col), res)
+    pts = _null_safe_cells(
+        points.select(point_id, lon_col, lat_col), lon_col, lat_col, "_pcell", res
     ).persist()
-
-    qx = queries.select(query_id, q_lon, q_lat).withColumn(
-        "_qcell", C.cell_id_col(F.col(q_lon), F.col(q_lat), res)
+    qx = _null_safe_cells(
+        queries.select(query_id, q_lon, q_lat), q_lon, q_lat, "_qcell", res
     ).persist()
 
     # pass-0: ONE job computes the point histogram AND the distinct
@@ -348,7 +362,12 @@ def knn_join(
         .count()
         .collect()
     )
-    hist = [r for r in both if r["_side"] == 1]
+    null_q = sum(r["count"] for r in both if r["_c"] is None and r["_side"] == 0)
+    if null_q:
+        pts.unpersist()
+        qx.unpersist()
+        raise ValueError(f"knn_join: {null_q} query rows have a null {q_lon} or {q_lat}")
+    hist = [r for r in both if r["_side"] == 1 and r["_c"] is not None]
     grid = np.zeros((n_side, n_side), dtype=np.int64)
     _, hix, hiy = C.decode_cell(np.array([r["_c"] for r in hist], dtype=np.int64))
     grid[hix, hiy] = [r["count"] for r in hist]
@@ -356,10 +375,7 @@ def knn_join(
     sat[1:, 1:] = grid.cumsum(0).cumsum(1)
     total = int(grid.sum())
 
-    qcells = np.array(
-        sorted(r["_c"] for r in both if r["_side"] == 0 and r["_c"] is not None),
-        dtype=np.int64,
-    )
+    qcells = np.array(sorted(r["_c"] for r in both if r["_side"] == 0), dtype=np.int64)
     _, qix, qiy = C.decode_cell(qcells)
 
     if total < k:
@@ -435,7 +451,7 @@ def knn_join(
                     }
                 )
 
-        repl = pts.mapInPandas(
+        repl = pts.where(F.col("_pcell").isNotNull()).mapInPandas(
             replicate,
             schema=f"_tcell long, {point_id} {p_type}, {lon_col} double, {lat_col} double",
         )
@@ -547,7 +563,7 @@ def knn_join(
     # round-1 kth bounds — sufficient, so no further passes are needed.
     # The per-cell radius is the MAX over the cell's unproven queries
     # (a superset ring changes nothing: the kernel is exact top-k).
-    redo = (
+    redo = C.with_cell_ids(
         pass1.filter(~proven)
         .select(query_id, q_lon, q_lat, "_kth")
         .distinct()
@@ -556,8 +572,10 @@ def knn_join(
             F.greatest(
                 F.lit(1), F.ceil(F.sqrt(F.col("_kth")) / F.lit(min_dim)).cast("int")
             ),
-        )
-        .withColumn("_qcell", C.cell_id_col(F.col(q_lon), F.col(q_lat), res))
+        ),
+        q_lon,
+        q_lat,
+        {"_qcell": res},
     )
     cellmax = redo.groupBy("_qcell").agg(F.max("_r").alias("_r")).collect()
     r2_of = {int(r["_qcell"]): min(int(r["_r"]), n_side) for r in cellmax}

@@ -2430,3 +2430,39 @@ def test_knn_join_massive_ties_and_string_ids(spark):
     want_s = {tuple(r) for r in knn_bruteforce(spts, sqs, k=3).collect()}
     got_s = {tuple(r) for r in knn_join(spts, sqs, k=3, res=5).collect()}
     assert got_s == want_s and len(got_s) == 120
+
+
+def test_knn_join_excludes_null_coordinate_points(spark):
+    """A point with a null lon or lat is nobody's neighbour and does not
+    count towards k: the query still gets every non-null point, exactly
+    as brute force over the non-null points ranks them."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_join
+
+    pts = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 1.0, 1.0), (3, 2.0, 2.0), (4, None, None), (5, 3.0, None)],
+        "point_id long, lon double, lat double",
+    )
+    qs = spark.createDataFrame([(10, 0.1, 0.1)], "query_id long, q_lon double, q_lat double")
+    want = {tuple(r) for r in knn_bruteforce(pts.dropna(), qs, k=4).collect()}
+    got = {tuple(r) for r in knn_join(pts, qs, k=4, res=4).collect()}
+    assert got == want and len(got) == 3
+
+
+def test_knn_join_null_query_coordinates_raise(spark):
+    """A query with a null q_lon or q_lat is an error naming the count,
+    not a silently missing row."""
+    from shapefile_rs_spark.operators.knn import knn_join
+
+    pts = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 1.0, 1.0), (3, 2.0, 2.0), (4, None, None)],
+        "point_id long, lon double, lat double",
+    )
+    qs = spark.createDataFrame(
+        [(10, 0.1, 0.1), (11, None, None), (12, 5.0, None)],
+        "query_id long, q_lon double, q_lat double",
+    )
+    with pytest.raises(ValueError, match="2 query rows have a null q_lon or q_lat"):
+        knn_join(pts, qs, k=2, res=4)
+    # both cell-indexed sides were released before the raise
+    cached = [r.name() or "" for r in spark.sparkContext._jsc.getPersistentRDDs().values()]
+    assert not [n for n in cached if "_pcell" in n or "_qcell" in n]

@@ -139,6 +139,38 @@ def test_multi_level_with_cells_is_one_scan(spark, sf_dir):
     assert plan.count("FLOOR(") - _plan(pages).count("FLOOR(") == 2 * 2 * 4
 
 
+def test_knn_join_cell_ids_are_two_projections(spark, monkeypatch):
+    """knn_join's pass-0 aggregation indexes both sides with the split
+    cell-id projections: the grid coordinate appears 4 times per (side,
+    axis), not the 32 times the inline ``cell_id_col`` nests it (128 in
+    all), and the rows still match brute force."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_join
+
+    pts = spark.range(200).select(
+        F.col("id").alias("point_id"),
+        ((F.col("id") * 37) % 360 - 180.0).alias("lon"),
+        ((F.col("id") * 53) % 180 - 90.0).alias("lat"),
+    )
+    qs = spark.range(50).select(
+        F.col("id").alias("query_id"),
+        ((F.col("id") * 71) % 360 - 179.5).alias("q_lon"),
+        ((F.col("id") * 13) % 180 - 89.5).alias("q_lat"),
+    )
+    want = {tuple(r) for r in knn_bruteforce(pts, qs, k=3).collect()}
+    frame = type(pts)
+    collect = frame.collect
+    plans = []
+
+    def recording_collect(df):
+        plans.append(_plan(df))
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", recording_collect)
+    got = {tuple(r) for r in knn_join(pts, qs, k=3, res=5).collect()}
+    assert got == want and len(got) == 150
+    assert plans[0].count("FLOOR(") == 2 * 2 * 4
+
+
 def test_bucketed_cell_join_is_exchange_free(spark, tmp_path):
     """Tables bucketed on cell_id with equal bucket counts must co-join
     with NO Exchange on either side — the write-once/join-many layout the
@@ -688,3 +720,36 @@ def test_incr_dsir_batch_plan_never_touches_corpus(spark, sf_dir):
     assert "ExistingRDD" in plan
     assert "Scan parquet" not in plan
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+
+
+def test_want_split_sizes_directory_datasets(spark, sf_dir, tmp_path, monkeypatch):
+    """A directory-layout parquet dataset is sized by its part files, not
+    by the directory inode: above ``_SPLIT_MIN_BYTES`` it re-splits, below
+    it keeps the direct read, and the rows are the same either way."""
+    import os
+
+    import __spark_entry__ as E
+
+    base = tmp_path / "sf"
+    src = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    src.repartition(3).write.parquet(str(base / "documents.parquet"))
+    path = str(base / "documents.parquet")
+    data = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+    )
+    assert data > os.path.getsize(path)  # more than the inode size the old check read
+    want = sorted(tuple(r) for r in src.collect())
+
+    monkeypatch.setattr(E, "_SPLIT_MIN_BYTES", data)
+    assert E._want_split(path)
+    split = E._docs(spark, str(base), split=True)
+    assert "RoundRobinPartitioning" in _plan(split)
+    assert sorted(tuple(r) for r in split.select("doc_id", "text").collect()) == want
+
+    monkeypatch.setattr(E, "_SPLIT_MIN_BYTES", data + 1)
+    assert not E._want_split(path)
+    direct = E._docs(spark, str(base), split=True)
+    assert "RoundRobinPartitioning" not in _plan(direct)
+    assert sorted(tuple(r) for r in direct.select("doc_id", "text").collect()) == want
