@@ -8,6 +8,11 @@ with the ring-grouping rule of src/record/polygon.rs:606-640.  Boundary points
 are excluded (geo's ``contains`` is interior-only); callers that need boundary
 inclusiveness must buffer upstream.
 
+This module is the reference spelling the tests pin the engine against:
+the engine's own even-odd test is
+:func:`..operators.spatial_join._ray_cast`, bit-identical to
+:func:`crossings_matrix` by construction (same operand order).
+
 All arrays are float64; no per-point Python.
 """
 
@@ -55,26 +60,10 @@ def points_in_rings(
 
 
 def rings_bbox(rings: Sequence[np.ndarray]) -> tuple:
+    """``(xmin, ymin, xmax, ymax)`` over every vertex of ``rings``."""
     xs = np.concatenate([r[:, 0] for r in rings])
     ys = np.concatenate([r[:, 1] for r in rings])
     return float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())
-
-
-def points_in_polygon_wkb(px: np.ndarray, py: np.ndarray, wkb: bytes) -> np.ndarray:
-    """Convenience: PIP against a (Multi)Polygon WKB blob, with a vectorized
-    bbox pre-filter so far-away points never hit the ray-cast."""
-    from .wkb import wkb_rings
-
-    rings = wkb_rings(wkb)
-    xmin, ymin, xmax, ymax = rings_bbox(rings)
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    candidate = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-    out = np.zeros(len(px), dtype=bool)
-    if candidate.any():
-        idx = np.nonzero(candidate)[0]
-        out[idx] = points_in_rings(px[idx], py[idx], rings)
-    return out
 
 
 def nested_loop_pip_oracle(

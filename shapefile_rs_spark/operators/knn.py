@@ -131,6 +131,9 @@ def knn_cells(
     no per-round persists/checkpoints accumulate and no ``isin`` chains
     bloat the plan.  The returned frame is rebuilt from the collected rows
     via a VALUES literal — result size is k·n_queries by contract.
+
+    A point whose lon or lat is null is excluded, as in :func:`knn_join`:
+    it is nobody's neighbour and does not count towards k.
     """
     spark = points.sparkSession
     n_side = 1 << res
@@ -149,7 +152,10 @@ def knn_cells(
     if not q_rows:
         return spark.createDataFrame([], out_schema)
 
-    pts = C.with_cell_ids(points, lon_col, lat_col, {"_pcell": res}).persist()
+    cached = C.with_cell_ids(points, lon_col, lat_col, {"_pcell": res}).persist()
+    # filtered above the cache: below it, Catalyst would push the filter
+    # into the points' own projection and evaluate lon/lat twice
+    pts = cached.where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull())
 
     # --- job 1: coarse occupancy histogram (also warms the cell index) ---
     hist = (
@@ -245,7 +251,6 @@ def knn_cells(
 
     if pend:
         fallback_ids.extend(p[0] for p in pend)
-    pts.unpersist()
 
     if fallback_ids:
         fb_q = queries.join(
@@ -256,9 +261,10 @@ def knn_cells(
         out_rows.extend(
             tuple(row)
             for row in knn_bruteforce(
-                points, fb_q, k, point_id, query_id, lon_col, lat_col, q_lon, q_lat
+                pts, fb_q, k, point_id, query_id, lon_col, lat_col, q_lon, q_lat
             ).collect()
         )
+    cached.unpersist()
 
     if not out_rows:
         return spark.createDataFrame([], out_schema)

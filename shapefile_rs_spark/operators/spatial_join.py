@@ -19,23 +19,28 @@ spatial-join decomposition:
    once.  One scalar Arrow UDF per point batch (:func:`_pip_udf`) takes
    only ``(lon, lat)`` to Python, computes the points' cells at each level,
    looks them up, passes interior-cell hits and ray-casts boundary-cell
-   hits (vectorized over (point, edge) pairs in bounded blocks, no
-   per-row Python), and returns each point's containing polygon positions;
-   an ``explode`` and one broadcast hash join to the polygon attributes
-   finish the join;
+   hits (:func:`_ray_cast`), and returns each point's containing polygon
+   positions; an ``explode`` and one broadcast hash join to the polygon
+   attributes finish the join;
 3. **shuffle path** (larger polygon sides): every point → its cell at each
    covering resolution level in ONE scan (:func:`with_cells`), a
    **cell-equi join** on (res, cell_id) to the distributed
    :func:`polygon_covering` — shuffled hash/SMJ chosen by Catalyst+AQE,
    with optional explicit hot-cell salting — then a join to the polygon
    geometry;
-4. **refine** (shuffle path): vectorized even-odd ray-cast per Arrow batch,
-   grouped by polygon inside the batch (no per-row Python) — ring
-   semantics per src/record/polygon.rs:606-640 + src/record/mod.rs:133-145.
+4. **refine** (shuffle path, :func:`pip_refine_full`): per Arrow batch,
+   the boundary-cell candidates' distinct polygon blobs become one edge
+   index (:func:`_edge_index`) and the whole batch is ONE
+   :func:`_ray_cast` call — ring semantics per
+   src/record/polygon.rs:606-640 + src/record/mod.rs:133-145.
    Interior-cell candidates bypass it: their wkb is nulled (no blob bytes
-   cross Arrow) and :func:`pip_refine_full` passes them through
-   unexamined.  The broadcast kernel applies the same even-odd rule with
-   the same operand order, so both paths give the same rows.
+   cross Arrow) and they pass unexamined.
+
+:func:`_ray_cast` (vectorized over (point, edge) pairs in bounded blocks,
+no per-row Python) is the engine's only even-odd test, so both phases —
+and :func:`..tiles.tile_polygon_assignment`'s center rule — give the same
+rows; on both phases a point with a null or non-finite coordinate is
+contained in nothing (:func:`_finite`).
 
 Scale notes (100 TB story): the point side is never shuffled in the
 broadcast path — one map-side kernel per batch over the scan, then a
@@ -87,6 +92,43 @@ def _wkb_polygons(blobs: Sequence) -> Tuple[List[int], List]:
     return idx, polys
 
 
+def _polygon_bboxes(polys: List) -> Tuple[np.ndarray, ...]:
+    """``(xmin, ymin, xmax, ymax)`` arrays of parsed polygons ``polys``
+    (:func:`_wkb_polygons`), each over every ring, degenerate ones
+    included."""
+    n_vert = np.array([sum(len(r) for r in rings) for rings in polys], dtype=np.int64)
+    xy = np.concatenate([r for rings in polys for r in rings] or [np.empty((0, 2))])
+    start = np.cumsum(n_vert) - n_vert
+    lo, hi = np.minimum.reduceat, np.maximum.reduceat
+    return lo(xy[:, 0], start), lo(xy[:, 1], start), hi(xy[:, 0], start), hi(xy[:, 1], start)
+
+
+def _edge_index(idx: Sequence[int], polys: List, n: int) -> dict:
+    """The ring edges :func:`_ray_cast` reads: ``x1, y1, x2, y2`` of every
+    parsed polygon ``polys[j]`` at position ``idx[j]`` of ``n``, CSR by
+    position (``edge_offs``; a position with no polygon has no edge).
+    Rings of fewer than 2 points are skipped, as
+    :func:`..geom.pip.points_in_rings` skips them."""
+    rings = [(i, r) for i, p in zip(idx, polys) for r in p if len(r) >= 2]
+    n_edge = np.zeros(n, dtype=np.int64)
+    np.add.at(n_edge, np.array([i for i, _ in rings], dtype=np.int64), [len(r) - 1 for _, r in rings])
+    edges = (
+        np.concatenate([np.hstack([r[:-1], r[1:]]) for _, r in rings])
+        if rings
+        else np.empty((0, 4))
+    ).astype(np.float64)
+    return {
+        "edge_offs": np.concatenate([[0], np.cumsum(n_edge)]),
+        **{k: np.ascontiguousarray(edges[:, j]) for j, k in enumerate(("x1", "y1", "x2", "y2"))},
+    }
+
+
+def _finite(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
+    """Points a polygon may contain: a null (NaN once in numpy), NaN or
+    ±inf coordinate is contained in nothing."""
+    return np.isfinite(lon) & np.isfinite(lat)
+
+
 def _cover_polygons(
     idx: List[int], polys: List, max_cover_cells: int, max_res: int, fixed_res: Optional[int]
 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -104,18 +146,7 @@ def _cover_polygons(
     if fixed_res is not None:
         res = np.full(len(polys), fixed_res, dtype=np.int64)
     else:
-        # bbox over every ring, degenerate ones included
-        n_vert = np.array([sum(len(r) for r in rings) for rings in polys])
-        xy = np.concatenate([r for rings in polys for r in rings])
-        start = np.cumsum(n_vert) - n_vert
-        res = C.adaptive_cover_res(
-            np.minimum.reduceat(xy[:, 0], start),
-            np.minimum.reduceat(xy[:, 1], start),
-            np.maximum.reduceat(xy[:, 0], start),
-            np.maximum.reduceat(xy[:, 1], start),
-            max_cover_cells,
-            max_res,
-        )
+        res = C.adaptive_cover_res(*_polygon_bboxes(polys), max_cover_cells, max_res)
     p, cells, full = C.classify_cover_batch(polys, res)
     return np.asarray(idx, dtype=np.int64)[p], cells, res[p].astype(np.int32), full
 
@@ -212,61 +243,6 @@ def cell_ixiy(cell: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"ix": ix, "iy": iy})
 
 
-@F.pandas_udf(BooleanType())
-def pip_refine(wkb: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """Exact even-odd ray-cast, vectorized per distinct polygon per batch.
-    Arrow hands binary columns over as ``bytes`` (hashable) — factorize
-    groups the batch by polygon so the ray-cast runs once per polygon over
-    a contiguous numpy slab, never per row."""
-    from ..geom.pip import points_in_rings
-    from ..geom.wkb import wkb_rings
-
-    out = np.zeros(len(wkb), dtype=bool)
-    if not len(wkb):
-        return pd.Series(out)
-    lon_v = lon.to_numpy(dtype=np.float64)
-    lat_v = lat.to_numpy(dtype=np.float64)
-    try:
-        codes, uniques = pd.factorize(wkb)
-    except TypeError:  # bytearray payloads (non-Arrow fallback path)
-        codes, uniques = pd.factorize(wkb.apply(bytes))
-    for gi, blob in enumerate(uniques):
-        mask = codes == gi
-        out[mask] = points_in_rings(lon_v[mask], lat_v[mask], wkb_rings(bytes(blob)))
-    return pd.Series(out)
-
-
-@F.pandas_udf(BooleanType())
-def pip_refine_full(
-    wkb: pd.Series, lon: pd.Series, lat: pd.Series, full: pd.Series
-) -> pd.Series:
-    """:func:`pip_refine` with the INTERIOR-cell bypass: rows whose covering
-    cell is fully inside the polygon (``full``) are contained by
-    construction — they return True with NO wkb parse and NO ray-cast (the
-    caller nulls their wkb so the blob bytes never even cross Arrow).  Only
-    BOUNDARY-cell rows pay the exact even-odd test."""
-    from ..geom.pip import points_in_rings
-    from ..geom.wkb import wkb_rings
-
-    full_v = full.to_numpy(dtype=bool)
-    out = full_v.copy()
-    if not len(wkb) or full_v.all():
-        return pd.Series(out)
-    rest = ~full_v
-    lon_v = lon.to_numpy(dtype=np.float64)
-    lat_v = lat.to_numpy(dtype=np.float64)
-    sub = wkb[rest]
-    try:
-        codes, uniques = pd.factorize(sub)
-    except TypeError:
-        codes, uniques = pd.factorize(sub.apply(bytes))
-    rest_idx = np.nonzero(rest)[0]
-    for gi, blob in enumerate(uniques):
-        mask = rest_idx[codes == gi]
-        out[mask] = points_in_rings(lon_v[mask], lat_v[mask], wkb_rings(bytes(blob)))
-    return pd.Series(out)
-
-
 # (point, edge) pairs one ray-cast block evaluates at most (the
 # classify_cover_batch bound): temporaries stay a few MB whatever the
 # polygon size
@@ -282,44 +258,35 @@ def _pip_index(
     * ``cells`` — the covering's cell ids, sorted and de-duplicated, with
       CSR offsets ``cell_offs`` into ``pos`` (int32 row position) and
       ``full`` (the cell is interior to that polygon);
-    * ``x1, y1, x2, y2`` — every polygon's ring edges, CSR by position
-      (``edge_offs``), rings of fewer than 2 points skipped as
-      :func:`..geom.pip.points_in_rings` does;
+    * the edge index (:func:`_edge_index`) of every row;
     * ``levels`` — the covering's resolutions.
     """
     idx, polys = _wkb_polygons(blobs)
     pos, cells, res, full = _cover_polygons(idx, polys, max_cover_cells, max_res, fixed_res)
     order = np.argsort(cells, kind="stable")
     uniq, first = np.unique(cells[order], return_index=True)
-    rings = [(i, r) for i, p in zip(idx, polys) for r in p if len(r) >= 2]
-    n_edge = np.zeros(len(blobs), dtype=np.int64)
-    np.add.at(n_edge, np.array([i for i, _ in rings], dtype=np.int64), [len(r) - 1 for _, r in rings])
-    edges = (
-        np.concatenate([np.hstack([r[:-1], r[1:]]) for _, r in rings])
-        if rings
-        else np.empty((0, 4))
-    ).astype(np.float64)
     return {
         "cells": uniq,
         "cell_offs": np.append(first, len(cells)),
         "pos": pos[order].astype(np.int32),
         "full": full[order],
-        "edge_offs": np.concatenate([[0], np.cumsum(n_edge)]),
-        **{k: np.ascontiguousarray(edges[:, j]) for j, k in enumerate(("x1", "y1", "x2", "y2"))},
+        **_edge_index(idx, polys, len(blobs)),
         "levels": np.unique(res).tolist(),
     }
 
 
 def _ray_cast(
-    index: dict, px: np.ndarray, py: np.ndarray, poly: np.ndarray, max_pairs: int
+    edges: dict, px: np.ndarray, py: np.ndarray, poly: np.ndarray, max_pairs: int = _MAX_PAIRS
 ) -> np.ndarray:
     """Even-odd test of point ``i`` against the edges of polygon
-    ``poly[i]`` of ``index``, over (point, edge) pairs with
-    :func:`..geom.pip.crossings_matrix`'s operand order, so bit-identical
-    to it.  Pairs are generated at most ``max_pairs`` at a time: a point
-    whose polygon has more edges is split along them."""
-    e0 = index["edge_offs"][poly]
-    ne = index["edge_offs"][poly + 1] - e0
+    ``poly[i]`` of the edge index ``edges`` (:func:`_edge_index`), over
+    (point, edge) pairs with :func:`..geom.pip.crossings_matrix`'s operand
+    order, so bit-identical to it.  The engine's one containment test:
+    the broadcast kernel, :func:`pip_refine_full` and the tile center
+    rule all call it.  Pairs are generated at most ``max_pairs`` at a
+    time: a point whose polygon has more edges is split along them."""
+    e0 = edges["edge_offs"][poly]
+    ne = edges["edge_offs"][poly + 1] - e0
     # work units of ≤ max_pairs pairs, packed into blocks as
     # classify_cover_batch packs its (edge, cell) blocks
     nunit = -(-ne // max_pairs)
@@ -330,7 +297,7 @@ def _ray_cast(
     u_n = np.minimum(max_pairs, e0[u_pt] + ne[u_pt] - u_e)
     u_off = np.cumsum(u_n) - u_n
     cuts = np.flatnonzero(np.diff(u_off // max_pairs)) + 1
-    x1, y1, x2, y2 = index["x1"], index["y1"], index["x2"], index["y2"]
+    x1, y1, x2, y2 = edges["x1"], edges["y1"], edges["x2"], edges["y2"]
     crossings = np.zeros(len(px), dtype=np.int64)
     for b in np.split(np.arange(len(u_pt)), cuts) if len(u_pt) else ():
         cnt = u_n[b]
@@ -359,8 +326,8 @@ def _pip_contains(
     the covering's levels (or at its own ``cell`` id when given; a
     negative id finds nothing); a hit in a FULL cell is contained with no
     ray-cast, a hit in a boundary cell is ray-cast (:func:`_ray_cast`).  A
-    non-finite coordinate (a null arrives as NaN) contains nothing."""
-    ok = np.isfinite(lon) & np.isfinite(lat)
+    non-finite point is contained in nothing (:func:`_finite`)."""
+    ok = _finite(lon, lat)
     if cell is not None:
         ok &= cell >= 0
     rows = np.flatnonzero(ok)
@@ -386,6 +353,31 @@ def _pip_contains(
         r = rows[edge]
         inside[edge] = _ray_cast(index, lon[r], lat[r], pos[edge], max_pairs)
     return rows[inside], pos[inside]
+
+
+@F.pandas_udf(BooleanType())
+def pip_refine_full(
+    wkb: pd.Series, lon: pd.Series, lat: pd.Series, full: pd.Series
+) -> pd.Series:
+    """The shuffle phase's refine: is each candidate row's point inside its
+    row's polygon ``wkb``?  A row whose covering cell is fully inside the
+    polygon (``full``) is contained with no wkb parse and no ray-cast (the
+    caller nulls its wkb, so the blob never crosses Arrow).  The other
+    rows' distinct blobs are parsed once into one edge index
+    (:func:`_edge_index`) and ray-cast in one :func:`_ray_cast` call per
+    batch.  A non-finite point is contained in nothing (:func:`_finite`),
+    even in a full cell."""
+    lon_v = lon.to_numpy(dtype=np.float64)
+    lat_v = lat.to_numpy(dtype=np.float64)
+    ok = _finite(lon_v, lat_v)
+    full_v = full.to_numpy(dtype=bool)
+    out = full_v & ok
+    rest = np.flatnonzero(~full_v & ok & wkb.notna().to_numpy())
+    if len(rest):
+        codes, uniques = pd.factorize(wkb.iloc[rest])
+        edges = _edge_index(*_wkb_polygons(uniques), len(uniques))
+        out[rest] = _ray_cast(edges, lon_v[rest], lat_v[rest], codes)
+    return pd.Series(out)
 
 
 def _pip_udf(bc):
@@ -467,9 +459,9 @@ def point_in_polygon_join(
     A polygon row whose ``wkb_col`` is null (``read_shapefiles(...,
     on_invalid="null")``, strip/fan multipatch) contains no point: it gets
     no covering cells and joins nothing, on both paths.  An empty polygon
-    side gives an empty frame with the join's output columns.  In the
-    broadcast phase a null or non-finite ``lon``/``lat`` is contained in
-    no polygon.
+    side gives an empty frame with the join's output columns.  A point
+    whose ``lon`` or ``lat`` is null or non-finite is contained in no
+    polygon, on both phases.
 
     ``pre_indexed=True`` declares that ``points`` already carries
     ``cell_res``/``cell_id`` at every covering resolution (use with

@@ -3,7 +3,10 @@
 Tiles are equirectangular z/x/y (slippy-style: x across lon, y from +90 lat
 down).  Tile assignment of points is pure Catalyst arithmetic — stays inside
 whole-stage codegen, no Python in the hot path.  Tile↔polygon assignment
-reuses the PIP machinery with tile centers as the point side.
+is one ``mapInPandas`` over the polygons: each Arrow batch parses its
+polygons once, expands their bbox tiles, and (center rule) ray-casts every
+tile center against its own polygon with the PIP join's kernel
+(:func:`.spatial_join._ray_cast`).
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..cells import quote_ident
-from .spatial_join import pip_refine
+from .spatial_join import _edge_index, _polygon_bboxes, _ray_cast, _wkb_polygons
 
 
 def tile_x_col(lon, z: int):
@@ -71,47 +74,65 @@ _TILE_SCHEMA_EXTRA = [
 ]
 
 
+def _tile_batch(
+    pdf: pd.DataFrame, z: int, wkb_col: str, id_cols: List[str], center_rule: bool
+) -> pd.DataFrame:
+    """One batch of polygon rows → ``(*id_cols, tile_z, tile_x, tile_y)``:
+    every z-``z`` tile of each polygon's bbox, or with ``center_rule`` only
+    the tiles whose center the polygon contains.  A row with a null
+    ``wkb_col`` or no vertex gets no tile (:func:`.spatial_join._wkb_polygons`).
+    The tile-rectangle expansion is numpy repeat/tile, not nested Python
+    loops."""
+    n = 1 << z
+    idx, polys = _wkb_polygons(pdf[wkb_col])
+    xmin, ymin, xmax, ymax = _polygon_bboxes(polys)
+    tx0 = np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+    tx1 = np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+    ty0 = np.clip(np.floor((90.0 - ymax) / 180.0 * n), 0, n - 1).astype(np.int64)
+    ty1 = np.clip(np.floor((90.0 - ymin) / 180.0 * n), 0, n - 1).astype(np.int64)
+    ny = ty1 - ty0 + 1
+    counts = (tx1 - tx0 + 1) * ny
+    # per-tile local index within each polygon's nx×ny rectangle
+    poly = np.repeat(np.arange(len(polys)), counts)
+    local = np.arange(len(poly), dtype=np.int64) - np.repeat(np.cumsum(counts) - counts, counts)
+    tile_x = tx0[poly] + local // ny[poly]
+    tile_y = ty0[poly] + local % ny[poly]
+    if center_rule:
+        # the centers spelled with the same IEEE operations as the
+        # tile_polygons SQL oracle
+        inside = _ray_cast(
+            _edge_index(range(len(polys)), polys, len(polys)),
+            (tile_x + 0.5) / n * 360.0 - 180.0,
+            90.0 - (tile_y + 0.5) / n * 180.0,
+            poly,
+        )
+        poly, tile_x, tile_y = poly[inside], tile_x[inside], tile_y[inside]
+    rows = np.asarray(idx, dtype=np.int64)[poly]
+    out = {c: pdf[c].to_numpy()[rows] for c in id_cols}
+    out.update(tile_z=np.full(len(rows), z, dtype=np.int32), tile_x=tile_x, tile_y=tile_y)
+    return pd.DataFrame(out, columns=[*id_cols, "tile_z", "tile_x", "tile_y"])
+
+
+def _tiles(
+    polygons: DataFrame, z: int, wkb_col: str, id_cols: List[str], center_rule: bool
+) -> DataFrame:
+    """:func:`_tile_batch` over every Arrow batch of ``polygons``: one
+    Python stage, no join."""
+    out_schema = StructType([polygons.schema[c] for c in id_cols] + _TILE_SCHEMA_EXTRA)
+
+    def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _tile_batch(pdf, z, wkb_col, id_cols, center_rule)
+
+    return polygons.mapInPandas(cover, schema=out_schema)
+
+
 def polygon_tiles(
     polygons: DataFrame, z: int, wkb_col: str = "wkb", id_cols: Optional[List[str]] = None
 ) -> DataFrame:
     """Explode each polygon into the z/x/y tiles its bbox covers."""
     id_cols = id_cols or [c for c in polygons.columns if c != wkb_col]
-    out_schema = StructType([polygons.schema[c] for c in id_cols] + _TILE_SCHEMA_EXTRA)
-    n = 1 << z
-
-    def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..geom.pip import rings_bbox
-        from ..geom.wkb import wkb_rings
-
-        cols = [f.name for f in out_schema.fields]
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
-                continue
-            # WKB parse per polygon; the tile-rectangle expansion is numpy
-            # meshgrid-style repeat/tile, not nested Python loops
-            bb = np.array(
-                [rings_bbox(wkb_rings(bytes(b))) for b in pdf[wkb_col]], dtype=np.float64
-            )
-            tx0 = np.clip(np.floor((bb[:, 0] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-            tx1 = np.clip(np.floor((bb[:, 2] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-            ty0 = np.clip(np.floor((90.0 - bb[:, 3]) / 180.0 * n), 0, n - 1).astype(np.int64)
-            ty1 = np.clip(np.floor((90.0 - bb[:, 1]) / 180.0 * n), 0, n - 1).astype(np.int64)
-            nx = tx1 - tx0 + 1
-            ny = ty1 - ty0 + 1
-            counts = nx * ny
-            total = int(counts.sum())
-            # per-tile local index within each polygon's nx×ny rectangle
-            csum = np.cumsum(counts) - counts
-            local = np.arange(total, dtype=np.int64) - np.repeat(csum, counts)
-            ny_rep = np.repeat(ny, counts)
-            out = {c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols}
-            out["tile_z"] = np.full(total, z, dtype=np.int32)
-            out["tile_x"] = np.repeat(tx0, counts) + local // ny_rep
-            out["tile_y"] = np.repeat(ty0, counts) + local % ny_rep
-            yield pd.DataFrame(out, columns=cols)
-
-    return polygons.mapInPandas(cover, schema=out_schema)
+    return _tiles(polygons, z, wkb_col, id_cols, center_rule=False)
 
 
 def tile_polygon_assignment(
@@ -121,19 +142,11 @@ def tile_polygon_assignment(
     polygon_key: str = "polygon_id",
     center_rule: bool = True,
 ) -> DataFrame:
-    """(tile_z, tile_x, tile_y, polygon_id): tiles whose CENTER lies inside
-    the polygon (center_rule) — deterministic, oracle-expressible assignment.
+    """(polygon_id, tile_z, tile_x, tile_y): tiles whose CENTER lies inside
+    the polygon (center_rule) — deterministic, oracle-expressible
+    assignment, in the same single Python stage as :func:`polygon_tiles`.
     Without center_rule, returns the bbox covering (superset)."""
-    tiles = polygon_tiles(polygons, z, wkb_col=wkb_col, id_cols=[polygon_key])
-    if not center_rule:
-        return tiles
-    n = float(1 << z)
-    with_centers = tiles.withColumn(
-        "_clon", (F.col("tile_x") + F.lit(0.5)) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-    ).withColumn("_clat", F.lit(90.0) - (F.col("tile_y") + F.lit(0.5)) / F.lit(n) * F.lit(180.0))
-    joined = with_centers.join(F.broadcast(polygons.select(polygon_key, wkb_col)), polygon_key)
-    inside = joined.filter(pip_refine(F.col(wkb_col), F.col("_clon"), F.col("_clat")))
-    return inside.select(polygon_key, "tile_z", "tile_x", "tile_y")
+    return _tiles(polygons, z, wkb_col, [polygon_key], center_rule)
 
 
 def tile_pyramid(

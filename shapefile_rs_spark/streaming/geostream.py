@@ -3,11 +3,13 @@ polygon dim (stream-static broadcast join), geotagged and tile-counted
 incrementally.
 
 The logical plan is the SAME builder functions as the batch engine
-(geotag_pages / with_cells / tile columns) applied to a streaming
-DataFrame — Catalyst plans the stream-static join as a broadcast hash join
-per micro-batch, so the batch plan's properties (no stream shuffle before
-the aggregate, codegen'd parse) carry over.  availableNow replay over a
-static directory reproduces the batch result exactly (pinned by tests).
+(geotag_pages / point_in_polygon_join / tile columns) applied to a
+streaming DataFrame: the static polygon side is collected once into the
+join's broadcast polygon index, each micro-batch runs the join's one Arrow
+kernel map-side (no stream shuffle before the aggregate, codegen'd
+parse), and the only stateful operator is the final aggregation.
+availableNow replay over a static directory reproduces the batch result
+exactly (pinned by tests).
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.spatial_join import pip_refine_full, polygon_covering, with_cells
+from ..operators.spatial_join import point_in_polygon_join
 from ..operators.tiles import tile_x_col, tile_y_col
 from ..pages import geotag_pages
 
@@ -35,24 +37,13 @@ def read_page_stream(spark: SparkSession, input_path: str) -> DataFrame:
 
 
 def stream_pip_tiles(pages_stream: DataFrame, polygons: DataFrame, z: int = 6) -> DataFrame:
-    """stream(pages) ⋈ static(polygons) → per-(polygon, tile) page counts.
-
-    The polygon side (static, small) is exploded to covering cells and
-    broadcast; the stream side is geotagged + cell-indexed map-side; the
-    only stateful operator is the final aggregation."""
-    covering = polygon_covering(polygons, id_cols=["polygon_id"])
-    res_levels = [r["cell_res"] for r in covering.select("cell_res").distinct().collect()]
-    tagged = geotag_pages(pages_stream).select("url", "lon", "lat")
-    pts = with_cells(tagged, res_levels)
-    cands = pts.join(F.broadcast(covering), on=["cell_res", "cell_id"], how="inner")
-    joined = cands.join(F.broadcast(polygons.select("polygon_id", "wkb")), "polygon_id")
-    # interior-cell bypass (same contract as the batch PIP join): temp
-    # refine column, the carried wkb stays intact
-    joined = joined.withColumn(
-        "_refine_wkb", F.when(F.col("cell_full"), F.lit(None)).otherwise(F.col("wkb"))
-    )
-    inside = joined.filter(
-        pip_refine_full(F.col("_refine_wkb"), F.col("lon"), F.col("lat"), F.col("cell_full"))
+    """stream(pages) ⋈ static(polygons) → per-(polygon, tile) page counts:
+    the batch :func:`..operators.spatial_join.point_in_polygon_join` over
+    the geotagged stream, then a tile rollup."""
+    inside = point_in_polygon_join(
+        geotag_pages(pages_stream).select("url", "lon", "lat"),
+        polygons,
+        point_cols=["url", "lon", "lat"],
     )
     return (
         inside.withColumn("tile_x", tile_x_col(F.col("lon"), z))

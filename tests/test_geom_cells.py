@@ -58,11 +58,16 @@ def test_multipatch_wkb_ring_patches_only():
 
 
 def test_pip_hole_semantics():
+    """The engine's kernel (:func:`_pip_index` + :func:`_pip_contains`)
+    excludes the hole."""
+    from shapefile_rs_spark.operators.spatial_join import _pip_contains, _pip_index
+
     rec = FX.fx_join_polygons()[0][0]  # square with hole
     blob = W.shape_to_wkb(rec)
     px = np.array([2.0, 5.0, 8.0, 11.0])
     py = np.array([2.0, 5.0, 9.0, 5.0])
-    inside = P.points_in_polygon_wkb(px, py, blob)
+    rows, _ = _pip_contains(_pip_index([blob], 256, 12, None), px, py)
+    inside = np.isin(np.arange(len(px)), rows)
     assert inside.tolist() == [True, False, True, False]
 
 

@@ -1,10 +1,12 @@
 """The broadcast phase of the PIP join: a driver-built polygon index and one
 Arrow kernel per point batch.  Its rows must equal the shuffle phase's
-(cell-equi join + refine UDF) and the nested-loop oracle's, on holes, mixed
-covering resolutions, points on cell borders and polygon vertices, hot
-clusters, pre-indexed points, string keys, carried polygon columns and
-polygons whose ray-cast work spans several blocks; non-finite coordinates
-are contained in nothing."""
+(cell-equi join + refine UDF), the salted shuffle phase's and the
+nested-loop oracle's, on holes, mixed covering resolutions, points on cell
+borders and polygon vertices, hot clusters, pre-indexed points, string
+keys, carried polygon columns and polygons whose ray-cast work spans
+several blocks; non-finite coordinates are contained in nothing on every
+phase.  The tile center rule runs the same ray-cast: it must equal the
+oracle on tile centers, and bad polygon rows get no tile."""
 
 import numpy as np
 import pandas as pd
@@ -13,7 +15,7 @@ from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
 
 from shapefile_rs_spark import cells as C
-from shapefile_rs_spark.geom.pip import nested_loop_pip_oracle
+from shapefile_rs_spark.geom.pip import nested_loop_pip_oracle, points_in_rings
 from shapefile_rs_spark.geom.wkb import multipolygon_wkb
 from shapefile_rs_spark.operators.spatial_join import (
     _MAX_PAIRS,
@@ -22,6 +24,7 @@ from shapefile_rs_spark.operators.spatial_join import (
     point_in_polygon_join,
     with_cells,
 )
+from shapefile_rs_spark.operators.tiles import _tile_batch, polygon_tiles, tile_polygon_assignment
 
 _POINTS = "point_id bigint, lon double, lat double"
 _POLYS = "polygon_id bigint, wkb binary"
@@ -123,13 +126,16 @@ def test_pip_kernel_matches_oracle(layer):
 @settings(max_examples=8, deadline=None, phases=[Phase.explicit, Phase.reuse, Phase.generate])
 @given(_layers())
 def test_broadcast_index_join_matches_shuffle_join_and_oracle(spark, layer):
-    """Same pairs as the shuffle phase and the nested-loop oracle."""
+    """Same pairs as the shuffle phase, the salted shuffle phase and the
+    nested-loop oracle."""
     polys, pts, max_cover_cells = layer
     points, polygons = _frames(spark, polys, pts)
     kw = dict(point_cols=["point_id"], max_cover_cells=max_cover_cells)
     want = {(i, j + 1) for i, j in nested_loop_pip_oracle(pts, polys)}
     assert _pairs(point_in_polygon_join(points, polygons, **kw)) == want
     assert _pairs(point_in_polygon_join(points, polygons, broadcast_polygons=False, **kw)) == want
+    salted = dict(broadcast_polygons=False, salt_factor=4, hot_cell_threshold=8)
+    assert _pairs(point_in_polygon_join(points, polygons, **salted, **kw)) == want
 
 
 def _rect(x0, y0, x1, y1):
@@ -217,10 +223,20 @@ def test_broadcast_index_join_ray_cast_spans_blocks(spark):
     assert {(i, p + 1) for i, p in zip(rows.tolist(), pos.tolist())} == want
 
 
-def test_broadcast_index_join_non_finite_coordinates_contain_nothing(spark):
+@pytest.mark.parametrize(
+    "phase",
+    [
+        dict(broadcast_polygons=None),
+        dict(broadcast_polygons=False),
+        dict(broadcast_polygons=False, salt_factor=4, hot_cell_threshold=1),
+    ],
+    ids=["broadcast", "shuffle", "salted"],
+)
+def test_broadcast_index_join_non_finite_coordinates_contain_nothing(spark, phase):
     """Null, NaN and ±inf coordinates are contained in no polygon — even
     one that covers the whole grid with interior cells, where a clamped
-    cell id would otherwise pass the interior-cell bypass."""
+    cell id would otherwise pass the interior-cell bypass — on every
+    phase of the join."""
     polygons = spark.createDataFrame(
         pd.DataFrame({"polygon_id": [1], "wkb": [multipolygon_wkb([_rect(-200, -100, 200, 100)])]}),
         _POLYS,
@@ -230,5 +246,95 @@ def test_broadcast_index_join_non_finite_coordinates_contain_nothing(spark):
         [(b, 0.0) for b in bad] + [(0.0, b) for b in bad] + [(5.0, 5.0), (179.9, 89.9)]
     )]
     points = spark.createDataFrame(rows, _POINTS)
-    out = point_in_polygon_join(points, polygons, point_cols=["point_id"], fixed_res=3)
+    out = point_in_polygon_join(points, polygons, point_cols=["point_id"], fixed_res=3, **phase)
     assert _pairs(out) == {(8, 1), (9, 1)}
+
+
+@st.composite
+def _snapped_stars(draw):
+    """A zoom level and star polygons (some with holes) whose vertices are
+    snapped to that level's tile centers: tile centers fall on vertices,
+    and on the axis-parallel and diagonal edges between them."""
+    z = draw(st.integers(2, 5))
+    n = 1 << z
+    polys = []
+    for _ in range(draw(st.integers(1, 3))):
+        k = draw(st.integers(3, 9))
+        t = np.sort(np.array(draw(st.lists(st.floats(0.0, 6.28), min_size=k, max_size=k, unique=True))))
+        rad = np.array(draw(st.lists(st.floats(0.3, 1.0), min_size=k, max_size=k)))
+        star = _star(
+            draw(st.floats(-150.0, 150.0)),
+            draw(st.floats(-70.0, 70.0)),
+            draw(st.sampled_from([5.0, 20.0, 60.0])),
+            t,
+            rad,
+            draw(st.booleans()),
+        )
+        snapped = []
+        for ring in star:
+            ix, iy = _tile_of(ring[:, 0], ring[:, 1], n)
+            snapped.append(np.column_stack(_center_of(ix, iy, n)))
+        polys.append(snapped)
+    return z, polys
+
+
+def _tile_of(lon, lat, n):
+    ix = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+    iy = np.clip(np.floor((90.0 - lat) / 180.0 * n), 0, n - 1).astype(np.int64)
+    return ix, iy
+
+
+def _center_of(ix, iy, n):
+    return (ix + 0.5) / n * 360.0 - 180.0, 90.0 - (iy + 0.5) / n * 180.0
+
+
+@settings(max_examples=80, deadline=None)
+@given(_snapped_stars())
+def test_tile_center_rule_matches_oracle(case):
+    """The center rule's tiles are exactly the grid tiles whose center the
+    reference ray-cast (:func:`points_in_rings`, over every tile center of
+    the grid) puts inside each polygon."""
+    z, polys = case
+    n = 1 << z
+    ix, iy = (a.ravel() for a in np.meshgrid(np.arange(n), np.arange(n), indexing="ij"))
+    cx, cy = _center_of(ix, iy, n)
+    want = set()
+    for j, rings in enumerate(polys):
+        inside = points_in_rings(cx, cy, rings)
+        want |= {(j + 1, int(x), int(y)) for x, y in zip(ix[inside], iy[inside])}
+    pdf = pd.DataFrame(
+        {"polygon_id": np.arange(len(polys)) + 1, "wkb": [multipolygon_wkb([p]) for p in polys]}
+    )
+    got = _tile_batch(pdf, z, "wkb", ["polygon_id"], center_rule=True)
+    assert (got["tile_z"] == z).all()
+    rows = list(zip(got["polygon_id"].tolist(), got["tile_x"].tolist(), got["tile_y"].tolist()))
+    assert len(rows) == len(set(rows)) and set(rows) == want
+
+
+def test_tiles_skip_null_and_empty_polygon_rows(spark):
+    """A polygon row with a null wkb or with no vertex gets no tile, with
+    and without the center rule; the good row keeps its tiles (z6: its
+    bbox spans tiles x 32-33, y 28-32, and the y=32 centers lie at
+    lat -1.40625, outside it)."""
+    polygons = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "polygon_id": [1, 2, 3],
+                "wkb": [
+                    multipolygon_wkb([_rect(0.0, 0.0, 10.0, 10.0)]),
+                    None,
+                    multipolygon_wkb([[np.empty((0, 2))]]),
+                ],
+            }
+        ),
+        _POLYS,
+    )
+    bbox = {(1, 6, x, y) for x in (32, 33) for y in range(28, 33)}
+    centers = {r for r in bbox if r[3] < 32}
+    for got, want in (
+        (polygon_tiles(polygons, 6), bbox),
+        (tile_polygon_assignment(polygons, 6, center_rule=False), bbox),
+        (tile_polygon_assignment(polygons, 6), centers),
+    ):
+        rows = [tuple(r) for r in got.collect()]
+        assert len(rows) == len(set(rows)) and set(rows) == want

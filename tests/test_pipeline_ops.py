@@ -2448,6 +2448,23 @@ def test_knn_join_excludes_null_coordinate_points(spark):
     assert got == want and len(got) == 3
 
 
+def test_knn_cells_excludes_null_coordinate_points(spark):
+    """knn_cells follows knn_join's null rule: a point with a null lon or
+    lat is nobody's neighbour and does not count towards k, on the ring
+    search (k=2) and on the brute-force fallback (k=4 > 3 points)."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_cells
+
+    pts = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 1.0, 1.0), (3, 2.0, 2.0), (4, None, None), (5, 3.0, None)],
+        "point_id long, lon double, lat double",
+    )
+    qs = spark.createDataFrame([(10, 0.1, 0.1)], "query_id long, q_lon double, q_lat double")
+    for k in (2, 4):
+        want = {tuple(r) for r in knn_bruteforce(pts.dropna(), qs, k=k).collect()}
+        got = {tuple(r) for r in knn_cells(pts, qs, k=k, res=4).collect()}
+        assert got == want and len(got) == min(k, 3)
+
+
 def test_knn_join_null_query_coordinates_raise(spark):
     """A query with a null q_lon or q_lat is an error naming the count,
     not a silently missing row."""
