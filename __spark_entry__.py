@@ -60,11 +60,9 @@ def _fixture_dir(kind: str) -> tuple:
     return _FIXTURE_DIRS[kind], fresh
 
 
-def _geopages(spark: SparkSession, sf_dir: str, split: bool = False) -> DataFrame:
-    """The engine path: documents → html pages → parsed (lon, lat).
-    ``split=True`` parallelizes the synth/parse over the one-row-group
-    fixture parquet (see ``_docs``) — heavy consumers only."""
-    return geotag_pages(pages_from_documents(spark, sf_dir, split=split))
+def _geopages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The engine path: documents → html pages → parsed (lon, lat)."""
+    return geotag_pages(pages_from_documents(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -324,8 +324,6 @@ def run(spark, args) -> dict:
 
     rates = _parse_rates(args.sample)
 
-    cache_bearers = []
-
     def stage_curated():
         survivors = flagged.filter(F.col("is_keeper") & F.col("is_clean"))
         if args.host_cap:
@@ -357,12 +355,6 @@ def run(spark, args) -> dict:
                 order_col="n_chars",
                 mega_strata_threshold="auto",
             )
-            # the two-phase path persists its sample-sorted frame; release
-            # it after run_stage materializes this stage's parquet via the
-            # operator-provided hook (dedup.release_sig_caches) — the
-            # loop-style-caller discipline that keeps caches from
-            # accumulating across repeated runs in one session
-            cache_bearers.append(survivors)
             survivors = survivors.drop("q_rank", "n_stratum")
         sampled = stratified_sample(
             survivors, rates, strata_col="lang", id_col="doc_id",
@@ -382,14 +374,12 @@ def run(spark, args) -> dict:
             # the training-sequence manifest over the curated corpus:
             # 'auto' routes a mega language stratum through the two-phase
             # exact prefix sum, same as the quality prune above
-            packed = seq_pack(
+            return seq_pack(
                 curated.select("doc_id", "lang", "bpe_tokens"),
                 capacity=args.pack_capacity,
                 tokens_col="bpe_tokens",
                 mega_strata_threshold="auto",
             )
-            cache_bearers.append(packed)
-            return packed
 
         pipe.run_stage("packed", stage_packed)
 
@@ -451,11 +441,6 @@ def run(spark, args) -> dict:
             return epoch_order(curated.select("doc_id"), seed=args.epoch_seed)
 
         pipe.run_stage(f"order-{args.epoch_seed}", stage_order)
-
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
-
-    for frame in cache_bearers:
-        release_sig_caches(frame)
 
     if args.sig_stage:
         # published artifacts, not inputs to this run's stages: the NEXT

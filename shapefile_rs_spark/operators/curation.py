@@ -296,19 +296,20 @@ def decontaminate_bloom(
     the bitset it probes.
 
     The benchmark gram set is scanned by both the build and the confirm
-    join — persist + the build's collect as the eager materializer (the
-    CLAUDE.md double-consumption rule); the result frame records the
-    cache under ``_sig_caches`` for :func:`..dedup.release_sig_caches`."""
+    join — a lazy ``localCheckpoint`` that the build's collect
+    materializes (the CLAUDE.md double-consumption rule).  Its blocks are
+    freed when the result frame becomes unreachable, so no caller
+    releases anything; a lost block fails the confirm join instead of
+    recomputing the grams."""
     if m_bits <= 0 or m_bits % 8:
-        # validate BEFORE the persist below: bloom_build would catch this
-        # too, but only after the gram cache exists — and the error path
-        # must not leak a persisted frame
+        # validate BEFORE the checkpoint below: bloom_build would catch
+        # this too, but only after the gram shuffle has run
         raise ValueError(f"m_bits {m_bits}: need a positive multiple of 8")
     bench_grams = (
         _exploded_distinct_shingles(benchmark, id_col, text_col, k)
         .select("_g")
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     bits = bloom_build(bench_grams, m_bits, n_hashes)
     doc_grams = _exploded_distinct_shingles(docs, id_col, text_col, k)
@@ -318,13 +319,11 @@ def decontaminate_bloom(
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
-    out = docs.select(id_col).join(counts, id_col, "left").select(
+    return docs.select(id_col).join(counts, id_col, "left").select(
         F.col(id_col),
         F.coalesce(F.col("n_overlap"), F.lit(0).cast("long")).alias("n_overlap"),
         (F.coalesce(F.col("n_overlap"), F.lit(0)) > 0).alias("contaminated"),
     )
-    out._sig_caches = [bench_grams]  # release hook: dedup.release_sig_caches
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -733,8 +732,7 @@ def _quality_prune_two_phase(
     already-collected per-stratum row counts.  Ranks are IntegerType on
     BOTH paths (Spark's row_number is int-typed), so a stratum beyond
     2³¹−1 rows is rejected loudly rather than wrapped.  The scan's id
-    contract (unique, non-null) and ``_sig_caches`` release hook carry
-    over to the result."""
+    contract (unique, non-null) carries over to the result."""
     if max(counts.values()) > 2**31 - 1:
         raise ValueError(
             "a stratum exceeds 2^31-1 rows: q_rank is IntegerType on both "
@@ -743,9 +741,7 @@ def _quality_prune_two_phase(
         )
     scanned = segmented_scan(df, strata_col, [F.col(order_col).desc_nulls_last()], id_col)
     ranked = scanned.withColumn("q_rank", (F.col(SCAN_COL) + 1).cast("int"))
-    out = _attach_counts_and_filter(ranked, df, frac, strata_col, counts)
-    out._sig_caches = scanned._sig_caches
-    return out
+    return _attach_counts_and_filter(ranked, df, frac, strata_col, counts)
 
 
 def quality_prune_sql(
@@ -838,10 +834,7 @@ def budget_sample(
         df, strata_col=strata_col, id_col=id_col, tokens_col=tokens_col,
         mega_strata_threshold=mega_strata_threshold,
     )
-    out = pref.filter(F.col("cum_before") < thr)
-    if hasattr(pref, "_sig_caches"):
-        out._sig_caches = pref._sig_caches  # release hook survives the filter
-    return out
+    return pref.filter(F.col("cum_before") < thr)
 
 
 def token_prefix(
@@ -859,7 +852,8 @@ def token_prefix(
     shuffle + running-sum window by default, or
     :func:`.scan.segmented_scan` weighted by ``tokens_col`` when any
     stratum exceeds ``mega_strata_threshold`` rows (its id contract then
-    applies).
+    applies, and the scan runs inside the call: the result reads its
+    checkpoint, which nobody releases).
 
     Negative token counts reject LOUDLY at evaluation time (a codegen
     raise_error guard rides the token projection on both paths): a
@@ -885,9 +879,7 @@ def token_prefix(
     key = F.md5(F.col(id_col).cast("string").cast("binary"))
     if route_mega_strata(df, strata_col, mega_strata_threshold)[1]:
         scanned = segmented_scan(df, strata_col, [key.asc()], id_col, tokens_col)
-        out = scanned.withColumnRenamed(SCAN_COL, "cum_before")
-        out._sig_caches = scanned._sig_caches
-        return out
+        return scanned.withColumnRenamed(SCAN_COL, "cum_before")
     w = (
         Window.partitionBy(strata_col)
         .orderBy(key.asc(), F.col(id_col).asc())
@@ -1221,7 +1213,7 @@ def seq_pack(
     cap = F.lit(int(capacity)).cast("long")
     toks = F.coalesce(F.col(tokens_col).cast("long"), F.lit(0).cast("long"))
     first = F.expr(f"cum_before div {int(capacity)}")
-    out = (
+    return (
         pref.filter(toks > 0)
         .withColumn("_last", F.expr(
             f"(cum_before + CAST(coalesce({tokens_col}, 0) AS BIGINT) - 1) "
@@ -1235,9 +1227,6 @@ def seq_pack(
         )
         .select(strata_col, id_col, "cum_before", "bin_id", "bin_tokens")
     )
-    if hasattr(pref, "_sig_caches"):
-        out._sig_caches = pref._sig_caches  # release hook survives the explode
-    return out
 
 
 def seq_pack_sql(
@@ -1565,9 +1554,7 @@ def epoch_order(
     _check_epoch_seed(seed)
     key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
     scanned = segmented_scan(docs.select(id_col), None, [key.desc()], id_col)
-    out = scanned.select(id_col, (F.col(SCAN_COL) + 1).alias("epoch_pos"))
-    out._sig_caches = scanned._sig_caches
-    return out
+    return scanned.select(id_col, (F.col(SCAN_COL) + 1).alias("epoch_pos"))
 
 
 _EPOCH_SEED_RE = re.compile(r"^[A-Za-z0-9_.-]+$")

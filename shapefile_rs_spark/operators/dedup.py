@@ -319,32 +319,18 @@ def minhash_band_rows(
     return _band_rows(sigs, bands, num_hashes // bands)
 
 
-def _persisted_sigs(
+def _materialized_sigs(
     docs: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
 ) -> DataFrame:
-    """:func:`minhash_signatures`, eagerly persisted — banding and pair
-    scoring both read it, and an unmaterialized cache races recompute
-    across those consumers (measured ~3×).  The cache releases when the
-    caller's result frames become unreachable (ContextCleaner), the
-    bench's gc.collect() discipline; loop-style callers (repeated
-    incremental batches in one session) should call
-    :func:`release_sig_caches` on each scored result once it is
-    materialized, or caches accumulate until the cleaner runs.
+    """:func:`minhash_signatures`, eagerly ``localCheckpoint``-ed in one
+    job — banding and pair scoring both read it, and recomputing the
+    signature scan per consumer costs ~3×.  A checkpoint, not a
+    ``persist()``: the result frames read it lazily, and its blocks are
+    freed when the last frame reading them becomes unreachable
+    (ContextCleaner), so no caller releases anything.  The trade-off:
+    a lost checkpoint block fails the job instead of recomputing.
     ONE spelling shared by the self-join and asymmetric LSH operators."""
-    sigs = minhash_signatures(docs, id_col, text_col, k, num_hashes).persist()
-    sigs.count()
-    return sigs
-
-
-def release_sig_caches(result: DataFrame) -> None:
-    """Unpersist the signature frames an LSH operator cached while
-    building ``result`` (recorded on the returned frame as
-    ``_sig_caches``).  Call AFTER materializing the result — the frames
-    back its plan, and unpersisting earlier forces a recompute.  No-op
-    for frames without caches (e.g. a committed-stage ``corpus_sigs``
-    path, which persists nothing)."""
-    for frame in getattr(result, "_sig_caches", ()):
-        frame.unpersist()
+    return minhash_signatures(docs, id_col, text_col, k, num_hashes).localCheckpoint(eager=True)
 
 
 def _cap_buckets(banded: DataFrame, bucket_cap: int | None, keys=("band", "band_key")) -> DataFrame:
@@ -416,7 +402,7 @@ def minhash_banded(
 ) -> DataFrame:
     """(_id, band, band_key): the band frame :func:`minhash_lsh_pairs`
     self-joins on, rebuilt standalone for bucket-population telemetry
-    (single consumer — no persist; the operator keeps its own persisted
+    (single consumer — no checkpoint; the operator checkpoints its own
     signature frame because banding AND scoring both read it).  Built on
     :func:`minhash_signatures` — the ONE signature spelling — so the
     audited buckets cannot drift from the joined (or committed) ones."""
@@ -481,7 +467,7 @@ def minhash_lsh_pairs(
     rows.
     """
     assert num_hashes % bands == 0
-    sigs = _persisted_sigs(docs, id_col, text_col, k, num_hashes)
+    sigs = _materialized_sigs(docs, id_col, text_col, k, num_hashes)
     banded = _cap_buckets(_band_rows(sigs, bands, num_hashes // bands), bucket_cap)
     left = banded.select("band", "band_key", F.col("_id").alias("id_a"))
     right = banded.select("band", "band_key", F.col("_id").alias("id_b"))
@@ -491,9 +477,7 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    out = _score_pairs(pairs, sigs, sigs, "id_a", "id_b", num_hashes)
-    out._sig_caches = [sigs]  # release hook: see release_sig_caches
-    return out
+    return _score_pairs(pairs, sigs, sigs, "id_a", "id_b", num_hashes)
 
 
 # ---------------------------------------------------------------------------
@@ -1349,7 +1333,7 @@ def minhash_lsh_join(
     boilerplate bucket would fan out B ways); the new side is assumed
     batch-sized and is not capped.
 
-    Plan shape: two map-only signature scans (each persisted once —
+    Plan shape: two map-only signature scans (each checkpointed once —
     banding and scoring both read them), one shuffle on (band, band_key)
     for the asymmetric join, distinct pair set, then the signature
     re-join to score.
@@ -1374,17 +1358,15 @@ def minhash_lsh_join(
             "corpus_bands= requires corpus_sigs= (pair scoring reads the "
             "signature stage; the band stage only feeds the bucket join)"
         )
-    sigs_new = _persisted_sigs(new_docs, id_col, text_col, k, num_hashes)
+    sigs_new = _materialized_sigs(new_docs, id_col, text_col, k, num_hashes)
     if corpus_sigs is not None:
         # committed-stage fast path: consumers (banding + scoring) each
         # scan the signature parquet — two cheap columnar reads, no
-        # persist to manage, and the corpus text is structurally
+        # checkpoint job, and the corpus text is structurally
         # unreachable from this plan
         sigs_old = corpus_sigs.select("_id", "_sig")
-        caches = [sigs_new]
     else:
-        sigs_old = _persisted_sigs(corpus, id_col, text_col, k, num_hashes)
-        caches = [sigs_new, sigs_old]
+        sigs_old = _materialized_sigs(corpus, id_col, text_col, k, num_hashes)
     banded_new = _band_rows(sigs_new, bands, rpb)
     if corpus_bands is not None:
         banded_old = _cap_buckets(
@@ -1402,9 +1384,7 @@ def minhash_lsh_join(
         .select("new_id", "corpus_id")
         .distinct()
     )
-    out = _score_pairs(pairs, sigs_new, sigs_old, "new_id", "corpus_id", num_hashes)
-    out._sig_caches = caches  # release hook: see release_sig_caches
-    return out
+    return _score_pairs(pairs, sigs_new, sigs_old, "new_id", "corpus_id", num_hashes)
 
 
 # ---------------------------------------------------------------------------

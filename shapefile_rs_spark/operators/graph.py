@@ -164,7 +164,7 @@ def domain_rank(
     # rank_collect_max: collect the control frame and rebuild ranked rows
     # via a VALUES literal (fewer jobs than any distributed spelling at
     # control size).  Bigger: segmented_scan over one global stratum,
-    # rank = running count + 1, checkpointed so its cache is released here.
+    # rank = running count + 1 (the scan returns a checkpointed frame).
     spark = edges.sparkSession
     if n_hosts <= rank_collect_max:
         rows = score.collect()
@@ -179,15 +179,10 @@ def domain_rank(
             ["host", "score", "rank"],
             casts=["long", "long", "int"],
         )
-    from .dedup import release_sig_caches
     from .scan import SCAN_COL, segmented_scan
 
     scanned = segmented_scan(score, None, [F.col("score").desc()], "host")
-    out = scanned.select(
-        "host", "score", (F.col(SCAN_COL) + 1).cast("int").alias("rank")
-    ).localCheckpoint(eager=True)
-    release_sig_caches(scanned)
-    return out
+    return scanned.select("host", "score", (F.col(SCAN_COL) + 1).cast("int").alias("rank"))
 
 
 def domain_rank_sql(

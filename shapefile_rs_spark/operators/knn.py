@@ -18,6 +18,7 @@ the cell metric (FIXTURES.md §4).
 
 from __future__ import annotations
 
+import math
 
 import numpy as np
 import pandas as pd
@@ -132,8 +133,11 @@ def knn_cells(
     bloat the plan.  The returned frame is rebuilt from the collected rows
     via a VALUES literal — result size is k·n_queries by contract.
 
-    A point whose lon or lat is null is excluded, as in :func:`knn_join`:
-    it is nobody's neighbour and does not count towards k.
+    Non-finite coordinates follow :func:`knn_join`'s rule: a point whose
+    lon or lat is null, NaN or ±inf is nobody's neighbour and does not
+    count towards k; a query whose q_lon or q_lat is one raises
+    ``ValueError`` naming how many there are (counted from the collected
+    query rows, no extra job).
     """
     spark = points.sparkSession
     n_side = 1 << res
@@ -151,11 +155,18 @@ def knn_cells(
     )
     if not q_rows:
         return spark.createDataFrame([], out_schema)
+    bad_q = sum(
+        not all(v is not None and math.isfinite(v) for v in r[1:]) for r in q_rows
+    )
+    if bad_q:
+        raise ValueError(
+            f"knn_cells: {bad_q} query rows have a null or non-finite {q_lon} or {q_lat}"
+        )
 
-    cached = C.with_cell_ids(points, lon_col, lat_col, {"_pcell": res}).persist()
+    cached = _finite_cells(points, lon_col, lat_col, "_pcell", res).persist()
     # filtered above the cache: below it, Catalyst would push the filter
     # into the points' own projection and evaluate lon/lat twice
-    pts = cached.where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull())
+    pts = cached.where(F.col("_pcell").isNotNull())
 
     # --- job 1: coarse occupancy histogram (also warms the cell index) ---
     hist = (
@@ -281,13 +292,18 @@ def knn_cells(
     )
 
 
-def _null_safe_cells(df: DataFrame, lon: str, lat: str, name: str, res: int) -> DataFrame:
-    """``df`` plus its res-``res`` cell id as column ``name``, null where
-    ``lon`` or ``lat`` is null (:func:`cells.with_cell_ids` alone puts such
-    a row in an edge cell)."""
+def _finite_cells(df: DataFrame, lon: str, lat: str, name: str, res: int) -> DataFrame:
+    """``df`` plus its res-``res`` cell id as column ``name``; a row whose
+    ``lon`` or ``lat`` is null, NaN or ±inf gets null in both coordinates
+    and in ``name`` (:func:`cells.with_cell_ids` alone puts a null or NaN
+    in an edge cell and overflows its cast on ±inf).  The kNN operators'
+    one rule: such a point is nobody's neighbour, such a query an error."""
     q = C.quote_ident
+    # Spark orders NaN above +inf, so this is false for NaN and ±inf
+    finite = f"abs({q(lon)}) < double('inf') AND abs({q(lat)}) < double('inf')"
+    df = df.withColumns({c: F.expr(f"CASE WHEN {finite} THEN {q(c)} END") for c in (lon, lat)})
     return C.with_cell_ids(df, lon, lat, {name: res}).withColumn(
-        name, F.expr(f"CASE WHEN {q(lon)} IS NULL OR {q(lat)} IS NULL THEN NULL ELSE {q(name)} END")
+        name, F.expr(f"CASE WHEN {q(lon)} IS NOT NULL THEN {q(name)} END")
     )
 
 
@@ -337,11 +353,11 @@ def knn_join(
     Output: (query_id, point_id, dist2, rank).  The only non-DataFrame
     state is the ≤4^res histogram — everything else shuffles on cell keys.
 
-    Null coordinates: a point whose lon or lat is null is excluded (it is
-    nobody's neighbour and does not count towards k); a query whose
-    q_lon or q_lat is null raises ``ValueError`` naming how many there
-    are.  Both counts come from the pass-0 aggregation, so they cost no
-    extra job.
+    Non-finite coordinates: a point whose lon or lat is null, NaN or ±inf
+    is excluded (it is nobody's neighbour and does not count towards k);
+    a query whose q_lon or q_lat is one raises ``ValueError`` naming how
+    many there are.  Both counts come from the pass-0 aggregation, so
+    they cost no extra job.
     """
     if res > 8:
         raise ValueError("knn_join histogram is exact up to res 8 (4^res cells)")
@@ -349,10 +365,10 @@ def knn_join(
     n_side = 1 << res
     min_dim = min(360.0 / n_side, 180.0 / n_side)
 
-    pts = _null_safe_cells(
+    pts = _finite_cells(
         points.select(point_id, lon_col, lat_col), lon_col, lat_col, "_pcell", res
     ).persist()
-    qx = _null_safe_cells(
+    qx = _finite_cells(
         queries.select(query_id, q_lon, q_lat), q_lon, q_lat, "_qcell", res
     ).persist()
 
@@ -368,11 +384,13 @@ def knn_join(
         .count()
         .collect()
     )
-    null_q = sum(r["count"] for r in both if r["_c"] is None and r["_side"] == 0)
-    if null_q:
+    bad_q = sum(r["count"] for r in both if r["_c"] is None and r["_side"] == 0)
+    if bad_q:
         pts.unpersist()
         qx.unpersist()
-        raise ValueError(f"knn_join: {null_q} query rows have a null {q_lon} or {q_lat}")
+        raise ValueError(
+            f"knn_join: {bad_q} query rows have a null or non-finite {q_lon} or {q_lat}"
+        )
     hist = [r for r in both if r["_side"] == 1 and r["_c"] is not None]
     grid = np.zeros((n_side, n_side), dtype=np.int64)
     _, hix, hiy = C.decode_cell(np.array([r["_c"] for r in hist], dtype=np.int64))

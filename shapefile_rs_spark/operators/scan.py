@@ -90,21 +90,26 @@ def segmented_scan(
        the id.  Payload columns never enter pandas (a nullable int64 above
        2^53 would corrupt through float64).
 
-    Why ``persist()`` is enough (no ``localCheckpoint``): the offsets from
-    step 2 must describe the partitions step 3 reads.  A lost cached block
-    recomputes through the same range exchange — its split points were
-    sampled once, when the exchange was first executed — and is re-sorted
-    on a key the unique id makes total, so every partition comes back with
-    the same rows in the same order even when the input's own row order
-    came out of a shuffle (pinned by a test that drops every cached block
-    between pricing and scan).  A checkpoint would also hide the range
-    exchange from the plan.
+    Why ``persist()`` is enough (no ``localCheckpoint`` of ``ordered``): the
+    offsets from step 2 must describe the partitions step 3 reads.  A
+    lost cached block recomputes through the same range exchange — its
+    split points were sampled once, when the exchange was first executed
+    — and is re-sorted on a key the unique id makes total, so every
+    partition comes back with the same rows in the same order even when
+    the input's own row order came out of a shuffle (pinned by a test
+    that drops every cached block between pricing and scan).
+
+    The scan owns that cache: it materializes the result with
+    ``localCheckpoint(eager=True)`` (one job) and unpersists ``ordered``
+    before returning, on every exit path.  The returned frame reads only
+    the checkpoint, which is freed when it becomes unreachable, so no
+    caller releases anything — and none can release the cache early and
+    re-sample the range bounds under the priced offsets.  The trade-off:
+    a lost checkpoint block fails the reading job instead of recomputing.
 
     Contracts: ``id_col`` must be unique and non-null — the values join
     back on it, so a null id would be dropped and a duplicate fanned out;
-    both raise ``ValueError`` here, releasing the cache.  The result
-    records the cache under ``_sig_caches``; release it with
-    :func:`.dedup.release_sig_caches` after materializing."""
+    both raise ``ValueError`` here."""
     import numpy as np
     import pandas as pd
     from pyspark import TaskContext
@@ -116,63 +121,64 @@ def segmented_scan(
     if strata_col is not None:
         sort_keys.insert(0, F.col(strata_col).asc())
     ordered = df.repartitionByRange(par, *sort_keys).sortWithinPartitions(*sort_keys).persist()
-    # ONE action is both the eager materializer and the id check (a
-    # separate count() would be a second full scan)
-    chk = ordered.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.count(id_col).alias("_nn"),
-        F.count_distinct(id_col).alias("_nd"),
-    ).collect()[0]
-    if chk["_nn"] != chk["_n"] or chk["_nd"] != chk["_n"]:
-        ordered.unpersist()
-        if chk["_nn"] != chk["_n"]:
+    try:
+        # ONE action is both the eager materializer and the id check (a
+        # separate count() would be a second full scan)
+        chk = ordered.agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.count(id_col).alias("_nn"),
+            F.count_distinct(id_col).alias("_nd"),
+        ).collect()[0]
+        if chk["_nn"] != chk["_n"] or chk["_nd"] != chk["_n"]:
+            if chk["_nn"] != chk["_n"]:
+                raise ValueError(
+                    f"{id_col} has {chk['_n'] - chk['_nn']} null(s): the two-phase "
+                    "scan joins back on the id, which must be non-null"
+                )
             raise ValueError(
-                f"{id_col} has {chk['_n'] - chk['_nn']} null(s): the two-phase "
-                "scan joins back on the id, which must be non-null"
+                f"{id_col} has duplicates ({chk['_nd']} distinct of {chk['_n']}): "
+                "the two-phase scan joins back on the id, which must be unique"
             )
-        raise ValueError(
-            f"{id_col} has duplicates ({chk['_nd']} distinct of {chk['_n']}): "
-            "the two-phase scan joins back on the id, which must be unique"
+        stratum = F.lit(0) if strata_col is None else F.col(strata_col)
+        weight = (
+            F.lit(1) if weight_col is None else F.coalesce(F.col(weight_col).cast("long"), F.lit(0))
+        ).cast("long")
+        slim = ordered.select(id_col, stratum.alias("_s"), weight.alias("_w"))
+        offsets: dict = {}
+        running: dict = {}
+        for r in sorted(
+            slim.groupBy(F.spark_partition_id().alias("_pid"), "_s")
+            .agg(F.sum("_w").alias("_t"))
+            .collect(),
+            key=lambda r: r["_pid"],
+        ):
+            offsets[(r["_pid"], r["_s"])] = running.get(r["_s"], 0)
+            running[r["_s"]] = running.get(r["_s"], 0) + r["_t"]
+
+        def scan(batches):
+            pid = TaskContext.get().partitionId()
+            carried: dict = {}
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                w = pdf["_w"].to_numpy(np.int64)
+                codes, uniques = pd.factorize(pdf["_s"], use_na_sentinel=False)
+                keys = [None if pd.isna(u) else u for u in uniques]
+                base = np.asarray(
+                    [offsets.get((pid, s), 0) + carried.get(s, 0) for s in keys],
+                    dtype=np.int64,
+                )
+                incl = pd.Series(w).groupby(codes, sort=False).cumsum().to_numpy()
+                sums = np.zeros(len(keys), dtype=np.int64)
+                np.add.at(sums, codes, w)
+                for s, t in zip(keys, sums):
+                    carried[s] = carried.get(s, 0) + int(t)
+                yield pd.DataFrame({id_col: pdf[id_col], SCAN_COL: base[codes] + incl - w})
+
+        schema = StructType([ordered.schema[id_col], StructField(SCAN_COL, LongType(), False)])
+        out = ordered.join(slim.mapInPandas(scan, schema=schema), id_col, "inner").select(
+            *df.columns, SCAN_COL
         )
-    stratum = F.lit(0) if strata_col is None else F.col(strata_col)
-    weight = (
-        F.lit(1) if weight_col is None else F.coalesce(F.col(weight_col).cast("long"), F.lit(0))
-    ).cast("long")
-    slim = ordered.select(id_col, stratum.alias("_s"), weight.alias("_w"))
-    offsets: dict = {}
-    running: dict = {}
-    for r in sorted(
-        slim.groupBy(F.spark_partition_id().alias("_pid"), "_s")
-        .agg(F.sum("_w").alias("_t"))
-        .collect(),
-        key=lambda r: r["_pid"],
-    ):
-        offsets[(r["_pid"], r["_s"])] = running.get(r["_s"], 0)
-        running[r["_s"]] = running.get(r["_s"], 0) + r["_t"]
-
-    def scan(batches):
-        pid = TaskContext.get().partitionId()
-        carried: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            w = pdf["_w"].to_numpy(np.int64)
-            codes, uniques = pd.factorize(pdf["_s"], use_na_sentinel=False)
-            keys = [None if pd.isna(u) else u for u in uniques]
-            base = np.asarray(
-                [offsets.get((pid, s), 0) + carried.get(s, 0) for s in keys],
-                dtype=np.int64,
-            )
-            incl = pd.Series(w).groupby(codes, sort=False).cumsum().to_numpy()
-            sums = np.zeros(len(keys), dtype=np.int64)
-            np.add.at(sums, codes, w)
-            for s, t in zip(keys, sums):
-                carried[s] = carried.get(s, 0) + int(t)
-            yield pd.DataFrame({id_col: pdf[id_col], SCAN_COL: base[codes] + incl - w})
-
-    schema = StructType([ordered.schema[id_col], StructField(SCAN_COL, LongType(), False)])
-    out = ordered.join(slim.mapInPandas(scan, schema=schema), id_col, "inner").select(
-        *df.columns, SCAN_COL
-    )
-    out._sig_caches = [ordered]  # release hook: dedup.release_sig_caches
-    return out
+        return out.localCheckpoint(eager=True)
+    finally:
+        ordered.unpersist()

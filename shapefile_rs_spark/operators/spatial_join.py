@@ -451,10 +451,13 @@ def point_in_polygon_join(
     The shuffle phase (``broadcast_polygons=False``, or more rows than
     ``small_poly_threshold``) joins :func:`with_cells` points to the
     :func:`polygon_covering` on (cell_res, cell_id) and refines with
-    :func:`pip_refine_full`.  ``salt_factor>0`` activates explicit
-    hot-cell salting there: point rows in hot cells get
-    ``pmod(hash, salt_factor)`` appended to the key; covering rows for hot
-    cells are replicated across all salts.
+    :func:`pip_refine_full`.  The covering is a lazy ``localCheckpoint``
+    (the resolution probe and the join both read it): its blocks are
+    freed when the returned frame becomes unreachable, and a lost block
+    fails the join instead of recomputing.  ``salt_factor>0`` activates
+    explicit hot-cell salting there: point rows in hot cells get
+    ``pmod(hash, salt_factor)`` appended to the key; covering rows for
+    hot cells are replicated across all salts.
 
     A polygon row whose ``wkb_col`` is null (``read_shapefiles(...,
     on_invalid="null")``, strip/fan multipatch) contains no point: it gets
@@ -522,7 +525,7 @@ def point_in_polygon_join(
         max_cover_cells=max_cover_cells,
         max_res=max_res,
         fixed_res=fixed_res,
-    ).persist()
+    ).localCheckpoint(eager=False)
     if fixed_res is not None:
         res_levels = [fixed_res]
     else:

@@ -109,17 +109,10 @@ def _url_expr(doc_id: Column) -> Column:
     )
 
 
-def pages_from_documents(spark: SparkSession, sf_dir: str, split: bool = False) -> DataFrame:
+def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → the canonical page table (input_hint schema).
-    Single narrow select — no shuffle, no Python.  ``split=True``
-    re-splits the one-row-group fixture parquet to the session's
-    parallelism BEFORE the synth/parse projection (the ``_docs(split=)``
-    local twin of format-level row-group splitting) — only heavy
-    consumers opt in; a blanket re-split measurably regresses light
-    queries."""
+    Single narrow select — no shuffle, no Python."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if split:
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
     lon_sql, lat_sql = lonlat_sql("doc_id")
     return docs.select(
         _url_expr(F.col("doc_id")).alias("url"),

@@ -33,3 +33,31 @@ def join_fixture_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("joinfx")
     write_join_fixture(str(d))
     return str(d)
+
+
+@pytest.fixture
+def executed_plans(spark):
+    """``executed_plans(call)`` → ``(call(), plans)``: the result of
+    ``call`` and the physical plan of every SQL execution it ran, read
+    from Spark's SQL status store — one string per execution joining its
+    plan-graph node descriptions (which include the plans cached frames
+    were built from).  An operator that materializes its intermediates
+    returns a frame whose own plan no longer shows how they were
+    computed."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def execution_ids():
+        sc.listenerBus().waitUntilEmpty()
+        return {e.executionId() for e in conv.asJava(store.executionsList())}
+
+    def run(call):
+        before = execution_ids()
+        out = call()
+        return out, [
+            "\n".join(n.desc() for n in conv.asJava(store.planGraph(i).allNodes()))
+            for i in sorted(execution_ids() - before)
+        ]
+
+    return run

@@ -1,4 +1,5 @@
-"""Checkpoint/lineage/resume tests: kill-and-resume, no recompute, deltas."""
+"""Checkpoint/lineage/resume tests: kill-and-resume, no recompute, deltas,
+and the operators' ownership of their own caches."""
 
 import json
 import os
@@ -204,7 +205,6 @@ def test_incr_neardup_reads_committed_sig_stage_without_corpus(spark, sf_dir, tm
     from shapefile_rs_spark.operators.dedup import (
         minhash_lsh_join,
         minhash_signatures,
-        release_sig_caches,
     )
 
     docs = (
@@ -234,8 +234,6 @@ def test_incr_neardup_reads_committed_sig_stage_without_corpus(spark, sf_dir, tm
     got = sorted(tuple(r) for r in staged.collect())
     want = sorted(tuple(r) for r in direct.collect())
     assert got == want and len(got) > 0
-    release_sig_caches(staged)
-    release_sig_caches(direct)
     # exactly one of corpus/corpus_sigs: both or neither is a usage bug
     with pytest.raises(ValueError):
         minhash_lsh_join(new, docs, corpus_sigs=sigs)
@@ -258,7 +256,6 @@ def test_incr_neardup_committed_band_stage_skips_rebanding(spark, sf_dir, tmp_pa
         minhash_band_rows,
         minhash_lsh_join,
         minhash_signatures,
-        release_sig_caches,
     )
 
     docs = (
@@ -300,8 +297,83 @@ def test_incr_neardup_committed_band_stage_skips_rebanding(spark, sf_dir, tmp_pa
     # and the pre-banded parquet actually reaches the executors
     phys = staged._jdf.queryExecution().executedPlan().toString()
     assert "band_key" in phys and phys.count("FileScan parquet [_id") >= 2
-    release_sig_caches(staged)
-    release_sig_caches(rebanded)
+
+
+def _cache_owner_call(name, spark, sf_dir):
+    """The operator call ``name`` over small sf_dir inputs."""
+    from shapefile_rs_spark import demo
+    from shapefile_rs_spark.operators import curation, dedup, graph
+    from shapefile_rs_spark.operators.spatial_join import point_in_polygon_join
+    from shapefile_rs_spark.pages import geotag_pages, pages_from_documents
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    text = docs.select("doc_id", "text").filter(F.col("doc_id") < 200)
+    new = text.filter(F.col("doc_id") % 5 == 0).select(
+        (F.col("doc_id") + 10**6).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" sfx")).alias("text"),
+    )
+    tokens = docs.select("doc_id", "lang", F.col("n_chars").alias("n_tokens"))
+    pages = geotag_pages(pages_from_documents(spark, sf_dir)).select("doc_id", "lon", "lat")
+    polygons = demo.oracle_polygons_df(spark)
+    pip = dict(point_cols=["doc_id"], polygon_cols=["polygon_id"], broadcast_polygons=False)
+    return {
+        "pip_join_shuffle": lambda: point_in_polygon_join(pages, polygons, **pip),
+        "pip_join_salted": lambda: point_in_polygon_join(
+            pages, polygons, salt_factor=4, hot_cell_threshold=1, **pip
+        ),
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(text.unionByName(new)),
+        "minhash_lsh_join": lambda: dedup.minhash_lsh_join(new, text),
+        "minhash_lsh_join_corpus_sigs": lambda: dedup.minhash_lsh_join(
+            new, corpus_sigs=dedup.minhash_signatures(text)
+        ),
+        "decontaminate_bloom": lambda: curation.decontaminate_bloom(
+            text, text.filter(F.col("doc_id") % 7 == 0), k=3
+        ),
+        "quality_prune": lambda: curation.quality_prune(
+            docs.select("doc_id", "lang", F.col("n_chars").alias("quality")),
+            0.3,
+            mega_strata_threshold=1,
+        ),
+        "budget_sample": lambda: curation.budget_sample(tokens, 10**6, mega_strata_threshold=1),
+        "seq_pack": lambda: curation.seq_pack(tokens, 64, mega_strata_threshold=1),
+        "epoch_order": lambda: curation.epoch_order(docs),
+        "domain_rank": lambda: graph.domain_rank(
+            docs.select(
+                (F.col("doc_id") % 64).alias("src"),
+                (F.expr("doc_id * doc_id DIV 64") % 64).alias("dst"),
+            ).distinct(),
+            iterations=3,
+            rank_collect_max=0,
+        ),
+    }[name]()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "minhash_lsh_pairs",
+        "minhash_lsh_join",
+        "minhash_lsh_join_corpus_sigs",
+        "decontaminate_bloom",
+        "pip_join_shuffle",
+        "pip_join_salted",
+        "quality_prune",
+        "budget_sample",
+        "seq_pack",
+        "epoch_order",
+        "domain_rank",
+    ],
+)
+def test_operator_result_reads_no_persisted_cache(spark, sf_dir, name):
+    """No operator returns a frame whose plan reads a ``persist()`` cache:
+    after the result is materialized, Spark's CacheManager holds no more
+    entries than before the call, so no caller ever releases anything."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    out = _cache_owner_call(name, spark, sf_dir)
+    assert out.collect()
+    assert cache.numCachedEntries() == before
+    assert "InMemoryTableScan" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_multi_stage_pipeline_resume_midway(spark, tmp_path):

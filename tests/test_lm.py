@@ -438,7 +438,6 @@ def test_scan_empty_frame_keeps_schema(spark, sf_dir, path):
     from pyspark.sql.types import LongType
 
     from shapefile_rs_spark.operators.curation import epoch_order
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
     from shapefile_rs_spark.operators.scan import SCAN_COL, segmented_scan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
@@ -456,7 +455,6 @@ def test_scan_empty_frame_keeps_schema(spark, sf_dir, path):
     assert out.columns == cols
     assert isinstance(out.schema[value_col].dataType, LongType)
     assert out.collect() == []
-    release_sig_caches(out)
 
 
 def test_curation_funnel_monotone(spark, sf_dir):

@@ -183,7 +183,9 @@ def test_curation_job_commits_packed_stage(spark, sf_dir, tmp_path):
     assert "packed" in res2["resumed_stages"]
 
 
-def test_curation_job_quality_prune_two_phase_default(spark, sf_dir, tmp_path, monkeypatch):
+def test_curation_job_quality_prune_two_phase_default(
+    spark, sf_dir, tmp_path, monkeypatch, executed_plans
+):
     """The checkpointed pipeline — not just the quality_prune2 query —
     takes the scale-safe two-phase rank by DEFAULT (VERDICT r5 item 3):
     --quality-frac 0.9 with mega_strata_threshold='auto' must route the
@@ -199,9 +201,10 @@ def test_curation_job_quality_prune_two_phase_default(spark, sf_dir, tmp_path, m
     orig = cur._quality_prune_two_phase
 
     def spy(df, frac, strata_col, id_col, order_col, counts):
-        out = orig(df, frac, strata_col, id_col, order_col, counts)
+        # the rank is computed inside the call: read the plans it executed
+        out, plans = executed_plans(lambda: orig(df, frac, strata_col, id_col, order_col, counts))
         seen["n"] = seen.get("n", 0) + 1
-        seen["plan"] = out._jdf.queryExecution().executedPlan().toString()
+        seen["plan"] = "\n".join(plans)
         return out
 
     monkeypatch.setattr(cur, "_quality_prune_two_phase", spy)

@@ -1657,7 +1657,6 @@ def test_decontaminate_bloom_equals_exact_even_saturated(spark):
         decontaminate,
         decontaminate_bloom,
     )
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
 
     docs, bench = _decon_tiny(spark)
     exact = {tuple(r) for r in decontaminate(docs, bench, k=3).collect()}
@@ -1665,7 +1664,6 @@ def test_decontaminate_bloom_equals_exact_even_saturated(spark):
     for m in (64, 1 << 16):
         out = decontaminate_bloom(docs, bench, k=3, m_bits=m)
         got = {tuple(r) for r in out.collect()}
-        release_sig_caches(out)
         assert got == exact, f"m_bits={m}"
     with pytest.raises(ValueError):
         decontaminate_bloom(docs, bench, k=3, m_bits=100)
@@ -1685,14 +1683,12 @@ def _budget_frame(spark):
 
 def test_budget_sample_two_phase_matches_window(spark):
     from shapefile_rs_spark.operators.curation import budget_sample
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
 
     frame = _budget_frame(spark)
     for budget in (0, 1, 37, 150, 10**6):
         window = {tuple(r) for r in budget_sample(frame, budget).collect()}
         two = budget_sample(frame, budget, mega_strata_threshold=1)
         got = {tuple(r) for r in two.collect()}
-        release_sig_caches(two)
         assert got == window, f"budget={budget}"
     # threshold above every stratum stays on the window plan — same rows
     big = {
@@ -1702,7 +1698,6 @@ def test_budget_sample_two_phase_matches_window(spark):
     assert big == {tuple(r) for r in budget_sample(frame, 37).collect()}
     auto = budget_sample(frame, 37, mega_strata_threshold="auto")
     got = {tuple(r) for r in auto.collect()}
-    release_sig_caches(auto)
     assert got == big
 
 
@@ -1874,14 +1869,12 @@ def test_seq_pack_invariants(spark):
 
 def test_seq_pack_two_phase_matches_window(spark):
     from shapefile_rs_spark.operators.curation import seq_pack
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
 
     frame = _budget_frame(spark)
     for cap in (1, 16, 10**6):
         window = {tuple(r) for r in seq_pack(frame, cap).collect()}
         two = seq_pack(frame, cap, mega_strata_threshold=1)
         got = {tuple(r) for r in two.collect()}
-        release_sig_caches(two)
         assert got == window, f"capacity={cap}"
 
 
@@ -2432,54 +2425,62 @@ def test_knn_join_massive_ties_and_string_ids(spark):
     assert got_s == want_s and len(got_s) == 120
 
 
-def test_knn_join_excludes_null_coordinate_points(spark):
-    """A point with a null lon or lat is nobody's neighbour and does not
-    count towards k: the query still gets every non-null point, exactly
-    as brute force over the non-null points ranks them."""
-    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_join
-
-    pts = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 1.0, 1.0), (3, 2.0, 2.0), (4, None, None), (5, 3.0, None)],
+def _knn_points_with_non_finite(spark):
+    """Three finite points (ids 1-3), then null, NaN and ±inf coordinates."""
+    inf, nan = float("inf"), float("nan")
+    return spark.createDataFrame(
+        [
+            (1, 0.0, 0.0), (2, 1.0, 1.0), (3, 2.0, 2.0), (4, None, None), (5, 3.0, None),
+            (6, nan, 0.0), (7, 0.5, nan), (8, inf, 1.0), (9, 1.0, -inf),
+        ],
         "point_id long, lon double, lat double",
     )
+
+
+def test_knn_join_excludes_null_coordinate_points(spark):
+    """A point with a null, NaN or ±inf lon or lat is nobody's neighbour
+    and does not count towards k: the query still gets every finite
+    point, exactly as brute force over the finite points ranks them."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_join
+
+    pts = _knn_points_with_non_finite(spark)
     qs = spark.createDataFrame([(10, 0.1, 0.1)], "query_id long, q_lon double, q_lat double")
-    want = {tuple(r) for r in knn_bruteforce(pts.dropna(), qs, k=4).collect()}
+    want = {tuple(r) for r in knn_bruteforce(pts.where("point_id <= 3"), qs, k=4).collect()}
     got = {tuple(r) for r in knn_join(pts, qs, k=4, res=4).collect()}
     assert got == want and len(got) == 3
 
 
 def test_knn_cells_excludes_null_coordinate_points(spark):
-    """knn_cells follows knn_join's null rule: a point with a null lon or
-    lat is nobody's neighbour and does not count towards k, on the ring
-    search (k=2) and on the brute-force fallback (k=4 > 3 points)."""
+    """knn_cells follows knn_join's rule: a point with a null, NaN or ±inf
+    lon or lat is nobody's neighbour and does not count towards k, on the
+    ring search (k=2) and on the brute-force fallback (k=4 > 3 points)."""
     from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_cells
 
-    pts = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 1.0, 1.0), (3, 2.0, 2.0), (4, None, None), (5, 3.0, None)],
-        "point_id long, lon double, lat double",
-    )
+    pts = _knn_points_with_non_finite(spark)
     qs = spark.createDataFrame([(10, 0.1, 0.1)], "query_id long, q_lon double, q_lat double")
     for k in (2, 4):
-        want = {tuple(r) for r in knn_bruteforce(pts.dropna(), qs, k=k).collect()}
+        want = {tuple(r) for r in knn_bruteforce(pts.where("point_id <= 3"), qs, k=k).collect()}
         got = {tuple(r) for r in knn_cells(pts, qs, k=k, res=4).collect()}
         assert got == want and len(got) == min(k, 3)
 
 
 def test_knn_join_null_query_coordinates_raise(spark):
-    """A query with a null q_lon or q_lat is an error naming the count,
-    not a silently missing row."""
-    from shapefile_rs_spark.operators.knn import knn_join
+    """A query with a null, NaN or ±inf q_lon or q_lat is an error naming
+    the count, not a silently missing row or a cast overflow — in both
+    kNN operators."""
+    from shapefile_rs_spark.operators.knn import knn_cells, knn_join
 
-    pts = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 1.0, 1.0), (3, 2.0, 2.0), (4, None, None)],
-        "point_id long, lon double, lat double",
-    )
+    pts = _knn_points_with_non_finite(spark)
+    inf, nan = float("inf"), float("nan")
     qs = spark.createDataFrame(
-        [(10, 0.1, 0.1), (11, None, None), (12, 5.0, None)],
+        [(10, 0.1, 0.1), (11, None, None), (12, 5.0, None), (13, nan, 0.0), (14, inf, 0.0),
+         (15, 0.0, -inf)],
         "query_id long, q_lon double, q_lat double",
     )
-    with pytest.raises(ValueError, match="2 query rows have a null q_lon or q_lat"):
-        knn_join(pts, qs, k=2, res=4)
+    msg = "5 query rows have a null or non-finite q_lon or q_lat"
+    for op in (knn_join, knn_cells):
+        with pytest.raises(ValueError, match=msg):
+            op(pts, qs, k=2, res=4)
     # both cell-indexed sides were released before the raise
     cached = [r.name() or "" for r in spark.sparkContext._jsc.getPersistentRDDs().values()]
     assert not [n for n in cached if "_pcell" in n or "_qcell" in n]

@@ -268,7 +268,7 @@ def test_simhash_pairs_joins_checkpointed_banded_frame(spark, sf_dir):
     assert "ExistingRDD" in plan
 
 
-def test_quality_prune_two_phase_broadcasts_counts(spark, sf_dir):
+def test_quality_prune_two_phase_broadcasts_counts(spark, sf_dir, executed_plans):
     """The mega-strata path must attach n_stratum via a BROADCAST join of
     the tiny per-stratum count table (no count window, whose exchange
     would serialize each stratum through one partition) and rank over a
@@ -278,11 +278,11 @@ def test_quality_prune_two_phase_broadcasts_counts(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", F.col("n_chars").alias("quality")
     )
-    plan = _plan(quality_prune(docs, 0.3, mega_strata_threshold=1))
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange rangepartitioning" in plan
-    # no per-stratum window anywhere in the two-phase plan
-    assert "Window" not in plan
+    out, plans = executed_plans(lambda: quality_prune(docs, 0.3, mega_strata_threshold=1))
+    assert "BroadcastHashJoin" in _plan(out)
+    assert any("Exchange rangepartitioning" in p for p in plans)
+    # no per-stratum window anywhere in the two-phase plans
+    assert not any("Window" in p for p in [*plans, _plan(out)])
 
 
 def test_span_dedup_exchange_carries_long_key(spark, sf_dir):
@@ -423,44 +423,38 @@ def test_host_cap_salted_plan_no_mega_partition(spark, sf_dir):
     assert host_only and all(i < salted_idx for i in host_only)
 
 
-def test_budget_sample_two_phase_plan_is_windowless(spark, sf_dir):
+def test_budget_sample_two_phase_plan_is_windowless(spark, sf_dir, executed_plans):
     """The mega-strata prefix sum must rank over a RANGE partitioning (the
     sample-sort boundary pass) with NO window operator anywhere — a window
     would re-introduce the single-task stratum the plan exists to avoid.
     The default plan, by contrast, is exactly the stratum-keyed window."""
     from shapefile_rs_spark.operators.curation import budget_sample
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", F.col("n_chars").alias("n_tokens")
     )
-    two = budget_sample(docs, 10**6, mega_strata_threshold=1)
-    plan = _plan(two)
-    assert "Exchange rangepartitioning" in plan
-    assert "Window" not in plan
-    release_sig_caches(two)
+    two, plans = executed_plans(lambda: budget_sample(docs, 10**6, mega_strata_threshold=1))
+    assert any("Exchange rangepartitioning" in p for p in plans)
+    assert not any("Window" in p for p in [*plans, _plan(two)])
     wplan = _plan(budget_sample(docs, 10**6))
     assert "Window" in wplan and "Exchange rangepartitioning" not in wplan
 
 
-def test_seq_pack_two_phase_plan_is_windowless(spark, sf_dir):
+def test_seq_pack_two_phase_plan_is_windowless(spark, sf_dir, executed_plans):
     """seq_pack's mega-strata plan inherits token_prefix's shape: range
     partitioning, NO window operator, and the bin fan-out is a Generate
     (explode) over pure-codegen arithmetic — no shuffle is introduced
     between the prefix sum and the bins.  The default plan is the
     stratum-keyed window plus the same Generate."""
     from shapefile_rs_spark.operators.curation import seq_pack
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", F.col("n_chars").alias("n_tokens")
     )
-    two = seq_pack(docs, 64, mega_strata_threshold=1)
-    plan = _plan(two)
-    assert "Exchange rangepartitioning" in plan
-    assert "Window" not in plan
-    assert "Generate explode" in plan
-    release_sig_caches(two)
+    two, plans = executed_plans(lambda: seq_pack(docs, 64, mega_strata_threshold=1))
+    assert any("Exchange rangepartitioning" in p for p in plans)
+    assert not any("Window" in p for p in [*plans, _plan(two)])
+    assert "Generate explode" in _plan(two)
     wplan = _plan(seq_pack(docs, 64))
     assert "Window" in wplan and "Generate explode" in wplan
     assert "Exchange rangepartitioning" not in wplan
@@ -509,10 +503,10 @@ def test_mix_weights_single_pruned_aggregate(spark, sf_dir):
 def test_decontaminate_bloom_confirm_reads_survivors_and_cached_grams(spark):
     """The exact-confirm join's corpus side must be the Bloom-survivor
     stream (probe MapInPandas stacked on the shingle MapInPandas), and its
-    benchmark side must re-read the persisted gram cache
-    (InMemoryTableScan), not recompute the benchmark shingles."""
+    benchmark side must re-read the materialized grams (ExistingRDD, the
+    checkpoint the Bloom build filled), not recompute the benchmark
+    shingles or read a cache."""
     from shapefile_rs_spark.operators.curation import decontaminate_bloom
-    from shapefile_rs_spark.operators.dedup import release_sig_caches
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "zeta eta theta iota")],
@@ -524,8 +518,8 @@ def test_decontaminate_bloom_confirm_reads_survivors_and_cached_grams(spark):
     out = decontaminate_bloom(docs, bench, k=3, m_bits=1 << 12)
     plan = _plan(out)
     assert plan.count("MapInPandas") >= 2  # shingle generator + bloom probe
-    assert "InMemoryTableScan" in plan  # bench grams from cache
-    release_sig_caches(out)
+    assert "ExistingRDD" in plan  # bench grams from the checkpoint
+    assert "InMemoryTableScan" not in plan
 
 
 def test_line_prune_threshold_filters_before_join(spark, sf_dir):

@@ -5,7 +5,6 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from shapefile_rs_spark.operators.dedup import release_sig_caches
 from shapefile_rs_spark.operators.scan import SCAN_COL, segmented_scan
 
 
@@ -24,36 +23,45 @@ def _shuffled_input(spark):
 
 
 @pytest.mark.parametrize("weight_col", [None, "q"])
-def test_segmented_scan_survives_dropped_cache_blocks(spark, weight_col):
+def test_segmented_scan_survives_dropped_cache_blocks(spark, monkeypatch, weight_col):
     """Offsets are priced from the persisted frame; dropping every cached
     block before the scan runs forces a recompute of all partitions, which
     must come back with the same rows in the same order (same range
-    exchange, id-total sort), so values still equal the window spelling."""
+    exchange, id-total sort), so values still equal the window spelling.
+    The scan runs inside the call (it checkpoints its result), so the
+    blocks are dropped by a seam on ``localCheckpoint``, after pricing."""
     df = _shuffled_input(spark)
-    out = segmented_scan(df, "lang", [F.col("q").desc()], "doc_id", weight_col)
-    # the offsets are priced: now drop every block of the scan's cached
-    # RDD, checking with the block manager that none is left
-    cache = (
-        spark._jsparkSession.sharedState().cacheManager()
-        .lookupCachedData(out._sig_caches[0]._jdf).get()
-        .cachedRepresentation().cacheBuilder().cachedColumnBuffers()
-    )
-    rdd_id = cache.id()
-    assert rdd_id in spark.sparkContext._jsc.getPersistentRDDs().keys()
+    jsc = spark.sparkContext._jsc
     jvm = spark._jvm
     master = jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    before = set(jsc.getPersistentRDDs().keys())
+    checkpoint = type(df).localCheckpoint
+    dropped = []
 
-    def cached_blocks():
-        return sum(
-            not master.getLocations(jvm.org.apache.spark.storage.RDDBlockId(rdd_id, i)).isEmpty()
-            for i in range(cache.getNumPartitions())
-        )
+    def drop_blocks_then_checkpoint(self, *args, **kwargs):
+        # the offsets are priced: drop every block of the RDDs the call
+        # persisted, checking with the block manager that none is left
+        rdds = {i: r for i, r in jsc.getPersistentRDDs().items() if i not in before}
 
-    assert cached_blocks() > 0
-    master.removeRdd(rdd_id, True)
-    assert cached_blocks() == 0
+        def cached_blocks():
+            return sum(
+                not master.getLocations(jvm.org.apache.spark.storage.RDDBlockId(i, p)).isEmpty()
+                for i, r in rdds.items()
+                for p in range(r.getNumPartitions())
+            )
+
+        assert cached_blocks() > 0
+        for i in rdds:
+            master.removeRdd(i, True)
+        assert cached_blocks() == 0
+        dropped.extend(rdds)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", drop_blocks_then_checkpoint)
+    out = segmented_scan(df, "lang", [F.col("q").desc()], "doc_id", weight_col)
+    monkeypatch.undo()
+    assert dropped
     got = {(r["doc_id"], r[SCAN_COL]) for r in out.collect()}
-    release_sig_caches(out)
 
     w = Window.partitionBy("lang").orderBy(F.col("q").desc(), F.col("doc_id").asc())
     if weight_col is None:
