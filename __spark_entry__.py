@@ -613,66 +613,17 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _docs(spark: SparkSession, sf_dir: str, split: bool = False) -> DataFrame:
-    """documents table.  ``split=True`` re-splits to the session's
-    parallelism: the fixture parquet is ONE row group, which Spark cannot
-    split, so a heavy map-only operator over it runs single-threaded
-    (measured: the char_minhash scan equals its pure-Python single-core
-    wall).  A real lake's files carry many row groups and split natively —
-    the explicit repartition is the local twin of format-level splitting.
-    It costs a full exchange, so only the queries whose per-row map work
-    dominates that cost opt in (measured per query; light scans and
-    shuffle-bound aggregations stay on the direct read).
-
-    The opt-in is additionally SIZE-GATED (r7, guide §2: partitioning
-    must be scale-adaptive, not a constant tuned to one SF): below
-    ``_SPLIT_MIN_BYTES`` of input the exchange overhead exceeds the
-    parallel-scan gain (measured at sf0.1: the split family regressed
-    0.5-1.2s/query; at sf1.0 it wins ~2x), so small inputs keep the
-    direct read even when the caller opts in."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if split and _want_split(f"{sf_dir}/documents.parquet"):
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
-
-
-# re-split pays one exchange; under ~3 MB of input the single-task scan
-# wins (measured both ways, see _docs) — env-overridable for clusters
-_SPLIT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPLIT_MIN_BYTES", 3_000_000))
-
-
-def _want_split(path: str) -> bool:
-    """Whether the local parquet file or directory dataset at ``path``
-    holds at least ``_SPLIT_MIN_BYTES``.  A directory counts the files
-    Spark's reader reads: not those named ``.*``, nor ``_*`` unless the
-    name holds ``=`` (a partition directory)."""
-
-    def read(name: str) -> bool:
-        return not name.startswith(".") and (not name.startswith("_") or "=" in name)
-
-    try:
-        if not os.path.isdir(path):
-            return os.path.getsize(path) >= _SPLIT_MIN_BYTES
-        size = 0
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if read(d)]
-            size += sum(os.path.getsize(os.path.join(root, f)) for f in files if read(f))
-        return size >= _SPLIT_MIN_BYTES
-    except OSError:
-        return True  # non-local path: assume data-sized
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _dup_corpus(spark: SparkSession, sf_dir: str, split: bool = True) -> DataFrame:
-    """documents ∪ planted near-dup variants (id = doc_id*2 + variant).
-    split=True (default): the chunk-regexp/explode consumers measured
-    ~2x faster with the _docs(split=) re-split; the minhash-signature
-    consumers (minhash_lsh → dedup_recall, dup_coverage) measured FASTER
-    WITHOUT it (repeats=4 A/B at sf1.0: 2.1s vs 3.5s) and opt out."""
-    docs = _docs(spark, sf_dir, split=split).select("doc_id", "text")
+def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents ∪ planted near-dup variants (id = doc_id*2 + variant)."""
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     orig = docs.select((F.col("doc_id") * 2).alias("id"), "text")
     nd = docs.select(
         (F.col("doc_id") * 2 + 1).alias("id"),
@@ -710,7 +661,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shapefile_rs_spark.operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
-        _dup_corpus(spark, sf_dir, split=False),
+        _dup_corpus(spark, sf_dir),
         id_col="id",
         text_col="text",
         k=_MINHASH_K,
@@ -785,7 +736,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard between each doc and its planted near-dup."""
     from shapefile_rs_spark.operators.dedup import ngram_jaccard_stats_pd
 
-    docs = _docs(spark, sf_dir, split=True)
+    docs = _docs(spark, sf_dir)
     st = ngram_jaccard_stats_pd(
         F.col("text"), F.concat(F.col("text"), F.lit(" near dup suffix")), 3
     )
@@ -803,14 +754,8 @@ def _emb_queries(spark: SparkSession, sf_dir: str, n: int = 4) -> DataFrame:
     )
 
 
-def _events(spark: SparkSession, sf_dir: str, split: bool = False) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if split and _want_split(f"{sf_dir}/events.parquet"):
-        # one-row-group fixture: the hourly rollup's decimal-sum scan is
-        # single-task without a re-split (A/B at sf1.0: 2.0s -> 1.7s;
-        # size-gated like _docs)
-        ev = ev.repartition(spark.sparkContext.defaultParallelism)
-    return ev
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1040,7 +985,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shapefile_rs_spark.operators.curation import dsir_weights
 
     return dsir_weights(
-        _docs(spark, sf_dir, split=True), target_pred=F.col("lang") == "en"
+        _docs(spark, sf_dir), target_pred=F.col("lang") == "en"
     )
 
 
@@ -1054,7 +999,7 @@ def q_incr_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_weights_incremental,
     )
 
-    docs = _docs(spark, sf_dir, split=True)
+    docs = _docs(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     registry = dsir_registry(corpus, F.col("lang") == "en")
@@ -1071,10 +1016,10 @@ _BPE_MAX_WORDS = 512
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact BM25 top-10 (rational-idf variant, int64 micro-unit scores —
     engine-bit-exact, see operators/retrieval.py) for a 4-term query over
-    the documents table.  Heavy map-only string scan → split=True."""
+    the documents table."""
     from shapefile_rs_spark.operators.retrieval import bm25_topk
 
-    return bm25_topk(_docs(spark, sf_dir, split=True), _BM25_TERMS, k=10)
+    return bm25_topk(_docs(spark, sf_dir), _BM25_TERMS, k=10)
 
 
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1103,7 +1048,7 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed rank window."""
     from shapefile_rs_spark.operators.retrieval import tfidf_topk
 
-    return tfidf_topk(_docs(spark, sf_dir, split=True), k=3)
+    return tfidf_topk(_docs(spark, sf_dir), k=3)
 
 
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1114,7 +1059,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/lm.py module docstring has the full contract)."""
     from shapefile_rs_spark.operators.lm import lm_score
 
-    return lm_score(_docs(spark, sf_dir, split=True), vocab_cap=_LM_VOCAB_CAP)
+    return lm_score(_docs(spark, sf_dir), vocab_cap=_LM_VOCAB_CAP)
 
 
 def q_lm_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1126,7 +1071,7 @@ def q_lm_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shapefile_rs_spark.operators.curation import quality_prune
     from shapefile_rs_spark.operators.lm import lm_score
 
-    docs = _docs(spark, sf_dir, split=True)
+    docs = _docs(spark, sf_dir)
     scored = docs.select("doc_id", "lang").join(
         lm_score(docs, vocab_cap=_LM_VOCAB_CAP), "doc_id"
     )
@@ -1142,7 +1087,7 @@ def q_lm_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shapefile_rs_spark.operators.lm import lm_score_target
 
     return lm_score_target(
-        _docs(spark, sf_dir, split=True), F.col("lang") == "en", vocab_cap=_LM_VOCAB_CAP
+        _docs(spark, sf_dir), F.col("lang") == "en", vocab_cap=_LM_VOCAB_CAP
     )
 
 
@@ -1154,7 +1099,7 @@ def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shapefile_rs_spark.operators.lm import bpe_learn
 
     return bpe_learn(
-        _docs(spark, sf_dir, split=True), n_merges=_BPE_MERGES, max_words=_BPE_MAX_WORDS
+        _docs(spark, sf_dir), n_merges=_BPE_MERGES, max_words=_BPE_MAX_WORDS
     )
 
 
@@ -1166,7 +1111,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shapefile_rs_spark.operators.lm import bpe_learn_encode
 
     return bpe_learn_encode(
-        _docs(spark, sf_dir, split=True), n_merges=_BPE_MERGES, max_words=_BPE_MAX_WORDS
+        _docs(spark, sf_dir), n_merges=_BPE_MERGES, max_words=_BPE_MAX_WORDS
     )
 
 
@@ -1182,7 +1127,7 @@ def q_incr_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         lm_unigram_counts,
     )
 
-    docs = _docs(spark, sf_dir, split=True)
+    docs = _docs(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     scores, _, _ = lm_score_incremental(
@@ -1421,7 +1366,7 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style intra-doc repetition: duplicate word-bigram fraction."""
     from shapefile_rs_spark.operators.textstats import repetition_metrics
 
-    return repetition_metrics(_docs(spark, sf_dir, split=True), n=2)
+    return repetition_metrics(_docs(spark, sf_dir), n=2)
 
 
 def q_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1440,7 +1385,7 @@ def q_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     null guard references it without re-evaluating the UDF)."""
     from shapefile_rs_spark.operators.textstats import winnow_fingerprint
 
-    with_fp = _docs(spark, sf_dir, split=True).select(
+    with_fp = _docs(spark, sf_dir).select(
         "doc_id", winnow_fingerprint(F.col("text"), k=5, w=4).alias("_fp")
     )
     return with_fp.select(
@@ -1458,7 +1403,7 @@ def q_char_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashlib twin of the HOF spelling — bit-identical hex mins."""
     from shapefile_rs_spark.operators.textstats import char_minhash_pd
 
-    return _docs(spark, sf_dir, split=True).select(
+    return _docs(spark, sf_dir).select(
         "doc_id", char_minhash_pd(F.col("text"), 8).alias("fp")
     )
 
@@ -1539,7 +1484,7 @@ def q_lang_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-window rollup (batch twin of the streaming hourly aggregation)."""
-    events = _events(spark, sf_dir, split=True)
+    events = _events(spark, sf_dir)
     return events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour_start")
     ).agg(
@@ -1617,7 +1562,7 @@ def _decon_frames(spark: SparkSession, sf_dir: str) -> tuple:
     """(corpus, bench) planted-contamination frames shared by the exact
     and Bloom-prefiltered decontamination queries (identical inputs →
     identical oracle row)."""
-    docs = _docs(spark, sf_dir, split=True).select("doc_id", "text")
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 50 == 0).select(
         "doc_id", F.concat(F.col("text"), F.lit(_EVAL_PHRASE)).alias("text")
     )
@@ -1666,7 +1611,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen — the redacted text is pinned by its md5)."""
     from shapefile_rs_spark.operators.curation import redact_pii
 
-    docs = _docs(spark, sf_dir, split=True).select("doc_id", "text")
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     pii = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -1711,7 +1656,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd regex scans."""
     from shapefile_rs_spark.operators.curation import bpe_token_count
 
-    docs = _docs(spark, sf_dir, split=True)
+    docs = _docs(spark, sf_dir)
     per_doc = docs.select(
         "lang",
         bpe_token_count(F.col("text")).cast("long").alias("bpe"),
@@ -1864,7 +1809,7 @@ def q_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage; unique docs read 0."""
     from shapefile_rs_spark.operators.dedup import dup_coverage
 
-    return dup_coverage(_dup_corpus(spark, sf_dir, split=False), id_col="id", k=8)
+    return dup_coverage(_dup_corpus(spark, sf_dir), id_col="id", k=8)
 
 
 def q_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1905,7 +1850,7 @@ def _budget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     both budget_sample plans (identical input → identical oracle row)."""
     from shapefile_rs_spark.operators.curation import bpe_token_count
 
-    return _docs(spark, sf_dir, split=True).select(
+    return _docs(spark, sf_dir).select(
         "doc_id", "lang", bpe_token_count(F.col("text")).cast("long").alias("n_tokens")
     )
 
@@ -1949,7 +1894,7 @@ def q_incr_para(spark: SparkSession, sf_dir: str) -> DataFrame:
         para_registry,
     )
 
-    docs = _docs(spark, sf_dir, split=True).select("doc_id", "text")
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     corpus = docs.select(
         (F.col("doc_id") * 2).alias("id"),
         chunk_words(F.col("text"), _PARA_WORDS).alias("text"),
@@ -2008,7 +1953,7 @@ def q_incr_line(spark: SparkSession, sf_dir: str) -> DataFrame:
         line_registry,
     )
 
-    docs = _docs(spark, sf_dir, split=True).select("doc_id", "text")
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     corpus = docs.select(
         (F.col("doc_id") * 2).alias("id"),
         chunk_words(F.col("text"), _PARA_WORDS).alias("text"),
@@ -2245,20 +2190,22 @@ def lsh_bucket_report(spark: SparkSession, sf_dir: str) -> dict:
     emb = _emb(spark, sf_dir)
     topk_planes = _lsh_planes(spark, sf_dir, _lsh_topk_ppt(_emb_rows(spark, sf_dir)))
     vb = hyperplane_buckets(emb, topk_planes, n_tables=_NEARDUP_TABLES).persist()
-    out["ann_lsh"] = bucket_population_stats(vb, ["_tbl", "_bucket"])
-    qdf = _emb_queries(spark, sf_dir)
-    for nprobe in (1, 2):
-        qb = hyperplane_buckets(
-            qdf, topk_planes, n_tables=_NEARDUP_TABLES,
-            vec_id="query_id", vec_col="q_embedding", nprobe=nprobe,
-        ).select(F.col("_id").alias("_qid"), "_tbl", "_bucket")
-        out["ann_lsh"][f"nprobe{nprobe}_candidates"] = (
-            vb.join(F.broadcast(qb), ["_tbl", "_bucket"])
-            .select("_qid", "_id")
-            .distinct()
-            .count()
-        )
-    vb.unpersist()
+    try:
+        out["ann_lsh"] = bucket_population_stats(vb, ["_tbl", "_bucket"])
+        qdf = _emb_queries(spark, sf_dir)
+        for nprobe in (1, 2):
+            qb = hyperplane_buckets(
+                qdf, topk_planes, n_tables=_NEARDUP_TABLES,
+                vec_id="query_id", vec_col="q_embedding", nprobe=nprobe,
+            ).select(F.col("_id").alias("_qid"), "_tbl", "_bucket")
+            out["ann_lsh"][f"nprobe{nprobe}_candidates"] = (
+                vb.join(F.broadcast(qb), ["_tbl", "_bucket"])
+                .select("_qid", "_id")
+                .distinct()
+                .count()
+            )
+    finally:
+        vb.unpersist()
     out["bucket_cap"] = _LSH_BUCKET_CAP
     return out
 

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import widen
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -255,15 +257,11 @@ def minhash_signatures(
     can :func:`minhash_lsh_join` against the committed parquet
     (``corpus_sigs=``) instead of re-reading and re-hashing the corpus
     text.  Map-only: Arrow-batched shingle hashing + the numpy minhash
-    pass; widened when the source is narrower than the core count (the
-    one-row-group fixture trap).  Signatures are deterministic (seeded
-    universal-hash params), so a committed stage and a recompute are
-    bit-identical — consumers must reuse the SAME (k, num_hashes)."""
-    spark = docs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    return docs.select(
+    pass over :func:`~shapefile_rs_spark.session.widen`-ed docs.
+    Signatures are deterministic (seeded universal-hash params), so a
+    committed stage and a recompute are bit-identical — consumers must
+    reuse the SAME (k, num_hashes)."""
+    return widen(docs).select(
         F.col(id_col).alias("_id"),
         shingle_token_hashes_pd(F.col(text_col), k).alias("_hs"),
     ).select("_id", minhash_from_hashes(F.col("_hs"), num_hashes).alias("_sig"))
@@ -819,53 +817,56 @@ def dedup_clusters(
     labels = (
         edges.select("src").distinct().select(F.col("src").alias("id"), F.col("src").alias("comp"))
     ).persist()
-    # fixed-point check is id-type-agnostic: labels only decrease, so the
-    # round is a no-op exactly when no row's label changed (a decimal-sum
-    # shortcut would crash ANSI-cast on string ids)
-    converged = False
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("_nbr"))
-        )
-        stepped = labels.join(nbr, labels["id"] == nbr["src"], "left").select(
-            "id",
-            F.col("comp").alias("_prev"),
-            F.least(F.col("comp"), F.coalesce("_nbr", "comp")).alias("comp"),
-        )
-        hop = stepped.select(F.col("id").alias("_hid"), F.col("comp").alias("_hcomp"))
-        jumped = (
-            stepped.join(hop, stepped["comp"] == hop["_hid"], "left")
-            .select(
-                "id",
-                "_prev",
-                F.least(F.col("comp"), F.coalesce("_hcomp", "comp")).alias("comp"),
+    # the finally releases both: a round that fails leaves its input
+    # (labels) and its output (jumped) persisted
+    jumped = labels
+    try:
+        # fixed-point check is id-type-agnostic: labels only decrease, so the
+        # round is a no-op exactly when no row's label changed (a decimal-sum
+        # shortcut would crash ANSI-cast on string ids)
+        converged = False
+        for _ in range(max_iter):
+            nbr = (
+                edges.join(labels, edges["dst"] == labels["id"])
+                .groupBy("src")
+                .agg(F.min("comp").alias("_nbr"))
             )
-            .persist()
-        )
-        n_changed = jumped.agg(
-            F.sum(F.when(F.col("comp") != F.col("_prev"), 1).otherwise(0)).alias("n")
-        ).collect()[0]["n"]
+            stepped = labels.join(nbr, labels["id"] == nbr["src"], "left").select(
+                "id",
+                F.col("comp").alias("_prev"),
+                F.least(F.col("comp"), F.coalesce("_nbr", "comp")).alias("comp"),
+            )
+            hop = stepped.select(F.col("id").alias("_hid"), F.col("comp").alias("_hcomp"))
+            jumped = (
+                stepped.join(hop, stepped["comp"] == hop["_hid"], "left")
+                .select(
+                    "id",
+                    "_prev",
+                    F.least(F.col("comp"), F.coalesce("_hcomp", "comp")).alias("comp"),
+                )
+                .persist()
+            )
+            n_changed = jumped.agg(
+                F.sum(F.when(F.col("comp") != F.col("_prev"), 1).otherwise(0)).alias("n")
+            ).collect()[0]["n"]
+            labels.unpersist()
+            labels = jumped
+            if not n_changed:
+                converged = True
+                break
+        if not converged:
+            raise RuntimeError(
+                f"dedup_clusters did not converge within max_iter={max_iter} rounds; "
+                "raise max_iter (component diameter exceeds 2^rounds)"
+            )
+        out = labels.select("id", F.col("comp").alias("cluster_id"))
+        # the caller consumes a cached frame; hand over a checkpointed copy so
+        # the loop's last persist can be released without recompute
+        return out.localCheckpoint(eager=True)
+    finally:
         labels.unpersist()
-        labels = jumped
-        if not n_changed:
-            converged = True
-            break
-    if not converged:
-        labels.unpersist()
+        jumped.unpersist()
         e.unpersist()
-        raise RuntimeError(
-            f"dedup_clusters did not converge within max_iter={max_iter} rounds; "
-            "raise max_iter (component diameter exceeds 2^rounds)"
-        )
-    out = labels.select("id", F.col("comp").alias("cluster_id"))
-    # the caller consumes a cached frame; hand over a checkpointed copy so
-    # the loop's last persist can be released without recompute
-    final = out.localCheckpoint(eager=True)
-    labels.unpersist()
-    e.unpersist()
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -1202,15 +1203,8 @@ def dup_coverage(
                 }
             )
 
-    src = df.select(id_col, text_col)
-    # the gram explode is the CPU-heavy stage and the fixture parquet is
-    # one unsplittable row group — widen a narrow input once (no-op when
-    # the source partitioning already exceeds the core count; the
-    # minhash_lsh_pairs guard)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    grams = src.mapInPandas(gen, schema=schema)
+    # the gram explode is the CPU-heavy stage
+    grams = widen(df.select(id_col, text_col)).mapInPandas(gen, schema=schema)
     if hash_keys:
         grams = grams.select(
             id_col, "_pos", "_nt", F.xxhash64("_gram").alias("_k")

@@ -105,60 +105,64 @@ def domain_rank(
         F.col(src_col).cast("long").alias("_a"),
         F.col(dst_col).cast("long").alias("_b"),
     ).persist()  # ONE data-sized derivation; nodes/outdeg/eo read the cache
-    # control-sized graphs (≤ rank_collect_max edges, no null hosts) run
-    # the WHOLE iteration driver-side: the distributed spelling costs
-    # ~15 tiny shuffle stages for 5 rounds — pure scheduling at this
-    # size (measured 2.4s for 64 hosts; the numpy loop is exact int64
-    # with the identical floor-division arithmetic).  limit(N+1) is the
-    # probe AND the fetch (the assign_centroids rule).
-    probe = e.limit(rank_collect_max + 1).collect()
-    if len(probe) <= rank_collect_max and not any(
-        r["_a"] is None or r["_b"] is None for r in probe
-    ):
+    eo = nodes = None
+    try:
+        # control-sized graphs (≤ rank_collect_max edges, no null hosts) run
+        # the WHOLE iteration driver-side: the distributed spelling costs
+        # ~15 tiny shuffle stages for 5 rounds — pure scheduling at this
+        # size (measured 2.4s for 64 hosts; the numpy loop is exact int64
+        # with the identical floor-division arithmetic).  limit(N+1) is the
+        # probe AND the fetch (the assign_centroids rule).
+        probe = e.limit(rank_collect_max + 1).collect()
+        if len(probe) <= rank_collect_max and not any(
+            r["_a"] is None or r["_b"] is None for r in probe
+        ):
+            return _domain_rank_driver(
+                edges.sparkSession, probe, iterations, scale, damping_pct
+            )
+        nodes = (
+            e.select(F.col("_a").alias("host"))
+            .unionByName(e.select(F.col("_b").alias("host")))
+            .distinct()
+        )
+        outdeg = e.groupBy(F.col("_a")).agg(F.count(F.lit(1)).alias("_n"))
+        # edges ⋈ outdeg once, persisted: every iteration re-reads this frame
+        eo = e.join(outdeg, "_a").persist()
+        nodes = nodes.persist()
+        # ONE action fills all three caches (e → eo → the union probe also
+        # runs nodes' subtree): one scheduling round-trip, not three
+        n_hosts = nodes.count()
+        eo.count()
         e.unpersist()
-        return _domain_rank_driver(
-            edges.sparkSession, probe, iterations, scale, damping_pct
-        )
-    nodes = (
-        e.select(F.col("_a").alias("host"))
-        .unionByName(e.select(F.col("_b").alias("host")))
-        .distinct()
-    )
-    outdeg = e.groupBy(F.col("_a")).agg(F.count(F.lit(1)).alias("_n"))
-    # edges ⋈ outdeg once, persisted: every iteration re-reads this frame
-    eo = e.join(outdeg, "_a").persist()
-    nodes = nodes.persist()
-    # ONE action fills all three caches (e → eo → the union probe also
-    # runs nodes' subtree): one scheduling round-trip, not three
-    n_hosts = nodes.count()
-    eo.count()
-    e.unpersist()
-    base = (100 - damping_pct) * scale // 100
-    score = nodes.withColumn("score", F.lit(int(scale)).cast("long"))
-    for i in range(iterations):
-        contrib = (
-            score.join(eo, score["host"] == eo["_a"])
-            .select(F.col("_b").alias("host"), F.expr("score DIV _n").alias("_c"))
-            .groupBy("host")
-            .agg(F.sum("_c").alias("_s"))
-        )
-        score = nodes.join(contrib, "host", "left").select(
-            "host",
-            (
-                F.lit(int(base)).cast("long")
-                + F.expr(
-                    f"({damping_pct} * COALESCE(_s, CAST(0 AS BIGINT))) DIV 100"
-                )
-            ).alias("score"),
-        )
-        # truncate lineage every few rounds: one eager job per FOUR
-        # rounds keeps long iterations from stacking plans while short
-        # ones (the common 3-5) no longer pay a scheduling round-trip
-        # per iteration — checkpointing is semantically transparent
-        if (i + 1) % 4 == 0 and (i + 1) < iterations:
-            score = score.localCheckpoint(eager=True)
-    eo.unpersist()
-    nodes.unpersist()
+        base = (100 - damping_pct) * scale // 100
+        score = nodes.withColumn("score", F.lit(int(scale)).cast("long"))
+        for i in range(iterations):
+            contrib = (
+                score.join(eo, score["host"] == eo["_a"])
+                .select(F.col("_b").alias("host"), F.expr("score DIV _n").alias("_c"))
+                .groupBy("host")
+                .agg(F.sum("_c").alias("_s"))
+            )
+            score = nodes.join(contrib, "host", "left").select(
+                "host",
+                (
+                    F.lit(int(base)).cast("long")
+                    + F.expr(
+                        f"({damping_pct} * COALESCE(_s, CAST(0 AS BIGINT))) DIV 100"
+                    )
+                ).alias("score"),
+            )
+            # truncate lineage every few rounds: one eager job per FOUR
+            # rounds keeps long iterations from stacking plans while short
+            # ones (the common 3-5) no longer pay a scheduling round-trip
+            # per iteration — checkpointing is semantically transparent
+            if (i + 1) % 4 == 0 and (i + 1) < iterations:
+                score = score.localCheckpoint(eager=True)
+    finally:
+        e.unpersist()
+        if eo is not None:
+            eo.unpersist()
+            nodes.unpersist()
     # final global rank — NEVER an unpartitioned row_number window (10^8
     # hosts would serialize through one sort task).  Hosts ≤
     # rank_collect_max: collect the control frame and rebuild ranked rows

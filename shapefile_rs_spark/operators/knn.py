@@ -164,118 +164,120 @@ def knn_cells(
         )
 
     cached = _finite_cells(points, lon_col, lat_col, "_pcell", res).persist()
-    # filtered above the cache: below it, Catalyst would push the filter
-    # into the points' own projection and evaluate lon/lat twice
-    pts = cached.where(F.col("_pcell").isNotNull())
+    try:
+        # filtered above the cache: below it, Catalyst would push the filter
+        # into the points' own projection and evaluate lon/lat twice
+        pts = cached.where(F.col("_pcell").isNotNull())
 
-    # --- job 1: coarse occupancy histogram (also warms the cell index) ---
-    hist = (
-        C.with_cell_ids(pts, lon_col, lat_col, {"_ec": e_res})
-        .groupBy("_ec")
-        .count()
-        .collect()
-    )
-    n_e = 1 << e_res
-    grid = np.zeros((n_e, n_e), dtype=np.int64)
-    _, hix, hiy = C.decode_cell(np.array([r["_ec"] for r in hist], dtype=np.int64))
-    grid[hix, hiy] = [r["count"] for r in hist]
-    total = int(grid.sum())
-    # summed-area table: ring population queries in O(1)
-    sat = np.zeros((n_e + 1, n_e + 1), dtype=np.int64)
-    sat[1:, 1:] = grid.cumsum(0).cumsum(1)
-
-    def ring_pop(ix: int, iy: int, r: int) -> int:
-        x0, x1 = max(ix - r, 0), min(ix + r, n_e - 1)
-        y0, y1 = max(iy - r, 0), min(iy + r, n_e - 1)
-        return int(sat[x1 + 1, y1 + 1] - sat[x0, y1 + 1] - sat[x1 + 1, y0] + sat[x0, y0])
-
-    def r0_fine(lon: float, lat: float) -> int:
-        ix, iy = C.lonlat_to_ixiy(np.array([lon]), np.array([lat]), e_res)
-        ix, iy = int(ix[0]), int(iy[0])
-        r_e = 0
-        while ring_pop(ix, iy, r_e) < k and r_e < n_e:
-            r_e += 1
-        # the fine ring of radius (r_e+1)<<shift fully contains the coarse
-        # ring of radius r_e around any point of the query's coarse cell
-        return max(1, (r_e + 1) << shift)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def ring_cells(lon: pd.Series, lat: pd.Series, radius: pd.Series) -> pd.Series:
-        out = []
-        lon_v = lon.to_numpy(np.float64)
-        lat_v = lat.to_numpy(np.float64)
-        rad_v = radius.to_numpy()
-        base = C.cell_id(lon_v, lat_v, res)
-        for i in range(len(lon_v)):
-            out.append(C.k_ring(int(base[i]), int(rad_v[i])).tolist())
-        return pd.Series(out)
-
-    out_rows: list = []
-    # fewer points than k: ring search degenerates, brute is exact + cheap
-    pend = (
-        []
-        if total < k
-        else [[r[0], float(r[1]), float(r[2]), r0_fine(float(r[1]), float(r[2]))] for r in q_rows]
-    )
-    fallback_ids = [] if total >= k else [r[0] for r in q_rows]
-
-    for _ in range(max_rounds):
-        if not pend:
-            break
-        pend_df = _values_df(
-            spark,
-            pend,
-            [query_id, q_lon, q_lat, "_r"],
-            casts=[queries.schema[query_id].dataType.simpleString(), "double", "double", "int"],
+        # --- job 1: coarse occupancy histogram (also warms the cell index) ---
+        hist = (
+            C.with_cell_ids(pts, lon_col, lat_col, {"_ec": e_res})
+            .groupBy("_ec")
+            .count()
+            .collect()
         )
-        cand_cells = pend_df.withColumn(
-            "_qcell", F.explode(ring_cells(F.col(q_lon), F.col(q_lat), F.col("_r")))
-        )
-        cands = cand_cells.join(
-            pts, cand_cells["_qcell"] == pts["_pcell"], "inner"
-        ).withColumn(
-            "dist2", dist2_col(F.col(lon_col), F.col(lat_col), F.col(q_lon), F.col(q_lat))
-        )
-        w = Window.partitionBy(query_id).orderBy(F.col("dist2").asc(), F.col(point_id).asc())
-        got = (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, point_id, "dist2", "rank")
-            .collect()  # the round's ONE job; ≤ k·n_pending rows
-        )
-        by_q: dict = {}
-        for row in got:
-            by_q.setdefault(row[0], []).append(row)
-        nxt = []
-        for qid, qlon, qlat, r in pend:
-            rows = by_q.get(qid, [])
-            kth = max((row["dist2"] for row in rows), default=float("inf"))
-            if len(rows) >= k and kth <= (r * min_dim) ** 2:
-                out_rows.extend(tuple(row) for row in rows)
-            elif len(rows) >= k:
-                # kth is an upper bound on the true k-th distance: a ring of
-                # ceil(kth/min_dim) provably covers it -> terminates next round
-                nxt.append([qid, qlon, qlat, int(np.ceil(np.sqrt(kth) / min_dim))])
-            else:
-                nxt.append([qid, qlon, qlat, min(r * 2, n_side)])
-        pend = nxt
+        n_e = 1 << e_res
+        grid = np.zeros((n_e, n_e), dtype=np.int64)
+        _, hix, hiy = C.decode_cell(np.array([r["_ec"] for r in hist], dtype=np.int64))
+        grid[hix, hiy] = [r["count"] for r in hist]
+        total = int(grid.sum())
+        # summed-area table: ring population queries in O(1)
+        sat = np.zeros((n_e + 1, n_e + 1), dtype=np.int64)
+        sat[1:, 1:] = grid.cumsum(0).cumsum(1)
 
-    if pend:
-        fallback_ids.extend(p[0] for p in pend)
+        def ring_pop(ix: int, iy: int, r: int) -> int:
+            x0, x1 = max(ix - r, 0), min(ix + r, n_e - 1)
+            y0, y1 = max(iy - r, 0), min(iy + r, n_e - 1)
+            return int(sat[x1 + 1, y1 + 1] - sat[x0, y1 + 1] - sat[x1 + 1, y0] + sat[x0, y0])
 
-    if fallback_ids:
-        fb_q = queries.join(
-            F.broadcast(_values_df(spark, [[i] for i in fallback_ids], [query_id])),
-            query_id,
-            "left_semi",
+        def r0_fine(lon: float, lat: float) -> int:
+            ix, iy = C.lonlat_to_ixiy(np.array([lon]), np.array([lat]), e_res)
+            ix, iy = int(ix[0]), int(iy[0])
+            r_e = 0
+            while ring_pop(ix, iy, r_e) < k and r_e < n_e:
+                r_e += 1
+            # the fine ring of radius (r_e+1)<<shift fully contains the coarse
+            # ring of radius r_e around any point of the query's coarse cell
+            return max(1, (r_e + 1) << shift)
+
+        @F.pandas_udf(ArrayType(LongType()))
+        def ring_cells(lon: pd.Series, lat: pd.Series, radius: pd.Series) -> pd.Series:
+            out = []
+            lon_v = lon.to_numpy(np.float64)
+            lat_v = lat.to_numpy(np.float64)
+            rad_v = radius.to_numpy()
+            base = C.cell_id(lon_v, lat_v, res)
+            for i in range(len(lon_v)):
+                out.append(C.k_ring(int(base[i]), int(rad_v[i])).tolist())
+            return pd.Series(out)
+
+        out_rows: list = []
+        # fewer points than k: ring search degenerates, brute is exact + cheap
+        pend = (
+            []
+            if total < k
+            else [[r[0], float(r[1]), float(r[2]), r0_fine(float(r[1]), float(r[2]))] for r in q_rows]
         )
-        out_rows.extend(
-            tuple(row)
-            for row in knn_bruteforce(
-                pts, fb_q, k, point_id, query_id, lon_col, lat_col, q_lon, q_lat
-            ).collect()
-        )
-    cached.unpersist()
+        fallback_ids = [] if total >= k else [r[0] for r in q_rows]
+
+        for _ in range(max_rounds):
+            if not pend:
+                break
+            pend_df = _values_df(
+                spark,
+                pend,
+                [query_id, q_lon, q_lat, "_r"],
+                casts=[queries.schema[query_id].dataType.simpleString(), "double", "double", "int"],
+            )
+            cand_cells = pend_df.withColumn(
+                "_qcell", F.explode(ring_cells(F.col(q_lon), F.col(q_lat), F.col("_r")))
+            )
+            cands = cand_cells.join(
+                pts, cand_cells["_qcell"] == pts["_pcell"], "inner"
+            ).withColumn(
+                "dist2", dist2_col(F.col(lon_col), F.col(lat_col), F.col(q_lon), F.col(q_lat))
+            )
+            w = Window.partitionBy(query_id).orderBy(F.col("dist2").asc(), F.col(point_id).asc())
+            got = (
+                cands.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k)
+                .select(query_id, point_id, "dist2", "rank")
+                .collect()  # the round's ONE job; ≤ k·n_pending rows
+            )
+            by_q: dict = {}
+            for row in got:
+                by_q.setdefault(row[0], []).append(row)
+            nxt = []
+            for qid, qlon, qlat, r in pend:
+                rows = by_q.get(qid, [])
+                kth = max((row["dist2"] for row in rows), default=float("inf"))
+                if len(rows) >= k and kth <= (r * min_dim) ** 2:
+                    out_rows.extend(tuple(row) for row in rows)
+                elif len(rows) >= k:
+                    # kth is an upper bound on the true k-th distance: a ring of
+                    # ceil(kth/min_dim) provably covers it -> terminates next round
+                    nxt.append([qid, qlon, qlat, int(np.ceil(np.sqrt(kth) / min_dim))])
+                else:
+                    nxt.append([qid, qlon, qlat, min(r * 2, n_side)])
+            pend = nxt
+
+        if pend:
+            fallback_ids.extend(p[0] for p in pend)
+
+        if fallback_ids:
+            fb_q = queries.join(
+                F.broadcast(_values_df(spark, [[i] for i in fallback_ids], [query_id])),
+                query_id,
+                "left_semi",
+            )
+            out_rows.extend(
+                tuple(row)
+                for row in knn_bruteforce(
+                    pts, fb_q, k, point_id, query_id, lon_col, lat_col, q_lon, q_lat
+                ).collect()
+            )
+    finally:
+        cached.unpersist()
 
     if not out_rows:
         return spark.createDataFrame([], out_schema)
@@ -371,251 +373,249 @@ def knn_join(
     qx = _finite_cells(
         queries.select(query_id, q_lon, q_lat), q_lon, q_lat, "_qcell", res
     ).persist()
+    try:
 
-    # pass-0: ONE job computes the point histogram AND the distinct
-    # query cells (both ≤ 4^res rows by construction) while filling both
-    # caches — a union of the two cell projections tagged by side (the
-    # domain_rank one-action materialization move; separate collects
-    # cost a scheduling round-trip each)
-    both = (
-        pts.select(F.col("_pcell").alias("_c"), F.lit(1).alias("_side"))
-        .unionByName(qx.select(F.col("_qcell").alias("_c"), F.lit(0).alias("_side")))
-        .groupBy("_c", "_side")
-        .count()
-        .collect()
-    )
-    bad_q = sum(r["count"] for r in both if r["_c"] is None and r["_side"] == 0)
-    if bad_q:
-        pts.unpersist()
-        qx.unpersist()
-        raise ValueError(
-            f"knn_join: {bad_q} query rows have a null or non-finite {q_lon} or {q_lat}"
+        # pass-0: ONE job computes the point histogram AND the distinct
+        # query cells (both ≤ 4^res rows by construction) while filling both
+        # caches — a union of the two cell projections tagged by side (the
+        # domain_rank one-action materialization move; separate collects
+        # cost a scheduling round-trip each)
+        both = (
+            pts.select(F.col("_pcell").alias("_c"), F.lit(1).alias("_side"))
+            .unionByName(qx.select(F.col("_qcell").alias("_c"), F.lit(0).alias("_side")))
+            .groupBy("_c", "_side")
+            .count()
+            .collect()
         )
-    hist = [r for r in both if r["_side"] == 1 and r["_c"] is not None]
-    grid = np.zeros((n_side, n_side), dtype=np.int64)
-    _, hix, hiy = C.decode_cell(np.array([r["_c"] for r in hist], dtype=np.int64))
-    grid[hix, hiy] = [r["count"] for r in hist]
-    sat = np.zeros((n_side + 1, n_side + 1), dtype=np.int64)
-    sat[1:, 1:] = grid.cumsum(0).cumsum(1)
-    total = int(grid.sum())
+        bad_q = sum(r["count"] for r in both if r["_c"] is None and r["_side"] == 0)
+        if bad_q:
+            raise ValueError(
+                f"knn_join: {bad_q} query rows have a null or non-finite {q_lon} or {q_lat}"
+            )
+        hist = [r for r in both if r["_side"] == 1 and r["_c"] is not None]
+        grid = np.zeros((n_side, n_side), dtype=np.int64)
+        _, hix, hiy = C.decode_cell(np.array([r["_c"] for r in hist], dtype=np.int64))
+        grid[hix, hiy] = [r["count"] for r in hist]
+        sat = np.zeros((n_side + 1, n_side + 1), dtype=np.int64)
+        sat[1:, 1:] = grid.cumsum(0).cumsum(1)
+        total = int(grid.sum())
 
-    qcells = np.array(sorted(r["_c"] for r in both if r["_side"] == 0), dtype=np.int64)
-    _, qix, qiy = C.decode_cell(qcells)
+        qcells = np.array(sorted(r["_c"] for r in both if r["_side"] == 0), dtype=np.int64)
+        _, qix, qiy = C.decode_cell(qcells)
 
-    if total < k:
-        # degenerate: fewer points than k — single global ring covers all
-        r1_of = {int(c): n_side for c in qcells}
-    else:
-        # price ONLY the query cells: one vectorized SAT pass per radius,
-        # assigning each query cell the first r whose ring holds >= k
-        # points (loop exits when every query cell is priced)
-        r_q = np.full(len(qcells), -1, dtype=np.int64)
-        for r in range(n_side + 1):
-            x0 = np.clip(qix - r, 0, n_side - 1)
-            x1 = np.clip(qix + r, 0, n_side - 1)
-            y0 = np.clip(qiy - r, 0, n_side - 1)
-            y1 = np.clip(qiy + r, 0, n_side - 1)
-            pop = sat[x1 + 1, y1 + 1] - sat[x0, y1 + 1] - sat[x1 + 1, y0] + sat[x0, y0]
-            newly = (r_q < 0) & (pop >= k)
-            r_q[newly] = r
-            if (r_q >= 0).all():
-                break
-        r_q[r_q < 0] = n_side
-        r1_of = {int(c): max(1, int(r)) for c, r in zip(qcells, r_q)}
+        if total < k:
+            # degenerate: fewer points than k — single global ring covers all
+            r1_of = {int(c): n_side for c in qcells}
+        else:
+            # price ONLY the query cells: one vectorized SAT pass per radius,
+            # assigning each query cell the first r whose ring holds >= k
+            # points (loop exits when every query cell is priced)
+            r_q = np.full(len(qcells), -1, dtype=np.int64)
+            for r in range(n_side + 1):
+                x0 = np.clip(qix - r, 0, n_side - 1)
+                x1 = np.clip(qix + r, 0, n_side - 1)
+                y0 = np.clip(qiy - r, 0, n_side - 1)
+                y1 = np.clip(qiy + r, 0, n_side - 1)
+                pop = sat[x1 + 1, y1 + 1] - sat[x0, y1 + 1] - sat[x1 + 1, y0] + sat[x0, y0]
+                newly = (r_q < 0) & (pop >= k)
+                r_q[newly] = r
+                if (r_q >= 0).all():
+                    break
+            r_q[r_q < 0] = n_side
+            r1_of = {int(c): max(1, int(r)) for c, r in zip(qcells, r_q)}
 
-    q_type = queries.schema[query_id].dataType.simpleString()
-    p_type = points.schema[point_id].dataType.simpleString()
-    pass_schema = (
-        f"{query_id} {q_type}, {point_id} {p_type}, dist2 double, rank int, "
-        f"{q_lon} double, {q_lat} double, _rm int, _n int, _kth double"
-    )
-
-    def cell_pass(q_side: DataFrame, cell_r: dict) -> DataFrame:
-        """q_side carries (query_id, q_lon, q_lat, _qcell); cell_r maps
-        query cell → Chebyshev radius.  Exact top-k per query via point
-        replication + cogrouped numpy (see the operator docstring)."""
-        src2tgt: dict = {}
-        for c, r in cell_r.items():
-            for s in C.k_ring(int(c), int(r)):
-                src2tgt.setdefault(int(s), []).append(int(c))
-        items = sorted(src2tgt.items())
-        srcs = np.array([s for s, _ in items], dtype=np.int64)
-        lens = np.array([len(t) for _, t in items], dtype=np.int64)
-        offs = np.zeros(len(items) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        tgts = np.array(
-            [t for _, ts in items for t in ts], dtype=np.int64
-        ) if items else np.empty(0, dtype=np.int64)
-        bc = spark.sparkContext.broadcast((srcs, offs, tgts))
-
-        def replicate(batches):
-            srcs_, offs_, tgts_ = bc.value
-            for pdf in batches:
-                if not len(pdf) or not len(srcs_):
-                    continue
-                pc = pdf["_pcell"].to_numpy(np.int64)
-                pos = np.searchsorted(srcs_, pc)
-                pos_c = np.minimum(pos, len(srcs_) - 1)
-                ok = srcs_[pos_c] == pc
-                start = offs_[pos_c]
-                cnt = np.where(ok, offs_[pos_c + 1] - start, 0)
-                n_out = int(cnt.sum())
-                if n_out == 0:
-                    continue
-                rep_row = np.repeat(np.arange(len(pc)), cnt)
-                cs = np.cumsum(cnt)
-                within = np.arange(n_out) - np.repeat(cs - cnt, cnt)
-                tidx = np.repeat(start, cnt) + within
-                yield pd.DataFrame(
-                    {
-                        "_tcell": tgts_[tidx],
-                        point_id: pdf[point_id].to_numpy()[rep_row],
-                        lon_col: pdf[lon_col].to_numpy(np.float64)[rep_row],
-                        lat_col: pdf[lat_col].to_numpy(np.float64)[rep_row],
-                    }
-                )
-
-        repl = pts.where(F.col("_pcell").isNotNull()).mapInPandas(
-            replicate,
-            schema=f"_tcell long, {point_id} {p_type}, {lon_col} double, {lat_col} double",
+        q_type = queries.schema[query_id].dataType.simpleString()
+        p_type = points.schema[point_id].dataType.simpleString()
+        pass_schema = (
+            f"{query_id} {q_type}, {point_id} {p_type}, dist2 double, rank int, "
+            f"{q_lon} double, {q_lat} double, _rm int, _n int, _kth double"
         )
 
-        def group_fn(key, qg: pd.DataFrame, cg: pd.DataFrame) -> pd.DataFrame:
-            if not len(qg) or not len(cg):
-                # explicit dtypes: a bare empty dict column defaults to
-                # float64 and Arrow refuses float64→string/long casts
-                # (the assign_centroids carry_vec lesson)
-                return pd.DataFrame(
-                    {
-                        query_id: pd.Series([], dtype=object),
-                        point_id: pd.Series([], dtype=object),
-                        "dist2": pd.Series([], dtype=np.float64),
-                        "rank": pd.Series([], dtype=np.int32),
-                        q_lon: pd.Series([], dtype=np.float64),
-                        q_lat: pd.Series([], dtype=np.float64),
-                        "_rm": pd.Series([], dtype=np.int32),
-                        "_n": pd.Series([], dtype=np.int32),
-                        "_kth": pd.Series([], dtype=np.float64),
-                    }
-                )
-            qid = qg[query_id].to_numpy()
-            qlo = qg[q_lon].to_numpy(np.float64)
-            qla = qg[q_lat].to_numpy(np.float64)
-            pid = cg[point_id].to_numpy()
-            plo = cg[lon_col].to_numpy(np.float64)
-            pla = cg[lat_col].to_numpy(np.float64)
-            n_c = len(pid)
-            kk = min(n_c, k)
-            m = min(n_c, k + 64)
-            r_here = int(cell_r[int(key[0])])
-            out_q, out_p, out_d, out_kth = [], [], [], []
-            # chunk the query dimension so the B×C distance block stays
-            # ~16M elements (the assign_centroids memory-ceiling pattern)
-            chunk = max(1, 4_000_000 // n_c)
-            for s in range(0, len(qid), chunk):
-                # EXACT same IEEE operand tree as dist2_col / the oracle:
-                # (lon−q_lon)·(lon−q_lon)+(lat−q_lat)·(lat−q_lat), f64
-                dlon = plo[None, :] - qlo[s : s + chunk, None]
-                dlat = pla[None, :] - qla[s : s + chunk, None]
-                d2 = dlon * dlon + dlat * dlat
-                if m < n_c:
-                    part = np.argpartition(d2, m - 1, axis=1)[:, :m]
-                    sel_d = np.take_along_axis(d2, part, axis=1)
-                    sel_p = pid[part]
-                else:
-                    sel_d = d2
-                    sel_p = np.broadcast_to(pid, d2.shape)
-                # lexsort by (dist2, point_id): two stable argsorts compose
-                o1 = np.argsort(sel_p, axis=1, kind="stable")
-                sd = np.take_along_axis(sel_d, o1, axis=1)
-                sp = np.take_along_axis(
-                    sel_p if m < n_c else np.ascontiguousarray(sel_p), o1, axis=1
-                )
-                o2 = np.argsort(sd, axis=1, kind="stable")
-                sd = np.take_along_axis(sd, o2, axis=1)
-                sp = np.take_along_axis(sp, o2, axis=1)
-                top_d = sd[:, :kk].copy()
-                top_p = sp[:, :kk].copy()
-                if m < n_c:
-                    # boundary-tie guard: if the kth dist equals the m-th
-                    # smallest, an excluded candidate may tie with a
-                    # smaller id — full exact sort for those (rare) rows
-                    unsafe = np.nonzero(top_d[:, kk - 1] >= sd[:, m - 1])[0]
-                    for i in unsafe:
-                        o = np.lexsort((pid, d2[i]))[:kk]
-                        top_p[i] = pid[o]
-                        top_d[i] = d2[i][o]
-                out_q.append(np.repeat(qid[s : s + chunk], kk))
-                out_p.append(top_p.ravel())
-                out_d.append(top_d.ravel())
-                out_kth.append(np.repeat(top_d[:, kk - 1], kk))
-            n_q = len(qid)
-            return pd.DataFrame(
-                {
-                    query_id: np.concatenate(out_q),
-                    point_id: np.concatenate(out_p),
-                    "dist2": np.concatenate(out_d),
-                    "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), n_q),
-                    q_lon: np.repeat(qlo, kk),
-                    q_lat: np.repeat(qla, kk),
-                    "_rm": np.full(n_q * kk, r_here, dtype=np.int32),
-                    "_n": np.full(n_q * kk, kk, dtype=np.int32),
-                    "_kth": np.concatenate(out_kth),
-                }
+        def cell_pass(q_side: DataFrame, cell_r: dict) -> DataFrame:
+            """q_side carries (query_id, q_lon, q_lat, _qcell); cell_r maps
+            query cell → Chebyshev radius.  Exact top-k per query via point
+            replication + cogrouped numpy (see the operator docstring)."""
+            src2tgt: dict = {}
+            for c, r in cell_r.items():
+                for s in C.k_ring(int(c), int(r)):
+                    src2tgt.setdefault(int(s), []).append(int(c))
+            items = sorted(src2tgt.items())
+            srcs = np.array([s for s, _ in items], dtype=np.int64)
+            lens = np.array([len(t) for _, t in items], dtype=np.int64)
+            offs = np.zeros(len(items) + 1, dtype=np.int64)
+            np.cumsum(lens, out=offs[1:])
+            tgts = np.array(
+                [t for _, ts in items for t in ts], dtype=np.int64
+            ) if items else np.empty(0, dtype=np.int64)
+            bc = spark.sparkContext.broadcast((srcs, offs, tgts))
+
+            def replicate(batches):
+                srcs_, offs_, tgts_ = bc.value
+                for pdf in batches:
+                    if not len(pdf) or not len(srcs_):
+                        continue
+                    pc = pdf["_pcell"].to_numpy(np.int64)
+                    pos = np.searchsorted(srcs_, pc)
+                    pos_c = np.minimum(pos, len(srcs_) - 1)
+                    ok = srcs_[pos_c] == pc
+                    start = offs_[pos_c]
+                    cnt = np.where(ok, offs_[pos_c + 1] - start, 0)
+                    n_out = int(cnt.sum())
+                    if n_out == 0:
+                        continue
+                    rep_row = np.repeat(np.arange(len(pc)), cnt)
+                    cs = np.cumsum(cnt)
+                    within = np.arange(n_out) - np.repeat(cs - cnt, cnt)
+                    tidx = np.repeat(start, cnt) + within
+                    yield pd.DataFrame(
+                        {
+                            "_tcell": tgts_[tidx],
+                            point_id: pdf[point_id].to_numpy()[rep_row],
+                            lon_col: pdf[lon_col].to_numpy(np.float64)[rep_row],
+                            lat_col: pdf[lat_col].to_numpy(np.float64)[rep_row],
+                        }
+                    )
+
+            repl = pts.where(F.col("_pcell").isNotNull()).mapInPandas(
+                replicate,
+                schema=f"_tcell long, {point_id} {p_type}, {lon_col} double, {lat_col} double",
             )
 
-        return (
-            q_side.groupBy("_qcell")
-            .cogroup(repl.groupBy("_tcell"))
-            .applyInPandas(group_fn, schema=pass_schema)
-        )
+            def group_fn(key, qg: pd.DataFrame, cg: pd.DataFrame) -> pd.DataFrame:
+                if not len(qg) or not len(cg):
+                    # explicit dtypes: a bare empty dict column defaults to
+                    # float64 and Arrow refuses float64→string/long casts
+                    # (the assign_centroids carry_vec lesson)
+                    return pd.DataFrame(
+                        {
+                            query_id: pd.Series([], dtype=object),
+                            point_id: pd.Series([], dtype=object),
+                            "dist2": pd.Series([], dtype=np.float64),
+                            "rank": pd.Series([], dtype=np.int32),
+                            q_lon: pd.Series([], dtype=np.float64),
+                            q_lat: pd.Series([], dtype=np.float64),
+                            "_rm": pd.Series([], dtype=np.int32),
+                            "_n": pd.Series([], dtype=np.int32),
+                            "_kth": pd.Series([], dtype=np.float64),
+                        }
+                    )
+                qid = qg[query_id].to_numpy()
+                qlo = qg[q_lon].to_numpy(np.float64)
+                qla = qg[q_lat].to_numpy(np.float64)
+                pid = cg[point_id].to_numpy()
+                plo = cg[lon_col].to_numpy(np.float64)
+                pla = cg[lat_col].to_numpy(np.float64)
+                n_c = len(pid)
+                kk = min(n_c, k)
+                m = min(n_c, k + 64)
+                r_here = int(cell_r[int(key[0])])
+                out_q, out_p, out_d, out_kth = [], [], [], []
+                # chunk the query dimension so the B×C distance block stays
+                # ~16M elements (the assign_centroids memory-ceiling pattern)
+                chunk = max(1, 4_000_000 // n_c)
+                for s in range(0, len(qid), chunk):
+                    # EXACT same IEEE operand tree as dist2_col / the oracle:
+                    # (lon−q_lon)·(lon−q_lon)+(lat−q_lat)·(lat−q_lat), f64
+                    dlon = plo[None, :] - qlo[s : s + chunk, None]
+                    dlat = pla[None, :] - qla[s : s + chunk, None]
+                    d2 = dlon * dlon + dlat * dlat
+                    if m < n_c:
+                        part = np.argpartition(d2, m - 1, axis=1)[:, :m]
+                        sel_d = np.take_along_axis(d2, part, axis=1)
+                        sel_p = pid[part]
+                    else:
+                        sel_d = d2
+                        sel_p = np.broadcast_to(pid, d2.shape)
+                    # lexsort by (dist2, point_id): two stable argsorts compose
+                    o1 = np.argsort(sel_p, axis=1, kind="stable")
+                    sd = np.take_along_axis(sel_d, o1, axis=1)
+                    sp = np.take_along_axis(
+                        sel_p if m < n_c else np.ascontiguousarray(sel_p), o1, axis=1
+                    )
+                    o2 = np.argsort(sd, axis=1, kind="stable")
+                    sd = np.take_along_axis(sd, o2, axis=1)
+                    sp = np.take_along_axis(sp, o2, axis=1)
+                    top_d = sd[:, :kk].copy()
+                    top_p = sp[:, :kk].copy()
+                    if m < n_c:
+                        # boundary-tie guard: if the kth dist equals the m-th
+                        # smallest, an excluded candidate may tie with a
+                        # smaller id — full exact sort for those (rare) rows
+                        unsafe = np.nonzero(top_d[:, kk - 1] >= sd[:, m - 1])[0]
+                        for i in unsafe:
+                            o = np.lexsort((pid, d2[i]))[:kk]
+                            top_p[i] = pid[o]
+                            top_d[i] = d2[i][o]
+                    out_q.append(np.repeat(qid[s : s + chunk], kk))
+                    out_p.append(top_p.ravel())
+                    out_d.append(top_d.ravel())
+                    out_kth.append(np.repeat(top_d[:, kk - 1], kk))
+                n_q = len(qid)
+                return pd.DataFrame(
+                    {
+                        query_id: np.concatenate(out_q),
+                        point_id: np.concatenate(out_p),
+                        "dist2": np.concatenate(out_d),
+                        "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), n_q),
+                        q_lon: np.repeat(qlo, kk),
+                        q_lat: np.repeat(qla, kk),
+                        "_rm": np.full(n_q * kk, r_here, dtype=np.int32),
+                        "_n": np.full(n_q * kk, kk, dtype=np.int32),
+                        "_kth": np.concatenate(out_kth),
+                    }
+                )
 
-    pass1 = cell_pass(qx, r1_of).localCheckpoint(eager=True)  # output-sized
-    if total < k:
-        # degenerate: pass 1 ran at r = n_side and saw EVERY point — the
-        # _n >= k guarantee can never hold, and a pass 2 at ceil(kth/dim)
-        # would SHRINK the ring and drop rows.  pass 1 is already complete.
+            return (
+                q_side.groupBy("_qcell")
+                .cogroup(repl.groupBy("_tcell"))
+                .applyInPandas(group_fn, schema=pass_schema)
+            )
+
+        pass1 = cell_pass(qx, r1_of).localCheckpoint(eager=True)  # output-sized
+        if total < k:
+            # degenerate: pass 1 ran at r = n_side and saw EVERY point — the
+            # _n >= k guarantee can never hold, and a pass 2 at ceil(kth/dim)
+            # would SHRINK the ring and drop rows.  pass 1 is already complete.
+            return pass1.select(query_id, point_id, "dist2", "rank")
+        proven = (F.col("_n") >= k) & (
+            F.col("_kth") <= (F.col("_rm") * F.lit(min_dim)) * (F.col("_rm") * F.lit(min_dim))
+        )
+        done1 = pass1.filter(proven)
+
+        # pass 2: re-run ONLY the unproven queries at the radius their own
+        # round-1 kth bounds — sufficient, so no further passes are needed.
+        # The per-cell radius is the MAX over the cell's unproven queries
+        # (a superset ring changes nothing: the kernel is exact top-k).
+        redo = C.with_cell_ids(
+            pass1.filter(~proven)
+            .select(query_id, q_lon, q_lat, "_kth")
+            .distinct()
+            .withColumn(
+                "_r",
+                F.greatest(
+                    F.lit(1), F.ceil(F.sqrt(F.col("_kth")) / F.lit(min_dim)).cast("int")
+                ),
+            ),
+            q_lon,
+            q_lat,
+            {"_qcell": res},
+        )
+        cellmax = redo.groupBy("_qcell").agg(F.max("_r").alias("_r")).collect()
+        r2_of = {int(r["_qcell"]): min(int(r["_r"]), n_side) for r in cellmax}
+
+        out_cols = [query_id, point_id, "dist2", "rank"]
+        if r2_of:
+            done2 = cell_pass(redo.select(query_id, q_lon, q_lat, "_qcell"), r2_of)
+            result = (
+                done1.select(*out_cols)
+                .unionByName(done2.select(*out_cols))
+                .localCheckpoint(eager=True)  # output-sized; frees the index
+            )
+        else:
+            # every query proven in pass 1: done1 is a lazy filter over the
+            # ALREADY-checkpointed pass-1 frame — no second materialization
+            result = done1.select(*out_cols)
+    finally:
         pts.unpersist()
         qx.unpersist()
-        return pass1.select(query_id, point_id, "dist2", "rank")
-    proven = (F.col("_n") >= k) & (
-        F.col("_kth") <= (F.col("_rm") * F.lit(min_dim)) * (F.col("_rm") * F.lit(min_dim))
-    )
-    done1 = pass1.filter(proven)
-
-    # pass 2: re-run ONLY the unproven queries at the radius their own
-    # round-1 kth bounds — sufficient, so no further passes are needed.
-    # The per-cell radius is the MAX over the cell's unproven queries
-    # (a superset ring changes nothing: the kernel is exact top-k).
-    redo = C.with_cell_ids(
-        pass1.filter(~proven)
-        .select(query_id, q_lon, q_lat, "_kth")
-        .distinct()
-        .withColumn(
-            "_r",
-            F.greatest(
-                F.lit(1), F.ceil(F.sqrt(F.col("_kth")) / F.lit(min_dim)).cast("int")
-            ),
-        ),
-        q_lon,
-        q_lat,
-        {"_qcell": res},
-    )
-    cellmax = redo.groupBy("_qcell").agg(F.max("_r").alias("_r")).collect()
-    r2_of = {int(r["_qcell"]): min(int(r["_r"]), n_side) for r in cellmax}
-
-    out_cols = [query_id, point_id, "dist2", "rank"]
-    if r2_of:
-        done2 = cell_pass(redo.select(query_id, q_lon, q_lat, "_qcell"), r2_of)
-        result = (
-            done1.select(*out_cols)
-            .unionByName(done2.select(*out_cols))
-            .localCheckpoint(eager=True)  # output-sized; frees the index
-        )
-    else:
-        # every query proven in pass 1: done1 is a lazy filter over the
-        # ALREADY-checkpointed pass-1 frame — no second materialization
-        result = done1.select(*out_cols)
-    pts.unpersist()
-    qx.unpersist()
     return result

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import widen
+
 IMG_MAGIC = b"IMG1"
 VID_MAGIC = b"VID1"
 
@@ -90,11 +92,8 @@ def fake_audio_bytes(doc_id: int) -> bytes:
 
 def attach_fake_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """+ (image, video, audio) binary columns derived from the id."""
-    # synthesis (and every decode downstream) is CPU-bound per row; a
-    # narrow input (single small parquet file) would serialize it
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    # synthesis (and every decode downstream) is CPU-bound per row
+    docs = widen(docs)
     fields = [f for f in docs.schema.fields]
     out_schema = StructType(
         fields

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from .session import widen
+
 # Hot-cluster centers: inside polygon 1 (2,2), inside polygon 1 (8,8),
 # inside polygon 2 the triangle (25,5).  Cluster spread ±0.02° ⇒ at the
 # join resolution each cluster lands in ~1 cell → hot cells.
@@ -134,23 +136,10 @@ def synth_pages_from_ids(ids: DataFrame, id_col: str = "page_id") -> DataFrame:
     the id so byte-identity stays checkable.  Pure Catalyst expressions —
     the synthesizer itself never leaves whole-stage codegen.
 
-    If the id frame is under-parallel, the ids re-split BEFORE the synth
-    projection — the shuffle moves only the 8-byte ids, and the
-    sha1/concat-heavy synth then uses every core (r7: flagship 3.7-5.1s
-    → 2.7-3.0s at sf1.0, same-window A/B).  Under-parallel means fewer
-    partitions than the session's parallelism OR a bare file scan:
-    parquet reports byte-range splits but cannot split below row-group
-    boundaries, so a few-row-group fixture file claims 32 partitions
-    while only ~6 run non-empty.  Row-preserving; already-parallel
-    inputs (e.g. the scaling bench's range(..., cores×4)) are
-    untouched."""
-    par = ids.sparkSession.sparkContext.defaultParallelism
-    needs = ids.rdd.getNumPartitions() < par
-    if not needs:
-        plan = ids._jdf.queryExecution().sparkPlan().toString()
-        needs = "FileScan" in plan and "Exchange" not in plan
-    if needs:
-        ids = ids.repartition(par)
+    The ids pass through :func:`~shapefile_rs_spark.session.widen` BEFORE
+    the synth projection, so a narrow id frame shuffles only its 8-byte
+    ids and the sha1/concat-heavy synth uses every core."""
+    ids = widen(ids)
     doc_id = F.col(id_col).cast("long")
     text = F.concat(
         F.lit("page "),

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -34,15 +34,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        # 128m default (env-overridable).  r7 note: 16m was tried to
-        # reach all 6 sf1.0 lineitem row groups (flagship 4.07->3.78s)
-        # but measurably regressed ~9 other queries in the same windows
-        # (url_canon 1.4->2.6s etc.) — reverted; the knob stays
-        # parameterised for cluster layouts.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # throughput GC: G1's pause targets cost ~15-20% on the string-heavy
         # synth/parse stages (measured at 32 threads); batch jobs prefer
@@ -54,3 +45,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def widen(df: DataFrame) -> DataFrame:
+    """The engine's one input re-split rule: ``df`` re-split round-robin
+    to the session's ``defaultParallelism`` when it has fewer partitions
+    than that, else ``df`` as it is.
+
+    Callers are the CPU-heavy per-row map stages (page synthesis, shingle
+    hashing, gram explode, media synthesis).  A small parquet file is one
+    row group, which Spark cannot split below, so such a stage over it
+    would run in one task while the other cores idle; the exchange moves
+    only the input rows, before the expensive projection.  Row-preserving.
+    """
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df

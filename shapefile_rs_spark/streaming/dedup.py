@@ -112,9 +112,9 @@ def maintain_signature_stage(
         pipe = CheckpointedPipeline(batch_df.sparkSession, pipeline_root)
         sigs = minhash_signatures(
             batch_df.select(id_col, text_col), id_col, text_col, k, num_hashes
-        ).localCheckpoint(eager=True) if band_stage else minhash_signatures(
-            batch_df.select(id_col, text_col), id_col, text_col, k, num_hashes
         )
+        if band_stage:
+            sigs = sigs.localCheckpoint(eager=True)
         # intra-batch dedup: append_delta's anti-join filters only against
         # the COMMITTED stage, so the same id landing twice in ONE
         # micro-batch (two mirrors in the same drain) would commit twice

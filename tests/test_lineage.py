@@ -376,6 +376,46 @@ def test_operator_result_reads_no_persisted_cache(spark, sf_dir, name):
     assert "InMemoryTableScan" not in out._jdf.queryExecution().executedPlan().toString()
 
 
+def _failing_call(name, spark):
+    """The operator call ``name`` over an input with one poisoned row: the
+    first job that evaluates it raises ``boom``."""
+    from shapefile_rs_spark.operators import dedup, graph, knn
+
+    ids = spark.range(40)
+
+    def boom(c):
+        return F.when(F.col("id") == 7, F.raise_error(F.lit("boom"))).otherwise(c)
+
+    points = ids.select(
+        F.col("id").alias("point_id"),
+        boom((F.col("id") % 10).cast("double")).alias("lon"),
+        (F.col("id") / 10.0).alias("lat"),
+    )
+    queries = spark.createDataFrame([(0, 1.0, 1.0)], "query_id long, q_lon double, q_lat double")
+    pairs = ids.select(boom(F.col("id")).alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    edges = ids.select(boom(F.col("id") % 8).alias("src"), (F.col("id") * 3 % 8).alias("dst"))
+    # the two kNN calls use different res: were knn_join to leak its point
+    # cache, knn_cells' equal plan would hit it instead of adding an entry
+    return {
+        "knn_join": lambda: knn.knn_join(points, queries, k=2, res=4),
+        "knn_cells": lambda: knn.knn_cells(points, queries, k=2, res=5),
+        "dedup_clusters": lambda: dedup.dedup_clusters(pairs, driver_threshold=0),
+        "domain_rank": lambda: graph.domain_rank(edges, rank_collect_max=0),
+    }[name]()
+
+
+@pytest.mark.parametrize("name", ["knn_join", "knn_cells", "dedup_clusters", "domain_rank"])
+def test_failed_operator_job_releases_its_caches(spark, name):
+    """An operator whose Spark job fails raises that failure and leaves
+    Spark's CacheManager as it found it: every frame it persisted for
+    itself is unpersisted on the way out."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with pytest.raises(Exception, match="boom"):
+        _failing_call(name, spark)
+    assert cache.numCachedEntries() == before
+
+
 def test_multi_stage_pipeline_resume_midway(spark, tmp_path):
     root = str(tmp_path)
     pipe = CheckpointedPipeline(spark, root)

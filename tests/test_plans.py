@@ -3,6 +3,7 @@ at 100 TB must hold, not be hoped for — column pruning reaches the parquet
 scan, filters push down, the PIP broadcast phase really broadcasts, and the
 hot paths stay inside whole-stage codegen."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from shapefile_rs_spark.plans import executed_plan as _plan
@@ -169,88 +170,6 @@ def test_knn_join_cell_ids_are_two_projections(spark, monkeypatch):
     got = {tuple(r) for r in knn_join(pts, qs, k=3, res=5).collect()}
     assert got == want and len(got) == 150
     assert plans[0].count("FLOOR(") == 2 * 2 * 4
-
-
-def test_bucketed_cell_join_is_exchange_free(spark, tmp_path):
-    """Tables bucketed on cell_id with equal bucket counts must co-join
-    with NO Exchange on either side — the write-once/join-many layout the
-    100 TB PIP join relies on."""
-    from shapefile_rs_spark.cells import cell_id_col
-    from shapefile_rs_spark.operators.bucketing import cell_bucketed_join, write_bucketed
-
-    pts = spark.range(2000).select(
-        F.col("id").alias("doc_id"),
-        ((F.col("id") * 7919) % 360000 / 1000.0 - 180.0).alias("lon"),
-        ((F.col("id") * 104729) % 180000 / 1000.0 - 90.0).alias("lat"),
-    )
-    pts = pts.withColumn("cell_id", cell_id_col(F.col("lon"), F.col("lat"), 6))
-    cov = pts.select("cell_id").distinct().select("cell_id", F.lit(1).alias("polygon_id"))
-
-    write_bucketed(pts, "t_pts_b", "cell_id", 8, path=str(tmp_path / "pts"))
-    write_bucketed(cov, "t_cov_b", "cell_id", 8, path=str(tmp_path / "cov"))
-    try:
-        joined = cell_bucketed_join(spark, "t_pts_b", "t_cov_b")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() == 2000  # every point's cell is in the covering
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_pts_b")
-        spark.sql("DROP TABLE IF EXISTS t_cov_b")
-
-
-def test_zordered_layout_skips_row_groups(spark, tmp_path):
-    """The Z-ordered layout must give parquet files disjoint, narrow cell
-    ranges (checked from the actual footers via pyarrow) so a cell-range
-    scan prunes most of the data — the shx-seek analog for object storage."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from shapefile_rs_spark.cells import cell_id_col
-    from shapefile_rs_spark.operators.bucketing import write_zordered
-
-    pts = spark.range(20000).select(
-        F.col("id").alias("doc_id"),
-        ((F.col("id") * 7919) % 360000 / 1000.0 - 180.0).alias("lon"),
-        ((F.col("id") * 104729) % 180000 / 1000.0 - 90.0).alias("lat"),
-    ).withColumn("cell_id", cell_id_col(F.col("lon"), F.col("lat"), 8))
-    out = str(tmp_path / "zorder")
-    write_zordered(pts, out, n_files=16)
-
-    spans = []
-    for f in glob.glob(out + "/*.parquet"):
-        meta = pq.ParquetFile(f).metadata
-        idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}["cell_id"]
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx).statistics
-            spans.append((st.min, st.max))
-    spans.sort()
-    assert len(spans) >= 8
-    # disjoint: each row group's range ends before the next begins
-    assert all(a[1] <= b[0] for a, b in zip(spans, spans[1:]))
-    # a one-row-group-wide cell filter could skip everything else
-    lo, hi = spans[len(spans) // 2]
-    touching = sum(1 for a, b in spans if a <= hi and b >= lo)
-    assert touching <= 2
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    """20 tiny files compact into few; row multiset preserved."""
-    import glob
-
-    from shapefile_rs_spark.operators.bucketing import compact_parquet
-
-    src = str(tmp_path / "landing")
-    spark.range(20000).repartition(20).write.parquet(src)
-    assert len(glob.glob(src + "/*.parquet")) == 20
-
-    out = str(tmp_path / "compacted")
-    n = compact_parquet(spark, src, out, target_mb=128)
-    assert n < 20
-    a = spark.read.parquet(src).groupBy().sum("id").collect()[0][0]
-    b = spark.read.parquet(out).groupBy().sum("id").collect()[0][0]
-    assert a == b and spark.read.parquet(out).count() == 20000
 
 
 def test_simhash_pairs_joins_checkpointed_banded_frame(spark, sf_dir):
@@ -716,34 +635,42 @@ def test_incr_dsir_batch_plan_never_touches_corpus(spark, sf_dir):
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
-def test_want_split_sizes_directory_datasets(spark, sf_dir, tmp_path, monkeypatch):
-    """A directory-layout parquet dataset is sized by its part files, not
-    by the directory inode: above ``_SPLIT_MIN_BYTES`` it re-splits, below
-    it keeps the direct read, and the rows are the same either way."""
-    import os
+def _widen_caller(name, docs):
+    """``docs`` (doc_id, text) through one of :func:`session.widen`'s callers."""
+    from shapefile_rs_spark.operators import dedup
+    from shapefile_rs_spark.operators.multimodal import attach_fake_media
+    from shapefile_rs_spark.pages import synth_pages_from_ids
 
-    import __spark_entry__ as E
+    return {
+        "synth_pages_from_ids": lambda: synth_pages_from_ids(
+            docs.select(F.col("doc_id").alias("page_id"))
+        ),
+        "minhash_signatures": lambda: dedup.minhash_signatures(docs),
+        "dup_coverage": lambda: dedup.dup_coverage(docs, id_col="doc_id", k=2),
+        "attach_fake_media": lambda: attach_fake_media(docs.select("doc_id")),
+    }[name]()
 
-    base = tmp_path / "sf"
-    src = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    src.repartition(3).write.parquet(str(base / "documents.parquet"))
-    path = str(base / "documents.parquet")
-    data = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if not f.startswith(("_", "."))
-    )
-    assert data > os.path.getsize(path)  # more than the inode size the old check read
-    want = sorted(tuple(r) for r in src.collect())
 
-    monkeypatch.setattr(E, "_SPLIT_MIN_BYTES", data)
-    assert E._want_split(path)
-    split = E._docs(spark, str(base), split=True)
-    assert "RoundRobinPartitioning" in _plan(split)
-    assert sorted(tuple(r) for r in split.select("doc_id", "text").collect()) == want
+@pytest.mark.parametrize(
+    "name", ["synth_pages_from_ids", "minhash_signatures", "dup_coverage", "attach_fake_media"]
+)
+def test_widen_resplits_only_narrow_inputs(spark, name):
+    """The one re-split rule, through each of its callers: a one-partition
+    input is re-split round-robin to ``defaultParallelism``, an input that
+    already has that many partitions is read as it is, and the rows are
+    the same either way."""
+    par = spark.sparkContext.defaultParallelism
 
-    monkeypatch.setattr(E, "_SPLIT_MIN_BYTES", data + 1)
-    assert not E._want_split(path)
-    direct = E._docs(spark, str(base), split=True)
-    assert "RoundRobinPartitioning" not in _plan(direct)
-    assert sorted(tuple(r) for r in direct.select("doc_id", "text").collect()) == want
+    def docs(n_parts):
+        return spark.range(0, 60, 1, n_parts).select(
+            F.col("id").alias("doc_id"),
+            F.concat_ws(
+                " ", F.lit("the page"), (F.col("id") % 7).cast("string"), F.lit("body")
+            ).alias("text"),
+        )
+
+    narrow = _widen_caller(name, docs(1))
+    wide = _widen_caller(name, docs(par))
+    assert "RoundRobinPartitioning" in _plan(narrow)
+    assert "RoundRobinPartitioning" not in _plan(wide)
+    assert sorted(map(str, narrow.collect())) == sorted(map(str, wide.collect()))

@@ -6,12 +6,18 @@ spans, no stray exchanges.  tests/test_plans.py asserts the load-bearing
 properties; this tool writes the full `explain(formatted)` text so a
 reviewer can audit the rest without running Spark.
 
+Session-history numbers (expression ids ``#123``, ``plan_id=``, RDD ids)
+are renumbered per plan in order of first appearance, and RDD call sites
+and the process id in temp paths are dropped, so a diff of two PLANS.md
+files shows only real plan changes.
+
 Usage: python tools/plan_audit.py [sf_dir] > PLANS.md
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -63,6 +69,17 @@ AUDITED = [
 ]
 
 
+def normalize(plan: str) -> str:
+    """``plan`` with every session-history number renumbered from 1 in
+    order of first appearance (one counter per kind of id)."""
+    plan = plan.replace(f"_{os.getpid()}/", "_<pid>/")
+    plan = re.sub(r"(RDD\[\d+\]) at \S+ at \S+:\d+", r"\1", plan)
+    for pat, fmt in ((r"#(\d+)", "#{}"), (r"plan_id=(\d+)", "plan_id={}"), (r"RDD\[(\d+)\]", "RDD[{}]")):
+        ids: dict = {}
+        plan = re.sub(pat, lambda m: fmt.format(ids.setdefault(m.group(1), len(ids) + 1)), plan)
+    return plan
+
+
 def main() -> None:
     import __spark_entry__ as E
     from shapefile_rs_spark.session import get_spark
@@ -74,14 +91,14 @@ def main() -> None:
     print("# Physical plans (headline queries)\n")
     print(f"Generated by `python tools/plan_audit.py {sf_dir}`.  Properties")
     print("asserted in tests/test_plans.py: parquet column pruning + filter")
-    print("pushdown, broadcast PIP phase, codegen'd page synthesis, bucketed")
-    print("exchange-free join, Z-order row-group disjointness.\n")
+    print("pushdown, broadcast PIP phase, codegen'd page synthesis.  Ids are")
+    print("renumbered per plan in order of first appearance.\n")
     for name in AUDITED:
         df = E.queries()[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        print(f"## {name}\n\n```\n{plan}```\n")
+        print(f"## {name}\n\n```\n{normalize(plan)}```\n")
 
 
 if __name__ == "__main__":
