@@ -34,6 +34,7 @@ from typing import Dict
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..local import local_frame
 from .dedup import word_shingles_sql
 from .scan import SCAN_COL, route_mega_strata, segmented_scan
 
@@ -546,19 +547,10 @@ def _host_cap_salted(
 
     from pyspark.sql import Window
 
-    from .knn import _values_df
-
-    nsalts = _values_df(
+    nsalts = local_frame(
         df.sparkSession,
-        sorted(
-            (
-                (h, min(math.ceil(n / threshold), max_salts))
-                for h, n in hot_counts.items()
-            ),
-            key=lambda kv: (kv[0] is None, str(kv[0])),
-        ),
-        ["_hh", "_nsalt"],
-        casts=[df.schema[host_col].dataType.simpleString(), "int"],
+        [(h, min(math.ceil(n / threshold), max_salts)) for h, n in hot_counts.items()],
+        f"_hh {df.schema[host_col].dataType.simpleString()}, _nsalt int",
     )
     # cold hosts (no match) keep salt 0; hot hosts spread over _nsalt
     # buckets by id hash — routing only, order-irrelevant
@@ -700,13 +692,10 @@ def _attach_counts_and_filter(
     window spelling, so the join must not drop it) and apply the exact
     ceil threshold — shared by the reuse-counts window route and the
     two-phase route."""
-    from .knn import _values_df
-
-    counts_df = _values_df(
+    counts_df = local_frame(
         df.sparkSession,
-        sorted(counts.items(), key=lambda kv: (kv[0] is None, str(kv[0]))),
-        ["_cs", "n_stratum"],
-        casts=[df.schema[strata_col].dataType.simpleString(), "bigint"],
+        list(counts.items()),
+        f"_cs {df.schema[strata_col].dataType.simpleString()}, n_stratum bigint",
     )
     return (
         ranked.join(
@@ -959,10 +948,10 @@ def mix_weights(
 
     Scale shape: ONE map-side-combining groupBy on the stratum key over
     a two-column projection — the corpus is scanned exactly once; the
-    missing-stratum rows union in as a targets-sized VALUES literal
-    re-aggregated at strata scale (an anti-join spelling would plan the
-    data-sized aggregation subtree twice) — the mixture table is
-    strata-sized, never data-sized."""
+    missing-stratum rows union in as a targets-sized driver-built frame
+    (:func:`..local.local_frame`) re-aggregated at strata scale (an
+    anti-join spelling would plan the data-sized aggregation subtree
+    twice) — the mixture table is strata-sized, never data-sized."""
     if budget < 0:
         raise ValueError(f"budget {budget} is negative")
     if None in targets:
@@ -998,13 +987,10 @@ def mix_weights(
         # target stratum and re-aggregate: the second groupBy runs over a
         # strata-sized frame (distinct strata + |targets| rows), and
         # sum(avail + 0) == avail, so the output is identical.
-        values = ", ".join(
-            "('" + str(s).replace("'", "''") + "', CAST(0 AS BIGINT))"
-            for s in sorted(targets)
-        )
-        zeros = df.sparkSession.sql(
-            f"SELECT {strata_col}, available_tokens "
-            f"FROM VALUES {values} AS t({strata_col}, available_tokens)"
+        zeros = local_frame(
+            df.sparkSession,
+            [(str(s), 0) for s in targets],
+            f"{strata_col} string, available_tokens bigint",
         )
         avail = (
             avail.unionByName(zeros)
@@ -1327,10 +1313,9 @@ def _dsir_tokens(
 ) -> DataFrame:
     """(id, _is_t, _f): one row per token occurrence with its hashed
     feature bucket — the shared tokenize+hash scan of the dsir family."""
-    # ceiling 2^16: the weight table ships as a VALUES literal (and a
-    # broadcast) — a 2^16-row SQL text is the same order as the sanctioned
-    # closure_max_centroids matrix; past that the parser, not the plan,
-    # becomes the bottleneck
+    # ceiling 2^16: the driver computes every bucket's weight in a Python
+    # loop and broadcasts the B-row table into each scoring task — both
+    # stay control-sized (≤ 1 MB of int64 pairs) only while B is bounded
     if n_buckets < 2 or n_buckets > 1 << 16:
         raise ValueError(f"n_buckets {n_buckets} outside [2, 2^16]")
     return docs.select(
@@ -1363,12 +1348,9 @@ def _dsir_weight_table(t: dict, q: dict, n_buckets: int, scale: int) -> dict:
 
 
 def _dsir_score(tok: DataFrame, w: dict, id_col: str) -> DataFrame:
-    """Σ_tokens w_f per doc via a broadcast join against the B-row weight
-    VALUES relation — partial-aggregated, pure int64."""
-    vals = ", ".join(
-        f"(CAST({f} AS BIGINT), CAST({wf} AS BIGINT))" for f, wf in sorted(w.items())
-    )
-    wdf = tok.sparkSession.sql(f"SELECT * FROM VALUES {vals} AS t(_f, _w_f)")
+    """Σ_tokens w_f per doc via a broadcast join against the B-row
+    driver-built weight table — partial-aggregated, pure int64."""
+    wdf = local_frame(tok.sparkSession, list(w.items()), "_f bigint, _w_f bigint")
     return (
         tok.join(F.broadcast(wdf), "_f")
         .groupBy(id_col)
@@ -1490,19 +1472,11 @@ def dsir_weights_incremental(
         q[f] = q.get(f, 0) + bq.get(f, 0)
     w = _dsir_weight_table(t, q, n_buckets, scale)
     weights = _dsir_score(tok, w, id_col)
-    spark = batch.sparkSession
-    if bq:
-        dvals = ", ".join(
-            f"(CAST({f} AS BIGINT), CAST({bt.get(f, 0)} AS BIGINT), "
-            f"CAST({bq[f]} AS BIGINT))"
-            for f in sorted(bq)
-        )
-        delta = spark.sql(f"SELECT * FROM VALUES {dvals} AS t(f, t, q)")
-    else:
-        delta = spark.sql(
-            "SELECT CAST(NULL AS BIGINT) f, CAST(NULL AS BIGINT) t, "
-            "CAST(NULL AS BIGINT) q WHERE FALSE"
-        )
+    delta = local_frame(
+        batch.sparkSession,
+        [(f, bt.get(f, 0), bq[f]) for f in sorted(bq)],
+        "f bigint, t bigint, q bigint",
+    )
     return weights, delta
 
 

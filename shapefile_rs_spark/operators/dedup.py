@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import local
 from ..session import widen
 
 # ---------------------------------------------------------------------------
@@ -732,7 +733,6 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """(id, cluster_id) for every id appearing in ``pairs`` — connected
     components with cluster_id = the component's minimum id (deterministic,
@@ -740,8 +740,8 @@ def dedup_clusters(
     PAIRS (MinHash/SimHash/embedding) are transitive in intent, so keeping
     one doc per CLUSTER needs components, not pairs.
 
-    Adaptive strategy (the broadcast-threshold pattern): a pair set at or
-    under ``driver_threshold`` rows is collected and solved with
+    Adaptive strategy (the broadcast-threshold pattern): a pair set of at
+    most :data:`..local.DRIVER_ROWS` rows is collected and solved with
     driver-side union-find — one job instead of an iterative loop.  Above
     it, distributed min-label propagation with pointer jumping: each round
     (1) every vertex takes the min label over its neighbors, then
@@ -757,20 +757,12 @@ def dedup_clusters(
     appear in ``pairs`` — union them back as their own singleton clusters
     downstream if required.
     """
-    spark = pairs.sparkSession
-    # limit(N+1).collect() is the probe AND the fetch in ONE job (the
-    # assign_centroids pattern): a count()-then-collect() pair evaluates an
-    # unmaterialized upstream (e.g. the full minhash banding pipeline)
-    # twice.  Overflow (N+1 rows back) falls through to the distributed
-    # path, having read only the first N+1 pairs.
-    probe = (
-        pairs.select(id_a, id_b).limit(driver_threshold + 1).collect()
-        if driver_threshold
-        else None
-    )
-    if probe is not None and len(probe) <= driver_threshold:
-        from .knn import _values_df
-
+    # collect_upto is the probe AND the fetch in ONE job: a
+    # count()-then-collect() pair evaluates an unmaterialized upstream
+    # (e.g. the full minhash banding pipeline) twice.  Overflow falls
+    # through to the distributed path, having read only N+1 pairs.
+    probe = local.collect_upto(pairs.select(id_a, id_b))
+    if probe is not None:
         parent: dict = {}
 
         def find(x):
@@ -790,15 +782,11 @@ def dedup_clusters(
                 # union by min so every root IS its component's min id
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        out_rows = sorted((x, find(x)) for x in parent)
-        if not out_rows:
-            t = pairs.schema[id_a].dataType.simpleString()
-            return spark.createDataFrame([], f"id {t}, cluster_id {t}")
-        return _values_df(
-            spark,
-            out_rows,
-            ["id", "cluster_id"],
-            casts=[pairs.schema[id_a].dataType.simpleString()] * 2,
+        t = pairs.schema[id_a].dataType.simpleString()
+        return local.local_frame(
+            pairs.sparkSession,
+            sorted((x, find(x)) for x in parent),
+            f"id {t}, cluster_id {t}",
         )
 
     # eager checkpoint BEFORE the symmetrizing union: the loop joins
@@ -1393,7 +1381,6 @@ def dedup_keep_best(
     score_col: str = "quality",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """(id, cluster_id, cluster_size, kept): cluster the near-dup ``pairs``
     into connected components (:func:`dedup_clusters`) and keep the
@@ -1421,9 +1408,7 @@ def dedup_keep_best(
     """
     from pyspark.sql import Window
 
-    comp = dedup_clusters(
-        pairs, id_a=id_a, id_b=id_b, driver_threshold=driver_threshold
-    ).withColumnRenamed("id", id_col)
+    comp = dedup_clusters(pairs, id_a=id_a, id_b=id_b).withColumnRenamed("id", id_col)
     labeled = docs.join(F.broadcast(comp), id_col, "left").withColumn(
         "cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col))
     )

@@ -22,6 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import local
+
+_RANKED = "host long, score long, rank int"
+
 
 def _domain_rank_driver(
     spark, edge_rows: list, iterations: int, scale: int, damping_pct: int
@@ -29,11 +33,9 @@ def _domain_rank_driver(
     """Driver-side twin of the distributed iteration for control-sized
     graphs: identical fixed-point arithmetic (int64 floor division on
     non-negative scores ⇒ numpy ``//`` == Spark ``DIV``), identical
-    (score desc, host asc) rank, VALUES-literal rebuild."""
+    (score desc, host asc) rank, built back with :func:`..local.local_frame`."""
     import numpy as np
 
-    if not edge_rows:
-        return spark.createDataFrame([], "host long, score long, rank int")
     a = np.array([r["_a"] for r in edge_rows], dtype=np.int64)
     b = np.array([r["_b"] for r in edge_rows], dtype=np.int64)
     hosts = np.unique(np.concatenate([a, b]))
@@ -47,23 +49,21 @@ def _domain_rank_driver(
         contrib = score[ai] // outdeg[ai]
         s = np.zeros(len(hosts), dtype=np.int64)
         np.add.at(s, bi, contrib)
-        if damping_pct and int(s.max()) > lim // max(damping_pct, 1):
+        if damping_pct and int(s.max(initial=0)) > lim // max(damping_pct, 1):
             raise ValueError(
                 "domain_rank fixed-point overflow (int64) — lower `scale` "
                 "(same loud failure as the ANSI distributed path)"
             )
         score = base + (damping_pct * s) // 100
     order = np.lexsort((hosts, -score))
-    from .knn import _values_df
-
-    return _values_df(
+    return local.local_frame(
         spark,
-        [
-            [int(hosts[i]), int(score[i]), r + 1]
-            for r, i in enumerate(order)
-        ],
-        ["host", "score", "rank"],
-        casts=["long", "long", "int"],
+        {
+            "host": hosts[order],
+            "score": score[order],
+            "rank": np.arange(1, len(order) + 1),
+        },
+        _RANKED,
     )
 
 
@@ -74,7 +74,6 @@ def domain_rank(
     damping_pct: int = 85,
     src_col: str = "src",
     dst_col: str = "dst",
-    rank_collect_max: int = 65536,
 ) -> DataFrame:
     """(host, score, rank): damped endorsement score after ``iterations``
     synchronous rounds over a (src, dst) edge list, in fixed-point int64.
@@ -107,14 +106,13 @@ def domain_rank(
     ).persist()  # ONE data-sized derivation; nodes/outdeg/eo read the cache
     eo = nodes = None
     try:
-        # control-sized graphs (≤ rank_collect_max edges, no null hosts) run
+        # control-sized graphs (≤ DRIVER_ROWS edges, no null hosts) run
         # the WHOLE iteration driver-side: the distributed spelling costs
         # ~15 tiny shuffle stages for 5 rounds — pure scheduling at this
         # size (measured 2.4s for 64 hosts; the numpy loop is exact int64
-        # with the identical floor-division arithmetic).  limit(N+1) is the
-        # probe AND the fetch (the assign_centroids rule).
-        probe = e.limit(rank_collect_max + 1).collect()
-        if len(probe) <= rank_collect_max and not any(
+        # with the identical floor-division arithmetic)
+        probe = local.collect_upto(e)
+        if probe is not None and not any(
             r["_a"] is None or r["_b"] is None for r in probe
         ):
             return _domain_rank_driver(
@@ -164,24 +162,18 @@ def domain_rank(
             eo.unpersist()
             nodes.unpersist()
     # final global rank — NEVER an unpartitioned row_number window (10^8
-    # hosts would serialize through one sort task).  Hosts ≤
-    # rank_collect_max: collect the control frame and rebuild ranked rows
-    # via a VALUES literal (fewer jobs than any distributed spelling at
-    # control size).  Bigger: segmented_scan over one global stratum,
-    # rank = running count + 1 (the scan returns a checkpointed frame).
-    spark = edges.sparkSession
-    if n_hosts <= rank_collect_max:
+    # hosts would serialize through one sort task).  Hosts ≤ DRIVER_ROWS:
+    # collect the control frame and build the ranked rows back with
+    # local_frame (fewer jobs than any distributed spelling at control
+    # size).  Bigger: segmented_scan over one global stratum, rank =
+    # running count + 1 (the scan returns a checkpointed frame).
+    if n_hosts <= local.DRIVER_ROWS:
         rows = score.collect()
         rows.sort(key=lambda r: (-r["score"], r["host"]))
-        if not rows:
-            return spark.createDataFrame([], "host long, score long, rank int")
-        from .knn import _values_df
-
-        return _values_df(
-            spark,
-            [[r["host"], r["score"], i + 1] for i, r in enumerate(rows)],
-            ["host", "score", "rank"],
-            casts=["long", "long", "int"],
+        return local.local_frame(
+            edges.sparkSession,
+            [(r["host"], r["score"], i + 1) for i, r in enumerate(rows)],
+            _RANKED,
         )
     from .scan import SCAN_COL, segmented_scan
 

@@ -25,9 +25,17 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from .. import cells as C
+from ..local import local_frame
 
 
 def dist2_col(lon1, lat1, lon2, lat2):
@@ -61,39 +69,6 @@ def knn_bruteforce(
         .filter(F.col("rank") <= k)
         .select(query_id, point_id, "dist2", "rank")
     )
-
-
-def _sql_lit(v) -> str:
-    """SQL literal for VALUES row rebuilds (int/float/str/None)."""
-    import math
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(v):
-            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-        return f"CAST({v!r} AS DOUBLE)"  # repr round-trips finite IEEE doubles
-    if isinstance(v, int):
-        return str(v)
-    # Spark SQL string literals process backslash escapes — double them
-    # BEFORE quote-doubling so '\n' stays two characters
-    return "'" + str(v).replace("\\", "\\\\").replace("'", "''") + "'"
-
-
-def _values_df(spark, rows, colnames, casts=None) -> DataFrame:
-    """Small driver-side row set → DataFrame via a VALUES literal (measured
-    orders faster than createDataFrame on this stack, CLAUDE.md)."""
-    body = ",\n".join("(" + ", ".join(_sql_lit(v) for v in r) + ")" for r in rows)
-    df = spark.sql(f"SELECT * FROM VALUES {body} AS t({', '.join(colnames)})")
-    if casts:
-        df = df.select(
-            *[F.col(c).cast(t).alias(c) if t else F.col(c) for c, t in zip(colnames, casts)]
-        )
-    return df
 
 
 def knn_cells(
@@ -130,8 +105,9 @@ def knn_cells(
     Resource hygiene (r1 verdict item 7): the only persisted frame is the
     cell index, unpersisted before return; loop state lives driver-side so
     no per-round persists/checkpoints accumulate and no ``isin`` chains
-    bloat the plan.  The returned frame is rebuilt from the collected rows
-    via a VALUES literal — result size is k·n_queries by contract.
+    bloat the plan.  The returned frame is built from the collected rows
+    with :func:`..local.local_frame` — result size is k·n_queries by
+    contract.
 
     Non-finite coordinates follow :func:`knn_join`'s rule: a point whose
     lon or lat is null, NaN or ±inf is nobody's neighbour and does not
@@ -148,13 +124,15 @@ def knn_cells(
     shift = res - e_res
 
     q_rows = queries.select(query_id, q_lon, q_lat).collect()
-    out_schema = (
-        f"{query_id} {queries.schema[query_id].dataType.simpleString()}, "
-        f"{point_id} {points.schema[point_id].dataType.simpleString()}, "
-        "dist2 double, rank int"
+    qid_field = StructField(query_id, queries.schema[query_id].dataType)
+    out_schema = StructType(
+        [
+            qid_field,
+            StructField(point_id, points.schema[point_id].dataType),
+            StructField("dist2", DoubleType()),
+            StructField("rank", IntegerType()),
+        ]
     )
-    if not q_rows:
-        return spark.createDataFrame([], out_schema)
     bad_q = sum(
         not all(v is not None and math.isfinite(v) for v in r[1:]) for r in q_rows
     )
@@ -223,11 +201,17 @@ def knn_cells(
         for _ in range(max_rounds):
             if not pend:
                 break
-            pend_df = _values_df(
+            pend_df = local_frame(
                 spark,
                 pend,
-                [query_id, q_lon, q_lat, "_r"],
-                casts=[queries.schema[query_id].dataType.simpleString(), "double", "double", "int"],
+                StructType(
+                    [
+                        qid_field,
+                        StructField(q_lon, DoubleType()),
+                        StructField(q_lat, DoubleType()),
+                        StructField("_r", IntegerType()),
+                    ]
+                ),
             )
             cand_cells = pend_df.withColumn(
                 "_qcell", F.explode(ring_cells(F.col(q_lon), F.col(q_lat), F.col("_r")))
@@ -266,7 +250,9 @@ def knn_cells(
 
         if fallback_ids:
             fb_q = queries.join(
-                F.broadcast(_values_df(spark, [[i] for i in fallback_ids], [query_id])),
+                F.broadcast(
+                    local_frame(spark, {query_id: fallback_ids}, StructType([qid_field]))
+                ),
                 query_id,
                 "left_semi",
             )
@@ -279,19 +265,7 @@ def knn_cells(
     finally:
         cached.unpersist()
 
-    if not out_rows:
-        return spark.createDataFrame([], out_schema)
-    return _values_df(
-        spark,
-        out_rows,
-        [query_id, point_id, "dist2", "rank"],
-        casts=[
-            queries.schema[query_id].dataType.simpleString(),
-            points.schema[point_id].dataType.simpleString(),
-            "double",
-            "int",
-        ],
-    )
+    return local_frame(spark, out_rows, out_schema)
 
 
 def _finite_cells(df: DataFrame, lon: str, lat: str, name: str, res: int) -> DataFrame:

@@ -65,6 +65,7 @@ import re as _re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..local import local_frame
 from .retrieval import _tokens_expr, _ws_pattern
 
 _SCALE = 1_000_000
@@ -463,14 +464,10 @@ def bpe_learn(
     # instead of 2 Spark jobs + an eager checkpoint per round (r6 shape:
     # 16 jobs over a ≤512-row frame, ~1.2s of pure scheduling).
     vocab = [(r["s"], int(r["cnt"])) for r in words.collect()]
-    merges = _merge_rounds(vocab, n_merges)
-
-    # tiny control result -> VALUES literal (the knn_cells rebuild move;
-    # createDataFrame(rows) costs seconds on this host)
-    rows = ", ".join(f"({rk}, '{l}', '{r}', {c}L)" for rk, l, r, c in merges)
-    return spark.sql(
-        "SELECT merge_rank, lhs, rhs, pair_count FROM VALUES "
-        f"{rows} AS t(merge_rank, lhs, rhs, pair_count)"
+    return local_frame(
+        spark,
+        _merge_rounds(vocab, n_merges),
+        "merge_rank int, lhs string, rhs string, pair_count bigint",
     )
 
 

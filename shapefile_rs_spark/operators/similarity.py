@@ -46,6 +46,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import local
+
+# centroid rows assign_centroids holds on the driver (its closure matrix):
+# C×d×8 bytes, ≈ 33 MB at d=64 — d-wide rows, hence below DRIVER_ROWS
+CLOSURE_MAX_CENTROIDS = 65_536
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Σ a_i·b_i in double precision (left-to-right fold, interpreted)."""
@@ -85,17 +91,14 @@ def cosine_pd(a: Column, b: Column) -> Column:
 def _collect_matrix(df: DataFrame, id_col: str, vec_col: str, normalize: bool, limit=None):
     """Driver-side (id array, row matrix) of a provably-small frame, rows
     sorted by id so numpy first-max tie-breaks resolve to the lowest id.
-    With ``limit`` set (0 allowed), collects at most limit+1 rows and
-    returns ``(None, None)`` when the frame exceeds the limit — one job
-    doubles as the size probe AND the matrix fetch."""
+    With ``limit`` set (0 allowed), returns ``(None, None)`` when the
+    frame has more rows — :func:`..local.collect_upto`, one job that is
+    the size probe AND the matrix fetch."""
     src = df.select(id_col, vec_col)
-    if limit is not None:
-        head = src.limit(limit + 1).collect()
-        if len(head) > limit:
-            return None, None
-        rows = sorted(head, key=lambda r: r[0])
-    else:
-        rows = sorted(src.collect(), key=lambda r: r[0])
+    rows = src.collect() if limit is None else local.collect_upto(src, limit)
+    if rows is None:
+        return None, None
+    rows = sorted(rows, key=lambda r: r[0])
     ids = [r[0] for r in rows]
     M = np.vstack([np.asarray(r[1], dtype=np.float64) for r in rows])
     if normalize:
@@ -504,7 +507,6 @@ def assign_centroids(
     centroid_col: str = "c_embedding",
     carry_vec: bool = False,
     n_assign: int = 1,
-    closure_max_centroids: int = 65536,
     _chunk_elems: int = 16_000_000,
 ) -> DataFrame:
     """(vec_id, centroid_id): the ``n_assign`` nearest centroids by cosine
@@ -524,8 +526,8 @@ def assign_centroids(
     is the fast path EVERYWHERE it fits — 3.6 s vs 119.3 s for the
     broadcast-join fallback at C=1024 (the fallback's crossJoin
     materializes N×C rows before the rank window; at C=16k its 1.6e9-row
-    cosine stage exhausted worker memory).  ``closure_max_centroids`` is
-    therefore a DRIVER-MEMORY bound, not a compute crossover: the default
+    cosine stage exhausted worker memory).  :data:`CLOSURE_MAX_CENTROIDS`
+    is therefore a DRIVER-MEMORY bound, not a compute crossover: the default
     65536 caps the collected matrix at C×d×8 ≈ 33 MB (d=64) and the
     limit+1 collect at 65k driver rows; the per-batch score matrix is no
     longer a constraint (centroid-chunked matmul below).  Past the bound,
@@ -537,7 +539,7 @@ def assign_centroids(
     itself (limit+1 rows, ONE job) — no separate count pass."""
     cids, Cn = _collect_matrix(
         centroids, centroid_id, centroid_col, normalize=True,
-        limit=closure_max_centroids,
+        limit=CLOSURE_MAX_CENTROIDS,
     )
     if cids is None:
         return _assign_centroids_broadcast(
@@ -643,7 +645,6 @@ def ivf_topk(
     centroid_id: str = "centroid_id",
     centroid_col: str = "c_embedding",
     nprobe: int = 1,
-    closure_max_centroids: int = 65536,
 ) -> DataFrame:
     """IVF approximate top-k: search the query's ``nprobe`` nearest cells.
 
@@ -656,7 +657,7 @@ def ivf_topk(
     in-cell candidates, window top-k."""
     v_assigned = assign_centroids(
         vectors, centroids, vec_id, vec_col, centroid_id, centroid_col,
-        carry_vec=True, closure_max_centroids=closure_max_centroids,
+        carry_vec=True,
     )
     q_assigned = assign_centroids(
         queries,
@@ -667,7 +668,6 @@ def ivf_topk(
         centroid_col,
         carry_vec=True,
         n_assign=nprobe,
-        closure_max_centroids=closure_max_centroids,
     ).withColumnRenamed("_v", "_q")
     cands = v_assigned.join(F.broadcast(q_assigned), on=centroid_id, how="inner")
     scored = cands.withColumn("_cos", cosine_pd(F.col("_v"), F.col("_q")))
@@ -870,7 +870,6 @@ def ivf_pq_topk(
     query_col: str = "q_embedding",
     centroid_id: str = "centroid_id",
     centroid_col: str = "c_embedding",
-    closure_max_centroids: int = 65536,
 ) -> DataFrame:
     """IVFPQ: coarse cosine cell pruning composed with PQ asymmetric-
     distance scoring — the FAISS IVFPQ architecture on DataFrames.  The
@@ -896,12 +895,11 @@ def ivf_pq_topk(
     dsub = codebook.shape[1] // n_sub
     v_assigned = assign_centroids(
         vectors, centroids, vec_id, vec_col, centroid_id, centroid_col,
-        carry_vec=True, closure_max_centroids=closure_max_centroids,
+        carry_vec=True,
     )
     q_assigned = assign_centroids(
         queries, centroids, query_id, query_col, centroid_id, centroid_col,
         carry_vec=True, n_assign=nprobe,
-        closure_max_centroids=closure_max_centroids,
     ).withColumnRenamed("_v", "_q")
     cands = v_assigned.join(F.broadcast(q_assigned), on=centroid_id, how="inner")
     out_schema = StructType(
@@ -958,7 +956,6 @@ def semdedup(
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     centroid_col: str = "c_embedding",
-    closure_max_centroids: int = 65536,
     _chunk_elems: int = 16_000_000,
 ) -> DataFrame:
     """Semantic deduplication (the SemDeDup move): cluster embeddings by
@@ -990,7 +987,7 @@ def semdedup(
     cosine spectrum)."""
     assigned = assign_centroids(
         vectors, centroids, vec_id, vec_col, centroid_id, centroid_col,
-        carry_vec=True, closure_max_centroids=closure_max_centroids,
+        carry_vec=True,
     )
     out_schema = StructType(
         [
@@ -1136,28 +1133,29 @@ def kmeans_fp(
             qc = new_qc
     finally:
         src.unpersist()
-    vals = ", ".join(
-        f"(CAST({int(cids[ci])} AS BIGINT), {di + 1}, "
-        f"CAST({int(qc[ci, di])} AS BIGINT), CAST({int(counts[ci])} AS BIGINT))"
-        for ci in range(C)
-        for di in range(d)
-    )
-    return spark.sql(
-        f"SELECT * FROM VALUES {vals} AS t(centroid_id, dim, q, n)"
+    return local.local_frame(
+        spark,
+        {
+            "centroid_id": np.repeat(cids, d),
+            "dim": np.tile(np.arange(1, d + 1), C),
+            "q": qc.ravel(),
+            "n": np.repeat(counts, d),
+        },
+        "centroid_id bigint, dim int, q bigint, n bigint",
     )
 
 
-def _quantized_matrix(
-    df: DataFrame, id_col: str, vec_col: str, scale: int, limit: int = 65536
-):
+def _quantized_matrix(df: DataFrame, id_col: str, vec_col: str, scale: int):
     """(ids, int64 matrix) of floor(x·scale) per component, rows sorted
     by id — the kmeans_fp quantization, applied once to the seed.  The
-    limit+1 collect is the size probe AND the fetch (one job, the
+    :func:`..local.collect_upto` probe is also the fetch (one job, the
     _collect_matrix convention): a data-sized 'seed' is a caller bug and
     fails loudly instead of spilling the driver."""
-    rows = df.select(id_col, vec_col).limit(limit + 1).collect()
-    if len(rows) > limit:
-        raise ValueError(f"kmeans seed exceeds {limit} rows — not a control frame")
+    rows = local.collect_upto(df.select(id_col, vec_col), CLOSURE_MAX_CENTROIDS)
+    if rows is None:
+        raise ValueError(
+            f"kmeans seed exceeds {CLOSURE_MAX_CENTROIDS} rows — not a control frame"
+        )
     rows = sorted(rows, key=lambda r: r[0])
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     M = np.vstack([np.asarray(r[1], dtype=np.float64) for r in rows])

@@ -11,7 +11,7 @@ spatial-join decomposition:
    dropped (bbox false positives no longer scale with polygon size),
    fully-INTERIOR cells are flagged so their candidates skip the ray-cast
    entirely, and only BOUNDARY cells refine;
-2. **broadcast path** (polygons ≤ ``small_poly_threshold``, the common
+2. **broadcast path** (polygons ≤ :data:`..local.DRIVER_ROWS`, the common
    case: polygons ≪ points): the polygon side is evaluated ONCE — one
    driver ``collect()`` that is also the size probe — into a polygon index
    (:func:`_pip_index`: sorted covering cells with their polygons and
@@ -69,6 +69,7 @@ from pyspark.sql.types import (
 )
 
 from .. import cells as C
+from .. import local
 
 _COVER_EXTRA = [
     StructField("cell_id", LongType()),
@@ -420,17 +421,16 @@ def point_in_polygon_join(
     broadcast_polygons: Optional[bool] = None,
     salt_factor: int = 0,
     hot_cell_threshold: int = 100_000,
-    small_poly_threshold: int = 100_000,
     pre_indexed: bool = False,
     census_sample: Optional[float] = None,
 ) -> DataFrame:
     """Emit one row per (point, containing polygon) — the Q1 join.
 
-    ``broadcast_polygons=None`` auto-selects: one driver
-    ``limit(small_poly_threshold + 1).collect()`` of the polygon side is
-    both the size probe and the fetch; up to ``small_poly_threshold`` rows
-    take the broadcast phase, more take the shuffle phase — the explicit
-    two-phase broadcast/sort-merge selection the north_star demands.
+    ``broadcast_polygons=None`` auto-selects: one
+    :func:`..local.collect_upto` of the polygon side is both the size
+    probe and the fetch; up to :data:`..local.DRIVER_ROWS` rows take the
+    broadcast phase, more take the shuffle phase — the explicit two-phase
+    broadcast/sort-merge selection the north_star demands.
 
     In the broadcast phase (also ``broadcast_polygons=True``, which
     collects the whole side) the polygon side is evaluated exactly once:
@@ -441,15 +441,15 @@ def point_in_polygon_join(
     Python, looks the points' cells up, passes interior-cell hits, ray-casts
     boundary-cell hits and returns each point's containing polygon
     positions; an ``explode`` of those and one broadcast hash join to a
-    local relation ``(_ppos, polygon_key, *polygon_cols)`` (pandas → Arrow
-    with the polygon side's schema, so key and attribute types stay exact)
-    finish the join.  Every other point column stays in the JVM, and the
+    local relation ``(_ppos, polygon_key, *polygon_cols)``
+    (:func:`..local.local_frame` with the polygon side's schema, so key
+    and attribute values stay exact) finish the join.  Every other point column stays in the JVM, and the
     point side is never shuffled.  The index broadcast lives as long as
     the returned frame (it is not unpersisted).  A polygon row whose
     ``polygon_key`` is null joins nothing, as on the shuffle path.
 
     The shuffle phase (``broadcast_polygons=False``, or more rows than
-    ``small_poly_threshold``) joins :func:`with_cells` points to the
+    :data:`..local.DRIVER_ROWS`) joins :func:`with_cells` points to the
     :func:`polygon_covering` on (cell_res, cell_id) and refines with
     :func:`pip_refine_full`.  The covering is a lazy ``localCheckpoint``
     (the resolution probe and the join both read it): its blocks are
@@ -483,8 +483,8 @@ def point_in_polygon_join(
 
     if broadcast_polygons is not False:
         if broadcast_polygons is None:
-            rows = poly_geo.limit(small_poly_threshold + 1).collect()
-            broadcast_polygons = len(rows) <= small_poly_threshold
+            rows = local.collect_upto(poly_geo)
+            broadcast_polygons = rows is not None
         else:
             rows = poly_geo.collect()
 
@@ -496,15 +496,13 @@ def point_in_polygon_join(
             max_res,
             fixed_res,
         )
-        # object columns keep ids exact (no float64 detour for null ints)
-        attrs = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "_ppos": np.arange(len(rows), dtype=np.int32),
-                    **{c: pd.Series([r[c] for r in rows], dtype=object) for c in attr_cols},
-                }
-            ),
-            schema=StructType(
+        attrs = local.local_frame(
+            spark,
+            {
+                "_ppos": np.arange(len(rows)),
+                **{c: [r[c] for r in rows] for c in attr_cols},
+            },
+            StructType(
                 [StructField("_ppos", IntegerType())] + [poly_geo.schema[c] for c in attr_cols]
             ),
         )
@@ -545,7 +543,12 @@ def point_in_polygon_join(
         # is an extra all-rows shuffle just to find the handful of hot
         # cells; which cells are salted affects only physical distribution,
         # never the join's output rows.
-        census_src = pts if census_sample is None else pts.sample(census_sample, seed=7)
+        # fraction= by keyword: given positionally, PySpark reads the seed
+        # from the second positional slot, ignores seed= and draws a random
+        # one, so the salted cells would change from run to run
+        census_src = (
+            pts if census_sample is None else pts.sample(fraction=census_sample, seed=7)
+        )
         eff_threshold = (
             hot_cell_threshold
             if census_sample is None

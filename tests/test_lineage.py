@@ -343,7 +343,6 @@ def _cache_owner_call(name, spark, sf_dir):
                 (F.expr("doc_id * doc_id DIV 64") % 64).alias("dst"),
             ).distinct(),
             iterations=3,
-            rank_collect_max=0,
         ),
     }[name]()
 
@@ -364,10 +363,12 @@ def _cache_owner_call(name, spark, sf_dir):
         "domain_rank",
     ],
 )
-def test_operator_result_reads_no_persisted_cache(spark, sf_dir, name):
+def test_operator_result_reads_no_persisted_cache(spark, sf_dir, name, monkeypatch):
     """No operator returns a frame whose plan reads a ``persist()`` cache:
     after the result is materialized, Spark's CacheManager holds no more
     entries than before the call, so no caller ever releases anything."""
+    # a driver budget of 0 sends domain_rank down its distributed path
+    monkeypatch.setattr("shapefile_rs_spark.local.DRIVER_ROWS", 0)
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = cache.numCachedEntries()
     out = _cache_owner_call(name, spark, sf_dir)
@@ -399,16 +400,19 @@ def _failing_call(name, spark):
     return {
         "knn_join": lambda: knn.knn_join(points, queries, k=2, res=4),
         "knn_cells": lambda: knn.knn_cells(points, queries, k=2, res=5),
-        "dedup_clusters": lambda: dedup.dedup_clusters(pairs, driver_threshold=0),
-        "domain_rank": lambda: graph.domain_rank(edges, rank_collect_max=0),
+        "dedup_clusters": lambda: dedup.dedup_clusters(pairs),
+        "domain_rank": lambda: graph.domain_rank(edges),
     }[name]()
 
 
 @pytest.mark.parametrize("name", ["knn_join", "knn_cells", "dedup_clusters", "domain_rank"])
-def test_failed_operator_job_releases_its_caches(spark, name):
+def test_failed_operator_job_releases_its_caches(spark, name, monkeypatch):
     """An operator whose Spark job fails raises that failure and leaves
     Spark's CacheManager as it found it: every frame it persisted for
     itself is unpersisted on the way out."""
+    # a driver budget of 0 sends dedup_clusters and domain_rank down their
+    # distributed paths
+    monkeypatch.setattr("shapefile_rs_spark.local.DRIVER_ROWS", 0)
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = cache.numCachedEntries()
     with pytest.raises(Exception, match="boom"):

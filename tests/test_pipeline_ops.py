@@ -311,7 +311,7 @@ def test_functions_registry_importable():
     assert all(hasattr(SF, n) for n in SF.__all__)
 
 
-def test_dedup_clusters_components(spark):
+def test_dedup_clusters_components(spark, monkeypatch):
     """Connected components: an 8-chain (multi-hop merging, exercises
     pointer jumping), a triangle, and an isolated pair; cluster_id is the
     component min."""
@@ -329,11 +329,9 @@ def test_dedup_clusters_components(spark):
     # driver-side union-find path (small pair set)
     got = {(r["id"], r["cluster_id"]) for r in dedup_clusters(pairs).collect()}
     assert got == want
-    # distributed min-label + pointer-jumping path (threshold forced off)
-    got_d = {
-        (r["id"], r["cluster_id"])
-        for r in dedup_clusters(pairs, driver_threshold=0).collect()
-    }
+    # distributed min-label + pointer-jumping path (driver budget forced to 0)
+    monkeypatch.setattr("shapefile_rs_spark.local.DRIVER_ROWS", 0)
+    got_d = {(r["id"], r["cluster_id"]) for r in dedup_clusters(pairs).collect()}
     assert got_d == want
 
 
@@ -482,35 +480,60 @@ def test_knn_join_fewer_points_than_k(spark):
     assert got == want and len(got) == 6
 
 
-def test_dedup_clusters_string_ids_distributed(spark):
+def test_dedup_clusters_string_ids_distributed(spark, monkeypatch):
     """Review regression: the distributed path must work for string ids
     (the natural URL-id case) and raise loudly on non-convergence."""
     from shapefile_rs_spark.operators.dedup import dedup_clusters
 
+    monkeypatch.setattr("shapefile_rs_spark.local.DRIVER_ROWS", 0)
     pairs = spark.sql(
         "SELECT * FROM VALUES ('u1','u2'),('u2','u3'),('x9','x8') AS t(id_a, id_b)"
     )
-    got = {(r["id"], r["cluster_id"]) for r in dedup_clusters(pairs, driver_threshold=0).collect()}
+    got = {(r["id"], r["cluster_id"]) for r in dedup_clusters(pairs).collect()}
     assert got == {("u1", "u1"), ("u2", "u1"), ("u3", "u1"), ("x8", "x8"), ("x9", "x8")}
 
     chain = spark.sql(
         "SELECT * FROM VALUES " + ",".join(f"({i},{i+1})" for i in range(8)) + " AS t(id_a, id_b)"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(chain, driver_threshold=0, max_iter=1)
+        dedup_clusters(chain, max_iter=1)
 
 
-def test_values_df_escaping_roundtrip(spark):
-    """Review regression: backslashes and quotes survive the VALUES
-    literal rebuild; NaN/Infinity floats produce valid SQL."""
-    from shapefile_rs_spark.operators.knn import _values_df
+def test_local_frame_roundtrip(spark):
+    """Driver-built frames come back exactly: backslashes and quotes,
+    NaN apart from NULL, ±inf, a NULL in every column, int64 past 2^53;
+    no rows give the typed empty frame; the plan is a LocalTableScan."""
+    import math
 
-    rows = [["a\\nb", 1.5], ["tail\\", float("inf")], ["o'brien", float("nan")]]
-    got = {r["s"]: r["v"] for r in _values_df(spark, rows, ["s", "v"]).collect()}
-    assert set(got) == {"a\\nb", "tail\\", "o'brien"}
-    assert got["a\\nb"] == 1.5
-    assert got["tail\\"] == float("inf")
-    assert got["o'brien"] != got["o'brien"]  # NaN
+    from shapefile_rs_spark.local import local_frame
+
+    schema = "s string, v double, n bigint"
+    rows = [
+        ("a\\nb", 1.5, 2**62 + 1),
+        ("tail\\", float("inf"), -(2**62) - 1),
+        ("o'brien", float("nan"), 0),
+        ("neg", float("-inf"), None),
+        ("null_v", None, 7),
+        (None, 2.5, 8),
+    ]
+    df = local_frame(spark, rows, schema)
+    got = [tuple(r) for r in df.collect()]
+    assert len(got) == len(rows)
+    for (s, v, n), (gs, gv, gn) in zip(rows, got):
+        assert (gs, gn) == (s, n)
+        assert type(gn) is type(n)
+        if v is not None and math.isnan(v):
+            assert gv is not None and math.isnan(gv)  # NaN, not NULL
+        else:
+            assert gv == v
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    # the same columns as a mapping of name → values
+    cols = dict(zip(["s", "v", "n"], map(list, zip(*rows))))
+    assert repr([tuple(r) for r in local_frame(spark, cols, schema).collect()]) == repr(got)
+    empty = local_frame(spark, [], schema)
+    assert empty.schema.simpleString() == "struct<s:string,v:double,n:bigint>"
+    assert empty.collect() == []
+    assert "LocalTableScan" in empty._jdf.queryExecution().executedPlan().toString()
 
 
 def test_embed_neardup_or_amplified_recall(spark):
@@ -549,11 +572,12 @@ def test_embed_neardup_or_amplified_recall(spark):
         assert (va @ vb) / (_np.linalg.norm(va) * _np.linalg.norm(vb)) >= 0.99
 
 
-def test_assign_centroids_broadcast_path_matches_closure(spark):
-    """Above closure_max_centroids, assignment switches to a Spark broadcast
+def test_assign_centroids_broadcast_path_matches_closure(spark, monkeypatch):
+    """Above CLOSURE_MAX_CENTROIDS, assignment switches to a Spark broadcast
     join (centroids shipped once per executor, not pickled per task) and
     must produce the same assignments as the closure matmul path — including
     the n_assign>1 multi-probe set and the carried embedding."""
+    from shapefile_rs_spark.operators import similarity
     from shapefile_rs_spark.operators.similarity import assign_centroids
 
     rng = np.random.default_rng(11)
@@ -565,10 +589,9 @@ def test_assign_centroids_broadcast_path_matches_closure(spark):
 
     for n_assign in (1, 2):
         closure = assign_centroids(emb, centroids, n_assign=n_assign, carry_vec=True)
-        bcast = assign_centroids(
-            emb, centroids, n_assign=n_assign, carry_vec=True,
-            closure_max_centroids=0,
-        )
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "CLOSURE_MAX_CENTROIDS", 0)
+            bcast = assign_centroids(emb, centroids, n_assign=n_assign, carry_vec=True)
         plan = bcast._jdf.queryExecution().executedPlan().toString()
         assert "Broadcast" in plan  # BroadcastNestedLoopJoin: no equi-key
         c_rows = {(r["vec_id"], r["centroid_id"]): list(r["_v"]) for r in closure.collect()}
@@ -611,12 +634,13 @@ def test_assign_centroids_chunked_scoring_exact(spark):
             assert not any(cid >= 100 for _, cid in whole)
 
 
-def test_assign_centroids_dead_centroid_ranks_last(spark):
+def test_assign_centroids_dead_centroid_ranks_last(spark, monkeypatch):
     """A zero-norm centroid (empty k-means cluster → NaN cosine) must rank
     LAST on every path: chunked single-assign, whole-matrix, and the
     broadcast fallback all agree, and no vector is assigned to the dead
     centroid (review finding: raw argmax treats NaN as maximal, so a dead
     centroid in a chunk swallowed that chunk's real best)."""
+    from shapefile_rs_spark.operators import similarity
     from shapefile_rs_spark.operators.similarity import assign_centroids
 
     rng = np.random.default_rng(31)
@@ -632,20 +656,19 @@ def test_assign_centroids_dead_centroid_ranks_last(spark):
         (r["vec_id"], r["centroid_id"])
         for r in assign_centroids(emb, centroids, _chunk_elems=1).collect()
     }
-    bcast = {
-        (r["vec_id"], r["centroid_id"])
-        for r in assign_centroids(emb, centroids, closure_max_centroids=0).collect()
-    }
+    monkeypatch.setattr(similarity, "CLOSURE_MAX_CENTROIDS", 0)
+    bcast = {(r["vec_id"], r["centroid_id"]) for r in assign_centroids(emb, centroids).collect()}
     assert whole == chunked == bcast
     assert not any(cid == 0 for _, cid in whole)
 
 
-def test_assign_centroids_zero_norm_vector_gets_no_assignment(spark):
+def test_assign_centroids_zero_norm_vector_gets_no_assignment(spark, monkeypatch):
     """A zero-norm VECTOR has no defined cosine to anything — it must
     produce NO assignment row on every path (advice finding: the closure
     path's zero-initialized best index silently assigned it to the lowest
     centroid id; the broadcast path's NULL score ranked it arbitrarily).
     Live vectors are unaffected, n_assign 1 and 2, all three paths."""
+    from shapefile_rs_spark.operators import similarity
     from shapefile_rs_spark.operators.similarity import assign_centroids
 
     rng = np.random.default_rng(37)
@@ -656,12 +679,15 @@ def test_assign_centroids_zero_norm_vector_gets_no_assignment(spark):
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_embedding")
     )
     for n_assign in (1, 2):
-        for kw in ({}, {"_chunk_elems": 1}, {"closure_max_centroids": 0}):
-            rows = assign_centroids(emb, centroids, n_assign=n_assign, **kw).collect()
+        for kw, max_c in (({}, None), ({"_chunk_elems": 1}, None), ({}, 0)):
+            with monkeypatch.context() as m:
+                if max_c is not None:
+                    m.setattr(similarity, "CLOSURE_MAX_CENTROIDS", max_c)
+                rows = assign_centroids(emb, centroids, n_assign=n_assign, **kw).collect()
             by_vec = {}
             for r in rows:
                 by_vec.setdefault(r["vec_id"], []).append(r["centroid_id"])
-            assert 99 not in by_vec, f"zero-norm vector assigned via {kw}"
+            assert 99 not in by_vec, f"zero-norm vector assigned via {kw}, {max_c}"
             assert all(len(v) == n_assign for k, v in by_vec.items())
             assert len(by_vec) == 20
 
@@ -802,8 +828,9 @@ def test_ann_lsh_multiprobe_superset_and_probe_shape(spark):
                            vec_col="q_embedding", nprobe=7)
 
 
-def test_ivf_topk_broadcast_assignment_unchanged(spark):
+def test_ivf_topk_broadcast_assignment_unchanged(spark, monkeypatch):
     """ivf_topk results are identical whichever assignment path runs."""
+    from shapefile_rs_spark.operators import similarity
     from shapefile_rs_spark.operators.similarity import ivf_topk
 
     rng = np.random.default_rng(7)
@@ -819,11 +846,10 @@ def test_ivf_topk_broadcast_assignment_unchanged(spark):
         (r["query_id"], r["vec_id"], r["rnk"])
         for r in ivf_topk(emb, queries, centroids, k=3, nprobe=2).collect()
     }
+    monkeypatch.setattr(similarity, "CLOSURE_MAX_CENTROIDS", 0)
     forced = {
         (r["query_id"], r["vec_id"], r["rnk"])
-        for r in ivf_topk(
-            emb, queries, centroids, k=3, nprobe=2, closure_max_centroids=0
-        ).collect()
+        for r in ivf_topk(emb, queries, centroids, k=3, nprobe=2).collect()
     }
     assert base == forced
 
@@ -1063,29 +1089,50 @@ def test_minhash_algo_fingerprint_moves_with_params():
     assert base != minhash_algo_fingerprint(3, 8)
 
 
-def test_dedup_clusters_threshold_boundary_job_counts(spark):
-    """Pin the driver/distributed switchover AT the threshold.  N ≤
-    threshold pairs: the limit(N+1) probe IS the fetch — every job in
-    the group must come from the probe's ONE collect call site, and the
-    total task count must not exceed the input's partition count (a
-    count()-then-collect() regression evaluates the frame twice: a
+@pytest.mark.parametrize("op", ["dedup_clusters", "domain_rank"])
+def test_driver_rows_boundary_job_counts(spark, monkeypatch, op):
+    """Pin the driver/distributed switchover AT the DRIVER_ROWS budget.
+    N ≤ budget input rows: the collect_upto probe IS the fetch — every
+    job in the group must come from the probe's ONE collect call site,
+    and the total task count must not exceed the input's partition count
+    (a count()-then-collect() regression evaluates the frame twice: a
     second call site and ≥2× the tasks; CollectLimitExec's incremental
     partition scan-up legitimately splits the ONE action into more than
-    one job, so a bare job count would misfire).  N = threshold+1 falls
-    through to the distributed loop.  Both sides produce the identical
-    chain component."""
+    one job, so a bare job count would misfire).  N = budget+1 falls
+    through to the distributed loop.  Both sides produce the rows of
+    the operator's reference: the chain's one component for
+    dedup_clusters, the DuckDB twin for domain_rank."""
+    import duckdb
+
+    from shapefile_rs_spark import local
     from shapefile_rs_spark.operators.dedup import dedup_clusters
+    from shapefile_rs_spark.operators.graph import domain_rank, domain_rank_sql
 
     sc = spark.sparkContext
     thr = 10
-    chain = [(i, i + 1) for i in range(thr)]  # exactly thr pairs
+    monkeypatch.setattr(local, "DRIVER_ROWS", thr)
+    chain = [(i, i + 1) for i in range(thr)]  # exactly thr rows
+
+    def call(pairs):
+        if op == "dedup_clusters":
+            return dedup_clusters(pairs)
+        return domain_rank(pairs, iterations=3, src_col="id_a", dst_col="id_b")
+
+    def want(rows):
+        if op == "dedup_clusters":
+            return {(i, 0) for i in range(len(rows) + 1)}
+        con = duckdb.connect()
+        con.execute("CREATE TABLE pairs (id_a BIGINT, id_b BIGINT)")
+        con.executemany("INSERT INTO pairs VALUES (?, ?)", rows)
+        sql = domain_rank_sql("SELECT * FROM pairs", iterations=3, src_col="id_a", dst_col="id_b")
+        return {tuple(r) for r in con.execute(sql).fetchall()}
 
     def run_grouped(pairs_rows, group):
         pairs = spark.createDataFrame(pairs_rows, "id_a bigint, id_b bigint")
         n_parts = pairs.rdd.getNumPartitions()
         sc.setJobGroup(group, group)
         try:
-            out = dedup_clusters(pairs, driver_threshold=thr)
+            out = call(pairs)
         finally:
             sc.setJobGroup("", "")
         st = sc.statusTracker()
@@ -1099,20 +1146,21 @@ def test_dedup_clusters_threshold_boundary_job_counts(spark):
         sites = {s for s in sites if s}
         return out, sites, tasks, n_parts
 
-    out_drv, sites, tasks, n_parts = run_grouped(chain, "uf-at-threshold")
+    out_drv, sites, tasks, n_parts = run_grouped(chain, f"{op}-at-budget")
     # one distinct call site (the probe's collect), no partition read twice
     call_lines = {s for s in sites if "collect at" in s}
     assert len(call_lines) == 1, f"expected the single probe call site, saw {sites}"
     assert tasks <= n_parts, f"{tasks} tasks over {n_parts} partitions: double evaluation"
     rows = {tuple(r) for r in out_drv.collect()}
-    assert rows == {(i, 0) for i in range(thr + 1)}
+    assert rows == want(chain)
 
-    out_dist, sites_d, _, _ = run_grouped(chain + [(thr, thr + 1)], "uf-over-threshold")
+    over = chain + [(thr, thr + 1)]
+    out_dist, sites_d, _, _ = run_grouped(over, f"{op}-over-budget")
     assert len({s for s in sites_d if "collect at" in s or "checkpoint" in s.lower()}) > 1, (
-        "threshold+1 pairs must take the distributed loop"
+        "budget+1 rows must take the distributed path"
     )
     rows = {tuple(r) for r in out_dist.collect()}
-    assert rows == {(i, 0) for i in range(thr + 2)}
+    assert rows == want(over)
 
 
 def test_quality_prune_two_phase_matches_window_path(spark, sf_dir):
@@ -1744,6 +1792,29 @@ def test_budget_sample_two_phase_guards(spark):
         budget_sample(nan, 100, strata_col="grp", mega_strata_threshold=1)
     with pytest.raises(ValueError, match="expected an int"):
         budget_sample(dup.limit(1), 100, mega_strata_threshold="AUTO-ish")
+
+
+def test_mix_weights_escaped_target_strata_match_duckdb(spark):
+    """Target strata spelled with a backslash — one in the corpus, one
+    only in the targets — give the DuckDB twin's rows: no phantom
+    stratum decoded from an escape, and the target-only stratum keeps
+    its own name and target."""
+    import duckdb
+
+    from shapefile_rs_spark.operators.curation import mix_weights, mix_weights_sql
+
+    docs = [(1, "a\\b", 5), (2, "en", 7), (3, "en", 1)]
+    targets = {"a\\b": 300, "x\\ny": 100, "en": 200}
+    sdocs = spark.createDataFrame(docs, "doc_id bigint, lang string, n_tokens bigint")
+    got = sorted(tuple(r) for r in mix_weights(sdocs, targets, 1000).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, lang VARCHAR, n_tokens BIGINT)")
+    con.executemany("INSERT INTO d VALUES (?, ?, ?)", docs)
+    sql = mix_weights_sql("SELECT * FROM d", targets, 1000)
+    want = sorted(tuple(r) for r in con.execute(sql).fetchall())
+    assert got == want
+    assert [r[0] for r in got] == ["a\\b", "en", "x\\ny"]
+    assert dict((r[0], r[2]) for r in got)["x\\ny"] == 100
 
 
 def test_mix_weights_and_dict_budget(spark):

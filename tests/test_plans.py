@@ -399,8 +399,9 @@ def test_para_dedup_winner_is_partial_aggregation(spark, sf_dir):
 def test_mix_weights_single_pruned_aggregate(spark, sf_dir):
     """The corpus feeds ONE map-side-combining hash aggregation over a
     two-column scan, scanned exactly once — the target-only-strata rows
-    union in as a VALUES literal re-aggregated at strata scale, NOT as an
-    anti-join (which would plan the data-sized aggregation subtree twice).
+    union in as a driver-built frame re-aggregated at strata scale, NOT
+    as an anti-join (which would plan the data-sized aggregation subtree
+    twice).
     So: one parquet scan, no join of any kind, exactly two exchanges (the
     data agg + the strata-sized re-agg), and the read prunes to exactly
     (lang, tokens)."""
@@ -501,7 +502,7 @@ def test_pq_topk_is_map_only_scan(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_domain_rank_iteration_reuses_persisted_edges(spark, sf_dir):
+def test_domain_rank_iteration_reuses_persisted_edges(spark, sf_dir, monkeypatch):
     """Each round consumes the ONE persisted edges⋈outdeg frame
     (InMemoryTableScan) and the per-round localCheckpoint truncates
     lineage (ExistingRDD at the top of the next round) — T iterations
@@ -515,19 +516,20 @@ def test_domain_rank_iteration_reuses_persisted_edges(spark, sf_dir):
         (F.expr("doc_id * doc_id DIV 64") % 64).alias("dst"),
     ).distinct()
     plan = _plan(domain_rank(edges, iterations=3))
-    # r7: control-sized host sets rank driver-side (VALUES rebuild) —
+    # control-sized host sets rank driver-side (local_frame) —
     # the plan is a local relation; the corpus never re-enters, and no
     # path ever runs the unpartitioned rank window (the r6 weak item)
     assert "Scan parquet" not in plan
     assert "Exchange SinglePartition" not in plan
-    # the scale path (forced via rank_collect_max=0): sample-sort rank,
-    # same rows, still no single-task exchange
-    big = domain_rank(edges, iterations=3, rank_collect_max=0)
-    bplan = _plan(big)
-    assert "Exchange SinglePartition" not in bplan
-    assert sorted(map(tuple, big.collect())) == sorted(
-        map(tuple, domain_rank(edges, iterations=3).collect())
-    )
+    # the scale path (forced via a DRIVER_ROWS budget of 0): sample-sort
+    # rank, same rows, still no single-task exchange
+    with monkeypatch.context() as m:
+        m.setattr("shapefile_rs_spark.local.DRIVER_ROWS", 0)
+        big = domain_rank(edges, iterations=3)
+        bplan = _plan(big)
+        assert "Exchange SinglePartition" not in bplan
+        big_rows = sorted(map(tuple, big.collect()))
+    assert big_rows == sorted(map(tuple, domain_rank(edges, iterations=3).collect()))
 
 
 def test_ivf_pq_topk_broadcasts_queries_no_shuffle_join(spark, sf_dir):
@@ -568,7 +570,7 @@ def test_semdedup_single_cell_shuffle(spark, sf_dir):
 
 
 def test_kmeans_fp_result_is_local_values(spark, sf_dir):
-    """kmeans_fp's returned frame is a driver-built VALUES relation (the
+    """kmeans_fp's returned frame is a driver-built local_frame (the
     knn_cells control-frame pattern): the iterative jobs already ran, so
     the RESULT plan must be a LocalTableScan with no parquet scan and no
     exchange — consumers pay nothing to reuse the centroids."""
@@ -603,7 +605,7 @@ def test_bm25_scoring_plan_take_ordered(spark, sf_dir):
 
 def test_dsir_scoring_plan_broadcast_weights(spark, sf_dir):
     """dsir's scoring plan: tokenize scan → BROADCAST join against the
-    256-row weight VALUES relation → partial-aggregated doc sum — no
+    256-row driver-built weight table → partial-aggregated doc sum — no
     sort-merge join, ONE doc-keyed exchange."""
     from shapefile_rs_spark.operators.curation import dsir_weights
 
@@ -616,7 +618,7 @@ def test_dsir_scoring_plan_broadcast_weights(spark, sf_dir):
 
 def test_incr_dsir_batch_plan_never_touches_corpus(spark, sf_dir):
     """dsir_weights_incremental's scoring plan consumes the checkpointed
-    batch tokenization (ExistingRDD) and the weight VALUES relation —
+    batch tokenization (ExistingRDD) and the driver-built weight table —
     the corpus is structurally unreachable (no parquet scan at all once
     the registry control frame is collected)."""
     from shapefile_rs_spark.operators.curation import (

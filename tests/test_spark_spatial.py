@@ -346,6 +346,48 @@ def test_salted_join_sampled_census_same_rows(spark, sf_dir):
     assert sampled == full and len(full) > 0
 
 
+def test_salted_join_sampled_census_is_repeatable(spark, sf_dir, monkeypatch):
+    """The sampled hot-cell census samples with its fixed seed: two
+    identical salted joins plan the same ``Sample`` (seed 7) and salt
+    the same hot cells."""
+    from shapefile_rs_spark import demo
+    from shapefile_rs_spark.pages import geotag_pages, pages_from_documents
+
+    pages = geotag_pages(pages_from_documents(spark, sf_dir)).select(
+        "doc_id", "lon", "lat"
+    )
+    hot_frames = []
+    broadcast = F.broadcast
+
+    def spy(df):
+        if "_hot" in df.columns:
+            hot_frames.append(df)
+        return broadcast(df)
+
+    monkeypatch.setattr(F, "broadcast", spy)
+
+    def run():
+        out = point_in_polygon_join(
+            pages,
+            demo.oracle_polygons_df(spark),
+            point_cols=["doc_id"],
+            polygon_cols=["polygon_id"],
+            broadcast_polygons=False,
+            salt_factor=4,
+            hot_cell_threshold=10,
+            census_sample=0.3,
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        (sample,) = {ln.strip(" :-+") for ln in plan.splitlines() if "Sample " in ln}
+        hot = {(r["cell_res"], r["cell_id"]) for r in hot_frames[-1].collect()}
+        return sample, hot
+
+    sample, hot = run()
+    assert sample == "Sample 0.0, 0.3, false, 7"
+    assert hot
+    assert run() == (sample, hot)
+
+
 def test_polygon_stats_goldens(spark):
     """Shoelace area subtracts holes; perimeter sums all rings."""
     from shapefile_rs_spark import demo
