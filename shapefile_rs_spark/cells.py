@@ -174,6 +174,28 @@ def classify_cover(
     return cells, full
 
 
+def pair_blocks(counts: np.ndarray, max_pairs: int):
+    """``(item, k)`` for every ``k < counts[item]``, items in order, in
+    blocks of about ``max_pairs`` pairs (an item with more is split along
+    ``k``), so the temporaries of a pairwise kernel stay a few MB whatever
+    the input size.  The items of one block are ascending."""
+    counts = np.asarray(counts, dtype=np.int64)
+    nunit = -(-counts // max_pairs)
+    u_item = np.repeat(np.arange(len(counts)), nunit)
+    if not len(u_item):
+        return
+    u_k = max_pairs * (np.arange(len(u_item)) - np.repeat(np.cumsum(nunit) - nunit, nunit))
+    u_n = np.minimum(max_pairs, counts[u_item] - u_k)
+    u_off = np.cumsum(u_n) - u_n
+    cuts = np.flatnonzero(np.diff(u_off // max_pairs)) + 1
+    for b in np.split(np.arange(len(u_item)), cuts):
+        cnt = u_n[b]
+        yield (
+            np.repeat(u_item[b], cnt),
+            np.repeat(u_k[b] - (u_off[b] - u_off[b[0]]), cnt) + np.arange(int(cnt.sum())),
+        )
+
+
 def classify_cover_batch(
     polygons: Sequence, res, pad_frac: float = 1e-9, max_pairs: int = 1 << 16
 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -192,15 +214,23 @@ def classify_cover_batch(
     * the rest are BOUNDARY cells — their candidates refine exactly.
 
     Rings with fewer than 2 points are ignored; a polygon left with none
-    has zero area and no cells.  Both tests run over every (edge, cell)
-    pair of a polygon, all polygons in one pass: a segment-vs-rect SAT
-    (rect padded by ``pad_frac`` of the cell size so ties and grazings
-    classify BOUNDARY, never FULL) and an even-odd crossing count of the
-    cell centers (the :func:`..geom.pip.crossings_matrix` rule, same
-    operand order, so bit-identical to a per-polygon ray-cast).  Pairs
-    are generated ``max_pairs`` at a time (a polygon with more is split
-    along its edges), which bounds the temporaries whatever the layer
-    size.
+    has zero area and no cells.  Two edge-local tests, all polygons in one
+    pass:
+
+    * boundary: a segment-vs-rect SAT (rect padded by ``pad_frac`` of the
+      cell size so ties and grazings classify BOUNDARY, never FULL) of
+      each edge against the cells of its own bbox widened by one cell —
+      no cell outside can overlap it;
+    * center even-odd: each edge against each cell row whose center line
+      it may straddle (its y range widened by one row); the crossing's x
+      is computed once per (edge, row), and the cells whose center lies
+      left of it are a prefix of the row, found by binary search.
+
+    Both compare the same operands as a test of every (edge, cell) pair of
+    the bbox grid (the :func:`..geom.pip.crossings_matrix` rule for the
+    crossings), so the result is bit-identical to it.  An edge with a NaN
+    coordinate neither overlaps nor crosses anything and is skipped.
+    Pairs are generated ``max_pairs`` at a time (:func:`pair_blocks`).
 
     Semantics preserved: composed with the even-odd refine this reproduces
     the reference contains() truth (examples/geotype-example/src/main.rs:
@@ -245,37 +275,34 @@ def classify_cover_batch(
     px1, py1 = rx0 + w + pad_x, ry0 + h + pad_y
     cx, cy = rx0 + w / 2.0, ry0 + h / 2.0
 
-    # edges: consecutive vertices of one ring, grouped by polygon
+    # edges: consecutive vertices of one ring, with their polygon
     last = np.zeros(len(xy), dtype=bool)
     last[np.cumsum(lens) - 1] = True
     e0 = np.flatnonzero(~last)
+    e0 = e0[~np.isnan(xy[e0]).any(axis=1) & ~np.isnan(xy[e0 + 1]).any(axis=1)]
     x1, y1 = xy[e0, 0], xy[e0, 1]
     x2, y2 = xy[e0 + 1, 0], xy[e0 + 1, 1]
     dx, dy = x2 - x1, y2 - y1
     exlo, exhi = np.minimum(x1, x2), np.maximum(x1, x2)
     eylo, eyhi = np.minimum(y1, y2), np.maximum(y1, y2)
-    n_edge = np.bincount(np.searchsorted(polys, vert_poly[e0]), minlength=len(polys))
-    estart = np.cumsum(n_edge) - n_edge
+    ep = np.searchsorted(polys, vert_poly[e0])
+    er = r[ep]
+    # each edge's cell range, widened by one cell, inside its polygon's grid
+    gx_lo, gy_lo = lonlat_to_ixiy(exlo, eylo, er)
+    gx_hi, gy_hi = lonlat_to_ixiy(exhi, eyhi, er)
+    gx_lo, gx_hi = np.maximum(gx_lo - 1, ix0[ep]), np.minimum(gx_hi + 1, ix1[ep])
+    gy_lo, gy_hi = np.maximum(gy_lo - 1, iy0[ep]), np.minimum(gy_hi + 1, iy1[ep])
+    enx = np.maximum(gx_hi - gx_lo + 1, 0)
+    eny = np.maximum(gy_hi - gy_lo + 1, 0)
 
-    # work blocks of ≤ max_pairs (edge, cell) pairs, packed into chunks
-    step = np.maximum(1, max_pairs // ncell)
-    nblk = -(-n_edge // step)
-    blk_p = np.repeat(np.arange(len(polys)), nblk)
-    blk_j = np.arange(int(nblk.sum()), dtype=np.int64) - np.repeat(np.cumsum(nblk) - nblk, nblk)
-    blk_e = estart[blk_p] + blk_j * step[blk_p]
-    blk_pairs = np.minimum(step[blk_p], estart[blk_p] + n_edge[blk_p] - blk_e) * ncell[blk_p]
-    blk_off = np.cumsum(blk_pairs) - blk_pairs
-    cuts = np.flatnonzero(np.diff(blk_off // max_pairs)) + 1
+    def cell_at(e, cgx, cgy):
+        p = ep[e]
+        return cstart[p] + (cgy - iy0[p]) * nx[p] + (cgx - ix0[p])
 
     boundary = np.zeros(len(gx), dtype=bool)
-    crossings = np.zeros(len(gx), dtype=np.int64)
-    for b in np.split(np.arange(len(blk_p)), cuts):
-        cnt = blk_pairs[b]
-        p = np.repeat(blk_p[b], cnt)
-        loc = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(blk_off[b] - blk_off[b[0]], cnt)
-        e = np.repeat(blk_e[b], cnt) + loc // ncell[p]
-        c = cstart[p] + loc % ncell[p]
-        # boundary: bbox overlap, then the 4 rect corners not all on one side
+    for e, j in pair_blocks(enx * eny, max_pairs):
+        c = cell_at(e, gx_lo[e] + j % enx[e], gy_lo[e] + j // enx[e])
+        # bbox overlap, then the 4 rect corners not all on one side
         hit = np.flatnonzero(
             (exhi[e] >= px0[c]) & (exlo[e] <= px1[c]) & (eyhi[e] >= py0[c]) & (eylo[e] <= py1[c])
         )
@@ -289,14 +316,29 @@ def classify_cover_batch(
             (s00 < 0) & (s01 < 0) & (s10 < 0) & (s11 < 0)
         )
         boundary[hc[~same]] = True
-        # center even-odd: edges straddling the center's y, crossed to its right
-        ccy = cy[c]
-        st = np.flatnonzero((y1[e] > ccy) != (y2[e] > ccy))
-        se, sc = e[st], c[st]
-        xint = dx[se] * (ccy[st] - y1[se]) / dy[se] + x1[se]
-        crossings += np.bincount(sc[cx[sc] < xint], minlength=len(gx))
 
-    center_in = crossings % 2 == 1
+    # center even-odd: per (edge, row) the row's first cell and the count
+    # of cells left of the crossing, as +1/-1 marks summed along the rows
+    marks = np.zeros(len(gx) + 1, dtype=np.int64)
+    for e, j in pair_blocks(eny, max_pairs):
+        row = cell_at(e, ix0[ep[e]], gy_lo[e] + j)
+        ccy = cy[row]
+        st = np.flatnonzero((y1[e] > ccy) != (y2[e] > ccy))
+        se, row = e[st], row[st]
+        xint = dx[se] * (ccy[st] - y1[se]) / dy[se] + x1[se]
+        lo, hi = np.zeros(len(se), dtype=np.int64), nx[ep[se]]
+        while True:
+            todo = np.flatnonzero(lo < hi)
+            if not len(todo):
+                break
+            mid = (lo[todo] + hi[todo]) // 2
+            left = cx[row[todo] + mid] < xint[todo]
+            lo[todo] = np.where(left, mid + 1, lo[todo])
+            hi[todo] = np.where(left, hi[todo], mid)
+        marks += np.bincount(row, minlength=len(marks))
+        marks -= np.bincount(row + lo, minlength=len(marks))
+
+    center_in = np.cumsum(marks[:-1]) % 2 == 1
     keep = boundary | center_in
     return (
         polys[cell_p[keep]],

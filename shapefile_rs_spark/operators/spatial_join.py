@@ -284,34 +284,20 @@ def _ray_cast(
     (point, edge) pairs with :func:`..geom.pip.crossings_matrix`'s operand
     order, so bit-identical to it.  The engine's one containment test:
     the broadcast kernel, :func:`pip_refine_full` and the tile center
-    rule all call it.  Pairs are generated at most ``max_pairs`` at a
-    time: a point whose polygon has more edges is split along them."""
+    rule all call it.  Pairs are generated about ``max_pairs`` at a time
+    (:func:`..cells.pair_blocks`): a point whose polygon has more edges
+    is split along them."""
     e0 = edges["edge_offs"][poly]
-    ne = edges["edge_offs"][poly + 1] - e0
-    # work units of ≤ max_pairs pairs, packed into blocks as
-    # classify_cover_batch packs its (edge, cell) blocks
-    nunit = -(-ne // max_pairs)
-    u_pt = np.repeat(np.arange(len(px)), nunit)
-    u_e = e0[u_pt] + max_pairs * (
-        np.arange(len(u_pt), dtype=np.int64) - np.repeat(np.cumsum(nunit) - nunit, nunit)
-    )
-    u_n = np.minimum(max_pairs, e0[u_pt] + ne[u_pt] - u_e)
-    u_off = np.cumsum(u_n) - u_n
-    cuts = np.flatnonzero(np.diff(u_off // max_pairs)) + 1
     x1, y1, x2, y2 = edges["x1"], edges["y1"], edges["x2"], edges["y2"]
     crossings = np.zeros(len(px), dtype=np.int64)
-    for b in np.split(np.arange(len(u_pt)), cuts) if len(u_pt) else ():
-        cnt = u_n[b]
-        i = np.repeat(u_pt[b], cnt)
-        e = np.repeat(u_e[b] - (u_off[b] - u_off[b[0]]), cnt) + np.arange(int(cnt.sum()))
+    for i, k in C.pair_blocks(edges["edge_offs"][poly + 1] - e0, max_pairs):
+        lo, hi = i[0], i[-1] + 1
+        e = e0[i] + k
         yy = py[i]
         st = np.flatnonzero((y1[e] > yy) != (y2[e] > yy))
         i, e, yy = i[st], e[st], yy[st]
         xint = (x2[e] - x1[e]) * (yy - y1[e]) / (y2[e] - y1[e]) + x1[e]
-        lo = u_pt[b[0]]
-        crossings[lo : u_pt[b[-1]] + 1] += np.bincount(
-            i[px[i] < xint] - lo, minlength=u_pt[b[-1]] + 1 - lo
-        )
+        crossings[lo:hi] += np.bincount(i[px[i] < xint] - lo, minlength=hi - lo)
     return crossings % 2 == 1
 
 

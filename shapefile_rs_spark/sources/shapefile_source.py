@@ -1,17 +1,27 @@
-"""Spark shapefile source: ``binaryFile`` scan → Arrow-vectorized decode.
+"""Spark shapefile source: a driver decode for a small local layer, else a
+``binaryFile`` scan → Arrow-vectorized decode.
 
 Pipeline (SURVEY §3 EP1 re-expressed for Spark):
 
-1. ``spark.read.format("binaryFile")`` loads each ``.shp``/``.shx``/``.dbf``/
-   ``.cpg`` as one row (path, content) — the Spark-native replacement for the
-   reference's ``Read+Seek`` streams (src/reader.rs:649-693).
-2. Rows are grouped per shapefile stem (one shapefile = the coupled triplet,
-   src/lib.rs:3-6) with ``groupBy(stem).pivot-free`` aggregation.
-3. A single ``mapInPandas`` pass decodes every record of every file with the
-   pure-numpy codec (:mod:`shapefile_rs_spark.shapelib`) — batch-vectorized,
-   no per-row Python — emitting one DataFrame row per shape record zipped
-   with its DBF attributes (the ShapeRecordIterator analog,
-   src/reader.rs:164-193).
+1. ``spark.read.format("binaryFile")`` lists each ``.shp``/``.shx``/``.dbf``/
+   ``.cpg``/``.prj``/``.dbt`` (extensions in any case) as one row (path,
+   content) — the Spark-native replacement for the reference's
+   ``Read+Seek`` streams (src/reader.rs:649-693).
+2. A layer of at most :data:`..local.DRIVER_ROWS` records (bounded from
+   the sidecar sizes) and :data:`DRIVER_BYTES` bytes whose files are all
+   ``file:``-local is read and decoded on the driver when
+   :func:`read_shapefiles` is called and comes back as a
+   :func:`..local.local_frame` — a ``LocalTableScan``, so collecting it
+   (the PIP join's polygon side) runs no job.
+3. Otherwise rows are grouped per shapefile stem (one shapefile = the
+   coupled triplet, src/lib.rs:3-6) with ``groupBy(stem)`` aggregation, and
+   a single ``mapInPandas`` pass decodes every record of every file.
+
+Both paths run the same decode (:func:`_decode_stem_group`) with the
+pure-numpy codec (:mod:`shapefile_rs_spark.shapelib`) — batch-vectorized
+for homogeneous indexed files of every family except multipatch, no
+per-row Python — emitting one row per shape record zipped with its DBF
+attributes (the ShapeRecordIterator analog, src/reader.rs:164-193).
 
 Scale notes: one task decodes one shapefile (format caps files at 4 GiB; in
 practice ≪). Thousands of shapefiles parallelize across executors; the
@@ -40,6 +50,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .. import local
 
 SHAPES_SCHEMA = StructType(
     [
@@ -108,17 +120,22 @@ RAW_GEOMETRY_FIELDS = [
 
 def _bulk_frame(bulk, stem, crs_wkt, attrs, on_invalid, raw_geometry=False):
     """Column-vectorized shapes frame from a BulkShapes decode — the whole
-    file becomes pandas columns with zero per-record Python except polygon
-    ring grouping (which needs per-record shoelace classification)."""
+    file becomes pandas columns with no per-record Python except the
+    multipatch WKB (patch-typed ring grouping stays scalar)."""
     import numpy as np
 
     from ..geom.wkb import (
         multilinestrings_wkb_bulk,
         multipoints_wkb_bulk,
+        multipolygons_wkb_bulk,
         points_wkb_bulk,
     )
     from ..shapelib.shp import bulk_to_records
-    from ..shapelib.shptypes import is_multipoint_family, is_point_family
+    from ..shapelib.shptypes import (
+        OrphanedInnerRing,
+        is_multipoint_family,
+        is_point_family,
+    )
 
     st = bulk.shape_type
     po = bulk.point_offsets
@@ -128,7 +145,11 @@ def _bulk_frame(bulk, stem, crs_wkt, attrs, on_invalid, raw_geometry=False):
         wkb = multipoints_wkb_bulk(bulk.xy, po)
     elif st in (3, 13, 23):  # polyline family → MultiLineString
         wkb = multilinestrings_wkb_bulk(bulk.xy, po, bulk.parts, bulk.part_offsets)
-    else:  # polygon / multipatch: ring classification is per record
+    elif st in (5, 15, 25):  # polygon family → MultiPolygon
+        wkb, orphan = multipolygons_wkb_bulk(bulk.xy, po, bulk.parts, bulk.part_offsets)
+        if on_invalid != "null" and orphan.any():
+            raise OrphanedInnerRing("inner ring before any outer ring")
+    else:  # multipatch
         wkb = [
             _shape_wkb_or_null(rec, on_invalid) for rec in bulk_to_records(bulk)[0]
         ]
@@ -256,25 +277,98 @@ def _decode_stem_group(
             yield slow
 
 
-def _stem_grouped(spark: SparkSession, path: str, pattern: str, exts: tuple) -> DataFrame:
+def _sidecar_files(spark: SparkSession, path: str, pattern: str, exts: tuple) -> DataFrame:
+    """The binaryFile scan of every ``pattern.<ext>`` file under ``path``,
+    one row (path, content) per file; extensions match in any case
+    (``zones.SHP`` is a ``.shp``)."""
+    any_case = ["".join(f"[{c.lower()}{c.upper()}]" for c in e) for e in exts]
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"{pattern}.{{{','.join(any_case)}}}")
+        .load(path)
+    )
+
+
+def _stem_grouped(files: DataFrame, exts: tuple) -> DataFrame:
     """One row per shapefile stem with a binary column per sidecar
-    extension — the shared binaryFile scan + stem/ext pivot both the
-    record reader and the header reader group on."""
+    extension — the stem/ext pivot of a :func:`_sidecar_files` scan, which
+    both the record reader and the header reader group on."""
     # SQL text: one call into the JVM per column (Spark string literals
     # unescape backslashes, so the regex dot is spelled \\.)
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"{pattern}.{{{','.join(exts)}}}")
-        .load(path)
-        .selectExpr(
-            r"regexp_replace(path, '\\.[a-z]{3}$', '') AS stem",
-            r"lower(regexp_extract(path, '\\.([a-z]{3})$', 1)) AS ext",
-            "content",
-        )
+    raw = files.selectExpr(
+        r"regexp_replace(path, '\\.[A-Za-z]{3}$', '') AS stem",
+        r"lower(regexp_extract(path, '\\.([A-Za-z]{3})$', 1)) AS ext",
+        "content",
     )
     return raw.groupBy("stem").agg(
         *[F.expr(f"max(CASE WHEN ext = '{e}' THEN content END) AS {e}") for e in exts]
     )
+
+
+def _layer_files(uris: list) -> dict:
+    """stem → {lower-case extension: URI} of a :func:`_sidecar_files`
+    scan's file list (``DataFrame.inputFiles``).  A stem with one
+    extension twice in different cases (``zones.shp`` and ``zones.SHP``,
+    possible on a case-sensitive filesystem) raises ``ValueError``: which
+    file is the layer's would otherwise be a guess."""
+    layer: dict = {}
+    for uri in uris:
+        stem, ext = os.path.splitext(uri)
+        sides = layer.setdefault(stem, {})
+        if ext[1:].lower() in sides:
+            raise ValueError(
+                f"shapefile {stem}: {sides[ext[1:].lower()]} and {uri} differ only in case"
+            )
+        sides[ext[1:].lower()] = uri
+    return layer
+
+
+# Bytes a layer may hold to be decoded on the driver.  The driver decodes
+# one file after another where the distributed read decodes one stem per
+# task behind ~0.2 s of fixed job cost; on a 4-core host (local[4],
+# polygon layers of 3 DBF fields) the driver read wins up to ~3 MB
+# however many stems the layer has (2.9 MB over 4 stems: 0.26 s against
+# 0.38 s) and loses beyond (5.2 MB over 4 stems: 0.41 against 0.34 s).
+# It also caps what the driver holds: the file bytes, the decoded frame
+# and its Arrow copy.
+DRIVER_BYTES = 3 << 20
+
+
+def _driver_layer(layer: dict, exts: tuple) -> Optional[pd.DataFrame]:
+    """The :func:`_stem_grouped` rows of a small local layer (a
+    :func:`_layer_files` map), read on the driver.  ``None`` when a file is
+    not ``file:``-local, the files hold more than :data:`DRIVER_BYTES`, or
+    the layer may hold more than :data:`..local.DRIVER_ROWS` records.  The
+    record bound comes from the sidecar sizes: ``.shx`` has 8 bytes per
+    record after its 100-byte header; without one, the smallest ``.shp``
+    record is a 12-byte null shape."""
+    from urllib.parse import unquote, urlparse
+
+    paths: dict = {}
+    for stem, sides in layer.items():
+        urls = {e: urlparse(u) for e, u in sides.items()}
+        if any(u.scheme != "file" for u in urls.values()):
+            return None
+        paths[unquote(urlparse(stem).path)] = {e: unquote(u.path) for e, u in urls.items()}
+    size = {p: os.path.getsize(p) for sides in paths.values() for p in sides.values()}
+    bound = 0
+    for sides in paths.values():
+        if "shp" in sides:
+            index, rec = ("shx", 8) if "shx" in sides else ("shp", 12)
+            bound += max(0, size[sides[index]] - 100) // rec
+    if bound > local.DRIVER_ROWS or sum(size.values()) > DRIVER_BYTES:
+        return None
+
+    def read(name):
+        with open(name, "rb") as fh:
+            return fh.read()
+
+    # binaryFile's path column spells a local file file:/abs/name
+    rows = [
+        ["file:" + stem] + [read(sides[e]) if e in sides else None for e in exts]
+        for stem, sides in sorted(paths.items())
+    ]
+    return pd.DataFrame(rows, columns=["stem", *exts], dtype=object)
 
 
 def _shapes_schema(raw_geometry: bool) -> StructType:
@@ -313,16 +407,34 @@ def read_shapefiles(
 
     Memo attributes: a ``stem.dbt`` sidecar resolves ``M`` field block
     pointers to memo text in ``attrs_json`` (dbase crate, src/lib.rs:60).
+    Sidecar extensions match in any case (``.SHP`` is a ``.shp``); a stem
+    with one extension twice in different cases raises ``ValueError``.
+
+    A small layer is decoded on the driver when this is called: when its
+    files are all ``file:``-local, hold at most :data:`DRIVER_BYTES`
+    bytes, and hold at most :data:`..local.DRIVER_ROWS` records — bounded
+    from the sidecar sizes, ``(len(.shx) − 100) / 8``, or
+    ``(len(.shp) − 100) / 12`` without an index — the result is a local
+    relation, the same rows as the distributed read.  If that decode
+    raises anything, the call returns the distributed plan instead, so
+    errors surface at action time as ever (a ``PythonException``).
     """
-    grouped = _stem_grouped(
-        spark, path, pattern, ("shp", "shx", "dbf", "cpg", "prj", "dbt")
-    )
-    return grouped.mapInPandas(
-        lambda it: _decode_stem_group(
-            it, expected_type, on_invalid, require_dbf, raw_geometry
-        ),
-        schema=_shapes_schema(raw_geometry),
-    )
+    exts = ("shp", "shx", "dbf", "cpg", "prj", "dbt")
+    files = _sidecar_files(spark, path, pattern, exts)
+    schema = _shapes_schema(raw_geometry)
+
+    def decode(batches):
+        return _decode_stem_group(batches, expected_type, on_invalid, require_dbf, raw_geometry)
+
+    layer = _layer_files(files.inputFiles())
+    try:
+        rows = _driver_layer(layer, exts)
+        shapes = None if rows is None else pd.concat(decode(iter([rows])), ignore_index=True)
+    except Exception:
+        shapes = None  # the distributed plan raises it again, at action time
+    if shapes is not None:
+        return local.local_frame(spark, {f.name: shapes[f.name] for f in schema}, schema)
+    return _stem_grouped(files, exts).mapInPandas(decode, schema=schema)
 
 
 HEADERS_SCHEMA = StructType(
@@ -381,8 +493,10 @@ def read_shapefile_headers(spark: SparkSession, path: str, pattern: str = "*") -
                 )
             yield pd.DataFrame(rows, columns=cols)
 
-    grouped = _stem_grouped(spark, path, pattern, ("shp", "prj"))
-    return grouped.mapInPandas(headers, schema=HEADERS_SCHEMA)
+    exts = ("shp", "prj")
+    files = _sidecar_files(spark, path, pattern, exts)
+    _layer_files(files.inputFiles())  # raises on a case-ambiguous stem
+    return _stem_grouped(files, exts).mapInPandas(headers, schema=HEADERS_SCHEMA)
 
 
 def shapes_with_typed_attrs(shapes: DataFrame, fields: dict) -> DataFrame:

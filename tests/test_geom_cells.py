@@ -309,3 +309,161 @@ def test_classify_cover_batch_matches_per_polygon(layer, max_pairs):
         ):
             assert np.array_equal(cells[mine], want_cells)
             assert np.array_equal(full[mine], want_full)
+
+
+@st.composite
+def _edge_cases_layers(draw):
+    """Layers the edge-local covering must get exactly right: stars that
+    cross the antimeridian or reach a pole, polygons whose vertices sit on
+    cell corners (edges along grid lines), and rings with a NaN or ±inf
+    vertex (covered at a fixed coarse res, as adaptive res rejects them)."""
+    polys, res = [], []
+    for _ in range(draw(st.integers(1, 5))):
+        kind = draw(st.sampled_from(["star", "antimeridian", "pole", "grid", "nonfinite"]))
+        r = draw(st.integers(0, 10))
+        if kind == "grid":
+            n = 1 << r
+            bx, by = draw(st.integers(0, n - 1)), draw(st.integers(0, n - 1))
+            k = draw(st.integers(3, 8))
+            gxs = draw(st.lists(st.integers(-1, 4), min_size=k, max_size=k))
+            gys = draw(st.lists(st.integers(-1, 4), min_size=k, max_size=k))
+            ring = np.column_stack(
+                [-180.0 + (bx + np.array(gxs)) * (360.0 / n), -90.0 + (by + np.array(gys)) * (180.0 / n)]
+            )
+            polys.append([np.vstack([ring, ring[:1]])])
+            res.append(r)
+            continue
+        cx = draw(st.floats(-179.0, 179.0))
+        cy = draw(st.floats(-89.0, 89.0))
+        if kind == "antimeridian":
+            cx = draw(st.sampled_from([-1.0, 1.0])) * draw(st.floats(179.0, 180.5))
+        if kind == "pole":
+            cy = draw(st.sampled_from([-1.0, 1.0])) * draw(st.floats(88.5, 90.5))
+        radius = draw(st.floats(1e-3, 2.0))
+        k = draw(st.integers(3, 12))
+        t = np.sort(np.array(draw(st.lists(st.floats(0.0, 6.28), min_size=k, max_size=k))))
+        ring = np.column_stack([cx + radius * np.cos(t), cy + radius * np.sin(t)])
+        rings = [np.vstack([ring, ring[:1]])]
+        if draw(st.booleans()):
+            rings.append(rings[0][::-1] * 0.5 + np.array([cx, cy]) * 0.5)
+        if kind == "nonfinite":
+            rings[0][draw(st.integers(0, k - 1))] = draw(
+                st.sampled_from([(np.nan, 1.0), (1.0, np.nan), (np.inf, 0.0), (0.0, -np.inf)])
+            )
+            polys.append(rings)
+            res.append(draw(st.integers(0, 4)))
+            continue
+        polys.append(rings)
+        bbox = P.rings_bbox(rings)
+        res.append(C.adaptive_cover_res(*bbox, draw(st.sampled_from([1, 9, 64, 300])), 16))
+    return polys, res
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.one_of(_edge_cases_layers(), _star_layers()), st.sampled_from([1, 7, 1 << 16]))
+def test_classify_cover_batch_edge_local_matches_all_pairs(layer, max_pairs):
+    """The edge-local covering kernel (each edge against its own widened
+    bbox cells and straddled rows) returns exactly what testing every
+    (edge, cell) pair of the bbox grid returns — polygons, cells, order
+    and FULL flags — at any pair chunk size."""
+    from tests.cover_oracle import classify_cover_all_pairs
+
+    polys, res = layer
+    with np.errstate(invalid="ignore", over="ignore", divide="ignore"):
+        got = C.classify_cover_batch(polys, res, max_pairs=max_pairs)
+        want = classify_cover_all_pairs(polys, res)
+    for g, w in zip(got, want):
+        assert np.array_equal(g, w)
+
+
+@st.composite
+def _polygon_records(draw, min_rings=0):
+    """Polygon records as (xy, parts): rings that are empty, 1-point,
+    unclosed, closed, zero-area, near-zero-area around a large offset
+    (where the shoelace sum's rounding depends on the summation order), or
+    hold a NaN/±inf coordinate, in either orientation — so inner rings
+    before any outer ring (orphans) occur."""
+    coord = st.one_of(
+        st.floats(-1e3, 1e3), st.sampled_from([0.0, -0.0, 1.0, np.nan, np.inf, -np.inf])
+    )
+    rings = []
+    for _ in range(draw(st.integers(min_rings, 4))):
+        kind = draw(st.sampled_from(["empty", "one", "open", "closed", "flat", "thin", "odd"]))
+        if kind == "empty":
+            ring = np.empty((0, 2))
+        elif kind == "one":
+            ring = np.array([[draw(coord), draw(coord)]])
+        elif kind in ("open", "closed"):
+            k = draw(st.integers(2, 12))
+            ring = np.array([[draw(st.floats(-1e3, 1e3)), draw(st.floats(-1e3, 1e3))] for _ in range(k)])
+            if kind == "closed":
+                ring = np.vstack([ring, ring[:1]])
+        elif kind == "flat":
+            k = draw(st.integers(2, 9))
+            ring = np.column_stack([np.arange(k, dtype=float), np.full(k, draw(st.floats(-1e3, 1e3)))])
+        elif kind == "thin":
+            k = draw(st.integers(3, 40))
+            base = draw(st.sampled_from([1e8, -3e7, 0.0]))
+            eps = draw(st.sampled_from([1e-300, 1e-12, 1e-9, 1e-7]))
+            wiggle = np.array(draw(st.lists(st.integers(-2, 2), min_size=k, max_size=k)), dtype=float)
+            ring = np.column_stack([base + np.arange(k, dtype=float), base + eps * wiggle])
+        else:
+            k = draw(st.integers(2, 6))
+            ring = np.array([[draw(coord), draw(coord)] for _ in range(k)])
+        rings.append(ring[::-1] if draw(st.booleans()) else ring)
+    xy = np.vstack(rings) if rings else np.empty((0, 2))
+    parts = np.cumsum([0] + [len(r) for r in rings[:-1]]).astype(np.int32) if rings else np.empty(0, np.int32)
+    return xy, parts
+
+
+def _scalar_wkb(xy, parts):
+    """(wkb, orphan) of one record by the scalar path."""
+    from shapefile_rs_spark.shapelib.shp import ShapeRec
+
+    try:
+        return W.shape_to_wkb(ShapeRec(5, xy, parts=parts, bbox_xy=(0.0,) * 4)), False
+    except OrphanedInnerRing:
+        return None, True
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_polygon_records(), min_size=1, max_size=6))
+def test_multipolygons_wkb_bulk_matches_shape_to_wkb(records):
+    """The bulk polygon encoder is byte-identical to :func:`shape_to_wkb`
+    on every record, and flags exactly the records the scalar path
+    rejects with OrphanedInnerRing."""
+    po = np.cumsum([0] + [len(xy) for xy, _ in records])
+    fo = np.cumsum([0] + [len(p) for _, p in records])
+    with np.errstate(all="ignore"):
+        got, orphan = W.multipolygons_wkb_bulk(
+            np.vstack([xy for xy, _ in records]),
+            po,
+            np.concatenate([p for _, p in records]),
+            fo,
+        )
+        want = [_scalar_wkb(xy, p) for xy, p in records]
+    assert got == [w for w, _ in want]
+    assert orphan.tolist() == [o for _, o in want]
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_polygon_records(min_rings=1), min_size=1, max_size=5))
+def test_bulk_frame_polygon_on_invalid(records):
+    """Through the source's bulk decode: ``on_invalid="error"`` raises
+    OrphanedInnerRing when any record has an orphan inner ring, and
+    ``on_invalid="null"`` nulls exactly those records' wkb."""
+    from shapefile_rs_spark.shapelib.shp import ShapeRec, read_shp_bulk, write_shp
+    from shapefile_rs_spark.sources.shapefile_source import _bulk_frame
+
+    recs = [ShapeRec(5, xy, parts=p, bbox_xy=(0.0,) * 4) for xy, p in records]
+    bulk = read_shp_bulk(*write_shp(recs))
+    with np.errstate(all="ignore"):
+        want = [_scalar_wkb(xy, p) for xy, p in records]
+        if any(o for _, o in want):
+            with pytest.raises(OrphanedInnerRing):
+                _bulk_frame(bulk, "s", None, [None] * len(recs), "error")
+        else:
+            frame = _bulk_frame(bulk, "s", None, [None] * len(recs), "error")
+            assert frame["wkb"].tolist() == [w for w, _ in want]
+        frame = _bulk_frame(bulk, "s", None, [None] * len(recs), "null")
+    assert frame["wkb"].tolist() == [w for w, _ in want]

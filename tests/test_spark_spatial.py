@@ -754,19 +754,22 @@ def test_pip_join_null_wkb_polygon_contains_nothing(spark, broadcast):
     assert got == want and len(want) > 0
 
 
-def test_broadcast_join_evaluates_polygon_side_once(spark, join_fixture_dir):
-    """The auto-broadcast join reads a shapefile-sourced polygon layer once:
-    its job group holds exactly the file-scan stages of ONE collect() of the
-    polygon side (not a count, a collect and a broadcast re-read).  Stages
-    are counted from Spark's status store; the point side reads no file."""
+def test_broadcast_join_evaluates_polygon_side_once(spark, join_fixture_dir, monkeypatch):
+    """The auto-broadcast join reads a shapefile-sourced polygon layer at
+    most once.  A small local layer is decoded on the driver when it is
+    read, so the join scans no file at all; a layer read distributed
+    (``DRIVER_ROWS = 0`` at read time) is scanned by exactly the file-scan
+    stages of ONE collect() of the polygon side (not a count, a collect and
+    a broadcast re-read).  Stages are counted from Spark's status store;
+    the point side reads no file."""
     from py4j.protocol import Py4JJavaError
 
     sc = spark.sparkContext
-    polygons = (
-        shapes_with_typed_attrs(
+
+    def polygon_side():
+        return shapes_with_typed_attrs(
             read_shapefiles(spark, join_fixture_dir, pattern="polygons"), {"id": "bigint"}
         ).select(F.col("id").alias("polygon_id"), "wkb")
-    )
 
     def file_scan_stages(group, action):
         sc.setJobGroup(group, group)
@@ -790,13 +793,18 @@ def test_broadcast_join_evaluates_polygon_side_once(spark, join_fixture_dir):
                 n += sum(1 for st in attempts if st.numCompleteTasks() and st.inputBytes() > 0)
         return out, n
 
+    def join(polygons):
+        return point_in_polygon_join(_demo_points(spark), polygons, point_cols=["doc_id"]).collect()
+
+    small = polygon_side()
+    rows, in_join = file_scan_stages("poly-side-local-join", lambda: join(small))
+    assert rows and in_join == 0, f"a driver-decoded layer scanned in {in_join} stages"
+
+    with monkeypatch.context() as m:
+        m.setattr("shapefile_rs_spark.local.DRIVER_ROWS", 0)
+        polygons = polygon_side()
     _, once = file_scan_stages("poly-side-collect", lambda: polygons.collect())
-    rows, in_join = file_scan_stages(
-        "poly-side-join",
-        lambda: point_in_polygon_join(
-            _demo_points(spark), polygons, point_cols=["doc_id"]
-        ).collect(),
-    )
+    rows_dist, in_join = file_scan_stages("poly-side-join", lambda: join(polygons))
     assert once >= 1
     assert in_join == once, f"polygon side scanned in {in_join} stages, one collect takes {once}"
-    assert rows
+    assert sorted(rows_dist) == sorted(rows)
