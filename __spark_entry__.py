@@ -1483,7 +1483,7 @@ def q_lang_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-window rollup (batch twin of the streaming hourly aggregation)."""
+    """Time-window rollup: event counts per hour."""
     events = _events(spark, sf_dir)
     return events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour_start")
@@ -1532,8 +1532,7 @@ def q_doc_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (batch twin of the streaming stateful
-    sessionizer): 30-min-gap sessions per user via window lag + running
+    """Gap-based sessionization: 30-min-gap sessions per user via window lag + running
     boundary sum; all-integer output."""
     from shapefile_rs_spark.operators.sessions import gap_sessions
 

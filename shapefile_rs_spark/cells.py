@@ -94,14 +94,6 @@ def cell_bounds(cell: int) -> Tuple[float, float, float, float]:
     return float(lon0), float(lat0), float(lon0 + w), float(lat0 + h)
 
 
-def cell_parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
-    res, ix, iy = decode_cell(cell)
-    shift = res - parent_res
-    if np.any(shift < 0):
-        raise ValueError("parent_res coarser than cell res required")
-    return encode_ixiy(ix >> shift, iy >> shift, parent_res)
-
-
 def k_ring(cell: int, k: int) -> np.ndarray:
     """All cells within Chebyshev distance k (the H3 k-ring analog).
     x wraps around the antimeridian; y clamps at the poles."""

@@ -9,7 +9,7 @@ expressions.
 
 Polygon 1: square (-0.005,-0.005)…(10.005,10.005) with hole
 (3.995,3.995)…(6.005,6.005).  Polygon 2: triangle (20.005,0.005),
-(30.005,5.005), (20.005,10.005).  Hot clusters (pages.HOT_CENTERS) sit
+(30.005,5.005), (20.005,10.005).  Hot clusters (pages.lonlat_sql) sit
 inside polygon 1 (2,2), (8,8) and polygon 2 (25,5).
 """
 
@@ -70,8 +70,6 @@ POLY2_SQL = (
     f"AND -10.0*(lat - 5.005) - 5.0*(lon - {_TX1}) > 0 "
     f"AND lon > {_TX0})"
 )
-
-POLY_SQL = {1: POLY1_SQL, 2: POLY2_SQL}
 
 # KNN demo query points (inside/near the hot clusters + one far away)
 KNN_QUERIES = [

@@ -19,7 +19,7 @@ All functions are numpy-vectorized per ring (no per-point Python loops).
 
 from __future__ import annotations
 
-from typing import List, Sequence, Tuple
+from typing import List, Sequence
 
 import numpy as np
 
@@ -63,12 +63,6 @@ def close_and_reorder(ring: np.ndarray, declared_role: int) -> np.ndarray:
     if len(ring) and ring_role(ring) != declared_role:
         ring = ring[::-1].copy()
     return ring
-
-
-def classify_parts(xy: np.ndarray, part_slices: Sequence[Tuple[int, int]]) -> List[int]:
-    """Role per part of a polygon record (read path: Polygon = Polyline +
-    per-part ring typing, src/record/polygon.rs:410-414)."""
-    return [ring_role(xy[s:e]) for s, e in part_slices]
 
 
 def group_rings(

@@ -35,11 +35,14 @@ def collect_upto(df: DataFrame, n: int | None = None) -> list | None:
 
 def local_frame(spark, data, schema) -> DataFrame:
     """A driver-built frame: ``data`` is a sequence of rows (tuples in
-    schema order) or a mapping of column name → values (lists or numpy
-    arrays); ``schema`` is a ``StructType`` or a DDL string.  No rows
-    give the typed empty frame."""
+    schema order), a mapping of column name → values (lists or numpy
+    arrays) or a pyarrow Table already in the schema's Arrow types;
+    ``schema`` is a ``StructType`` or a DDL string.  No rows give the
+    typed empty frame."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
+    if isinstance(data, pa.Table):
+        return spark.createDataFrame(data, schema)
     if not isinstance(data, Mapping):
         rows = list(data)
         data = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}

@@ -1480,30 +1480,6 @@ def dsir_weights_incremental(
     return weights, delta
 
 
-def dsir_doc_bucket_counts(
-    docs: DataFrame,
-    target_pred: Column,
-    n_buckets: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """DOC-grain DSIR stats: ``(_id, f, t, q)`` — one row per (document,
-    bucket) with that document's own target/raw token counts.  This is
-    the registry's content-idempotent form (the line_doc_pairs move): a
-    re-SENT batch produces the identical rows, so streaming maintenance
-    can anti-join on ``(_id, f)`` and never double-count — per-bucket
-    SUM over the pair stage reconstructs :func:`dsir_registry` exactly
-    (pinned in pytest)."""
-    return (
-        _dsir_tokens(docs, target_pred, n_buckets, id_col, text_col)
-        .groupBy(F.col(id_col).alias("_id"), F.col("_f").alias("f"))
-        .agg(
-            F.sum("_is_t").alias("t"),
-            F.count(F.lit(1)).alias("q"),
-        )
-    )
-
-
 def epoch_order(
     docs: DataFrame,
     seed: str = "epoch1",

@@ -3,9 +3,9 @@
 Every operator has an exactly equivalent DuckDB oracle built from shared
 primitives (md5 hex strings compare identically under both engines' binary
 collation).  Hot-path hashing runs as Arrow-batched hashlib/numpy pandas
-UDFs with bit-identical pure-Catalyst HOF spellings kept alongside (the
-``*_expr`` / un-suffixed forms) for oracle derivation and plans that must
-avoid Python workers.
+UDFs; the simhash kernel keeps its bit-identical pure-Catalyst HOF
+spelling (:func:`simhash_from_hashes_expr`) as the reference it is pinned
+against.
 
 Scale notes (100 TB story):
 * exact dedup — one hash-shuffle on the content digest; map-side partial
@@ -35,16 +35,6 @@ from ..session import widen
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
-
-
-def exact_dedup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "url"
-) -> DataFrame:
-    """Content-hash groups: (text_md5, n_copies, keeper_id).  The keeper is
-    the min id — deterministic and oracle-friendly."""
-    return df.groupBy(F.md5(F.col(text_col).cast("binary")).alias("text_md5")).agg(
-        F.count(F.lit(1)).alias("n_copies"), F.min(id_col).alias("keeper_id")
-    )
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "url") -> DataFrame:
@@ -134,9 +124,8 @@ def minhash_from_hashes(hs: Column, num_hashes: int = 12) -> Column:
     Arrow-batched numpy implementation: one (num_hashes × total_shingles)
     broadcast multiply + ``minimum.reduceat`` per batch.  Exact-integer
     arithmetic (h < 2³¹, a < 2³¹ ⇒ a·h < 2⁶² fits int64), so the values are
-    bit-identical to the expression form and to the DuckDB oracle.
-    Measured ~10× over the unrolled higher-order-function expression (HOFs
-    are interpreted per element; see :func:`minhash_from_hashes_expr`).
+    bit-identical to the DuckDB oracle.  Measured ~10× over an unrolled
+    higher-order-function expression (HOFs are interpreted per element).
 
     Feed a ``hs`` COLUMN from a prior projection (as
     :func:`minhash_lsh_pairs` does) so the md5 base-hash pass runs once,
@@ -181,22 +170,6 @@ def minhash_from_hashes(hs: Column, num_hashes: int = 12) -> Column:
         return pd.Series(out, dtype=object)
 
     return _minhash(hs)
-
-
-def minhash_from_hashes_expr(hs: Column, num_hashes: int = 12) -> Column:
-    """Pure-Catalyst spelling of :func:`minhash_from_hashes` (bit-identical
-    output).  The mins are UNROLLED with literal (a_i, b_i): higher-order
-    lambdas are interpreted, and an element_at parameter table inside a
-    nested lambda measured 8× slower than literal constants.  Kept for
-    plans that must avoid Python workers entirely."""
-
-    def mapper(a: int, b: int):
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE31)
-
-    a, b = _mh_params(num_hashes)
-    return F.array(
-        *[F.array_min(F.transform(hs, mapper(a[i], b[i]))) for i in range(num_hashes)]
-    )
 
 
 def minhash_signature(shingles: Column, num_hashes: int = 12) -> Column:
@@ -862,23 +835,10 @@ def dedup_clusters(
 # ---------------------------------------------------------------------------
 
 
-def word_spans(text: Column, k: int = 5) -> Column:
-    """NON-overlapping k-word spans (stride k; C4's three-sentence-span
-    analog for the single-space corpus convention).  The tail span may be
-    shorter; empty text yields one empty span."""
-    words = F.split(text, " ")
-    n_spans = F.greatest(
-        F.lit(1), F.ceil(F.size(words) / F.lit(k)).cast("int")
-    )
-    return F.transform(
-        F.sequence(F.lit(0), n_spans - F.lit(1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i * F.lit(k) + F.lit(1), k)),
-    )
-
-
 def word_spans_sql(text_sql: str, k: int = 5) -> str:
-    """DuckDB twin of :func:`word_spans`.  ``coalesce(text, '')`` mirrors
-    the Spark side, where ``concat_ws`` over a null slice yields '' — so a
+    """DuckDB spelling of :func:`span_dedup_stats`' non-overlapping k-word
+    spans (stride k; the tail span may be shorter).  ``coalesce(text, '')``
+    mirrors the Spark side, which splits a null text as '' — so a
     null-text doc produces the single span '' in BOTH engines."""
     words = f"string_split(coalesce({text_sql}, ''), ' ')"
     n = f"greatest(1, CAST(ceil(len({words}) / {k}.0) AS INTEGER))"
@@ -1583,8 +1543,7 @@ def para_dedup_incremental(
     schema (``n_paras``/``n_kept``/``text_dedup``); ``new_paras`` is the
     one-column (``para``) frame of this batch's surviving eligible
     paragraphs — exactly the rows to APPEND to the registry (the
-    lineage/append_delta maintenance pattern the committed MinHash
-    signature stage uses, streaming/dedup.py), keeping the next batch's
+    ``lineage`` ``append_delta`` commit pattern), keeping the next batch's
     join input precomputed.  registry(corpus) ∪ appended batches ==
     registry(corpus ∪ batches) — pinned in pytest, so incremental and
     from-scratch dedup agree.
@@ -1866,12 +1825,10 @@ def line_doc_pairs(
     min_len: int = 1,
 ) -> DataFrame:
     """Distinct ``(line, _id)`` pairs of eligible lines — the registry's
-    doc-grain form.  The streaming maintenance commits THESE (anti-join
-    keyed on both columns) instead of per-line counts: a replayed or
-    re-sent batch's pairs already exist and append nothing, so the
-    maintained registry is content-idempotent without any doc-id
-    disjointness contract (counts alone cannot tell a recount from a new
-    document)."""
+    doc-grain form: a replayed or re-sent batch yields the same pairs, so
+    a registry that appends them keyed on both columns is
+    content-idempotent without any doc-id disjointness contract (counts
+    alone cannot tell a recount from a new document)."""
     return (
         docs.select(
             F.col(id_col).alias("_id"),
@@ -1896,8 +1853,8 @@ def line_prune_incremental(
     committed line-frequency registry without re-reading the corpus.  A
     batch line drops from EVERY batch doc when its TOTAL doc-frequency —
     registry count plus this batch's distinct-doc count — reaches
-    ``max_docs``; already-emitted corpus docs are not retracted (the
-    streaming reality: boilerplate only ever gains frequency).  Because
+    ``max_docs``; already-emitted corpus docs are not retracted
+    (boilerplate only ever gains frequency).  Because
     the threshold test uses the combined count, the cleaned batch is
     EXACTLY ``line_prune(corpus ∪ batch)`` restricted to the batch's
     docs (pinned in pytest) — the incremental and global contracts agree

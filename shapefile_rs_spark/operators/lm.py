@@ -123,37 +123,6 @@ def lm_bigram_counts(
     )
 
 
-def lm_doc_unigram_counts(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """DOC-grain unigram counts ``(_id, w, c)`` — the registry's
-    content-idempotent form (the dsir_doc_bucket_counts move): a re-SENT
-    batch produces identical rows, so streaming maintenance anti-joins
-    on ``(_id, w)`` and never double-counts; per-token SUM over the pair
-    stage reconstructs :func:`lm_unigram_counts` exactly (pinned)."""
-    return (
-        docs.select(
-            F.col(id_col).alias("_id"),
-            F.explode(F.expr(_tokens_expr(text_col, "spark"))).alias("w"),
-        )
-        .groupBy("_id", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def lm_doc_bigram_counts(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """DOC-grain bigram counts ``(_id, w1, w2, c)`` — the bigram half of
-    the content-idempotent registry form; anti-join key
-    ``(_id, w1, w2)``."""
-    return (
-        _bigrams(docs, id_col, text_col)
-        .groupBy(F.col(id_col).alias("_id"), "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
 def _lm_score_from_counts(
     docs: DataFrame,
     uni_all: DataFrame,

@@ -2,9 +2,8 @@
 
 The Spark-side plumbing is REAL — binary schemas, Arrow batch shapes,
 ``mapInPandas`` decode/feature/resize/frame-sample operators, partitioning
-— while the codec layer is a deterministic fake format (the sandbox ships
-no image/audio libraries).  Real decoders plug in at the two clearly-marked
-stubs (:func:`decode_real_image`, :func:`decode_real_audio`).
+— while the codec layer is a deterministic fake format (no image/audio
+codec library is a dependency).
 
 Fake formats (all big-endian headers, payload bytes are pure arithmetic in
 ``doc_id`` so a SQL oracle can recompute every derived stat):
@@ -44,16 +43,6 @@ from ..session import widen
 
 IMG_MAGIC = b"IMG1"
 VID_MAGIC = b"VID1"
-
-
-def decode_real_image(blob: bytes):  # pragma: no cover - stub
-    """STUB: real JPEG/PNG decode (PIL/libvips) plugs in here."""
-    raise NotImplementedError("real image codecs are not available in this environment")
-
-
-def decode_real_audio(blob: bytes):  # pragma: no cover - stub
-    """STUB: real audio decode (soundfile/ffmpeg) plugs in here."""
-    raise NotImplementedError("real audio codecs are not available in this environment")
 
 
 # ---------------------------------------------------------------------------
@@ -240,8 +229,7 @@ AUDIO_STATS_SCHEMA = StructType(
 
 def decode_audio(df: DataFrame, id_col: str = "doc_id", bin_col: str = "audio") -> DataFrame:
     """AUD1 binary → (sample_rate, n_samples, sum|s|, mean|s|): real numpy
-    frombuffer parsing of the fake format; :func:`decode_real_audio` is the
-    stub where soundfile/ffmpeg plug in."""
+    frombuffer parsing of the fake format."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

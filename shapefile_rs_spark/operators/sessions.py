@@ -1,5 +1,4 @@
-"""Gap-based sessionization (batch) — the exact-SQL twin of the streaming
-``applyInPandasWithState`` sessionizer (streaming/events.py).
+"""Gap-based sessionization (batch).
 
 Pure window composition: a session boundary is a gap over ``gap_sec``
 between consecutive events of a user; the session index is the running sum

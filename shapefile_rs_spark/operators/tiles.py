@@ -127,14 +127,6 @@ def _tiles(
     return polygons.mapInPandas(cover, schema=out_schema)
 
 
-def polygon_tiles(
-    polygons: DataFrame, z: int, wkb_col: str = "wkb", id_cols: Optional[List[str]] = None
-) -> DataFrame:
-    """Explode each polygon into the z/x/y tiles its bbox covers."""
-    id_cols = id_cols or [c for c in polygons.columns if c != wkb_col]
-    return _tiles(polygons, z, wkb_col, id_cols, center_rule=False)
-
-
 def tile_polygon_assignment(
     polygons: DataFrame,
     z: int,
@@ -144,7 +136,7 @@ def tile_polygon_assignment(
 ) -> DataFrame:
     """(polygon_id, tile_z, tile_x, tile_y): tiles whose CENTER lies inside
     the polygon (center_rule) — deterministic, oracle-expressible
-    assignment, in the same single Python stage as :func:`polygon_tiles`.
+    assignment, in one Python stage.
     Without center_rule, returns the bbox covering (superset)."""
     return _tiles(polygons, z, wkb_col, [polygon_key], center_rule)
 

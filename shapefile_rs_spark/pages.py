@@ -37,11 +37,6 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from .session import widen
 
-# Hot-cluster centers: inside polygon 1 (2,2), inside polygon 1 (8,8),
-# inside polygon 2 the triangle (25,5).  Cluster spread ±0.02° ⇒ at the
-# join resolution each cluster lands in ~1 cell → hot cells.
-HOT_CENTERS = [(2.0, 2.0), (8.0, 8.0), (25.0, 5.0)]
-
 
 def lonlat_sql(id_col: str = "doc_id") -> tuple:
     """(lon_sql, lat_sql) — the EXACT arithmetic the engine replicates;
@@ -176,26 +171,11 @@ _GEO_RE = r'<meta name="geo\.position" content="([^";]+);([^"]+)"'
 # ≥1-char requirements), so the first match site is identical
 _GEO_PAIR_RE = r'<meta name="geo\.position" content="([^";]+;[^"]+)"'
 _TEXT_RE_CORE = r"<body>(.*)</body>"
-_TEXT_RE = "(?s)" + _TEXT_RE_CORE
-
-
-def extract_text_expr(html: Column) -> Column:
-    """Body text from html bytes, JVM-side (null when no body tag)."""
-    return F.nullif(F.regexp_extract(F.decode(html, "UTF-8"), _TEXT_RE, 1), F.lit(""))
-
-
-def extract_geo_exprs(html: Column) -> tuple:
-    """(lat, lon) columns parsed JVM-side; nulls when the tag is absent.
-    CAST(string AS DOUBLE) is correctly rounded → bit-exact round-trip."""
-    h = F.decode(html, "UTF-8")
-    lat = F.nullif(F.regexp_extract(h, _GEO_RE, 1), F.lit("")).cast("double")
-    lon = F.nullif(F.regexp_extract(h, _GEO_RE, 2), F.lit("")).cast("double")
-    return lat, lon
 
 
 @F.pandas_udf(StringType())
 def extract_text(html: pd.Series) -> pd.Series:
-    """Arrow-vectorized twin of :func:`extract_text_expr` — the library
+    """Body text from html bytes (null when no body tag): the library
     surface for externally-sourced WARC html."""
     import re
 
@@ -208,7 +188,7 @@ _GEO_SCHEMA = StructType([StructField("lat", DoubleType()), StructField("lon", D
 
 @F.pandas_udf(_GEO_SCHEMA)
 def extract_geo(html: pd.Series) -> pd.DataFrame:
-    """Arrow-vectorized twin of :func:`extract_geo_exprs`."""
+    """(lat, lon) parsed from the html geo tag; nulls when it is absent."""
     s = html.apply(lambda b: None if b is None else bytes(b).decode("utf-8", "replace"))
     ext = s.str.extract(_GEO_RE)
 
@@ -237,8 +217,8 @@ def geotag_pages(pages: DataFrame, use_arrow_udf: bool = False) -> DataFrame:
             .withColumn("lon", F.col("_geo.lon"))
             .drop("_geo")
         )
-    # ONE decode + ONE regex + one split per row: the two-column
-    # extract_geo_exprs spelling evaluates decode(html) and the regex
+    # ONE decode + ONE regex + one split per row: a two-column
+    # regexp_extract spelling evaluates decode(html) and the regex
     # twice (Catalyst does not CSE across projection columns — measured
     # ~2x the parse stage on the 6M-page flagship).  The combined group
     # ([^";]+;[^"]+) is exactly group1 + ';' + group2 of _GEO_RE, so

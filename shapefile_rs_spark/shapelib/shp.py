@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
-from typing import Iterable, Optional, Sequence
+from typing import Optional, Sequence
 
 import numpy as np
 
@@ -240,7 +240,7 @@ def decode_record_body(shape_type: int, body: memoryview, body_size: int) -> Sha
         return ShapeRec(st, xy, z=z, m=m, bbox_xy=bbox, z_range=z_range, m_range=m_range)
 
     # multipart family: polyline / polygon / multipatch
-    if body_size < 44 or len(body) < 44:
+    if body_size < 40 or len(body) < 40:
         raise InvalidShapeRecordSize("multipart frame")
     bbox = tuple(_f64(body, 0, 4).tolist())
     p = int(_i32(body, 32, 1)[0])
@@ -534,7 +534,7 @@ def read_shp_bulk(
         )
         off_xy = body + 36
     else:  # multipart family
-        if (body_size < 44).any() or int(body.max()) + 44 > len(base):
+        if (body_size < 40).any() or int(body.max()) + 40 > len(base):
             raise _BulkUnsupported("short multipart record")
         p = _gather_fixed(base, body + 32, 4).copy().view("<i4").ravel().astype(np.int64)
         n = _gather_fixed(base, body + 36, 4).copy().view("<i4").ravel().astype(np.int64)
@@ -748,12 +748,6 @@ def read_nth_shape(data: bytes, shx: Optional[bytes], n: int) -> ShapeRec:
     (st,) = struct.unpack_from("<i", data, pos + 8)
     body = memoryview(data)[pos + 12 : pos + 12 + record_size_words * 2 - 4]
     return decode_record_body(st, body, record_size_words * 2 - 4)
-
-
-def shape_count(shx: bytes) -> int:
-    """Count from index length alone (src/reader.rs:489-495)."""
-    header = read_header(shx)
-    return (header.file_length_words * 2 - HEADER_SIZE) // 8
 
 
 # ---------------------------------------------------------------------------

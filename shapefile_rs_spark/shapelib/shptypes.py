@@ -43,23 +43,6 @@ ALL_SHAPE_TYPES = frozenset(
     }
 )
 
-SHAPE_TYPE_NAMES = {
-    NULL_SHAPE: "NullShape",
-    POINT: "Point",
-    POLYLINE: "Polyline",
-    POLYGON: "Polygon",
-    MULTIPOINT: "Multipoint",
-    POINT_Z: "PointZ",
-    POLYLINE_Z: "PolylineZ",
-    POLYGON_Z: "PolygonZ",
-    MULTIPOINT_Z: "MultipointZ",
-    POINT_M: "PointM",
-    POLYLINE_M: "PolylineM",
-    POLYGON_M: "PolygonM",
-    MULTIPOINT_M: "MultipointM",
-    MULTIPATCH: "Multipatch",
-}
-
 # Measure sentinel: any value <= NO_DATA is "no data"
 # (shapefile-rs src/record/mod.rs:28-33; note -10e38 == -1e39).
 NO_DATA = -10e38

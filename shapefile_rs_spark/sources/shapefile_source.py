@@ -15,7 +15,7 @@ Pipeline (SURVEY §3 EP1 re-expressed for Spark):
    (the PIP join's polygon side) runs no job.
 3. Otherwise rows are grouped per shapefile stem (one shapefile = the
    coupled triplet, src/lib.rs:3-6) with ``groupBy(stem)`` aggregation, and
-   a single ``mapInPandas`` pass decodes every record of every file.
+   a single ``mapInArrow`` pass decodes every record of every file.
 
 Both paths run the same decode (:func:`_decode_stem_group`) with the
 pure-numpy codec (:mod:`shapefile_rs_spark.shapelib`) — batch-vectorized
@@ -37,9 +37,11 @@ import os
 from typing import Iterator, Optional
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -118,9 +120,30 @@ RAW_GEOMETRY_FIELDS = [
 ]
 
 
-def _bulk_frame(bulk, stem, crs_wkt, attrs, on_invalid, raw_geometry=False):
-    """Column-vectorized shapes frame from a BulkShapes decode — the whole
-    file becomes pandas columns with no per-record Python except the
+def _batch(columns: dict, schema: pa.Schema, n: int) -> pa.RecordBatch:
+    """One Arrow batch of ``n`` rows holding ``schema``'s columns (other
+    entries of ``columns`` are left out).  A column is a scalar
+    (repeated), ``None`` (all null), an Arrow array, or values converted
+    with Arrow's own null semantics: ``None`` is NULL and a NaN stays NaN
+    (pandas conversion would turn the NaN into NULL)."""
+    arrays = []
+    for f in schema:
+        v = columns[f.name]
+        if v is None:
+            arr = pa.nulls(n, f.type)
+        elif isinstance(v, (str, int)):
+            arr = pa.array([v] * n, type=f.type)
+        elif isinstance(v, pa.Array):
+            arr = v.cast(f.type)
+        else:
+            arr = pa.array(v, type=f.type, from_pandas=False)
+        arrays.append(arr)
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _bulk_batch(bulk, stem, crs_wkt, attrs, on_invalid, schema):
+    """Column-vectorized shapes batch from a BulkShapes decode — the whole
+    file becomes Arrow columns with no per-record Python except the
     multipatch WKB (patch-typed ring grouping stays scalar)."""
     import numpy as np
 
@@ -154,70 +177,79 @@ def _bulk_frame(bulk, stem, crs_wkt, attrs, on_invalid, raw_geometry=False):
             _shape_wkb_or_null(rec, on_invalid) for rec in bulk_to_records(bulk)[0]
         ]
 
-    n_pts = np.diff(po)
-    cuts = po[1:-1]
-    frame = {
+    def lists(offsets, values):
+        if values is None:
+            return None
+        return pa.ListArray.from_arrays(offsets.astype(np.int32), pa.array(values))
+
+    fo = bulk.part_offsets
+    columns = {
         "source_file": stem,
-        "record_number": bulk.record_numbers.astype("int32"),
-        "shape_type": np.int32(st),
+        "record_number": bulk.record_numbers,
+        "shape_type": st,
         "wkb": wkb,
         "xmin": bulk.bbox[:, 0],
         "ymin": bulk.bbox[:, 1],
         "xmax": bulk.bbox[:, 2],
         "ymax": bulk.bbox[:, 3],
-        "num_points": n_pts.astype("int32"),
-        "num_parts": (
-            np.diff(bulk.part_offsets).astype("int32")
-            if bulk.part_offsets is not None
-            else np.int32(0)
-        ),
-        "z": np.split(bulk.z, cuts) if bulk.z is not None else None,
-        "m": np.split(bulk.m, cuts) if bulk.m is not None else None,
+        "num_points": np.diff(po),
+        "num_parts": np.diff(fo) if fo is not None else 0,
+        "z": lists(po, bulk.z),
+        "m": lists(po, bulk.m),
         "attrs_json": attrs,
         "crs_wkt": crs_wkt,
+        # raw geometry
+        "xy": lists(po * 2, bulk.xy.reshape(-1)),
+        "parts": lists(fo, bulk.parts),
+        "patch_types": lists(fo, bulk.patch_types),
     }
-    if raw_geometry:
-        frame["xy"] = np.split(bulk.xy.reshape(-1), cuts * 2)
-        if bulk.part_offsets is not None:
-            fo = bulk.part_offsets
-            frame["parts"] = np.split(
-                np.asarray(bulk.parts, dtype=np.int32), fo[1:-1]
-            )
-            frame["patch_types"] = (
-                np.split(bulk.patch_types.astype(np.int32), fo[1:-1])
-                if bulk.patch_types is not None
-                else None
-            )
-        else:
-            frame["parts"] = None
-            frame["patch_types"] = None
-    return pd.DataFrame(frame)
+    return _batch(columns, schema, bulk.num_records)
+
+
+def _records_batch(recs, nums, stem, crs_wkt, attrs, on_invalid, schema):
+    """The shapes batch of the sequential reader's records (``nums`` their
+    record numbers): one value per record and column."""
+    bbox = [r.bbox_xy or (None,) * 4 for r in recs]
+    columns = {
+        "source_file": stem,
+        "record_number": nums,
+        "shape_type": [r.shape_type for r in recs],
+        "wkb": [_shape_wkb_or_null(r, on_invalid) for r in recs],
+        **{c: [b[i] for b in bbox] for i, c in enumerate(("xmin", "ymin", "xmax", "ymax"))},
+        "num_points": [r.num_points for r in recs],
+        "num_parts": [r.num_parts for r in recs],
+        "z": [r.z for r in recs],
+        "m": [r.m for r in recs],
+        "attrs_json": attrs,
+        "crs_wkt": crs_wkt,
+        # raw geometry
+        "xy": [r.xy.reshape(-1) for r in recs],
+        "parts": [r.parts for r in recs],
+        "patch_types": [r.patch_types for r in recs],
+    }
+    return _batch(columns, schema, len(recs))
 
 
 def _decode_stem_group(
-    batches: Iterator[pd.DataFrame],
+    batches: Iterator[pa.RecordBatch],
     expected_type: Optional[int] = None,
     on_invalid: str = "error",
     require_dbf: bool = False,
     raw_geometry: bool = False,
-) -> Iterator[pd.DataFrame]:
+) -> Iterator[pa.RecordBatch]:
+    """:func:`_stem_grouped` rows → one shapes batch per shapefile stem."""
     from ..shapelib.dbf import resolve_encoding
     from ..shapelib.shp import _BulkUnsupported, read_shp, read_shp_bulk
     from ..shapelib.shptypes import MissingDbf
 
-    schema = _shapes_schema(raw_geometry)
-    for pdf in batches:
-        out_rows = []
-        fast_frames = []
-        for _, row in pdf.iterrows():
-            shp = bytes(row["shp"]) if row["shp"] is not None else None
+    schema = to_arrow_schema(_shapes_schema(raw_geometry))
+    for batch in batches:
+        for row in batch.to_pylist():
+            shp, shx, dbf, cpg, prj, dbt = (
+                row.get(e) for e in ("shp", "shx", "dbf", "cpg", "prj", "dbt")
+            )
             if not shp:
                 continue
-            shx = bytes(row["shx"]) if row["shx"] is not None else None
-            dbf = bytes(row["dbf"]) if row["dbf"] is not None else None
-            cpg = bytes(row["cpg"]) if row["cpg"] is not None else None
-            prj = bytes(row["prj"]) if row.get("prj") is not None else None
-            dbt = bytes(row["dbt"]) if row.get("dbt") is not None else None
             if require_dbf and not dbf:
                 # src/reader.rs:654-662 — Reader::from_path requires the
                 # attribute sidecar when records are to be read with attrs
@@ -235,46 +267,12 @@ def _decode_stem_group(
                     pass
                 else:
                     attrs = _attrs_json_column(dbf, encoding, bulk.num_records, dbt)
-                    fast_frames.append(
-                        _bulk_frame(
-                            bulk, row["stem"], crs_wkt, attrs, on_invalid, raw_geometry
-                        )
-                    )
+                    yield _bulk_batch(bulk, row["stem"], crs_wkt, attrs, on_invalid, schema)
                     continue
 
-            header, recs, nums = read_shp(shp, shx=shx, expected_type=expected_type)
-            attr_rows = _attrs_json_column(dbf, encoding, len(recs), dbt)
-            for rec, num, attrs in zip(recs, nums, attr_rows):
-                wkb = _shape_wkb_or_null(rec, on_invalid)
-                bb = rec.bbox_xy or (None, None, None, None)
-                out = {
-                    "source_file": row["stem"],
-                    "record_number": int(num),
-                    "shape_type": int(rec.shape_type),
-                    "wkb": wkb,
-                    "xmin": bb[0],
-                    "ymin": bb[1],
-                    "xmax": bb[2],
-                    "ymax": bb[3],
-                    "num_points": rec.num_points,
-                    "num_parts": rec.num_parts,
-                    "z": rec.z.tolist() if rec.z is not None else None,
-                    "m": rec.m.tolist() if rec.m is not None else None,
-                    "attrs_json": attrs,
-                    "crs_wkt": crs_wkt,
-                }
-                if raw_geometry:
-                    out["xy"] = rec.xy.reshape(-1)
-                    out["parts"] = rec.parts
-                    out["patch_types"] = rec.patch_types
-                out_rows.append(out)
-        cols = [f.name for f in schema.fields]
-        slow = pd.DataFrame(out_rows, columns=cols)
-        if fast_frames:
-            frames = ([slow[cols]] if len(slow) else []) + [f[cols] for f in fast_frames]
-            yield pd.concat(frames, ignore_index=True)
-        else:
-            yield slow
+            _, recs, nums = read_shp(shp, shx=shx, expected_type=expected_type)
+            attrs = _attrs_json_column(dbf, encoding, len(recs), dbt)
+            yield _records_batch(recs, nums, row["stem"], crs_wkt, attrs, on_invalid, schema)
 
 
 def _sidecar_files(spark: SparkSession, path: str, pattern: str, exts: tuple) -> DataFrame:
@@ -334,7 +332,7 @@ def _layer_files(uris: list) -> dict:
 DRIVER_BYTES = 3 << 20
 
 
-def _driver_layer(layer: dict, exts: tuple) -> Optional[pd.DataFrame]:
+def _driver_layer(layer: dict, exts: tuple) -> Optional[pa.RecordBatch]:
     """The :func:`_stem_grouped` rows of a small local layer (a
     :func:`_layer_files` map), read on the driver.  ``None`` when a file is
     not ``file:``-local, the files hold more than :data:`DRIVER_BYTES`, or
@@ -365,10 +363,12 @@ def _driver_layer(layer: dict, exts: tuple) -> Optional[pd.DataFrame]:
 
     # binaryFile's path column spells a local file file:/abs/name
     rows = [
-        ["file:" + stem] + [read(sides[e]) if e in sides else None for e in exts]
+        {"stem": "file:" + stem, **{e: read(sides[e]) if e in sides else None for e in exts}}
         for stem, sides in sorted(paths.items())
     ]
-    return pd.DataFrame(rows, columns=["stem", *exts], dtype=object)
+    return pa.RecordBatch.from_pylist(
+        rows, schema=pa.schema([("stem", pa.string())] + [(e, pa.binary()) for e in exts])
+    )
 
 
 def _shapes_schema(raw_geometry: bool) -> StructType:
@@ -427,14 +427,16 @@ def read_shapefiles(
         return _decode_stem_group(batches, expected_type, on_invalid, require_dbf, raw_geometry)
 
     layer = _layer_files(files.inputFiles())
+    shapes = None
     try:
         rows = _driver_layer(layer, exts)
-        shapes = None if rows is None else pd.concat(decode(iter([rows])), ignore_index=True)
+        if rows is not None:
+            shapes = pa.Table.from_batches(decode([rows]), schema=to_arrow_schema(schema))
     except Exception:
-        shapes = None  # the distributed plan raises it again, at action time
+        pass  # the distributed plan raises it again, at action time
     if shapes is not None:
-        return local.local_frame(spark, {f.name: shapes[f.name] for f in schema}, schema)
-    return _stem_grouped(files, exts).mapInPandas(decode, schema=schema)
+        return local.local_frame(spark, shapes, schema)
+    return _stem_grouped(files, exts).mapInArrow(decode, schema=schema)
 
 
 HEADERS_SCHEMA = StructType(

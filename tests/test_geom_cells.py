@@ -96,13 +96,6 @@ def test_cell_roundtrip():
         assert b[0] <= lon[0] <= b[2] and b[1] <= lat[0] <= b[3]
 
 
-def test_cell_parent_consistency():
-    lon = np.array([12.34]); lat = np.array([45.67])
-    fine = C.cell_id(lon, lat, 20)
-    coarse = C.cell_id(lon, lat, 10)
-    assert C.cell_parent(fine, 10)[0] == coarse[0]
-
-
 def test_k_ring():
     cid = int(C.cell_id(np.array([0.0]), np.array([0.0]), 10)[0])
     ring0 = C.k_ring(cid, 0)
@@ -452,18 +445,21 @@ def test_bulk_frame_polygon_on_invalid(records):
     """Through the source's bulk decode: ``on_invalid="error"`` raises
     OrphanedInnerRing when any record has an orphan inner ring, and
     ``on_invalid="null"`` nulls exactly those records' wkb."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from shapefile_rs_spark.shapelib.shp import ShapeRec, read_shp_bulk, write_shp
-    from shapefile_rs_spark.sources.shapefile_source import _bulk_frame
+    from shapefile_rs_spark.sources.shapefile_source import SHAPES_SCHEMA, _bulk_batch
 
     recs = [ShapeRec(5, xy, parts=p, bbox_xy=(0.0,) * 4) for xy, p in records]
     bulk = read_shp_bulk(*write_shp(recs))
+    schema = to_arrow_schema(SHAPES_SCHEMA)
     with np.errstate(all="ignore"):
         want = [_scalar_wkb(xy, p) for xy, p in records]
         if any(o for _, o in want):
             with pytest.raises(OrphanedInnerRing):
-                _bulk_frame(bulk, "s", None, [None] * len(recs), "error")
+                _bulk_batch(bulk, "s", None, [None] * len(recs), "error", schema)
         else:
-            frame = _bulk_frame(bulk, "s", None, [None] * len(recs), "error")
+            frame = _bulk_batch(bulk, "s", None, [None] * len(recs), "error", schema)
             assert frame["wkb"].tolist() == [w for w, _ in want]
-        frame = _bulk_frame(bulk, "s", None, [None] * len(recs), "null")
+        frame = _bulk_batch(bulk, "s", None, [None] * len(recs), "null", schema)
     assert frame["wkb"].tolist() == [w for w, _ in want]

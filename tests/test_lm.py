@@ -68,7 +68,7 @@ def test_lm_score_scoring_plan_shape(spark, sf_dir):
     slice/zip pass used to run twice, once for the model and once for
     scoring), and both model joins are broadcast — no corpus-keyed
     shuffle before the per-doc aggregation."""
-    from shapefile_rs_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plan = executed_plan(lm_score(docs))
@@ -128,7 +128,7 @@ def test_lm_score_incremental_matches_from_scratch(spark, sf_dir):
         lm_score_incremental,
         lm_unigram_counts,
     )
-    from shapefile_rs_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -247,7 +247,7 @@ def test_dedup_recall_telemetry(spark, sf_dir):
     and the result plan reads the checkpointed pair list — ONE documents
     scan, no re-run of the minhash pipeline per derived frame."""
     import __spark_entry__ as E
-    from shapefile_rs_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     out = E.q_dedup_recall(spark, sf_dir)
     plan = executed_plan(out).split("== Initial Plan ==")[0]
@@ -328,7 +328,7 @@ def test_tfidf_oracle_twin_and_plan(spark, sf_dir):
     checkpointed, so the scoring plan holds NO corpus re-scan."""
     import __spark_entry__ as E
     from shapefile_rs_spark.operators.retrieval import tfidf_topk, tfidf_topk_sql
-    from shapefile_rs_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = tfidf_topk(docs, k=3)
@@ -462,7 +462,7 @@ def test_curation_funnel_monotone(spark, sf_dir):
     total equals the corpus count, each stage's count equals the direct
     filter count, and the whole thing is ONE scan."""
     from shapefile_rs_spark.operators.curation import curation_funnel
-    from shapefile_rs_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = curation_funnel(docs)

@@ -24,7 +24,7 @@ from shapefile_rs_spark.operators.spatial_join import (
     point_in_polygon_join,
     with_cells,
 )
-from shapefile_rs_spark.operators.tiles import _tile_batch, polygon_tiles, tile_polygon_assignment
+from shapefile_rs_spark.operators.tiles import _tile_batch, tile_polygon_assignment
 
 _POINTS = "point_id bigint, lon double, lat double"
 _POLYS = "polygon_id bigint, wkb binary"
@@ -332,7 +332,6 @@ def test_tiles_skip_null_and_empty_polygon_rows(spark):
     bbox = {(1, 6, x, y) for x in (32, 33) for y in range(28, 33)}
     centers = {r for r in bbox if r[3] < 32}
     for got, want in (
-        (polygon_tiles(polygons, 6), bbox),
         (tile_polygon_assignment(polygons, 6, center_rule=False), bbox),
         (tile_polygon_assignment(polygons, 6), centers),
     ):

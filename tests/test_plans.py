@@ -6,7 +6,7 @@ hot paths stay inside whole-stage codegen."""
 import pytest
 from pyspark.sql import functions as F
 
-from shapefile_rs_spark.plans import executed_plan as _plan
+from tests.plans import executed_plan as _plan
 
 
 def test_documents_scan_prunes_columns(spark, sf_dir):

@@ -1,6 +1,6 @@
 """The shapefile source's two read paths give the same frame: a small
 local layer decoded on the driver into a local relation, and the
-distributed binaryFile scan + ``mapInPandas`` decode (forced with
+distributed binaryFile scan + ``mapInArrow`` decode (forced with
 ``local.DRIVER_ROWS = 0``)."""
 
 import math
@@ -12,7 +12,7 @@ import pytest
 from shapefile_rs_spark import fixtures as FX
 from shapefile_rs_spark.shapelib.dbf import DbfField, write_dbf, write_dbt
 from shapefile_rs_spark.shapelib.shp import ShapeRec, write_shp
-from shapefile_rs_spark.shapelib.shptypes import POINT, POLYGON, POLYLINE_Z
+from shapefile_rs_spark.shapelib.shptypes import NULL_SHAPE, POINT, POLYGON, POLYLINE_Z
 from shapefile_rs_spark.sources.shapefile_source import (
     read_shapefile_headers,
     read_shapefiles,
@@ -43,11 +43,11 @@ def _both_paths(spark, monkeypatch, path, **kw):
     """``(driver frame, distributed frame)`` of one read, each checked to
     have taken its path."""
     driver = read_shapefiles(spark, path, **kw)
-    assert "LocalTableScan" in _plan(driver) and "MapInPandas" not in _plan(driver)
+    assert "LocalTableScan" in _plan(driver) and "MapInArrow" not in _plan(driver)
     with monkeypatch.context() as m:
         m.setattr("shapefile_rs_spark.local.DRIVER_ROWS", 0)
         dist = read_shapefiles(spark, path, **kw)
-    assert "MapInPandas" in _plan(dist)
+    assert "MapInArrow" in _plan(dist)
     return driver, dist
 
 
@@ -128,7 +128,7 @@ def test_record_bound_picks_the_path(spark, monkeypatch, join_fixture_dir):
     for rows, local_scan in ((2, True), (1, False)):
         monkeypatch.setattr("shapefile_rs_spark.local.DRIVER_ROWS", rows)
         df = read_shapefiles(spark, join_fixture_dir, pattern="polygons")
-        assert ("MapInPandas" not in _plan(df)) is local_scan
+        assert ("MapInArrow" not in _plan(df)) is local_scan
         assert df.count() == 2
 
 
@@ -144,7 +144,7 @@ def test_byte_bound_picks_the_path(spark, monkeypatch, join_fixture_dir):
     for limit, local_scan in ((size, True), (size - 1, False)):
         monkeypatch.setattr("shapefile_rs_spark.sources.shapefile_source.DRIVER_BYTES", limit)
         df = read_shapefiles(spark, join_fixture_dir, pattern="polygons")
-        assert ("MapInPandas" not in _plan(df)) is local_scan
+        assert ("MapInArrow" not in _plan(df)) is local_scan
         assert df.count() == 2
 
 
@@ -160,7 +160,7 @@ def test_few_records_many_bytes_read_distributed(spark, tmp_path):
     assert len(shp) > DRIVER_BYTES
     _write(str(tmp_path), "coast", {"shp": shp, "shx": shx})
     df = read_shapefiles(spark, str(tmp_path))
-    assert "MapInPandas" in _plan(df)
+    assert "MapInArrow" in _plan(df)
     (row,) = df.select("num_points", "num_parts").collect()
     assert (row.num_points, row.num_parts) == (220_000, 1)
 
@@ -202,3 +202,32 @@ def test_upper_case_extensions_read(spark, monkeypatch, tmp_path, driver_rows):
     }
     assert {(r.source_file.rsplit("/", 1)[-1], r.record_number, r.wkb, r.attrs_json) for r in rows} == want
     assert read_shapefile_headers(spark, upper).count() == 2
+
+
+@pytest.mark.parametrize("driver_rows", [None, 0])
+def test_stored_nan_reads_as_nan_and_absent_as_null(spark, monkeypatch, tmp_path, driver_rows):
+    """A NaN stored in a shapefile reads back as NaN on both read paths and
+    through both decoders — in a ``z`` element and in a bbox column —
+    while a value the record does not hold stays NULL: a null shape's
+    ``wkb`` and ``z`` (its bbox is the codec's stored zeros)."""
+    if driver_rows is not None:
+        monkeypatch.setattr("shapefile_rs_spark.local.DRIVER_ROWS", driver_rows)
+    line = ShapeRec(POLYLINE_Z, [[0.0, 0.0], [1.0, 1.0]], z=[np.nan, 2.0])
+    ring = np.array([[0.0, 0.0], [0.0, 1.0], [1.0, np.nan], [0.0, 0.0]])
+    null = ShapeRec(NULL_SHAPE, [])
+    d = str(tmp_path)
+    _write(d, "nanz", dict(zip(("shp", "shx"), write_shp([line]))))
+    _write(d, "nanpoly", dict(zip(("shp", "shx"), write_shp([ShapeRec(POLYGON, ring)]))))
+    # a null shape makes the file mixed: the per-record decoder reads it
+    _write(d, "mixed", dict(zip(("shp", "shx"), write_shp([null, line]))))
+    df = read_shapefiles(spark, d)
+    assert ("MapInArrow" in _plan(df)) is (driver_rows == 0)
+    rows = {(r.source_file.rsplit("/", 1)[-1], r.record_number): r for r in df.collect()}
+    for stem, num in (("nanz", 1), ("mixed", 2)):
+        z0, z1 = rows[stem, num].z
+        assert math.isnan(z0) and z1 == 2.0
+    poly = rows["nanpoly", 1]
+    assert math.isnan(poly.ymin) and math.isnan(poly.ymax) and poly.xmax == 1.0
+    absent = rows["mixed", 1]
+    assert (absent.shape_type, absent.wkb, absent.z) == (NULL_SHAPE, None, None)
+    assert (absent.xmin, absent.ymin, absent.xmax, absent.ymax) == (0.0,) * 4

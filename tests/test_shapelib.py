@@ -20,6 +20,7 @@ from shapefile_rs_spark.shapelib.shptypes import (
     POINT_Z,
     POLYGON,
     POLYLINE,
+    POLYLINE_Z,
     InvalidFileCode,
     InvalidShapeRecordSize,
     MismatchShapeType,
@@ -121,7 +122,7 @@ def test_polygon_ring_classification():
 
     _, _, _, recs, _ = roundtrip(FX.fx_polygon())
     rec = recs[0]
-    roles = R.classify_parts(rec.xy, rec.part_slices())
+    roles = [R.ring_role(rec.xy[s:e]) for s, e in rec.part_slices()]
     assert roles == [R.INNER, R.OUTER, R.INNER]
 
 
@@ -200,7 +201,7 @@ def test_mixing_shape_types_rejected_on_write():
 
 def test_nth_shape_and_count():
     shp, shx = S.write_shp(FX.fx_pointm())
-    assert S.shape_count(shx) == 2
+    assert len(S.read_shx(shx)) == 2
     rec = S.read_nth_shape(shp, shx, 1)
     assert rec.xy[0].tolist() == [160467.63787299366, 5403971.985031904]
 
@@ -509,6 +510,49 @@ def test_bulk_orphan_points_empty_multilinestring():
     _, seq, _ = S.read_shp(shp, shx=shx)
     assert bulk_wkb == [shape_to_wkb(r) for r in seq]
     assert wkt_from_wkb(bulk_wkb[1]) == "MULTILINESTRING ()"
+
+
+@pytest.mark.parametrize("shape_type", [POLYGON, POLYLINE_Z])
+def test_empty_multipart_record_roundtrips(shape_type):
+    """A multipart record with 0 parts and 0 points (a 40-byte body, or
+    56 with the Z block) reads back on both decoders: write → read →
+    write is byte-identical, bulk == sequential, and the bulk WKB is the
+    per-record encoder's (an empty MULTIPOLYGON / MULTILINESTRING)."""
+    from shapefile_rs_spark.geom.wkb import (
+        multilinestrings_wkb_bulk,
+        multipolygons_wkb_bulk,
+        shape_to_wkb,
+        wkt_from_wkb,
+    )
+
+    z = {} if shape_type == POLYGON else {"z": [1.0, 2.0, 3.0, 1.0]}
+    square = S.ShapeRec(
+        shape_type, [[0.0, 0.0], [0.0, 1.0], [1.0, 1.0], [0.0, 0.0]], parts=[0], **z
+    )
+    empty_z = {} if shape_type == POLYGON else {"z": []}
+    empty = S.ShapeRec(shape_type, np.empty((0, 2)), parts=[], **empty_z)
+    shp, shx = S.write_shp([square, empty, square])
+    _, seq, nums_seq = S.read_shp(shp, shx=None)
+    assert seq[1].num_points == 0 and seq[1].num_parts == 0
+    assert S.write_shp(seq) == (shp, shx)
+
+    b = S.read_shp_bulk(shp, shx)
+    recs, nums = S.bulk_to_records(b)
+    assert nums == nums_seq
+    for a, c in zip(recs, seq):
+        assert np.array_equal(a.xy, c.xy) and np.array_equal(a.parts, c.parts)
+        assert a.bbox_xy == c.bbox_xy and a.z_range == c.z_range
+        assert (a.z is None) == (c.z is None) and (a.z is None or np.array_equal(a.z, c.z))
+    assert S.write_shp(recs) == (shp, shx)
+
+    if shape_type == POLYGON:
+        bulk_wkb, orphan = multipolygons_wkb_bulk(b.xy, b.point_offsets, b.parts, b.part_offsets)
+        assert not orphan.any()
+    else:
+        bulk_wkb = multilinestrings_wkb_bulk(b.xy, b.point_offsets, b.parts, b.part_offsets)
+    assert bulk_wkb == [shape_to_wkb(r) for r in seq]
+    kind = "MULTIPOLYGON" if shape_type == POLYGON else "MULTILINESTRING"
+    assert wkt_from_wkb(bulk_wkb[1]) == f"{kind} ()"
 
 
 def test_wkt_num_nonfinite_coordinates():
