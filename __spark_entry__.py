@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from shapefile_rs_spark import demo
 from shapefile_rs_spark.operators import dedup as dd
 from shapefile_rs_spark.operators import textstats as ts
-from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_cells
+from shapefile_rs_spark.operators.knn import knn_join
 from shapefile_rs_spark.operators.spatial_join import point_in_polygon_join, with_cells
 from shapefile_rs_spark.operators.tiles import assign_tiles, tile_polygon_assignment
 from shapefile_rs_spark.pages import geotag_pages, lonlat_sql, pages_from_documents
@@ -156,16 +156,17 @@ def q_tile_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _geopages(spark, sf_dir).select("doc_id", "lon", "lat")
-    return knn_bruteforce(
+    return knn_join(
         pages, demo.knn_queries_df(spark), k=5, point_id="doc_id"
     ).select("query_id", "doc_id", "dist2", F.col("rank").alias("rnk"))
 
 
 def q_knn_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expanding-ring kNN (driver-loop operator). Same golden output as
-    q_knn — oracle included to pin exactness of the ring search."""
+    """kNN at the ring-search resolution (res 6). Same golden output as
+    q_knn: 4 queries are below knn_join's pair-work crossover, so the
+    pass-0 counts pick the broadcast kernel over the cell passes."""
     pages = _geopages(spark, sf_dir).select("doc_id", "lon", "lat")
-    return knn_cells(
+    return knn_join(
         pages, demo.knn_queries_df(spark), k=5, res=6, point_id="doc_id"
     ).select("query_id", "doc_id", "dist2", F.col("rank").alias("rnk"))
 
@@ -308,11 +309,10 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed kNN JOIN with a BIG query side: every page finds its 3
-    nearest pages (self included, rank 1 at distance 0) — the two-pass
-    histogram-priced cell join, no driver-side per-query state."""
-    from shapefile_rs_spark.operators.knn import knn_join
-
+    """kNN JOIN with a BIG query side: every page finds its 3 nearest
+    pages (self included, rank 1 at distance 0).  At sf0.1 (5,000 × 5,000
+    pages) the pair work is above knn_join's crossover, so the two
+    histogram-priced cell passes run; at sf0.01 the broadcast kernel."""
     # ONE synth/parse pass shared by both sides: the raw parquet is a
     # single row group (single-task synth), and without the checkpoint
     # the point index AND the query side each re-run it (~2s each at

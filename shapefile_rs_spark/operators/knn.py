@@ -1,16 +1,14 @@
-"""kNN operators (K1): brute-force window top-k and expanding-ring search.
+"""kNN (K1): one exact operator, :func:`knn_join`, and its brute-force kernel.
 
+* :func:`knn_join` — every query row gets its exact k nearest points.
+  Its first aggregation counts the finite points and the queries; when
+  their product (the pair work) is at most :data:`BRUTE_PAIRS` it runs
+  the broadcast kernel below, otherwise two histogram-priced cell passes
+  (the expanding-ring search: a query's ring of cells grows until its
+  k-th distance is provably inside it).
 * :func:`knn_bruteforce` — exact top-k via broadcast cross join + window
-  rank.  The right tool when the query side is small (the usual "snap pages
-  to the nearest N city centers" shape): the big point side is scanned once,
-  never shuffled beyond the final per-query rank.
-* :func:`knn_cells` — the north_star "expanding ring search": points are
-  indexed once at a cell resolution; each round joins the still-unsatisfied
-  queries against a k-ring of cells, doubling the radius until the k-th
-  neighbor distance is provably inside the explored ring
-  (``kth_dist <= r * min_cell_dim`` ⇒ no unexplored cell can hold a closer
-  point).  Data-dependent iteration is a bounded DRIVER loop over whole
-  DataFrames — no per-row Python (input_hint).
+  rank over FINITE points: the kernel :func:`knn_join` selects for a
+  small pair work, and the reference the tests compare both paths to.
 
 Distance metric: planar squared euclidean on (lon, lat) — consistent with
 the cell metric (FIXTURES.md §4).
@@ -18,24 +16,22 @@ the cell metric (FIXTURES.md §4).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from .. import cells as C
-from ..local import local_frame
+
+# Pair work (finite points × queries) at or below which knn_join runs the
+# broadcast kernel instead of the cell passes: the crossover measured on a
+# 4-core host, local[4], min of 3 warm runs of each path on the same inputs
+# (BASELINE.md, "kNN path crossover").  4 queries cross between 1M pairs
+# (brute 0.93 s, cells 1.19 s) and 2M (1.86 s, 1.67 s); 150 queries between
+# 3M and 10M; the sf0.1 page self-join (5,000 × 5,000 on one partition)
+# takes 15.9 s brute and 1.4 s on the cells.
+BRUTE_PAIRS = 2_000_000
 
 
 def dist2_col(lon1, lat1, lon2, lat2):
@@ -58,7 +54,9 @@ def knn_bruteforce(
     """(query_id, point_id, dist2, rank) — exact; queries side broadcast.
 
     Ties break on point id so results are deterministic (and match the SQL
-    oracle's ORDER BY dist2, point_id)."""
+    oracle's ORDER BY dist2, point_id).  Takes finite points only: a null
+    coordinate gives a NULL dist2, which ranks first.  :func:`knn_join`
+    drops such points before it calls this kernel."""
     pairs = points.crossJoin(F.broadcast(queries))
     with_d = pairs.withColumn(
         "dist2", dist2_col(F.col(lon_col), F.col(lat_col), F.col(q_lon), F.col(q_lat))
@@ -71,209 +69,13 @@ def knn_bruteforce(
     )
 
 
-def knn_cells(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    res: int = 8,
-    point_id: str = "point_id",
-    query_id: str = "query_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    q_lon: str = "q_lon",
-    q_lat: str = "q_lat",
-    max_rounds: int = 8,
-    est_res: int = None,
-) -> DataFrame:
-    """Expanding-ring kNN: exact results, ≤2 Spark jobs in the common case.
-
-    The point side is cell-indexed once (codegen'd Morton twin) and cached;
-    ONE aggregation builds a coarse occupancy histogram (≤ 4^est_res rows,
-    est_res = min(res, 7) so it always collects) whose driver-side
-    summed-area table prices each query's starting radius exactly: the
-    smallest coarse ring holding ≥ k points, converted conservatively to
-    fine-res cells, so round 1 is guaranteed ≥ k candidates.  Each round is
-    a single job — ring join + window top-k — whose result (≤ k·n_queries
-    rows, small by the same contract that makes the query side
-    broadcast-small) is collected for loop control; a query finishes when
-    its k-th distance fits inside the covered radius (kth ≤ r·min_dim ⇒ no
-    unexplored cell holds a closer point), otherwise its next radius is
-    ceil(kth/min_dim), which terminates it the following round.  Queries
-    still pending after ``max_rounds`` fall back to brute force
-    (correctness is never sacrificed).
-
-    Resource hygiene (r1 verdict item 7): the only persisted frame is the
-    cell index, unpersisted before return; loop state lives driver-side so
-    no per-round persists/checkpoints accumulate and no ``isin`` chains
-    bloat the plan.  The returned frame is built from the collected rows
-    with :func:`..local.local_frame` — result size is k·n_queries by
-    contract.
-
-    Non-finite coordinates follow :func:`knn_join`'s rule: a point whose
-    lon or lat is null, NaN or ±inf is nobody's neighbour and does not
-    count towards k; a query whose q_lon or q_lat is one raises
-    ``ValueError`` naming how many there are (counted from the collected
-    query rows, no extra job).
-    """
-    spark = points.sparkSession
-    n_side = 1 << res
-    cell_w = 360.0 / n_side
-    cell_h = 180.0 / n_side
-    min_dim = min(cell_w, cell_h)
-    e_res = min(res, 7) if est_res is None else est_res
-    shift = res - e_res
-
-    q_rows = queries.select(query_id, q_lon, q_lat).collect()
-    qid_field = StructField(query_id, queries.schema[query_id].dataType)
-    out_schema = StructType(
-        [
-            qid_field,
-            StructField(point_id, points.schema[point_id].dataType),
-            StructField("dist2", DoubleType()),
-            StructField("rank", IntegerType()),
-        ]
-    )
-    bad_q = sum(
-        not all(v is not None and math.isfinite(v) for v in r[1:]) for r in q_rows
-    )
-    if bad_q:
-        raise ValueError(
-            f"knn_cells: {bad_q} query rows have a null or non-finite {q_lon} or {q_lat}"
-        )
-
-    cached = _finite_cells(points, lon_col, lat_col, "_pcell", res).persist()
-    try:
-        # filtered above the cache: below it, Catalyst would push the filter
-        # into the points' own projection and evaluate lon/lat twice
-        pts = cached.where(F.col("_pcell").isNotNull())
-
-        # --- job 1: coarse occupancy histogram (also warms the cell index) ---
-        hist = (
-            C.with_cell_ids(pts, lon_col, lat_col, {"_ec": e_res})
-            .groupBy("_ec")
-            .count()
-            .collect()
-        )
-        n_e = 1 << e_res
-        grid = np.zeros((n_e, n_e), dtype=np.int64)
-        _, hix, hiy = C.decode_cell(np.array([r["_ec"] for r in hist], dtype=np.int64))
-        grid[hix, hiy] = [r["count"] for r in hist]
-        total = int(grid.sum())
-        # summed-area table: ring population queries in O(1)
-        sat = np.zeros((n_e + 1, n_e + 1), dtype=np.int64)
-        sat[1:, 1:] = grid.cumsum(0).cumsum(1)
-
-        def ring_pop(ix: int, iy: int, r: int) -> int:
-            x0, x1 = max(ix - r, 0), min(ix + r, n_e - 1)
-            y0, y1 = max(iy - r, 0), min(iy + r, n_e - 1)
-            return int(sat[x1 + 1, y1 + 1] - sat[x0, y1 + 1] - sat[x1 + 1, y0] + sat[x0, y0])
-
-        def r0_fine(lon: float, lat: float) -> int:
-            ix, iy = C.lonlat_to_ixiy(np.array([lon]), np.array([lat]), e_res)
-            ix, iy = int(ix[0]), int(iy[0])
-            r_e = 0
-            while ring_pop(ix, iy, r_e) < k and r_e < n_e:
-                r_e += 1
-            # the fine ring of radius (r_e+1)<<shift fully contains the coarse
-            # ring of radius r_e around any point of the query's coarse cell
-            return max(1, (r_e + 1) << shift)
-
-        @F.pandas_udf(ArrayType(LongType()))
-        def ring_cells(lon: pd.Series, lat: pd.Series, radius: pd.Series) -> pd.Series:
-            out = []
-            lon_v = lon.to_numpy(np.float64)
-            lat_v = lat.to_numpy(np.float64)
-            rad_v = radius.to_numpy()
-            base = C.cell_id(lon_v, lat_v, res)
-            for i in range(len(lon_v)):
-                out.append(C.k_ring(int(base[i]), int(rad_v[i])).tolist())
-            return pd.Series(out)
-
-        out_rows: list = []
-        # fewer points than k: ring search degenerates, brute is exact + cheap
-        pend = (
-            []
-            if total < k
-            else [[r[0], float(r[1]), float(r[2]), r0_fine(float(r[1]), float(r[2]))] for r in q_rows]
-        )
-        fallback_ids = [] if total >= k else [r[0] for r in q_rows]
-
-        for _ in range(max_rounds):
-            if not pend:
-                break
-            pend_df = local_frame(
-                spark,
-                pend,
-                StructType(
-                    [
-                        qid_field,
-                        StructField(q_lon, DoubleType()),
-                        StructField(q_lat, DoubleType()),
-                        StructField("_r", IntegerType()),
-                    ]
-                ),
-            )
-            cand_cells = pend_df.withColumn(
-                "_qcell", F.explode(ring_cells(F.col(q_lon), F.col(q_lat), F.col("_r")))
-            )
-            cands = cand_cells.join(
-                pts, cand_cells["_qcell"] == pts["_pcell"], "inner"
-            ).withColumn(
-                "dist2", dist2_col(F.col(lon_col), F.col(lat_col), F.col(q_lon), F.col(q_lat))
-            )
-            w = Window.partitionBy(query_id).orderBy(F.col("dist2").asc(), F.col(point_id).asc())
-            got = (
-                cands.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(query_id, point_id, "dist2", "rank")
-                .collect()  # the round's ONE job; ≤ k·n_pending rows
-            )
-            by_q: dict = {}
-            for row in got:
-                by_q.setdefault(row[0], []).append(row)
-            nxt = []
-            for qid, qlon, qlat, r in pend:
-                rows = by_q.get(qid, [])
-                kth = max((row["dist2"] for row in rows), default=float("inf"))
-                if len(rows) >= k and kth <= (r * min_dim) ** 2:
-                    out_rows.extend(tuple(row) for row in rows)
-                elif len(rows) >= k:
-                    # kth is an upper bound on the true k-th distance: a ring of
-                    # ceil(kth/min_dim) provably covers it -> terminates next round
-                    nxt.append([qid, qlon, qlat, int(np.ceil(np.sqrt(kth) / min_dim))])
-                else:
-                    nxt.append([qid, qlon, qlat, min(r * 2, n_side)])
-            pend = nxt
-
-        if pend:
-            fallback_ids.extend(p[0] for p in pend)
-
-        if fallback_ids:
-            fb_q = queries.join(
-                F.broadcast(
-                    local_frame(spark, {query_id: fallback_ids}, StructType([qid_field]))
-                ),
-                query_id,
-                "left_semi",
-            )
-            out_rows.extend(
-                tuple(row)
-                for row in knn_bruteforce(
-                    pts, fb_q, k, point_id, query_id, lon_col, lat_col, q_lon, q_lat
-                ).collect()
-            )
-    finally:
-        cached.unpersist()
-
-    return local_frame(spark, out_rows, out_schema)
-
-
 def _finite_cells(df: DataFrame, lon: str, lat: str, name: str, res: int) -> DataFrame:
     """``df`` plus its res-``res`` cell id as column ``name``; a row whose
     ``lon`` or ``lat`` is null, NaN or ±inf gets null in both coordinates
     and in ``name`` (:func:`cells.with_cell_ids` alone puts a null or NaN
-    in an edge cell and overflows its cast on ±inf).  The kNN operators'
-    one rule: such a point is nobody's neighbour, such a query an error."""
+    in an edge cell and overflows its cast on ±inf).  knn_join's one
+    rule, on both paths: such a point is nobody's neighbour, such a query
+    an error."""
     q = C.quote_ident
     # Spark orders NaN above +inf, so this is false for NaN and ±inf
     finite = f"abs({q(lon)}) < double('inf') AND abs({q(lat)}) < double('inf')"
@@ -295,18 +97,20 @@ def knn_join(
     q_lon: str = "q_lon",
     q_lat: str = "q_lat",
 ) -> DataFrame:
-    """Distributed kNN JOIN — both sides big (the variant
-    :func:`knn_bruteforce` (small-query broadcast) and :func:`knn_cells`
-    (driver loop over a small query set) don't cover): every query row gets
-    its exact k nearest points, with no driver-side per-query state.
+    """Exact kNN JOIN: every query row gets its k nearest points, with no
+    driver-side per-query state.
 
-    Exactly TWO distributed passes:
+    Pass 0 is one aggregation over both sides (the point histogram and the
+    distinct query cells, ≤ 4^res rows each) that also fills their caches.
+    Its counts pick the path with no extra job: when n_queries × finite
+    points is at most :data:`BRUTE_PAIRS`, the broadcast kernel
+    :func:`knn_bruteforce` ranks every pair of the cached sides and its
+    output-sized result is checkpointed; otherwise two cell passes run:
 
-    1. One aggregation builds the cell occupancy histogram (≤ 4^res rows —
-       collectable by construction for res ≤ 8); a driver-side summed-area
-       table prices, for every DISTINCT QUERY CELL (a second ≤ 4^res-row
-       aggregation), the minimal Chebyshev radius whose ring holds ≥ k
-       points.  Points are then REPLICATED to the query cells whose priced
+    1. A driver-side summed-area table over the pass-0 histogram
+       (collectable by construction for res ≤ 8) prices, for every
+       DISTINCT QUERY CELL, the minimal Chebyshev radius whose ring holds
+       ≥ k points.  Points are then REPLICATED to the query cells whose priced
        ring reaches them (a driver-built CSR map riding a broadcast) and a
        cogrouped per-cell numpy kernel computes every resident query's
        exact top-k — candidate PAIRS are enumerated inside vectorized
@@ -326,8 +130,9 @@ def knn_join(
     (lat-q_lat), elementwise float64) and ties break on point_id exactly
     like the ORDER BY.
 
-    Output: (query_id, point_id, dist2, rank).  The only non-DataFrame
-    state is the ≤4^res histogram — everything else shuffles on cell keys.
+    Output: (query_id, point_id, dist2, rank), the same rows on both paths.
+    The only non-DataFrame state is the ≤4^res histogram — everything else
+    shuffles on cell keys.
 
     Non-finite coordinates: a point whose lon or lat is null, NaN or ±inf
     is excluded (it is nobody's neighbour and does not count towards k);
@@ -347,8 +152,10 @@ def knn_join(
     qx = _finite_cells(
         queries.select(query_id, q_lon, q_lat), q_lon, q_lat, "_qcell", res
     ).persist()
+    # filtered above the cache: below it, Catalyst would push the filter
+    # into the points' own projection and evaluate lon/lat twice
+    finite = pts.where(F.col("_pcell").isNotNull())
     try:
-
         # pass-0: ONE job computes the point histogram AND the distinct
         # query cells (both ≤ 4^res rows by construction) while filling both
         # caches — a union of the two cell projections tagged by side (the
@@ -367,12 +174,16 @@ def knn_join(
                 f"knn_join: {bad_q} query rows have a null or non-finite {q_lon} or {q_lat}"
             )
         hist = [r for r in both if r["_side"] == 1 and r["_c"] is not None]
+        total = sum(r["count"] for r in hist)
+        if total * sum(r["count"] for r in both if r["_side"] == 0) <= BRUTE_PAIRS:
+            return knn_bruteforce(
+                finite, qx, k, point_id, query_id, lon_col, lat_col, q_lon, q_lat
+            ).localCheckpoint(eager=True)  # output-sized; the finally frees the caches
         grid = np.zeros((n_side, n_side), dtype=np.int64)
         _, hix, hiy = C.decode_cell(np.array([r["_c"] for r in hist], dtype=np.int64))
         grid[hix, hiy] = [r["count"] for r in hist]
         sat = np.zeros((n_side + 1, n_side + 1), dtype=np.int64)
         sat[1:, 1:] = grid.cumsum(0).cumsum(1)
-        total = int(grid.sum())
 
         qcells = np.array(sorted(r["_c"] for r in both if r["_side"] == 0), dtype=np.int64)
         _, qix, qiy = C.decode_cell(qcells)
@@ -450,7 +261,7 @@ def knn_join(
                         }
                     )
 
-            repl = pts.where(F.col("_pcell").isNotNull()).mapInPandas(
+            repl = finite.mapInPandas(
                 replicate,
                 schema=f"_tcell long, {point_id} {p_type}, {lon_col} double, {lat_col} double",
             )

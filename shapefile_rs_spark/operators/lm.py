@@ -48,8 +48,8 @@ Scale shape (100 TB):
 * ``bpe_learn`` round N's pair-count runs over the ≤``max_words``
   vocabulary frame (kilobytes at fixture scale, a few hundred MB at a
   real 1M-type vocabulary) — each round is a small self-contained job;
-  the winning pair is a 1-row driver collect (the knn_cells
-  control-frame pattern), and the merge application is one codegen
+  the winning pair is a 1-row driver collect (a tiny control frame
+  collected to the driver), and the merge application is one codegen
   ``replace`` over the vocab frame, localCheckpointed so round N+1 does
   not recompute rounds 1..N.
 

@@ -29,8 +29,8 @@ occurrence and the length delta divided by len(term)+2 is the exact
 count.  Document length reuses token_count's whitespace spelling.
 
 Scale shape: pass 1 is ONE corpus scan aggregating (N, Σdl, df per
-term) — a 1-row control frame collected to the driver (the knn_cells
-pattern), which also sidesteps the scalar-aggregate re-scan trap
+term) — a 1-row control frame collected to the driver, which also
+sidesteps the scalar-aggregate re-scan trap
 (CLAUDE.md: referencing an aggregation subtree twice re-plans and
 re-scans the corpus).  Pass 2 is ONE map-only scoring scan with the
 stats baked in as literals, finished by TakeOrderedAndProject —

@@ -1058,8 +1058,8 @@ def kmeans_fp(
     B×C×d tensor), and emits per-batch PARTIAL per-(cid, dim) sums —
     map-side combine inside the UDF, so the exchange carries
     C·d·partitions rows; a C·d groupBy collects to the driver (a tiny
-    control frame, the knn_cells pattern) where the next centroid matrix
-    is formed exactly.  The corpus frame is persisted once and re-read
+    control frame) where the next centroid matrix is formed exactly.
+    The corpus frame is persisted once and re-read
     per round; T iterations never stack T plans because each round's
     Spark work is an independent job over the same cached frame."""
     if iterations < 1:

@@ -860,23 +860,17 @@ def write_shp(records: Sequence[ShapeRec], pad_records: int = 0) -> tuple:
         file_length_words += record_size_words + 4  # + record header (8 bytes)
         _grow_bbox(bbox_acc, rec)
 
-    # finalize: zero never-grown ranges (src/writer.rs:195-203)
-    xmin, ymin, xmax, ymax, zmin, zmax, mmin, mmax = (
-        bbox_acc[0],
-        bbox_acc[1],
-        bbox_acc[2],
-        bbox_acc[3],
-        bbox_acc[4],
-        bbox_acc[5],
-        bbox_acc[6],
-        bbox_acc[7],
-    )
-    if mmax == _FMIN and mmin == _FMAX:
-        mmin = mmax = 0.0
+    # finalize: zero each never-grown axis (src/writer.rs:195-203) — also
+    # one whose values were all NaN, which the min/max fold never takes
+    xmin, ymin, xmax, ymax, zmin, zmax, mmin, mmax = bbox_acc
+    if xmax == _FMIN and xmin == _FMAX:
+        xmin = xmax = 0.0
+    if ymax == _FMIN and ymin == _FMAX:
+        ymin = ymax = 0.0
     if zmax == _FMIN and zmin == _FMAX:
         zmin = zmax = 0.0
-    if xmin == _FMAX:  # empty file
-        xmin = ymin = xmax = ymax = 0.0
+    if mmax == _FMIN and mmin == _FMAX:
+        mmin = mmax = 0.0
 
     def header_bytes(length_words: int) -> bytes:
         return (

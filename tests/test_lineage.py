@@ -377,9 +377,13 @@ def test_operator_result_reads_no_persisted_cache(spark, sf_dir, name, monkeypat
     assert "InMemoryTableScan" not in out._jdf.queryExecution().executedPlan().toString()
 
 
-def _failing_call(name, spark):
+def _failing_call(name, spark, monkeypatch):
     """The operator call ``name`` over an input with one poisoned row: the
-    first job that evaluates it raises ``boom``."""
+    first job that evaluates it raises ``boom``.  The ``knn_join_after_*``
+    calls get clean inputs and fail after pass 0 has filled knn_join's
+    caches and picked the path: in the broadcast kernel's checkpoint job,
+    or building the cell passes' replication map."""
+    from shapefile_rs_spark import cells
     from shapefile_rs_spark.operators import dedup, graph, knn
 
     ids = spark.range(40)
@@ -387,25 +391,60 @@ def _failing_call(name, spark):
     def boom(c):
         return F.when(F.col("id") == 7, F.raise_error(F.lit("boom"))).otherwise(c)
 
+    def raise_boom(*args):
+        raise RuntimeError("boom")
+
     points = ids.select(
         F.col("id").alias("point_id"),
         boom((F.col("id") % 10).cast("double")).alias("lon"),
         (F.col("id") / 10.0).alias("lat"),
     )
+    clean_points = ids.select(
+        F.col("id").alias("point_id"),
+        (F.col("id") % 10).cast("double").alias("lon"),
+        (F.col("id") / 10.0).alias("lat"),
+    )
     queries = spark.createDataFrame([(0, 1.0, 1.0)], "query_id long, q_lon double, q_lat double")
+    # a query side whose pair work with the 40 points is above knn_join's
+    # crossover, so the call takes the cell passes, not the broadcast kernel
+    many_queries = spark.range(knn.BRUTE_PAIRS // 40 + 1).select(
+        F.col("id").alias("query_id"),
+        (F.col("id") % 10).cast("double").alias("q_lon"),
+        (F.col("id") % 4).cast("double").alias("q_lat"),
+    )
     pairs = ids.select(boom(F.col("id")).alias("id_a"), (F.col("id") + 1).alias("id_b"))
     edges = ids.select(boom(F.col("id") % 8).alias("src"), (F.col("id") * 3 % 8).alias("dst"))
-    # the two kNN calls use different res: were knn_join to leak its point
-    # cache, knn_cells' equal plan would hit it instead of adding an entry
+    if name == "knn_join_after_pass0_brute":
+        monkeypatch.setattr(knn, "BRUTE_PAIRS", 1 << 62)
+        monkeypatch.setattr(
+            knn, "dist2_col", lambda lon, *_: F.raise_error(F.format_string("boom %s", lon))
+        )
+    elif name == "knn_join_after_pass0_cells":
+        monkeypatch.setattr(knn, "BRUTE_PAIRS", -1)
+        monkeypatch.setattr(cells, "k_ring", raise_boom)
+    # the two kNN calls use different res: were one path to leak its point
+    # cache, the other's equal plan would hit it instead of adding an entry
     return {
         "knn_join": lambda: knn.knn_join(points, queries, k=2, res=4),
-        "knn_cells": lambda: knn.knn_cells(points, queries, k=2, res=5),
+        "knn_join_cells": lambda: knn.knn_join(points, many_queries, k=2, res=5),
+        "knn_join_after_pass0_brute": lambda: knn.knn_join(clean_points, queries, k=2, res=4),
+        "knn_join_after_pass0_cells": lambda: knn.knn_join(clean_points, queries, k=2, res=4),
         "dedup_clusters": lambda: dedup.dedup_clusters(pairs),
         "domain_rank": lambda: graph.domain_rank(edges),
     }[name]()
 
 
-@pytest.mark.parametrize("name", ["knn_join", "knn_cells", "dedup_clusters", "domain_rank"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_join",
+        "knn_join_cells",
+        "knn_join_after_pass0_brute",
+        "knn_join_after_pass0_cells",
+        "dedup_clusters",
+        "domain_rank",
+    ],
+)
 def test_failed_operator_job_releases_its_caches(spark, name, monkeypatch):
     """An operator whose Spark job fails raises that failure and leaves
     Spark's CacheManager as it found it: every frame it persisted for
@@ -416,7 +455,7 @@ def test_failed_operator_job_releases_its_caches(spark, name, monkeypatch):
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = cache.numCachedEntries()
     with pytest.raises(Exception, match="boom"):
-        _failing_call(name, spark)
+        _failing_call(name, spark, monkeypatch)
     assert cache.numCachedEntries() == before
 
 

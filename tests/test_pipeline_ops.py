@@ -271,13 +271,12 @@ def test_approx_count_distinct_tolerance(spark, sf_dir):
     assert abs(row["approx"] - row["exact"]) <= max(5, 0.06 * row["exact"])
 
 
-def test_knn_cells_matches_bruteforce_150_queries(spark):
-    """Exactness of the expanding-ring search at loop-visible query volume
-    (r1 verdict item 7): 150 queries over 20k deterministic points must
-    reproduce brute force bit-for-bit (same dist2 arithmetic, same
-    (dist2, point_id) tie-break), including any brute-force-fallback
-    queries."""
-    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_cells
+def test_knn_join_matches_bruteforce_150_queries(spark, monkeypatch):
+    """Exactness of knn_join on both paths at 150 queries over 20k
+    deterministic points: the broadcast kernel and the expanding-ring cell
+    passes each reproduce brute force bit-for-bit (same dist2 arithmetic,
+    same (dist2, point_id) tie-break)."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce
 
     pts = spark.range(20000).select(
         F.col("id").alias("point_id"),
@@ -290,9 +289,10 @@ def test_knn_cells_matches_bruteforce_150_queries(spark):
         ((F.col("id") * 57885161) % 180000 / 1000.0 - 90.0).alias("q_lat"),
     )
     want = {tuple(r) for r in knn_bruteforce(pts, qs, k=5).collect()}
-    got = {tuple(r) for r in knn_cells(pts, qs, k=5, res=6).collect()}
-    assert got == want
-    assert len({t[0] for t in got}) == 150
+    for path in _KNN_PATHS:
+        got = _knn_join_rows(monkeypatch, path, pts, qs, k=5, res=6)
+        assert got == want
+        assert len({t[0] for t in got}) == 150
 
 
 def test_functions_registry_importable():
@@ -452,10 +452,11 @@ def test_ivf_multiprobe_improves_recall(spark):
     assert got_all == exact  # probing every cell recovers brute force
 
 
-def test_knn_join_fewer_points_than_k(spark):
+def test_knn_join_fewer_points_than_k(spark, monkeypatch):
     """total points < k: every query still gets all existing points,
-    exactly like brute force (the degenerate full-ring path)."""
-    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_join
+    exactly like brute force, on the broadcast kernel and on the cell
+    passes' degenerate full-ring path."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce
 
     pts = spark.range(2).select(
         F.col("id").alias("point_id"),
@@ -468,8 +469,9 @@ def test_knn_join_fewer_points_than_k(spark):
         (F.col("id") * 2.0).alias("q_lat"),
     )
     want = {tuple(r) for r in knn_bruteforce(pts, qs, k=5).collect()}
-    got = {tuple(r) for r in knn_join(pts, qs, k=5, res=4).collect()}
-    assert got == want and len(got) == 6
+    for path in _KNN_PATHS:
+        got = _knn_join_rows(monkeypatch, path, pts, qs, k=5, res=4)
+        assert got == want and len(got) == 6
 
 
 def test_dedup_clusters_string_ids_distributed(spark, monkeypatch):
@@ -2456,13 +2458,13 @@ def test_dsir_incremental_matches_from_scratch(spark):
     assert merged == scratch
 
 
-def test_knn_join_massive_ties_and_string_ids(spark):
-    """r7 kernel edge cases: (a) hundreds of points at IDENTICAL
-    positions force the argpartition boundary-tie fallback (the k+64
-    slack is exceeded, so correctness rests on the full-sort path and
-    the (dist2, point_id) tie-break); (b) string ids exercise the
-    object-dtype sort paths."""
-    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_join
+def test_knn_join_massive_ties_and_string_ids(spark, monkeypatch):
+    """Kernel edge cases on both paths: (a) hundreds of points at
+    IDENTICAL positions force the cell kernel's argpartition boundary-tie
+    fallback (the k+64 slack is exceeded, so correctness rests on the
+    full-sort path and the (dist2, point_id) tie-break); (b) string ids
+    exercise the object-dtype sort paths."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce
 
     # 300 points stacked on 3 locations + a few scattered
     pts = spark.sql(
@@ -2477,15 +2479,15 @@ def test_knn_join_massive_ties_and_string_ids(spark):
         "CASE id % 2 WHEN 0 THEN 1.0 ELSE 40.0 END AS q_lat "
         "FROM range(40)"
     )
-    want = {tuple(r) for r in knn_bruteforce(pts, qs, k=5).collect()}
-    got = {tuple(r) for r in knn_join(pts, qs, k=5, res=6).collect()}
-    assert got == want and len(got) == 200
-
     spts = pts.selectExpr("concat('p', point_id) AS point_id", "lon", "lat")
     sqs = qs.selectExpr("concat('q', query_id) AS query_id", "q_lon", "q_lat")
+    want = {tuple(r) for r in knn_bruteforce(pts, qs, k=5).collect()}
     want_s = {tuple(r) for r in knn_bruteforce(spts, sqs, k=3).collect()}
-    got_s = {tuple(r) for r in knn_join(spts, sqs, k=3, res=5).collect()}
-    assert got_s == want_s and len(got_s) == 120
+    for path in _KNN_PATHS:
+        got = _knn_join_rows(monkeypatch, path, pts, qs, k=5, res=6)
+        assert got == want and len(got) == 200
+        got_s = _knn_join_rows(monkeypatch, path, spts, sqs, k=3, res=5)
+        assert got_s == want_s and len(got_s) == 120
 
 
 def _knn_points_with_non_finite(spark):
@@ -2500,39 +2502,55 @@ def _knn_points_with_non_finite(spark):
     )
 
 
-def test_knn_join_excludes_null_coordinate_points(spark):
-    """A point with a null, NaN or ±inf lon or lat is nobody's neighbour
-    and does not count towards k: the query still gets every finite
-    point, exactly as brute force over the finite points ranks them."""
-    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_join
-
-    pts = _knn_points_with_non_finite(spark)
-    qs = spark.createDataFrame([(10, 0.1, 0.1)], "query_id long, q_lon double, q_lat double")
-    want = {tuple(r) for r in knn_bruteforce(pts.where("point_id <= 3"), qs, k=4).collect()}
-    got = {tuple(r) for r in knn_join(pts, qs, k=4, res=4).collect()}
-    assert got == want and len(got) == 3
+# knn_join's pair-work crossover per path: every call at or below "brute"
+# runs the broadcast kernel, every call above "cells" the cell passes
+_KNN_PATHS = {"brute": 1 << 62, "cells": -1}
 
 
-def test_knn_cells_excludes_null_coordinate_points(spark):
-    """knn_cells follows knn_join's rule: a point with a null, NaN or ±inf
-    lon or lat is nobody's neighbour and does not count towards k, on the
-    ring search (k=2) and on the brute-force fallback (k=4 > 3 points)."""
-    from shapefile_rs_spark.operators.knn import knn_bruteforce, knn_cells
+def _knn_join_rows(monkeypatch, path, *args, **kw):
+    """knn_join's rows as a set, with the crossover set so the call takes
+    ``path`` (a key of ``_KNN_PATHS``)."""
+    from shapefile_rs_spark.operators import knn
+
+    with monkeypatch.context() as m:
+        m.setattr(knn, "BRUTE_PAIRS", _KNN_PATHS[path])
+        return {tuple(r) for r in knn.knn_join(*args, **kw).collect()}
+
+
+def _assert_excludes_null_coordinate_points(spark, monkeypatch, path):
+    """knn_join on ``path`` drops every point with a null, NaN or ±inf
+    coordinate and ranks the rest as brute force over the finite points
+    does, when k fits the finite points (k=2) and when it does not
+    (k=4 > 3 points)."""
+    from shapefile_rs_spark.operators.knn import knn_bruteforce
 
     pts = _knn_points_with_non_finite(spark)
     qs = spark.createDataFrame([(10, 0.1, 0.1)], "query_id long, q_lon double, q_lat double")
     for k in (2, 4):
         want = {tuple(r) for r in knn_bruteforce(pts.where("point_id <= 3"), qs, k=k).collect()}
-        got = {tuple(r) for r in knn_cells(pts, qs, k=k, res=4).collect()}
+        got = _knn_join_rows(monkeypatch, path, pts, qs, k=k, res=4)
         assert got == want and len(got) == min(k, 3)
 
 
-def test_knn_join_null_query_coordinates_raise(spark):
-    """A query with a null, NaN or ±inf q_lon or q_lat is an error naming
-    the count, not a silently missing row or a cast overflow — in both
-    kNN operators."""
-    from shapefile_rs_spark.operators.knn import knn_cells, knn_join
+def test_knn_join_excludes_null_coordinate_points(spark, monkeypatch):
+    """A point with a null, NaN or ±inf lon or lat is nobody's neighbour
+    and does not count towards k: the query still gets every finite
+    point, exactly as brute force over the finite points ranks them (the
+    broadcast-kernel path)."""
+    _assert_excludes_null_coordinate_points(spark, monkeypatch, "brute")
 
+
+def test_knn_cells_excludes_null_coordinate_points(spark, monkeypatch):
+    """The cell passes follow the same rule: a point with a null, NaN or
+    ±inf lon or lat is nobody's neighbour and does not count towards k,
+    on the ring search (k=2) and when k exceeds the finite points (k=4)."""
+    _assert_excludes_null_coordinate_points(spark, monkeypatch, "cells")
+
+
+def test_knn_join_null_query_coordinates_raise(spark, monkeypatch):
+    """A query with a null, NaN or ±inf q_lon or q_lat is an error naming
+    the count, not a silently missing row or a cast overflow — whichever
+    path the call would take."""
     pts = _knn_points_with_non_finite(spark)
     inf, nan = float("inf"), float("nan")
     qs = spark.createDataFrame(
@@ -2541,9 +2559,34 @@ def test_knn_join_null_query_coordinates_raise(spark):
         "query_id long, q_lon double, q_lat double",
     )
     msg = "5 query rows have a null or non-finite q_lon or q_lat"
-    for op in (knn_join, knn_cells):
+    for path in _KNN_PATHS:
         with pytest.raises(ValueError, match=msg):
-            op(pts, qs, k=2, res=4)
+            _knn_join_rows(monkeypatch, path, pts, qs, k=2, res=4)
     # both cell-indexed sides were released before the raise
     cached = [r.name() or "" for r in spark.sparkContext._jsc.getPersistentRDDs().values()]
     assert not [n for n in cached if "_pcell" in n or "_qcell" in n]
+
+
+def test_knn_join_result_is_its_checkpoint(spark, monkeypatch):
+    """On both paths knn_join returns its output-sized checkpoint: the
+    result plan reads neither the inputs (no ``Range``, so no recompute
+    once the caches are gone) nor a persisted cache."""
+    from shapefile_rs_spark.operators import knn
+
+    pts = spark.range(300).select(
+        F.col("id").alias("point_id"),
+        ((F.col("id") * 37) % 360 - 180.0).alias("lon"),
+        ((F.col("id") * 53) % 180 - 90.0).alias("lat"),
+    )
+    qs = spark.range(20).select(
+        F.col("id").alias("query_id"),
+        ((F.col("id") * 71) % 360 - 179.5).alias("q_lon"),
+        ((F.col("id") * 13) % 180 - 89.5).alias("q_lat"),
+    )
+    for path, pairs in _KNN_PATHS.items():
+        with monkeypatch.context() as m:
+            m.setattr(knn, "BRUTE_PAIRS", pairs)
+            out = knn.knn_join(pts, qs, k=3, res=4)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Range" not in plan and "InMemoryTableScan" not in plan, (path, plan)
+        assert out.count() == 60

@@ -572,8 +572,8 @@ def test_semdedup_single_cell_shuffle(spark, sf_dir):
 
 
 def test_kmeans_fp_result_is_local_values(spark, sf_dir):
-    """kmeans_fp's returned frame is a driver-built local_frame (the
-    knn_cells control-frame pattern): the iterative jobs already ran, so
+    """kmeans_fp's returned frame is a driver-built local_frame (a tiny
+    control frame collected to the driver): the iterative jobs already ran, so
     the RESULT plan must be a LocalTableScan with no parquet scan and no
     exchange — consumers pay nothing to reuse the centroids."""
     from shapefile_rs_spark.operators.similarity import kmeans_fp

@@ -256,6 +256,16 @@ def test_shx_header_length_math():
     assert h.file_length_words == 50 + 4 * 2  # 100-byte header + 8 bytes/record
 
 
+def test_header_bbox_zeroes_an_all_nan_axis():
+    """An axis whose every value is NaN never grows the header bbox, so
+    it is zeroed like a never-grown z or m range instead of keeping the
+    fold's sentinels (ymin 1.8e308 > ymax -1.8e308)."""
+    rec = S.ShapeRec(POLYGON, np.array([[1.0, np.nan]]), parts=[0])
+    shp, shx = S.write_shp([rec])
+    for data in (shp, shx):
+        assert S.read_header(data).bbox == (1.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+
+
 @pytest.mark.parametrize("name", sorted(FX.FIXTURE_BUILDERS))
 def test_bulk_decode_equals_sequential(name):
     """read_shp_bulk (vectorized SoA) must reproduce every field the
